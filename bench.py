@@ -107,10 +107,7 @@ HEADLINE = [
 #: per-deployment (off where scans are already thousands of partitions
 #: wide; the local estimator already sizes from files), so forcing either
 #: setting into the profile would bench an artifact of this box, not the
-#: profile. spark.graft.rarity.preagg (round 11) is likewise
-#: per-deployment: it bounds the vocab join's hot keys by #docs — a win
-#: only where shuffles are network-bound, measured locally slower
-#: (SCALE.md round 11), so it stays out of the locally-benched profile. Pins (persist via cachepin) are already the registered
+#: profile. Pins (persist via cachepin) are already the registered
 #: default. Output-identity default-vs-profile is asserted by
 #: tools/profile_identity.py; the A/B table lives in SCALE.md round 10.
 PROFILE_100TB = {

@@ -4,74 +4,25 @@ The round-15 rewrites run pairwise candidate machinery over DISTINCT
 values (texts, normalized texts, sketches, embedding vectors) and carry
 each value's member-id list on the group row — collapsing the quadratic
 cost of exact-duplicate clusters (guide §8: decide on a lightweight
-proxy, multiply heavy rows out once). The one scale hazard that
-introduces (r15 VERDICT item 6): ``collect_list`` puts ALL ids of a
-duplicate cluster into ONE row — a boilerplate document duplicated 10^7
-times at 100 TB makes a single-row array one task must hold, where the
-per-row path never materialized the cluster in one place (the pair
-OUTPUT is inherently quadratic either way; the ROW is the new risk).
-
-``grouped_ids`` is the valve: with ``spark.graft.groupcollapse.cap``
-unset (default 0 = off, the stamped bench profile — the shipped
-fixtures' largest cluster is ~10 docs), it is a plain
-``groupBy(key).agg(array_sort(collect_list(id)))`` and the physical
-plan is byte-identical to the inlined aggregate it replaced. With the
-cap set to C > 0, groups LARGER than C spill to the per-row path: each
-over-cap member becomes its own singleton group row (``_ids`` of size
-1). Downstream pair machinery treats group rows as values and only
-relies on (a) member-id sets being disjoint across rows and (b) every
-filter/verify expression being a function of the VALUE columns — both
-hold for singleton rows carrying the same value, so over-cap clusters
-flow through the exact per-row plan shape the r15 rewrites replaced,
-just for those clusters only. Equivalence (valve ON == valve OFF ==
-naive per-row reference, including an exact-dup cluster crossing the
-cap) is pinned by tests/test_group_collapse_equivalence.py.
-
-Physical shape of the capped path: group sizes come from a window count
-over the SAME hash partitioning the groupBy needs, so the split costs
-no extra shuffle (the groupBy after the window reuses the exchange —
-the banded_pairs max_df discipline), and the ``collect_list`` buffer
-NEVER aggregates an over-cap group: the filter runs before the agg, so
-the oversized array is never built, not built-then-exploded.
+proxy, multiply heavy rows out once). Downstream pair machinery treats
+group rows as values and relies on (a) member-id sets being disjoint
+across rows and (b) every filter/verify expression being a function of
+the VALUE columns. Equivalence with the naive per-row reference,
+including exact-dup clusters far larger than the shipped fixtures', is
+pinned by tests/test_group_collapse_equivalence.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: Session conf: max member-list length a group row may carry. 0 = off.
-GROUPCOLLAPSE_CAP_CONF = "spark.graft.groupcollapse.cap"
-
-
-def collapse_cap(df: DataFrame) -> int:
-    try:
-        return int(df.sparkSession.conf.get(GROUPCOLLAPSE_CAP_CONF, "0"))
-    except ValueError:
-        return 0
 
 
 def grouped_ids(
     df: DataFrame, key_cols: tuple[str, ...], id_col: str
 ) -> DataFrame:
     """One row per distinct ``key_cols`` value with ``_ids`` = sorted
-    member ids — plus the conf-gated over-cap spill to singleton rows
-    (module doc). Output columns: ``*key_cols, _ids``."""
-    keys = list(key_cols)
-    cap = collapse_cap(df)
-    if cap <= 0:
-        return df.groupBy(*keys).agg(
-            F.array_sort(F.collect_list(id_col)).alias("_ids")
-        )
-    sized = df.select(*keys, id_col).withColumn(
-        "_gn", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    member ids. Output columns: ``*key_cols, _ids``."""
+    return df.groupBy(*key_cols).agg(
+        F.array_sort(F.collect_list(id_col)).alias("_ids")
     )
-    small = (
-        sized.where(F.col("_gn") <= cap)
-        .groupBy(*keys)
-        .agg(F.array_sort(F.collect_list(id_col)).alias("_ids"))
-    )
-    big = sized.where(F.col("_gn") > cap).select(
-        *keys, F.array(F.col(id_col)).alias("_ids")
-    )
-    return small.unionByName(big)

@@ -11,10 +11,10 @@ value-domain-sized. On a 100-TB fact table that single task is the
 job.
 
 This module implements the classic two-phase alternative and gates it
-behind ``spark.graft.window.ranged`` (default ``false``), mirroring
-``spark.graft.cc.algorithm``: the default plan stays exactly the
-oracle-stamped single-partition form; flipping the conf swaps in a
-range-partitioned plan PROVEN output-identical by tests
+behind ``spark.graft.window.ranged`` (default ``false``): the default
+plan stays exactly the oracle-stamped single-partition form; flipping
+the conf swaps in a range-partitioned plan PROVEN output-identical by
+tests
 (tests/test_ordered_windows.py) whenever the ordering key set is a
 TOTAL order (unique rows per key tuple — every caller in this repo
 pre-aggregates to uniqueness first).

@@ -1,67 +1,16 @@
-"""Scalable sessionization: the hot-user escape valve.
+"""Gaps-and-islands sessionization.
 
-Gaps-and-islands sessionization partitions by user: session id =
-running sum of new-session flags over each user's (ts, tiebreak)
-order. `Window.partitionBy(user)` is the natural expression and the
-right default — per-user partitions sort spill-safely
-(UnsafeExternalSorter), so a skewed user degrades to a straggler,
-never a wrong answer (proven: /tmp/skew2's 30%-hot user, 8/8 family
-oracle MATCH, SCALE.md round 12). But at 100 TB a bot/service/null-ish
-user carrying a macroscopic share of the stream makes that one
-partition's sort THE job — the same single-task regime the ranged
-total-order windows escape in functions/ordered.py.
-
-This module gates the classic two-phase alternative behind
-``spark.graft.session.chunked`` (default ``false``, mirroring
-``spark.graft.window.ranged``): the default plan stays exactly the
-oracle-stamped per-user window; flipping the conf swaps in a
-TIME-CHUNKED plan proven output-identical by tests and by valve-ON
-oracle runs on the hot-user fixture.
-
-Two-phase shape:
-
-1. Chunk every event by a fixed time grid (``CHUNK_HOURS_CONF``,
-   default 24 h — any width works; wider just concentrates more of a
-   hot user per task). Partition by (user, chunk): a local window
-   computes within-chunk island flags and local running session ids —
-   the hot user's stream is now spread over #chunks tasks.
-2. A per-(user, chunk) summary (first/last event time, #local
-   sessions) is stitched with a per-USER window over the summaries —
-   #chunks rows per user, tiny by construction. Chunk c's first island
-   MERGES into the previous non-empty chunk's last island iff the
-   boundary gap ≤ the session gap (any two consecutive session events
-   are ≤ gap apart, and exactly one consecutive pair crosses each
-   chunk boundary, so this is the only cross-chunk interaction; a
-   session spanning k chunks is a chain of k−1 merges). The chunk's
-   session-id offset = sessions in earlier chunks − merges so far:
-   global sid = local sid + offset reproduces the single-window
-   numbering exactly.
-3. Offsets join back on (user, chunk) — the summary descends from an
-   aggregation, so its join strategy is AQE-measured (scale-safe per
-   the round-12 broadcast triage).
-
-Cost: one extra shuffle of the summary table (#users × #active-chunks
-rows) and one join, for per-task state bounded by events-per-user-per-
-chunk instead of events-per-user.
+Session id = running sum of new-session flags over each user's
+(ts, tiebreak) order, expressed as one ``Window.partitionBy(user)``.
+Per-user partitions sort spill-safely (UnsafeExternalSorter), so a
+skewed user degrades to a straggler, never a wrong answer (proven:
+/tmp/skew2's 30%-hot user, 8/8 family oracle MATCH, SCALE.md round 12).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-#: Flips sessionize_ids from the single per-user window (default,
-#: oracle-stamped) to the time-chunked two-phase plan.
-CHUNKED_CONF = "spark.graft.session.chunked"
-
-#: Chunk width for the chunked plan, in hours.
-CHUNK_HOURS_CONF = "spark.graft.session.chunk.hours"
-
-_SID = "_sess_sid"
-
-
-def use_chunked(df: DataFrame) -> bool:
-    return str(df.sparkSession.conf.get(CHUNKED_CONF, "false")).lower() == "true"
 
 
 def sessionize_ids(
@@ -74,86 +23,21 @@ def sessionize_ids(
 ) -> DataFrame:
     """ev + ``out`` = per-user 1-based session index under the
     gaps-and-islands rule (new session after a silence > ``gap_us``),
-    numbered in (ts, tie) order — identical output in both modes.
-    Only (user_col, ts_col, out) survive plus any other input columns.
-
-    (user_col, ts_col, tie_col) must be a TOTAL order (tie_col unique
-    per (user, ts)) — the chunked plan's local-sid window feeds TWO
-    consumers (the event rows and the chunk summary), each of which
-    may re-execute the window subtree, and only a total order makes
-    those executions row-identical (the same determinism rule as the
-    ranged windows in functions/ordered.py).
+    numbered in (ts, tie) order. (user_col, ts_col, tie_col) must be a
+    TOTAL order (tie_col unique per (user, ts)).
     """
     # Event-time assignment: a session IS a time interval, so a row
-    # with a NULL event time cannot belong to one — dropped, in BOTH
-    # modes, exactly as Spark's session_window does (skew10 axis; the
-    # registered oracle filters identically). Without this the two
-    # engines also disagree on where nulls SORT (Spark ASC default is
-    # nulls-first, DuckDB's nulls-last), so null rows would split
-    # sessions differently.
+    # with a NULL event time cannot belong to one — dropped, exactly as
+    # Spark's session_window does (skew10 axis; the registered oracle
+    # filters identically). Without this the two engines also disagree
+    # on where nulls SORT (Spark ASC default is nulls-first, DuckDB's
+    # nulls-last), so null rows would split sessions differently.
     ev = ev.where(F.col(ts_col).isNotNull())
     us = F.unix_micros(F.col(ts_col))
-    if not use_chunked(ev):
-        w = Window.partitionBy(user_col).orderBy(ts_col, tie_col)
-        prev = F.lag(us).over(w)
-        new_sess = F.when(prev.isNull() | (us - prev > gap_us), 1).otherwise(0)
-        sid = F.sum(new_sess).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return ev.withColumn(out, sid)
-
-    chunk_us = (
-        int(ev.sparkSession.conf.get(CHUNK_HOURS_CONF, "24")) * 3600 * 1_000_000
+    w = Window.partitionBy(user_col).orderBy(ts_col, tie_col)
+    prev = F.lag(us).over(w)
+    new_sess = F.when(prev.isNull() | (us - prev > gap_us), 1).otherwise(0)
+    sid = F.sum(new_sess).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # integer division: exact for any epoch-µs (a double quotient could
-    # round a boundary event into the neighboring chunk)
-    d = ev.withColumn("_us", us).withColumn(
-        "_chunk", F.expr(f"_us div {chunk_us}")
-    )
-    w_loc = Window.partitionBy(user_col, "_chunk").orderBy(ts_col, tie_col)
-    prev = F.lag(F.col("_us")).over(w_loc)
-    new_local = F.when(prev.isNull() | (F.col("_us") - prev > gap_us), 1).otherwise(0)
-    d = d.withColumn(
-        _SID,
-        F.sum(new_local).over(
-            w_loc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    # per-(user, chunk) summary: tiny per user (≤ #chunks rows), so the
-    # stitch window below never recreates the hot-user bottleneck
-    summ = d.groupBy(user_col, "_chunk").agg(
-        F.min("_us").alias("_first_us"),
-        F.max("_us").alias("_last_us"),
-        F.max(_SID).alias("_n_sess"),
-    )
-    w_user = Window.partitionBy(user_col).orderBy("_chunk")
-    prev_last = F.lag("_last_us").over(w_user)
-    merge = F.when(
-        prev_last.isNotNull() & (F.col("_first_us") - prev_last <= gap_us), 1
-    ).otherwise(0)
-    sessions_before = F.coalesce(
-        F.sum("_n_sess").over(w_user.rowsBetween(Window.unboundedPreceding, -1)),
-        F.lit(0),
-    )
-    merges_upto = F.sum(merge).over(
-        w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offsets = summ.select(
-        F.col(user_col).alias("_o_user"),
-        F.col("_chunk").alias("_o_chunk"),
-        (sessions_before - merges_upto).alias("_off"),
-    )
-    # NULL-SAFE join keys: groupBy/Window keep a NULL user (the
-    # null-ish bot this valve exists for) and a NULL ts (NULL _chunk)
-    # as real groups, so the join-back must too — plain equi-keys
-    # evaluate NULL = NULL as false and would silently DROP those rows,
-    # breaking output identity with the default plan (found in round-12
-    # self-review; pinned by test_chunked_handles_null_user_and_ts).
-    d = d.join(
-        offsets,
-        F.col(user_col).eqNullSafe(F.col("_o_user"))
-        & F.col("_chunk").eqNullSafe(F.col("_o_chunk")),
-    )
-    return d.withColumn(out, F.col(_SID) + F.col("_off")).drop(
-        "_us", "_chunk", _SID, "_off", "_o_user", "_o_chunk"
-    )
+    return ev.withColumn(out, sid)

@@ -202,10 +202,7 @@ def jaccard_pairs(
     # hashing below runs once per distinct text. fan_out keyed by the
     # text column: the repartition IS the groupBy distribution (one
     # exchange), and the keyed mode skips round-robin's local input
-    # sort (guide §2.5). grouped_ids carries the
-    # spark.graft.groupcollapse.cap valve (off by default): over-cap
-    # duplicate clusters spill to singleton group rows so no single row
-    # ever holds an unbounded member array (functions/groupcollapse.py).
+    # sort (guide §2.5).
     groups = grouped_ids(fan_out(docs, by=(text_col,)), (text_col,), id_col)
     # long, not int: the candidate length filters multiply _sz by 1e6
     # (ppm arithmetic) — int32 overflows for any doc with >= 2148
@@ -540,8 +537,6 @@ def containment_pairs(
     # reaching ≥1 uncapped index hash through the same join — per-doc
     # survival semantics unchanged. Index df counts DOCS (sum of member
     # counts), so the max_df cap and its oracle mirrors are unchanged.
-    # grouped_ids carries the spark.graft.groupcollapse.cap valve
-    # (functions/groupcollapse.py).
     groups = grouped_ids(fan_out(docs, by=(text_col,)), (text_col,), id_col)
     # long, not int: the candidate length filters multiply _sz by 1e6
     # (ppm arithmetic) — int32 overflows for any doc with >= 2148

@@ -2,22 +2,18 @@
 duplicate CLUSTERS so a dedup pass can keep one canonical document per
 cluster (min id) instead of dropping both sides of every pair.
 
-Algorithm: min-label propagation — every vertex starts labeled with its
-own id; each round, every vertex takes the minimum label among itself
-and its neighbors; converged when no label changes. Rounds needed =
-graph diameter, and near-dup graphs are shallow (clusters are cliques
-or short chains from banded LSH), so 2-4 rounds is typical.
+Pair graphs under ``spark.graft.cc.localThreshold`` edges solve on the
+driver (one collect + union-find); larger ones run the large-star/
+small-star algorithm (Kiveris et al., "Connected Components in
+MapReduce and Beyond", SoCC'14, ``connected_components_star``) —
+O(log² n) rounds, each one groupBy + one join.
 
 This is the one operator family where a driver-side loop with an eager
 per-round action is the *correct* distributed shape (same contract as
 GraphX/GraphFrames connectedComponents or MLlib's iterative solvers):
-the convergence test IS a distributed aggregate, and each round's label
-table is cached so round N+1 reads a materialized RDD instead of an
-ever-deeper lineage. For planet-scale graphs, ``connected_components_star``
-below implements the large-star/small-star algorithm (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14) — O(log² n)
-rounds instead of O(diameter), proven output-identical to this loop in
-tests/test_features_props.py.
+the convergence test IS a distributed aggregate, and each round's edge
+table is checkpointed so round N+1 reads a materialized RDD instead of
+an ever-deeper lineage.
 """
 
 from __future__ import annotations
@@ -28,15 +24,16 @@ from pyspark.storagelevel import StorageLevel
 
 
 #: Below this many pairs the component solve runs on the driver (one
-#: collect + union-find) instead of the iterative distributed loop. The
+#: collect + union-find) instead of the iterative distributed solver. The
 #: near-dup pair graph is orders of magnitude smaller than its corpus by
 #: construction (banded LSH emits only in-bucket candidates), so at
 #: every tested scale the local path wins by ~5s of pure scheduling
 #: latency (each propagation round is 4 distributed jobs; a 167-pair
 #: graph costs the same ~1.3s/round as a 10⁶-pair one on local[32]).
 #: Conf-settable per session: ``spark.graft.cc.localThreshold`` — set 0
-#: to force the distributed loop. This mirrors production graph systems,
-#: which contract/solve locally once the frontier fits one machine.
+#: to force the distributed star solver. This mirrors production graph
+#: systems, which contract/solve locally once the frontier fits one
+#: machine.
 CC_LOCAL_THRESHOLD = 200_000
 
 
@@ -44,11 +41,11 @@ def _local_components(
     rows: list, id_out: str, component_out: str, spark, id_type
 ) -> DataFrame:
     """Driver-side union-find over collected (src, dst) pairs; returns
-    the same (id, min-id component) table the distributed loop yields.
+    the same (id, min-id component) table the star solver yields.
     ``id_type`` is the input's vertex id DataType — the output schema is
     derived from it, never hardcoded, so string/int ids get the same
-    schema from this path as from the distributed loop (which preserves
-    the input type naturally)."""
+    schema from this path as from the star solver (which preserves the
+    input type naturally)."""
     parent: dict = {}
 
     def find(x):
@@ -102,16 +99,13 @@ def connected_components(
     Size-adaptive: pair graphs under ``spark.graft.cc.localThreshold``
     (default 200k edges) collect to the driver once and solve with
     union-find — identical output, none of the per-round scheduling
-    latency; larger graphs run the distributed min-label loop below.
-    The pair lineage is computed once either way: ``pairs`` is persisted
-    BEFORE the size probe, so an over-threshold graph hands its cached
-    partitions to the distributed loop instead of recomputing the
-    (potentially expensive LSH) lineage — and the loop's two-direction
-    edge union reads the cache twice rather than the lineage twice.
+    latency; larger graphs run ``connected_components_star``. The pair
+    lineage is computed once either way: ``pairs`` is persisted BEFORE
+    the size probe, so an over-threshold graph hands its cached
+    partitions to the star solver instead of recomputing the
+    (potentially expensive LSH) lineage.
 
-    Raises ``RuntimeError`` if ``max_iter`` rounds don't converge (a
-    diameter-25 near-dup cluster means the candidate generator is
-    broken, not that more rounds are needed).
+    Raises ``RuntimeError`` if ``max_iter`` star rounds don't converge.
     """
     spark = pairs.sparkSession
     try:
@@ -124,7 +118,7 @@ def connected_components(
     # Persist BEFORE the size probe: the probe's limit(threshold+1)
     # computes (part of) the pair lineage, and without a cache an
     # over-threshold graph would throw that work away and recompute the
-    # full lineage in the loop below — a wasted pass exactly where the
+    # full lineage in the star solver — a wasted pass exactly where the
     # lineage is most expensive. The probe still bounds the DRIVER
     # transfer to threshold+1 rows; persist only changes where the
     # computed partitions live.
@@ -140,115 +134,15 @@ def connected_components(
                     spark,
                     id_type,
                 )
-        # Distributed algorithm choice: ``spark.graft.cc.algorithm`` —
-        # "star" (default since round 7: large-star/small-star, O(log²
-        # n) rounds) or "minlabel" (rounds = diameter). The round-6
-        # default assumed min-label wins on shallow LSH cluster graphs;
-        # measured on exactly that graph (q_dedup_cluster) star is
-        # 1.6× faster at sf0.1 AND 1.8× at the sf1 decade (2.13→1.35 s,
-        # 12.8→7.0 s best-of-2 cold) — contraction beats propagation
-        # even at diameter ≈ 2 because each star round halves the edge
-        # list it rescans, while every min-label round re-joins the
-        # full edge set. Output-identical, proven in
-        # tests/test_features_props.py.
-        algo = str(spark.conf.get("spark.graft.cc.algorithm", "star"))
-        if algo == "star":
-            return connected_components_star(
-                pairs, src, dst, id_out, component_out, max_iter=max_iter
-            )
-        if algo != "minlabel":
-            raise ValueError(
-                f"spark.graft.cc.algorithm must be minlabel|star; got {algo!r}"
-            )
-        return _distributed_components(
-            pairs, src, dst, id_out, component_out, max_iter
+        # Star even on shallow LSH cluster graphs: on q_dedup_cluster's
+        # graph it measured 1.6× faster than min-label propagation at
+        # sf0.1 and 1.8× at the sf1 decade (2.13→1.35 s, 12.8→7.0 s
+        # best-of-2 cold).
+        return connected_components_star(
+            pairs, src, dst, id_out, component_out, max_iter=max_iter
         )
     finally:
         pairs.unpersist()
-
-
-def _distributed_components(
-    pairs: DataFrame,
-    src: str,
-    dst: str,
-    id_out: str,
-    component_out: str,
-    max_iter: int,
-) -> DataFrame:
-    """Min-label propagation loop for graphs over the local threshold;
-    ``pairs`` arrives persisted (see connected_components)."""
-    # The pair graph is orders of magnitude smaller than whatever corpus
-    # produced it, but its lineage (e.g. an LSH distinct) can carry
-    # hundreds of shuffle partitions. Coalesce the cached tables to the
-    # cluster's core count so each propagation round schedules O(cores)
-    # tasks, not O(upstream partitions) — coalesce never shuffles and
-    # never increases the count. (Spark Connect exposes no
-    # sparkContext — skip the trim there, same graceful degradation as
-    # functions/partitioning.py:fan_out.)
-    edges = pairs.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).union(
-        pairs.select(F.col(dst).alias("_s"), F.col(src).alias("_d"))
-    )
-    try:
-        edges = edges.coalesce(
-            max(1, pairs.sparkSession.sparkContext.defaultParallelism)
-        )
-    except Exception:  # Spark Connect: no sparkContext
-        pass
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    labels = (
-        edges.select(F.col("_s").alias("_id"))
-        .distinct()
-        .select("_id", F.col("_id").alias("_lbl"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # `cached` tracks the PERSISTED frame backing `labels`: unpersist()
-    # must be called on the exact frame that was persisted — calling it
-    # on a derived projection (e.g. after .drop) is a silent no-op and
-    # leaks one cached table per round.
-    cached = labels
-    try:
-        for _ in range(max_iter):
-            nbr_min = (
-                edges.join(labels, edges["_s"] == labels["_id"])
-                .groupBy("_d")
-                .agg(F.min("_lbl").alias("_nbr"))
-            )
-            new_labels = (
-                labels.join(nbr_min, labels["_id"] == nbr_min["_d"], "left")
-                .select(
-                    "_id",
-                    F.least("_lbl", F.coalesce("_nbr", "_lbl")).alias("_lbl"),
-                    (F.col("_nbr") < F.col("_lbl")).alias("_chg"),
-                )
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            # Full-scan aggregate, not limit(1): the convergence job must
-            # touch EVERY partition so the round's label table is fully
-            # cached — a short-circuit count would leave holes that next
-            # round recomputes through already-unpersisted lineage.
-            changed = new_labels.agg(
-                F.coalesce(F.sum(F.col("_chg").cast("int")), F.lit(0))
-            ).collect()[0][0]
-            cached.unpersist()
-            cached = new_labels
-            labels = new_labels.drop("_chg")
-            if changed == 0:
-                # localCheckpoint (eager) materializes the result and
-                # TRUNCATES lineage, so every intermediate — including
-                # the final persisted label table — can be released
-                # here instead of leaking one cached table per call;
-                # the checkpoint itself is reclaimed by the
-                # ContextCleaner once the returned frame is unreferenced.
-                result = labels.select(
-                    F.col("_id").alias(id_out), F.col("_lbl").alias(component_out)
-                ).localCheckpoint(eager=True)
-                return result
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
-    finally:
-        edges.unpersist()
-        cached.unpersist()
 
 
 def kcore(
@@ -265,10 +159,9 @@ def kcore(
     edges) run to its fixpoint.
 
     Each round is one degree aggregate + two semi-joins against the
-    surviving vertex set — the same join-per-round shape as the
-    distributed connected-components loop above, with the same
-    persist/convergence-count discipline (one tiny count action per
-    round; previous round's cache released eagerly). Rounds are bounded
+    surviving vertex set, with a persist/convergence-count discipline
+    (one tiny count action per round; previous round's cache released
+    eagerly). Rounds are bounded
     by the graph's degeneracy ordering depth — small for LSH pair
     graphs, whose clusters are dense by construction and whose pendants
     peel in the first rounds. Peeling is monotone (the survivor set
@@ -322,7 +215,7 @@ def bfs_hops(
 ) -> DataFrame:
     """Multi-source BFS hop distance, statically unrolled to ``hops``
     rounds (one lazy plan, no driver actions — the q_graph_pagerank
-    shape; loops needing convergence checks use the CC skeleton above).
+    shape; loops needing convergence checks use the kcore skeleton above).
 
     ``edges`` must already carry both directions for an undirected
     graph. ``seeds`` is an (id_col,) frame at distance 0. Each round is
@@ -363,10 +256,9 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the planet-scale path the min-label loop's docstring
-    points to, now implemented rather than cited. Same contract as
-    :func:`connected_components`: (id, min-id component) for every
-    vertex of the pair graph.
+    SoCC'14) — the distributed path of :func:`connected_components`,
+    same contract: (id, min-id component) for every vertex of the pair
+    graph.
 
     Why this beats min-label propagation at extreme scale: min-label
     needs O(diameter) rounds and keeps the full edge set every round;
@@ -391,9 +283,9 @@ def connected_components_star(
     join trees per round and Catalyst's plan-clone recursion overflows
     after ~3 rounds (measured), long before any data-size limit. All
     comparisons are on vertex ids: exact for integral ids, and
-    lexicographic for string ids — the same ordering min-label and the
-    local union-find use, so the output-identical contract holds for
-    both id types.
+    lexicographic for string ids — the same ordering the local
+    union-find uses, so the output-identical contract holds for both id
+    types.
     """
     e = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -402,9 +294,9 @@ def connected_components_star(
         .localCheckpoint(eager=True)
     )
     # Vertices appearing ONLY in self-pairs (a,a) carry no real edge but
-    # are still "in pairs" — the minlabel/local paths emit them as
-    # singletons, so this path must too to keep the output-identical
-    # contract across solvers.
+    # are still "in pairs" — the local path emits them as singletons, so
+    # this path must too to keep the output-identical contract across
+    # solvers.
     self_only = (
         pairs.where(F.col(src) == F.col(dst))
         .select(F.col(src).alias(id_out), F.col(src).alias(component_out))

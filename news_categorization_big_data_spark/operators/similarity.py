@@ -253,13 +253,6 @@ def embedding_near_dup_pairs(
     valid = emb.where(
         (F.size(F.col(vec_col)) == dim) & measurable(vec_col)
     )
-    # grouped_ids carries the spark.graft.groupcollapse.cap valve
-    # (default off — plan unchanged): an over-cap exact-dup vector
-    # cluster spills to singleton group rows, which flow through the
-    # SAME inter-pair machinery below (identical vectors share every
-    # band key; _a.g < _b.g orders them; the cap window sums _gsz just
-    # as before) while the intra path's size(_ids) > 1 guard skips
-    # them — no row ever holds an unbounded member array.
     groups = (
         grouped_ids(fan_out(valid), (vec_col,), id_col)
         .withColumn("_gsz", F.size("_ids").cast("long"))

@@ -10,206 +10,21 @@ Every registered query has carried a green official stamp since round 7
 and every LATEST stamp is green, so since round 8 the window is PURE
 RE-PROOF ROTATION: changed-plan queries first, then the stalest stamps.
 
-The ROUND-12 window (a hardening round — the round-11 VERDICT's 8
-items):
-
-1. The 12 plans round 12 changed: q_join_salted — its salt is now
-   pmod(xxhash64(event_id), 8), a pure row function, replacing the
-   recompute-unstable xxhash64(monotonically_increasing_id()) (the
-   VERDICT's #1: mono-id re-buckets re-executed rows under
-   fetch-failure map reruns, SPARK-23207 class); and the four
-   ordered-window valve callers (q_peak_concurrency, q_lift_bands,
-   q_survival_hazard, q_rrf_fusion) whose order args became plain
-   (name, asc) specs when functions/ordered.py dropped its
-   _jc.toString() parse — their DEFAULT plans are expression-identical,
-   re-stamped out of caution. Plus the three dedup plans that gained
-   shuffle_merge hints after the skew fixture caught a static
-   broadcast of corpus-scale frames (q_dedup_containment — a measured
-   broadcast-OOM on /tmp/skew1, now MATCH there; q_dedup_ngram_jaccard
-   and q_dedup_keep_best — same estimate bug, latent; plus
-   q_dedup_mllib_lsh and q_lsh_recall, whose plans embed the shared
-   jaccard_pairs verify join; and q_simhash_hamming, which gained the
-   default-OFF spark.graft.simhash.maxdf emergency valve after the
-   fixture's degenerate-corpus regime killed the uncapped run —
-   default plan bit-identical; and q_sessionize, now routed through
-   the spark.graft.session.chunked hot-user valve
-   (functions/sessions.py) — default expression-identical, valve
-   proven output-identical on the new hot-user fixture /tmp/skew2). All re-proven
-   MATCH by subset_sim in-session (plus valve-ON proofs for the
-   ordered family and skew-fixture proofs for the dedup family).
-1b. The 13 plans changed by the round-12 GIANT-DOC program (the
-   /tmp/skew3 fixture caught three real at-scale failures — the
-   q_char_classes int64 simpson overflow, the q_dedup_passage
-   HOF-lambda re-split quadratic, the jaccard int32 size-filter
-   overflow — plus the dedup/token-stream oracle rewrites to linear
-   list_zip / relational-verify forms; SCALE.md "giant-DOCUMENT
-   axis"): q_char_classes, q_repetition_stats, q_dedup_passage,
-   q_summarize_extractive, q_minhash_jaccard_est, q_dedup_near,
-   q_dedup_incremental, q_dedup_cluster, q_dedup_minhash,
-   q_collocations, q_bigram_lm, q_doc_fluency, q_decontaminate.
-   All proven in-session: sf0.01 subset sims MATCH, full driver sim
-   282/282 (run BEFORE the same round registered q_quality_buckets and
-   q_url_normalize — the closing in-session sim on the final registry
-   was 284/284, per commit 4b683ff), and 65 queries oracle-MATCH at
-   fixture scale.
-2. The 4 plans changed late in round 11 AFTER its window froze
-   (VERDICT item 2): q_multimodal_decode, q_audio_decode,
-   q_video_frames (numpy-vectorized fixture synthesis) and
-   q_token_rarity (gained the default-OFF rarity.preagg valve).
-3. The 3 standing canaries — q_group_stats, q_scan_json, q_udf_scalar.
-4. ALL 17 remaining pass(r3) stamps (q_join_salted's sits in group 1)
-   — after this window NO stamp predates r4.
-5. Backfill: 1 pass(r4) stamp (q_argmax_join) — group 1b displaced
-   the other 13 alphabetical r4 backfills past the 50-slot boundary
-   (changed code outranks re-proof rotation).
-
-LATE round-12 (after the window above was already full): the NULL-KEY
-fixture /tmp/skew4 (tools/make_skew4.py — 30% null user_id, 20% null
-value, null/empty texts and props) exposed and fixed cross-engine
-null-semantics divergences in 16 queries — q_funnel,
-q_retention_cohort (phantom null-user through the join-free
-rewrites), q_equidepth_histogram, q_window_distribution,
-q_rank_normalize, q_ks_drift, q_ml_auc, q_grouped_auc (Spark NULLS
-FIRST vs DuckDB NULLS LAST defaults / null-score policy),
-q_rolling_median (empty-frame index-0 ANSI crash), q_asof_join/
-forward/tolerance (one operator fix: a null by-key never matches),
-q_resample_ohlc (min_by vs arg_min null args), q_variant_json
-(concat-null payload collapse), q_multimodal_cols (to_json
-ignoreNullFields), q_bitmap_setops (self-inconsistent oracle) — and
-q_group_entropy traded its bounded log2 lookup for the UNBOUNDED
-engine-pinned det_log2_sql closed form (functions/exact.py; the
-30k-row null group tripped the 1024 bound, as any 100-TB hot entity
-would). All 16+1 carry older official stamps so they sit legally
-outside the frozen window; every one is proven in-session (sf0.01 +
-/tmp/skew4 subset sims MATCH, full driver sim) and they HEAD the
-round-13 rotation below.
-
-The ROUND-13 window (shipped below as groups A-D of _DRIVER_ORDER)
-executes that plan: (A) the 24 plans round 13 changed — the
-static-broadcast purge across the TPC-H/join tier (round-12 VERDICT
-item 1: pinned F.broadcast() hints dropped from every SF-scaling
-customer/supplier/part frame; q_join_broadcast re-expressed through
-the size-gated broadcast_if_small; q_join_theta_range rebuilt as a
-banded equi-join), q_url_normalize (ADVICE regex/oracle fixes + first
-official stamp), and the SIX null-semantics fixes from round 13's OWN
-null-key fixture program: /tmp/skew5 (tools/make_skew5.py) extends the
-skew4 protocol to the TPC-H tier — deterministic NULLs in every join
-key, date, measure, and group key of the seven relational tables — and
-a full-registry sweep found 278/284 MATCH with exactly six divergences
-(q_percent_change and q_offset_skip: unpinned ORDER BY null placement;
-q_tpch_q12: NOT-IN low-count vs otherwise(); q_join_anti: NOT IN
-oracle vacuously empty under a NULL subquery key; q_benford_digits:
-Spark element_at under a NULL ordinal; q_alloc_budget: rank-key null
-placement), all fixed and re-proven MATCH on skew5 AND sf0.01;
-(B) the 17 late-round-12 null-policy plans above, whose green stamps
-legally predate their changes; (C) the 3 standing canaries — this
-round q_scan_json and q_udf_scalar are ALSO changed plans (empty-axis
-schema-drift guard; non-finite banding contract), so their canary
-slots double as change stamps; (D) the 6 stalest-stamped of the 17
-further plans round 13 changed in its EMPTY-INPUT and NON-FINITE
-fixture programs — /tmp/skew6 (tools/make_skew6.py: every table
-zero rows, production schema; sweep 269/284, 15 defects in four
-classes fixed: inference-dependent round-trips now carry the writer's
-schema, try_divide on empty-derived denominators, the rollup/cube/
-grouping-sets engine contract of no-()-row-on-empty pinned via HAVING
-COUNT(*)>0, estimator empty guards, count_if-vs-COUNT(CASE) oracle
-parity) and /tmp/skew7 (tools/make_skew7.py: NaN/±Inf in events.value
-and poisoned embedding components; first sweep 245/284 — the four
-SILENT hash mismatches fixed by pinning finite-subset order
-statistics, NULL banding for non-finite, and IEEE NaN comparison
-semantics; the two Spark-side crashes fixed by a finite z-order
-coordinate guard and a drop-poisoned-vectors curation filter before
-KMeans — and then, COMPLETED in the same round, the full non-finite
-cast program the first sweep exposed: the POISON → NULL contract
-(functions in plans/relational.py — nonfinite, dsum_fin/o_dsum_fin,
-poisoned_flag/o_poisoned, o_fin) applied to all ~31 exact-decimal/
-int-cast metric consumers, where Spark's double→decimal cast NULLs
-non-finite values SILENTLY (a short sum is a wrong answer) while
-DuckDB refuses the cast loudly; any non-finite input now makes the
-affected exact aggregate NULL on BOTH engines, cascading through
-derived stats (t/F/theta/CI/EWMA/TWAP/CUSUM/DiD chains), while pure
-row-count/duration facts stay. Money columns (o_totalprice,
-l_extendedprice) keep plain dsum — finite by schema contract, which
-is exactly why make_skew7 does not poison them. CLOSING SWEEPS:
-/tmp/skew7 full registry 284/284 MATCH, full driver sim at sf0.01
-284/284.) The changed plans lead the tail in two waves and head the
-round-14 window; the r4-stamp backfill moved behind them (changed
-code outranks re-proof rotation). Keep ROTATION_PENDING for anything
-newly registered.
-
-The ROUND-14 window executes the r13 VERDICT brief: (A) the 9 plans
-round 14 changed — q_tpch_q18's qualifying-key broadcast size-GATED
-through broadcast_if_small (the r13 judge's one scale-killer: the
-HAVING set is ~1.5% of orders, LINEAR in SF, ~18 GB at 100 TB —
-measured, documented in the plan docstring; the broadcast audit and
-tests/test_no_pinned_sf_broadcasts no longer exempt corpus-keyed
-aggregates or shuffles under a PINNED hint), the q_tpch_q16 and
-q_scan_evolved oracle fixes from r13 ADVICE (NOT IN → NOT EXISTS;
-COALESCE on all-NULL groups), the two round-14 conf-gated EXACT scale
-valves (q_heavy_hitters spark.graft.hh.cms — CMS prefilter, exact
-verify only on candidate keys; q_equidepth_histogram
-spark.graft.equidepth.valuedomain — the histogram reconstructed
-arithmetically from the distinct-value counts table, zero fact sort;
-both output-identical, pinned in tests/test_robust_linkage.py),
-q_bloom_join's audit-self-describing word projection, and the
-keyword-scorer refactor (operators/classify.py keyword_score_cols)
-that puts the model stage INSIDE the stream for the end-to-end
-topology test (tests/test_streaming.py
-test_reference_topology_e2e_kill_replay_digest_parity: ingest →
-classify → digest → route live, kill/replay mid-stream, digest equals
-batch q_pipeline_digest); (B) the q_group_stats canary; (C) the 40
-stalest-stamped round-13-changed plans (the official-ledger catch-up
-the r13 VERDICT asked for). Round 14 also adds the VALUE-DOMAIN
-fixture axis: /tmp/skew8 (tools/make_skew8.py — every events.value a
-unique continuous double, the regime where distinct-value tables are
-fact-scale) swept the full registry 284/284 MATCH on first run, and
-the full-registry sweep at /tmp/sf1 (tools/make_sf1.py) read 281/284
-— proving the overflow-sensitive exact-decimal and poison→NULL paths
-at 10× oracle scale AND surfacing the round's wave-2 window (group
-A'): the duplicate-timestamp tie-break fixes (q_asof_join/forward/
-tolerance via operators/asof.py tie_break; q_stream_session's oracle
-total order) and the statically-broadcast-widened-frame cures
-(q_simhash_hamming's shuffle_hash verify joins after the 550M-row
-pair-table broadcast crash, plus the same class fixed latent in
-q_graph_triangles, q_lsh_recall, q_minhash_jaccard_est,
-q_inverted_index — SCALE.md round-14 late section). The 3 sf1
-non-MATCHes are documented oracle-infrastructure exclusions
-(recursive-CTE disk spill ×2; the brute-force all-pairs simhash
-oracle, quadratic by design).
-
-The ROUND-15 window executes the r14 VERDICT brief: (A) the 10 plans
-round 15 changed — q_graph_pagerank and q_graph_bfs cured of the
-statically-broadcast-widened-frame class by the NEW standing
-registry-wide sweep (tests/test_global_plan_sweep.py
-test_no_static_broadcast_of_widened_frame generalizes the r14 manual
-probe: any BroadcastExchange over a bare-attribute explode descending
-from a collect_list/collect_set, keyless-agg/limit subtrees exempt by
-rule — the two graph plans' iterative joins were this exact class,
-invisible to the r14 sf1 sweep because their DuckDB oracles are
-infeasible there; both now declare shuffle_hash builds on the
-rank/degree/frontier sides), the as-of trio's NULL-tie-value ordering
-fix (r14 ADVICE: asc_nulls_last/desc_nulls_last + explicit NULLS LAST
-in the oracles — a NULL tie now outranks any real one in BOTH
-engines), q_simhash_hamming's spark.graft.simhash.bits=auto valve
-(the measured log2(n) sizing law as code, operators/dedup.py
-auto_simhash_bits), and the distinctive audit-key renames
-(BOUNDED_KEY_COLS no longer carries generic names; _cms_j/_cms_bucket,
-_bloom_w, _len_bucket in the three plans a strip-and-resweep showed
-actually relied on them); (B) the q_group_stats canary; (C) the 39
-OLDEST official stamps (r4 complete, r5 complete, r6 partial — the
-r14 VERDICT item 2 catch-up; the remaining 56 pre-r10 stamps head
-round 16). Round 15 also closes the three sf1 oracle exclusions with
-engine-side structural invariants (tests/test_sf1_invariants.py:
-pagerank mass conservation + the exact damping recurrence, BFS seed/
-triangle-inequality/predecessor pinning, simhash banding losslessness
-vs in-Python popcount on sampled real sf1 sketches), adds the
-UNICODE/LOCALE fixture axis /tmp/skew9 (tools/make_skew9.py —
-mixed-script token renderings, df-structure-preserving), restructures
-bench.py output so the driver's 2000-char tail capture parses again
-(detail line first, compact final line pinned < 1800 chars, plus the
-sf1 decade as a second recorded block), and gates a live-Kafka
-integration test behind KAFKA_BOOTSTRAP (tests/test_kafka_live.py).
-
+The current window (groups A-C of ``_DRIVER_ORDER``): (A) the plans
+whose builders or shared operators changed when the six default-off
+valves were deleted — q_token_rarity (rarity.preagg), q_sessionize
+(session.chunked), q_heavy_hitters (hh.cms), q_equidepth_histogram
+(equidepth.valuedomain) and q_dedup_cluster (cc.algorithm=minlabel);
+their default plans are unchanged. (A') The ten r15/r16 rewrites never
+checked against the driver oracle: the distinct-value collapses
+(q_semantic_dedup, q_dedup_mllib_lsh, q_dedup_fuzzy, q_dedup_embedding,
+q_dedup_ngram_jaccard, q_dedup_containment — functions/groupcollapse.py),
+the single-pass q_lsh_recall,
+and the fan_out(by=) keyed repartitions in q_classify_keywords,
+q_variant_json and q_sql_udf. (B) The q_group_stats canary. (C) The 34
+oldest official stamps (r6 complete, r7 complete, r9 partial). Earlier
+windows' rationales live in git history. Keep ROTATION_PENDING for
+anything newly registered.
 """
 
 from news_categorization_big_data_spark.plans.registry import REGISTRY, QuerySpec, register
@@ -248,91 +63,103 @@ from news_categorization_big_data_spark.plans import (  # noqa: E402,F401
 #: from this list would be appended in module-import order; the list is
 #: asserted complete below so drift fails fast.
 _DRIVER_ORDER = [
-    # ---- ROUND-15 WINDOW (first 50 = the driver's correctness window) ----
+    # ---- ROTATED WINDOW (first 50 = the driver's correctness window) ----
     # Composition (priority order, the round-8 convention): changed
-    # plans first, then the canary, then the OLDEST official stamps
-    # (the r14 VERDICT item 2 catch-up: 98 stamps predated r10 at the
-    # r15 open; this window drains the r4-r6 tail oldest-first, round
-    # 16 takes the rest).
-    # -- A. plans CHANGED in round 15 (10): the two iterative graph
-    #       plans cured of statically-broadcast widened frames by the
-    #       new standing sweep (pagerank's edge/degree joins, bfs's
-    #       frontier joins — both were invisible to the r14 sf1 oracle
-    #       sweep, their DuckDB oracles being infeasible there); the
-    #       as-of trio's NULL-tie ordering fix (asc_nulls_last +
-    #       explicit NULLS LAST oracles); q_simhash_hamming's
-    #       bits=auto valve plumbing; and the audit-key renames
-    #       (_cms_j/_cms_bucket in q_cms_counts + the q_heavy_hitters
-    #       CMS valve, _bloom_w in q_bloom_join, _len_bucket in
-    #       q_batch_assign) — default outputs identical, builders
-    #       changed, re-stamped per the changed-code-first convention.
-    "q_graph_pagerank",
-    "q_graph_bfs",
-    "q_asof_join",
-    "q_asof_forward",
-    "q_asof_tolerance",
-    "q_simhash_hamming",
-    "q_cms_counts",
-    "q_bloom_join",
-    "q_batch_assign",
+    # plans first, then the canary, then the OLDEST official stamps.
+    # -- A. plans whose builders or shared operators changed when the
+    #       six default-off valves were deleted (rarity.preagg,
+    #       session.chunked, hh.cms, equidepth.valuedomain,
+    #       cc.algorithm=minlabel, groupcollapse.cap) — default plans
+    #       unchanged, re-stamped per the changed-code-first convention.
+    "q_token_rarity",
+    "q_sessionize",
     "q_heavy_hitters",
+    "q_equidepth_histogram",
+    "q_dedup_cluster",
+    # -- A'. the ten r15/r16 rewrites never checked against the driver
+    #       oracle: the distinct-value collapses (semantic/mllib/fuzzy/
+    #       embedding/ngram/containment dedup), the single-pass
+    #       q_lsh_recall, and the fan_out(by=) keyed repartitions
+    #       (q_classify_keywords, q_variant_json, q_sql_udf).
+    "q_semantic_dedup",
+    "q_dedup_mllib_lsh",
+    "q_dedup_fuzzy",
+    "q_dedup_embedding",
+    "q_dedup_ngram_jaccard",
+    "q_dedup_containment",
+    "q_lsh_recall",
+    "q_classify_keywords",
+    "q_variant_json",
+    "q_sql_udf",
     # -- B. standing canary (every window).
     "q_group_stats",
-    # -- C. the 39 oldest official stamps (r4 complete, r5 complete,
-    #       r6 partial; oldest-first, alphabetical within a round).
-    "q_argmax_join",
-    "q_embedding_quantize",
-    "q_event_transitions",
-    "q_gap_fill",
-    "q_group_mode",
-    "q_grouped_regression",
-    "q_join_interval_overlap",
-    "q_merge_upsert",
-    "q_sample_weighted",
-    "q_time_rollup_multi",
-    "q_tpch_q4",
-    "q_window_nth",
-    "q_window_time_range",
-    "q_bitmap_distinct",
-    "q_bm25_rank",
-    "q_conversion_latency",
-    "q_dedup_simhash",
-    "q_embedding_norms",
-    "q_event_trigrams",
-    "q_feature_hash",
-    "q_itemset_pairs",
-    "q_orphan_refs",
-    "q_rate_anomaly",
-    "q_regex_extract",
-    "q_scd2_intervals",
-    "q_seasonality",
-    "q_sim_ann_ivf",
-    "q_sim_search",
-    "q_sliding_distinct",
-    "q_tokenizer_fertility",
-    "q_ann_recall",
-    "q_cdc_apply",
-    "q_corr_matrix",
-    "q_date_arith",
-    "q_date_dim",
-    "q_geo_grid_join",
-    "q_graph_kcore",
-    "q_interval_coverage",
-    "q_k_anonymity",
+    # -- C. the 34 oldest official stamps (r6 complete, r7 complete,
+    #       r9 partial; oldest-first, alphabetical within a round).
+    "q_ml_eval",
+    "q_seq_cooccur",
+    "q_snapshot_diff",
+    "q_sql_recursive",
+    "q_table_checksum",
+    "q_target_encode",
+    "q_weighted_median",
+    "q_zone_map",
+    "q_compaction_bins",
+    "q_dedup_exact",
+    "q_dedup_prefix",
+    "q_embedding_dim_stats",
+    "q_er_blocking",
+    "q_group_approx",
+    "q_histogram2d",
+    "q_hll_distinct",
+    "q_label_centroids",
+    "q_pipeline_curate",
+    "q_pq_search",
+    "q_quantile_sketch",
+    "q_sample_per_group",
+    "q_sample_reservoir",
+    "q_sample_wor",
+    "q_scan_xml",
+    "q_skew_profile",
+    "q_split_leakproof",
+    "q_stream_trending",
+    "q_top_paths",
+    "q_tpch_q1",
+    "q_twap",
+    "q_union_by_name",
+    "q_chi2_terms",
+    "q_component_sizes",
+    "q_gini_spend",
     # ---- driver's 50-entry window ends here ----
-    # -- tail: the remaining pre-r10 stamps head round 16's window
-    #    (56 left: r6/r7/r9), then the prior rotation order. All
-    #    remain registered and pytest/driver_sim-proven every round.
+    # -- tail: the remaining r9 stamps head the next window, then the
+    #    prior rotation order, then the previous window's entries
+    #    (freshest stamps last). All remain registered and
+    #    pytest/driver_sim-proven every round.
+    "q_graph_degree_dist",
+    "q_graph_jaccard_neighbors",
+    "q_group_collect",
+    "q_group_counts",
+    "q_growth_accounting",
+    "q_join_left_outer",
+    "q_join_multiway",
+    "q_join_semi",
+    "q_mad_outliers",
+    "q_scan_parquet",
+    "q_scan_range_pred",
+    "q_sequence_gaps",
+    "q_skyline",
+    "q_stream_dedup",
+    "q_stream_sliding",
+    "q_stream_tumbling",
+    "q_stream_watermark",
+    "q_tfidf_pairs",
+    "q_topk_per_group",
     "q_tpch_q18",
     "q_tpch_q16",
     "q_scan_evolved",
-    "q_equidepth_histogram",
-    "q_classify_keywords",
     "q_pipeline_digest",
     "q_join_broadcast",
     "q_stream_session",
     "q_graph_triangles",
-    "q_lsh_recall",
     "q_minhash_jaccard_est",
     "q_inverted_index",
     "q_curation_funnel",
@@ -366,32 +193,24 @@ _DRIVER_ORDER = [
     "q_attrib_channel",
     "q_rolling_corr",
     "q_incremental_agg",
-    "q_twap",
     "q_salted_agg",
-    "q_embedding_dim_stats",
-    "q_label_centroids",
     "q_calibration_ece",
     "q_pq_assign",
     "q_json_to",
     "q_unpivot_long",
     "q_scan_csv",
-    "q_dedup_mllib_lsh",
     "q_join_salted",
     "q_peak_concurrency",
     "q_lift_bands",
     "q_survival_hazard",
     "q_rrf_fusion",
-    "q_dedup_containment",
-    "q_dedup_ngram_jaccard",
     "q_dedup_keep_best",
-    "q_sessionize",
     "q_char_classes",
     "q_repetition_stats",
     "q_dedup_passage",
     "q_summarize_extractive",
     "q_dedup_near",
     "q_dedup_incremental",
-    "q_dedup_cluster",
     "q_dedup_minhash",
     "q_collocations",
     "q_bigram_lm",
@@ -400,9 +219,7 @@ _DRIVER_ORDER = [
     "q_multimodal_decode",
     "q_audio_decode",
     "q_video_frames",
-    "q_token_rarity",
     "q_bpe_pair_counts",
-    "q_dedup_fuzzy",
     "q_doc_commonness",
     "q_join_full_outer",
     "q_pack_sequences",
@@ -461,59 +278,6 @@ _DRIVER_ORDER = [
     "q_top_terms_per_doc",
     "q_doc_fingerprint",
     "q_knn_label",
-    "q_mad_outliers",
-    "q_gini_spend",
-    "q_sequence_gaps",
-    "q_skyline",
-    "q_component_sizes",
-    "q_graph_degree_dist",
-    "q_growth_accounting",
-    "q_semantic_dedup",
-    "q_graph_jaccard_neighbors",
-    "q_chi2_terms",
-    "q_tfidf_pairs",
-    "q_scan_parquet",
-    "q_scan_range_pred",
-    "q_join_left_outer",
-    "q_join_semi",
-    "q_join_multiway",
-    "q_group_counts",
-    "q_group_collect",
-    "q_topk_per_group",
-    "q_stream_tumbling",
-    "q_stream_sliding",
-    "q_stream_watermark",
-    "q_stream_dedup",
-    "q_sample_reservoir",
-    "q_union_by_name",
-    "q_compaction_bins",
-    "q_histogram2d",
-    "q_dedup_prefix",
-    "q_stream_trending",
-    "q_pq_search",
-    "q_skew_profile",
-    "q_split_leakproof",
-    "q_sample_per_group",
-    "q_top_paths",
-    "q_sample_wor",
-    "q_er_blocking",
-    "q_scan_xml",
-    "q_pipeline_curate",
-    "q_dedup_embedding",
-    "q_dedup_exact",
-    "q_tpch_q1",
-    "q_group_approx",
-    "q_hll_distinct",
-    "q_quantile_sketch",
-    "q_sql_recursive",
-    "q_zone_map",
-    "q_weighted_median",
-    "q_snapshot_diff",
-    "q_sql_udf",
-    "q_ml_eval",
-    "q_target_encode",
-    "q_table_checksum",
-    "q_seq_cooccur",
     "q_tpch_q2",
     "q_tpch_q3",
     "q_tpch_q5",
@@ -545,7 +309,6 @@ _DRIVER_ORDER = [
     "q_grouped_auc",
     "q_rolling_median",
     "q_resample_ohlc",
-    "q_variant_json",
     "q_multimodal_cols",
     "q_bitmap_setops",
     "q_group_entropy",
@@ -557,6 +320,54 @@ _DRIVER_ORDER = [
     "q_udaf_grouped",
     "q_udtf_table_arg",
     "q_ab_srm",
+    "q_graph_pagerank",
+    "q_graph_bfs",
+    "q_asof_join",
+    "q_asof_forward",
+    "q_asof_tolerance",
+    "q_simhash_hamming",
+    "q_cms_counts",
+    "q_bloom_join",
+    "q_batch_assign",
+    "q_argmax_join",
+    "q_embedding_quantize",
+    "q_event_transitions",
+    "q_gap_fill",
+    "q_group_mode",
+    "q_grouped_regression",
+    "q_join_interval_overlap",
+    "q_merge_upsert",
+    "q_sample_weighted",
+    "q_time_rollup_multi",
+    "q_tpch_q4",
+    "q_window_nth",
+    "q_window_time_range",
+    "q_bitmap_distinct",
+    "q_bm25_rank",
+    "q_conversion_latency",
+    "q_dedup_simhash",
+    "q_embedding_norms",
+    "q_event_trigrams",
+    "q_feature_hash",
+    "q_itemset_pairs",
+    "q_orphan_refs",
+    "q_rate_anomaly",
+    "q_regex_extract",
+    "q_scd2_intervals",
+    "q_seasonality",
+    "q_sim_ann_ivf",
+    "q_sim_search",
+    "q_sliding_distinct",
+    "q_tokenizer_fertility",
+    "q_ann_recall",
+    "q_cdc_apply",
+    "q_corr_matrix",
+    "q_date_arith",
+    "q_date_dim",
+    "q_geo_grid_join",
+    "q_graph_kcore",
+    "q_interval_coverage",
+    "q_k_anonymity",
 ]
 
 

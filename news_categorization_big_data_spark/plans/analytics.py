@@ -89,11 +89,9 @@ _O_WINSOR_CLIP = (
     "user's events once), then a partial-aggregating groupBy on "
     "(user_id, session). Gap math is epoch-µs long subtraction — no "
     "float anywhere. A skewed user (one bot carrying a macroscopic "
-    "share of the stream) makes that user's window sort one task; "
-    "spark.graft.session.chunked (functions/sessions.py, default OFF — "
-    "this stamped plan is the single per-user window) swaps in the "
-    "time-chunked two-phase plan with identical output, proven on the "
-    "hot-user fixture /tmp/skew2. The streaming twin is "
+    "share of the stream) makes that user's window sort one task — a "
+    "spill-safe straggler, oracle-MATCH on the hot-user fixture "
+    "/tmp/skew2 (functions/sessions.py). The streaming twin is "
     "q_stream_session (session_window); this is the arbitrary-logic "
     "batch shape that handles policies session_window can't (e.g. "
     "activity-type-aware gaps).",

@@ -241,11 +241,10 @@ def _cluster_oracle() -> str:
     oracle=_cluster_oracle(),
     tier="C",
     doc="Near-duplicate CLUSTERS from the banded-LSH candidate pairs: "
-    "distributed connected components by min-label propagation "
-    "(operators/graph.py), component label = min doc id — the canonical "
-    "survivor a dedup pass keeps. Each round is one equi-join + one "
-    "min-aggregate over the (tiny, cached) pair graph; rounds = cluster "
-    "diameter, 2-4 in practice for LSH graphs. Oracle = recursive-CTE "
+    "connected components (operators/graph.py: driver union-find under "
+    "spark.graft.cc.localThreshold edges, large-star/small-star above), "
+    "component label = min doc id — the canonical survivor a dedup pass "
+    "keeps. Oracle = recursive-CTE "
     "min-reachable-label over the same candidate CTE as q_dedup_near.",
 )
 def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -582,11 +581,6 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         by=("doc_id",),
     )
-    # grouped_ids = the r15 collect_list with the
-    # spark.graft.groupcollapse.cap valve (default off, plan unchanged):
-    # an over-cap exact-dup cluster spills to singleton group rows that
-    # pair through the normal blk join (same norm ⇒ same blk, Δl = 0,
-    # lev = 0 ≤ 20) instead of holding one unbounded array.
     # Length filter AFTER the groupBy: as a pre-group row filter it was
     # pushed into the SCAN as a DataFilter, re-running the two-regexp
     # normalize chain once in the filter and again in the projection
@@ -924,8 +918,8 @@ SIMHASH_MAXDF_CONF = "spark.graft.simhash.maxdf"
 #: sizing law (operators/dedup.py auto_simhash_bits) — the setting a
 #: corpus-scale deployment should run, because a fixed 32-bit sketch
 #: re-hits the single-task hot-bucket cliff around 2^8 docs per band
-#: value. UNLIKE the identity valves (CMS heavy hitters, arithmetic
-#: equi-depth), flipping this CHANGES THE ANSWER: the pair set is
+#: value. UNLIKE the output-identical valves (window.ranged,
+#: rarity.headK), flipping this CHANGES THE ANSWER: the pair set is
 #: defined over the sketch, so a wider sketch is a different (finer)
 #: query and the stamped oracle no longer applies.
 SIMHASH_BITS_CONF = "spark.graft.simhash.bits"

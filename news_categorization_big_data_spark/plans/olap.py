@@ -626,92 +626,6 @@ def q_time_rollup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Heavy-hitter threshold in parts-per-thousand of total event volume.
 HH_PER_MILLE = 3
 
-#: Valve: "true" flips q_heavy_hitters to the CMS-prefiltered plan
-#: below — output-identical (tests/test_robust_linkage.py). Width /
-#: depth tune the sketch (candidate-set tightness vs sketch size).
-HH_CMS_CONF = "spark.graft.hh.cms"
-HH_CMS_WIDTH_CONF = "spark.graft.hh.cms.width"
-HH_CMS_DEPTH_CONF = "spark.graft.hh.cms.depth"
-
-
-def heavy_hitters_cms(ev: DataFrame) -> DataFrame:
-    """The count-min-sketch first pass the q_heavy_hitters docstring
-    documents, built for real: bound WHICH keys can possibly exceed
-    the threshold with a d×w cell-count sketch, then run the exact
-    per-key count ONLY over rows whose key survives every row of the
-    sketch. Output-identical to the exact two-pass plan because a CMS
-    cell count is an OVERESTIMATE of every key hashed into it (cells
-    aggregate collisions), so the candidate set is a superset of the
-    true heavy hitters and the exact final filter trims it to the
-    same rows; a key's rows all share its buckets, so candidate rows
-    carry their FULL exact counts.
-
-    Scale: the default plan's per-key count shuffle carries one row
-    per DISTINCT KEY per mapper — at 100 TB with billions of user
-    ids, that IS the fact shuffle. Here the sketch aggregate is d×w
-    cells regardless of key cardinality (map-side combinable to
-    ≤ d×w rows per mapper), the hot-cell table broadcasts at ≤ d×w
-    rows, the candidate filter is map-only, and the exact shuffle
-    carries only keys colliding into hot cells — for a ‰-level
-    threshold, a vanishing fraction. NULL keys hash via a sentinel
-    string no numeric id can collide with, so an all-NULL heavy group
-    survives the prefilter (skew5 regime, pinned in tests).
-    """
-    spark = ev.sparkSession
-    w = int(spark.conf.get(HH_CMS_WIDTH_CONF, "8192"))
-    d = int(spark.conf.get(HH_CMS_DEPTH_CONF, "3"))
-    key = F.coalesce(F.col("user_id").cast("string"), F.lit(" null"))
-
-    def bucket(j: int):
-        return F.pmod(F.xxhash64(key, F.lit(j)), F.lit(w))
-
-    # CMS cell keys carry the distinctive engine-derived names
-    # (_cms_j, _cms_bucket) the broadcast audit exempts: their
-    # cardinality is bounded by the sketch geometry (d×w cells at any
-    # SF), and a distinctive name keeps the exemption from leaking to
-    # a future corpus-scaling column coincidentally named "j"/"bkt"
-    # (r14 ADVICE — 'bkt' was additionally absent from the bounded
-    # set, so the hot-cell broadcasts below would have false-flagged).
-    cells = ev.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("_cms_j"), bucket(j).alias("_cms_bucket"))
-                    for j in range(d)
-                ]
-            )
-        ).alias("c")
-    ).select("c._cms_j", "c._cms_bucket")
-    cell_counts = cells.groupBy("_cms_j", "_cms_bucket").agg(
-        F.count("*").alias("_ccnt")
-    )
-    total = ev.groupBy().agg(F.count("*").alias("total"))
-    hot = (
-        cell_counts.crossJoin(F.broadcast(total))
-        .where(F.col("_ccnt") * 1000 >= F.col("total") * HH_PER_MILLE)
-        .select("_cms_j", "_cms_bucket")
-    )
-    cand = ev.select("user_id")
-    for j in range(d):
-        hj = hot.where(F.col("_cms_j") == j).select(
-            F.col("_cms_bucket").alias(f"_b{j}")
-        )
-        cand = cand.join(
-            F.broadcast(hj), bucket(j) == F.col(f"_b{j}"), "inner"
-        ).drop(f"_b{j}")
-    counts = cand.groupBy("user_id").agg(F.count("*").alias("cnt"))
-    return (
-        counts.crossJoin(F.broadcast(total))
-        .where(F.col("cnt") * 1000 >= F.col("total") * HH_PER_MILLE)
-        .select(
-            "user_id",
-            "cnt",
-            (F.col("cnt").cast("double") / F.col("total").cast("double")).alias(
-                "share"
-            ),
-        )
-    )
-
 
 @register(
     "q_heavy_hitters",
@@ -733,15 +647,11 @@ def heavy_hitters_cms(ev: DataFrame) -> DataFrame:
     "computed identically from the same two integers on both engines). "
     "At 100 TB this two-pass exact plan is the verifier behind a "
     "count-min-sketch first pass (CMS bounds which keys CAN exceed "
-    "the threshold; the exact pass runs only on those) — built as the "
-    "conf-gated valve spark.graft.hh.cms (heavy_hitters_cms above, "
-    "round 14), output-identical by the CMS overestimate property and "
-    "pinned so in tests.",
+    "the threshold; the exact pass runs only on those; q_cms_counts "
+    "builds the sketch).",
 )
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    if spark.conf.get(HH_CMS_CONF, "false") == "true":
-        return heavy_hitters_cms(ev)
     counts = ev.groupBy("user_id").agg(F.count("*").alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
     return (
@@ -933,7 +843,7 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Distinctive engine-derived cell-key names (_cms_j, _cms_bucket):
     # the pinned broadcast of `sketch` is bounded by the d×w cell
     # geometry, and the audit exempts it by key name — see
-    # heavy_hitters_cms / tools/broadcast_audit.BOUNDED_KEY_COLS
+    # tools/broadcast_audit.BOUNDED_KEY_COLS
     # (r14 ADVICE: the old generic "j"/"bucket" names would wave
     # through any future corpus-keyed aggregate that reused them).
     def bucket(j):

@@ -302,99 +302,6 @@ def q_ab_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Equi-depth bucket count for q_equidepth_histogram.
 EQUIDEPTH_BUCKETS = 8
 
-#: Valve: "true" flips q_equidepth_histogram from the per-type ntile
-#: sort (default, oracle-stamped) to the sort-free VALUE-DOMAIN plan
-#: below — output-identical (tests/test_robust_linkage.py).
-EQUIDEPTH_VALUEDOMAIN_CONF = "spark.graft.equidepth.valuedomain"
-
-
-def equidepth_valuedomain(ev: DataFrame, buckets: int) -> DataFrame:
-    """Exact equi-depth histogram WITHOUT sorting the fact table: all
-    bucket stats are reconstructed arithmetically from the per-type
-    distinct-value counts table.
-
-    The round-5 docstring proposed approx_percentile (KLL) bucket
-    BOUNDS as the planet-scale swap, "trading exact equal counts for
-    zero sort". This plan gets the zero-fact-sort without the trade:
-    rows of equal value are interchangeable under the ntile order
-    (value, event_id) — any tie permutation yields the same per-bucket
-    value multiset, hence identical (n_rows, lo, hi) — so the bucket
-    assignment is a pure function of each distinct value's RANK
-    INTERVAL. One groupBy collapses facts onto the value domain; a
-    per-type cumulative window over DISTINCT values yields each
-    value's interval [s+1, s+c]; inverse-ntile arithmetic maps rank
-    intervals onto bucket index ranges (first n%B buckets hold
-    ⌈n/B⌉ rows — the SQL-standard sizing both engines implement); a
-    sequence-explode emits one row per (value, overlapped bucket) —
-    at most |distinct|+B rows per type — and the final aggregate
-    re-groups by bucket. Scale: the only fact-wide op is the
-    map-side-combinable counts aggregate; window state is bounded by
-    the value domain. When the value domain is itself fact-scale (the
-    /tmp/skew8 axis: every double unique) the cumulative window is the
-    single-partition-per-type shape — the same regime the ranged
-    window valve (functions/ordered.py) exists for; here per-TYPE
-    partitioning already splits the work B_types ways and the sort is
-    spillable, so the swap degrades to the default plan's cost rather
-    than below it.
-    """
-    c = ev.groupBy("event_type", F.col("value").alias("_v")).agg(
-        F.count("*").alias("_vc")
-    )
-    w_all = Window.partitionBy("event_type")
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    d = c.withColumn("_n", F.sum("_vc").over(w_all)).withColumn(
-        "_s", F.sum("_vc").over(w_cum) - F.col("_vc")
-    )
-    b = F.lit(buckets)
-    base = F.floor(F.col("_n") / b).cast("long")
-    extra = F.col("_n") - base * b
-    cutoff = (base + F.lit(1)) * extra
-
-    def bucket_of(rank):
-        return (
-            F.when(
-                rank <= cutoff,
-                F.floor((rank - 1) / (base + F.lit(1))).cast("long") + 1,
-            ).otherwise(
-                extra
-                + F.floor((rank - 1 - cutoff) / F.greatest(base, F.lit(1))).cast(
-                    "long"
-                )
-                + 1
-            )
-        )
-
-    def start_rank(bk):
-        return F.when(bk <= extra, (bk - 1) * (base + 1) + 1).otherwise(
-            cutoff + (bk - 1 - extra) * base + 1
-        )
-
-    def end_rank(bk):
-        return F.when(bk <= extra, bk * (base + 1)).otherwise(
-            cutoff + (bk - extra) * base
-        )
-
-    lo_r = F.col("_s") + 1
-    hi_r = F.col("_s") + F.col("_vc")
-    d = d.withColumn(
-        "bucket", F.explode(F.sequence(bucket_of(lo_r), bucket_of(hi_r)))
-    )
-    n_in = F.least(end_rank(F.col("bucket")), hi_r) - F.greatest(
-        start_rank(F.col("bucket")), lo_r
-    ) + 1
-    return (
-        d.groupBy("event_type", F.col("bucket").cast("int").alias("bucket"))
-        .agg(
-            F.sum(n_in).alias("n_rows"),
-            F.min("_v").alias("lo"),
-            F.max("_v").alias("hi"),
-        )
-    )
-
 
 @register(
     "q_equidepth_histogram",
@@ -427,20 +334,13 @@ def equidepth_valuedomain(ev: DataFrame, buckets: int) -> DataFrame:
     "fully determined by the total order; (value, event_id) is a "
     "unique sort key, so bucket assignment is identical across "
     "engines; bounds/counts exact. Scale: an exact ntile needs a "
-    "per-type sort — fine while a type's rows fit a spillable sort; "
-    "the planet-scale swap (conf spark.graft.equidepth.valuedomain, "
-    "round 14 — superseding the round-5 lossy-KLL suggestion) "
-    "reconstructs the exact histogram arithmetically from the "
-    "distinct-value counts table, zero fact sort, output-identical "
-    "(equidepth_valuedomain above; identity pinned in tests).",
+    "per-type sort — fine while a type's rows fit a spillable sort.",
 )
 def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value IS NOT NULL — see the oracle note: profiles the non-null
     # values AND pins cross-engine ntile order (Spark NULLS FIRST vs
     # DuckDB NULLS LAST would silently diverge; /tmp/skew4).
     ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    if spark.conf.get(EQUIDEPTH_VALUEDOMAIN_CONF, "false") == "true":
-        return equidepth_valuedomain(ev, EQUIDEPTH_BUCKETS)
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     return (
         ev.select("event_type", "value", "event_id")

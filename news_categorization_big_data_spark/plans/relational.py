@@ -41,11 +41,10 @@ from news_categorization_big_data_spark.sources.tables import load_table
 #: 20-bit limb mask for dsum's native-long accumulation (below).
 _LIMB20 = (1 << 20) - 1
 
-#: A/B toggle for tools/dsum_sweep_ab.py ONLY — never set in production.
-#: "limb" (default) = three native long sums; "decimal" = the
-#: pre-round-10 DECIMAL(30,scale) aggregation buffer. Both produce
-#: bit-identical output (tests/test_exact_conversion.py); the toggle
-#: exists so the per-query conversion A/Bs time the two accumulations
+#: Accumulation mode — never set in production. "limb" (default) =
+#: three native long sums; "decimal" = the pre-round-10
+#: DECIMAL(30,scale) aggregation buffer, kept as the reference that
+#: tests/test_exact_conversion.py proves the limb path bit-identical to
 #: through the SAME registered plan builder.
 DSUM_MODE = "limb"
 

@@ -299,14 +299,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expressions (self-cos is dot(v,v)/(vn·vn), never a synthetic 1).
     # Proven row-for-row equal to the per-row plan (exceptAll both
     # ways = 0) at sf0.1 and sf1, and oracle-MATCH.
-    # grouped_ids carries the spark.graft.groupcollapse.cap valve
-    # (default off — plan unchanged): an over-cap exact-dup embedding
-    # cluster spills to singleton group rows. Those reproduce the
-    # per-row semantics through the EXISTING paths: identical-vector
-    # partners qualify via pair_cos = self-cos, and the struct-key
-    # comparison ties on (equal fin, equal nc) → pid < vec_id — exactly
-    # krank's vec_id tie-break — while _selfdup never fires on a
-    # singleton (_ids[0] = self).
     groups = (
         grouped_ids(fan_out(emb, by=("vec_id",)), ("embedding",), "vec_id")
         .withColumn("_gid", F.col("_ids")[0])

@@ -948,14 +948,10 @@ _RARITY_CTES = f"""toks AS (
     "token explode, one vocab groupBy, one tokens-to-vocab join, one "
     "per-doc groupBy. The vocab join's skew ('the' carries ~5% of all "
     "rows) is the classic hot-key join: AQE skew-join splits it here. "
-    "Two deployment valves for network-bound clusters, both default "
-    "OFF and output-identical (tests/test_features_props.py): "
+    "One deployment valve for network-bound clusters, default OFF and "
+    "output-identical (tests/test_features_props.py): "
     "spark.graft.rarity.headK broadcasts the top-K vocab head around "
-    "the shuffle, and spark.graft.rarity.preagg (round 11) collapses "
-    "the stream to (doc_id, tok, count) first, bounding every hot key "
-    "by #docs instead of token occurrences — measured locally slower "
-    "(memory-speed shuffles; SCALE.md round 11), which is why neither "
-    "is the local default.",
+    "the shuffle (set in bench.py's PROFILE_100TB).",
 )
 def q_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_rarity_frame(load_table(spark, sf_dir, "documents"))
@@ -980,44 +976,11 @@ def token_rarity_frame(docs: DataFrame, head_k: int | None = None) -> DataFrame:
             )
         except Exception:  # pragma: no cover - static conf stores
             head_k = 0
-    try:
-        preagg = (
-            str(docs.sparkSession.conf.get("spark.graft.rarity.preagg", "false")).lower()
-            == "true"
-        )
-    except Exception:  # pragma: no cover - static conf stores
-        preagg = False
     toks = docs.select(
         "doc_id",
         F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("tok"),
     ).where(F.col("tok") != "")
-    if preagg:
-        # spark.graft.rarity.preagg (round 11, default OFF): collapse
-        # the exploded stream to (doc_id, tok, c) FIRST. The (doc_id,
-        # tok) shuffle key is skew-free (map-side combine eats
-        # within-partition repeats), and the rarity join's hot-key
-        # cardinality drops from token OCCURRENCES to one row per
-        # document — on the 61%-hot skew fixture the biggest key
-        # shrinks from ~17M stream rows to 50k (#docs). Vocab derives
-        # from the same pinned pre-agg, so the corpus is exploded once.
-        # Measured LOCALLY SLOWER (0.83x on the skew fixture, 0.60x at
-        # sf0.1 — SCALE.md round 11): a 32-thread single box shuffles
-        # at memory speed, so the extra exchange costs more than the
-        # straggler it removes. The valve exists for network-bound
-        # deployments, where a hot reducer receiving 61% of a 100-TB
-        # token stream IS the job. Weighted sums (Σ rarity·c, longs,
-        # ≤1e7·1e4 per row) — output integers identical to the
-        # per-occurrence form (tests/test_features_props.py).
-        from news_categorization_big_data_spark.functions.cachepin import pin
-
-        stream = pin(
-            toks.groupBy("doc_id", "tok").agg(F.count("*").cast("long").alias("c"))
-        )
-        vocab = stream.groupBy("tok").agg(F.sum("c").cast("long").alias("cnt"))
-    else:
-        # default: the oracle-stamped per-occurrence plan, unchanged
-        stream = toks
-        vocab = toks.groupBy("tok").agg(F.count("*").cast("long").alias("cnt"))
+    vocab = toks.groupBy("tok").agg(F.count("*").cast("long").alias("cnt"))
     total = vocab.agg(F.sum("cnt").cast("long").alias("n"))
     rar = vocab.crossJoin(F.broadcast(total)).select(
         "tok",
@@ -1034,18 +997,13 @@ def token_rarity_frame(docs: DataFrame, head_k: int | None = None) -> DataFrame:
     if head_k > 0:
         head_toks = vocab.orderBy(F.col("cnt").desc(), "tok").limit(head_k).select("tok")
         head_rar = rar.join(F.broadcast(head_toks), "tok")
-        scored = stream.join(F.broadcast(head_rar), "tok").unionByName(
-            stream.join(F.broadcast(head_toks), "tok", "left_anti").join(
+        scored = toks.join(F.broadcast(head_rar), "tok").unionByName(
+            toks.join(F.broadcast(head_toks), "tok", "left_anti").join(
                 rar.hint("shuffle_hash"), "tok"
             )
         )
     else:
-        scored = stream.join(rar.hint("shuffle_hash"), "tok")
-    if preagg:
-        return scored.groupBy("doc_id").agg(
-            F.sum("c").cast("long").alias("n_tokens"),
-            F.expr("sum(rarity * c) div sum(c)").cast("long").alias("mean_rarity_milli"),
-        )
+        scored = toks.join(rar.hint("shuffle_hash"), "tok")
     return (
         scored.groupBy("doc_id")
         .agg(

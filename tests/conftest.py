@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import math
 import os
+import re
+from collections import Counter
 
 import duckdb
 import pytest
@@ -84,3 +86,56 @@ def assert_oracle_match(spark_df, duck_con, sql, name=""):
         raise AssertionError(
             f"{name}: value mismatch; spark-only sample={sample_s} duck-only sample={sample_d}"
         )
+
+
+_EXCHANGE_RE = re.compile(r"\bExchange (\w+)(?:\((.*?)\))?, ([A-Z_]+)")
+
+
+def exchange_counts(plan: str) -> Counter:
+    """Exchanges of a physical plan string, counted by kind:
+    ``broadcast``, ``reused``, ``REPARTITION_BY_NUM(<keys>)`` for a keyed
+    ``hashpartitioning`` repartition (the shape of
+    functions/partitioning.py fan_out(by=...)), else
+    ``<partitioning>/<shuffle origin>`` (e.g.
+    ``hashpartitioning/ENSURE_REQUIREMENTS``, a shuffle the plan needs)."""
+    kinds: Counter = Counter()
+    for line in plan.splitlines():
+        if "BroadcastExchange" in line:
+            kinds["broadcast"] += 1
+        elif "ReusedExchange" in line:
+            kinds["reused"] += 1
+        elif m := _EXCHANGE_RE.search(line):
+            part, args, origin = m.groups()
+            if part == "hashpartitioning" and origin == "REPARTITION_BY_NUM":
+                keys = re.sub(r"#\d+L?", "", args.rsplit(", ", 1)[0])
+                kinds[f"REPARTITION_BY_NUM({keys})"] += 1
+            else:
+                kinds[f"{part}/{origin}"] += 1
+    return kinds
+
+
+def assert_map_only(spark, build, fan_out_key: str | None = None) -> str:
+    """The map-only plan contract: ``build()``'s physical plan carries no
+    Exchange except, where the caller declares ``fan_out_key``, at most
+    one fan_out keyed repartition on it — and with
+    ``spark.graft.fanout.enabled=false`` (the 100 TB deployment, where
+    scan width is file-driven) no Exchange at all. Returns the default
+    plan for further shape checks."""
+
+    def physical_plan() -> str:
+        return build()._jdf.queryExecution().executedPlan().toString()
+
+    plan = physical_plan()
+    allowed = Counter(
+        {f"REPARTITION_BY_NUM({fan_out_key})": 1} if fan_out_key else {}
+    )
+    extra = exchange_counts(plan) - allowed
+    assert not extra, f"not map-only: {dict(extra)}\n{plan}"
+    spark.conf.set("spark.graft.fanout.enabled", "false")
+    try:
+        plan_off = physical_plan()
+    finally:
+        spark.conf.unset("spark.graft.fanout.enabled")
+    off = exchange_counts(plan_off)
+    assert not off, f"Exchange with fan_out disabled: {dict(off)}\n{plan_off}"
+    return plan

@@ -6,6 +6,7 @@ by tests/test_oracle_parity.py."""
 from __future__ import annotations
 
 from news_categorization_big_data_spark.plans import REGISTRY
+from tests.conftest import assert_map_only
 
 
 def _plan(df) -> str:
@@ -139,21 +140,12 @@ def test_bpe_pairs_single_shuffle_topk(spark, sf_dir):
 
 
 def test_embedding_quantize_map_only(spark, sf_dir):
-    """Map-only modulo fan_out: the only Exchange allowed is fan_out's
-    single keyed REPARTITION_BY_NUM (round-15 single-row-group widening);
-    with fan_out disabled — the 100 TB contract, where scan width is
-    file-driven — the plan must have no Exchange at all."""
-    plan = _plan(REGISTRY["q_embedding_quantize"].builder(spark, sf_dir))
+    plan = assert_map_only(
+        spark,
+        lambda: REGISTRY["q_embedding_quantize"].builder(spark, sf_dir),
+        fan_out_key="vec_id",
+    )
     assert "Join" not in plan, plan
-    assert plan.count("Exchange") == plan.count("REPARTITION_BY_NUM"), plan
-    assert plan.count("REPARTITION_BY_NUM") <= 1, plan
-    spark.conf.set("spark.graft.fanout.enabled", "false")
-    try:
-        plan_off = _plan(REGISTRY["q_embedding_quantize"].builder(spark, sf_dir))
-    finally:
-        spark.conf.unset("spark.graft.fanout.enabled")
-    assert "Exchange" not in plan_off, plan_off
-    assert "Join" not in plan_off, plan_off
 
 
 def test_keep_best_single_component_window(spark, sf_dir):
@@ -236,8 +228,12 @@ def test_lateral_decorrelates_to_window(spark, sf_dir):
 
 
 def test_variant_json_map_only(spark, sf_dir):
-    plan = _plan(REGISTRY["q_variant_json"].builder(spark, sf_dir))
-    assert "Exchange" not in plan and "Join" not in plan, plan
+    plan = assert_map_only(
+        spark,
+        lambda: REGISTRY["q_variant_json"].builder(spark, sf_dir),
+        fan_out_key="event_id",
+    )
+    assert "Join" not in plan, plan
     assert "variant_get" in plan, plan
 
 

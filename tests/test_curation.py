@@ -244,7 +244,7 @@ def test_connected_components_raises_when_budget_too_small(spark):
 
 def test_connected_components_local_matches_distributed(spark):
     """The size-adaptive local union-find must return exactly the
-    distributed min-label loop's table: same vertices, same min-id
+    distributed star solver's table: same vertices, same min-id
     component labels, singletons equally absent."""
     edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20), (30, 31)]
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])

@@ -34,30 +34,31 @@ def test_bad_sf_dir_raises_cleanly(spark):
 
 def test_registry_window_contains_round15_priorities():
     """The driver evaluates the first 50 insertion-order entries. The
-    round-15 window = the 10 plans round 15 changed (the pagerank/bfs
-    widened-frame-broadcast cures, the as-of trio's NULL-tie ordering,
-    the simhash bits=auto valve plumbing, the four audit-key-rename
-    plans) + the q_group_stats canary + the 39 OLDEST official stamps
-    (r4 complete, r5 complete, r6 partial — the r14 VERDICT item 2
-    stale-stamp catch-up)."""
+    window = the plans whose builders or shared operators changed when
+    the six default-off valves were deleted, then the ten r15/r16
+    rewrites never checked against the driver oracle, then the
+    q_group_stats canary, then the 34 OLDEST official stamps (r6
+    complete, r7 complete, r9 partial)."""
     window = list(REGISTRY)[:50]
-    changed_r15 = [
-        "q_graph_pagerank", "q_graph_bfs",
-        "q_asof_join", "q_asof_forward", "q_asof_tolerance",
-        "q_simhash_hamming", "q_cms_counts", "q_bloom_join",
-        "q_batch_assign", "q_heavy_hitters",
+    changed = [
+        "q_token_rarity", "q_sessionize", "q_heavy_hitters",
+        "q_equidepth_histogram", "q_dedup_cluster",
     ]
-    canaries = ["q_group_stats"]
-    # spot-check the catch-up group's head and tail (the full set is
-    # pinned by position via CATALOG sync): the whole r4 cohort leads,
-    # r5 follows, r6 is partial up to the 50-slot boundary.
+    unchecked_r15_r16 = [
+        "q_semantic_dedup", "q_dedup_mllib_lsh", "q_dedup_fuzzy",
+        "q_dedup_embedding", "q_dedup_ngram_jaccard", "q_dedup_containment",
+        "q_lsh_recall", "q_classify_keywords", "q_variant_json", "q_sql_udf",
+    ]
+    head = changed + unchecked_r15_r16 + ["q_group_stats"]
+    assert window[: len(head)] == head
+    # spot-check the catch-up group's head and tail: the whole r6
+    # cohort leads, r7 follows, r9 is partial up to the 50-slot boundary.
     catchup_probes = [
-        "q_argmax_join", "q_tpch_q4", "q_window_time_range",  # r4
-        "q_bitmap_distinct", "q_tokenizer_fertility",  # r5
-        "q_ann_recall", "q_k_anonymity",  # r6 (partial)
+        "q_ml_eval", "q_zone_map",  # r6
+        "q_compaction_bins", "q_union_by_name",  # r7
+        "q_chi2_terms", "q_gini_spend",  # r9 (partial)
     ]
-    assert len(changed_r15) == 10
-    for name in changed_r15 + canaries + catchup_probes:
+    for name in catchup_probes:
         assert name in window, f"{name} fell outside the driver's 50-entry window"
 
 
@@ -134,3 +135,27 @@ def test_survey_inventory_fully_registered():
         "q_join_interval_overlap",
         "q_stream_dedup",
     ], f"undocumented registry extras: {extras}"
+
+
+def test_conf_inventory_matches_readme():
+    """The set of ``spark.graft.*`` keys the package (and bench.py's
+    profile) reads must equal the set README's session-conf paragraph
+    documents: a new valve needs a README entry, a deleted one must
+    leave the README."""
+    import re
+    from pathlib import Path
+
+    key = re.compile(r"spark\.graft\.[A-Za-z]+\.[A-Za-z.]*[A-Za-z]")
+    repo = Path(__file__).resolve().parents[1]
+    package = (repo / "news_categorization_big_data_spark").rglob("*.py")
+    read = set()
+    for path in [*package, repo / "bench.py"]:
+        read |= set(key.findall(path.read_text()))
+    readme = (repo / "README.md").read_text()
+    start = readme.index("- Session confs:")
+    end = readme.index("\n- ", start + 1)
+    documented = set(key.findall(readme[start:end]))
+    assert read == documented, (
+        f"undocumented={sorted(read - documented)} "
+        f"stale={sorted(documented - read)}"
+    )

@@ -343,7 +343,8 @@ def test_tfidf_postings_join_matches_brute_force(spark, texts):
 def test_star_cc_matches_union_find(spark, raw_edges):
     """The large-star/small-star components (the planet-scale CC path)
     must equal a Python union-find ground truth AND the engine's
-    registered min-label/local CC on generated graphs."""
+    size-adaptive CC (local union-find at this size) on generated
+    graphs."""
     from news_categorization_big_data_spark.operators.graph import (
         connected_components,
         connected_components_star,
@@ -385,15 +386,16 @@ def test_star_cc_matches_union_find(spark, raw_edges):
     assert got == ref
 
 
-def test_star_cc_matches_min_label_on_real_pair_graph(spark, sf_dir):
-    """Output-identical on the engine's actual near-dup pair graph, with
-    the distributed min-label loop forced (localThreshold=0) so the two
-    DISTRIBUTED algorithms are compared end to end."""
+def test_star_cc_matches_local_union_find_on_real_pair_graph(spark, sf_dir):
+    """Output-identical on the engine's actual near-dup pair graph: the
+    distributed star solver against connected_components at its default
+    threshold, which solves this graph with the driver-side union-find."""
     from news_categorization_big_data_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
     )
     from news_categorization_big_data_spark.operators.graph import (
+        CC_LOCAL_THRESHOLD,
         connected_components,
         connected_components_star,
     )
@@ -403,47 +405,16 @@ def test_star_cc_matches_min_label_on_real_pair_graph(spark, sf_dir):
     pairs = lsh_candidate_pairs(minhash_signatures(docs)).select(
         "doc_a", "doc_b"
     ).localCheckpoint(eager=True)
+    assert pairs.count() <= CC_LOCAL_THRESHOLD  # the local path runs
     star = {
         r["doc_id"]: r["component"]
         for r in connected_components_star(pairs).collect()
     }
-    spark.conf.set("spark.graft.cc.localThreshold", "0")
-    try:
-        ml = {
-            r["doc_id"]: r["component"]
-            for r in connected_components(pairs).collect()
-        }
-    finally:
-        spark.conf.unset("spark.graft.cc.localThreshold")
-    assert star == ml and star, "star CC diverged from min-label CC"
-
-
-def test_cc_algorithm_conf_switch(spark, sf_dir):
-    """spark.graft.cc.algorithm=star routes the registered curation
-    machinery through the star solver with identical output (and an
-    unknown value fails fast)."""
-    import pytest
-
-    from news_categorization_big_data_spark.operators.graph import (
-        connected_components,
-    )
-
-    df = spark.createDataFrame(
-        [(0, 1), (1, 2), (4, 5)], "doc_a long, doc_b long"
-    )
-    spark.conf.set("spark.graft.cc.localThreshold", "0")
-    try:
-        spark.conf.set("spark.graft.cc.algorithm", "minlabel")
-        base = {(r["doc_id"], r["component"]) for r in connected_components(df).collect()}
-        spark.conf.set("spark.graft.cc.algorithm", "star")
-        star = {(r["doc_id"], r["component"]) for r in connected_components(df).collect()}
-        assert star == base
-        spark.conf.set("spark.graft.cc.algorithm", "bogus")
-        with pytest.raises(Exception, match="minlabel|star"):
-            connected_components(df).collect()
-    finally:
-        spark.conf.unset("spark.graft.cc.localThreshold")
-        spark.conf.unset("spark.graft.cc.algorithm")
+    local = {
+        r["doc_id"]: r["component"]
+        for r in connected_components(pairs).collect()
+    }
+    assert star == local and star, "star CC diverged from union-find CC"
 
 
 def test_star_cc_self_pair_and_string_contracts(spark):
@@ -502,13 +473,11 @@ def test_cc_forwards_max_iter_to_star(spark):
 
     df = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
     spark.conf.set("spark.graft.cc.localThreshold", "0")
-    spark.conf.set("spark.graft.cc.algorithm", "star")
     try:
         with pytest.raises(RuntimeError, match="did not converge"):
             connected_components(df, max_iter=1).collect()
     finally:
         spark.conf.unset("spark.graft.cc.localThreshold")
-        spark.conf.unset("spark.graft.cc.algorithm")
 
 
 @settings(max_examples=12, deadline=None)
@@ -575,24 +544,3 @@ def test_token_rarity_head_broadcast_output_identical(spark, sf_dir):
     finally:
         spark.conf.unset("spark.graft.rarity.headK")
     assert via_conf == plain
-
-
-def test_token_rarity_preagg_output_identical(spark, sf_dir):
-    """The round-11 spark.graft.rarity.preagg valve ((doc_id, tok,
-    count) pre-aggregation bounding hot keys by #docs) must be
-    output-identical to the default per-occurrence plan — alone and
-    composed with headK."""
-    from news_categorization_big_data_spark.functions.cachepin import release_pins
-    from news_categorization_big_data_spark.plans.text import token_rarity_frame
-    from news_categorization_big_data_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    plain = sorted(map(str, token_rarity_frame(docs, head_k=0).collect()))
-    spark.conf.set("spark.graft.rarity.preagg", "true")
-    try:
-        pre = sorted(map(str, token_rarity_frame(docs, head_k=0).collect()))
-        both = sorted(map(str, token_rarity_frame(docs, head_k=16).collect()))
-    finally:
-        spark.conf.unset("spark.graft.rarity.preagg")
-        release_pins()
-    assert plain and plain == pre == both

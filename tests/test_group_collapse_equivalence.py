@@ -5,20 +5,14 @@ q_semantic_dedup, embedding_near_dup_pairs, the simhash distinct-sketch
 path) were proven equal to their per-row plans by ad-hoc exceptAll runs
 that were never turned into regression tests, so a future edit could
 silently break the duplicate-expansion invariants (disjoint groups,
-least/greatest ordering, self-pair gating, cap semantics). This file
+least/greatest ordering, self-pair gating). This file
 pins them on a purpose-built fixture whose duplicate clusters dwarf the
 shipped sf* fixtures (which top out around 10x): a 14-member exact-dup
 text cluster, a 12-member exact-dup embedding cluster, zero-norm and
 NaN-poisoned DUPLICATE embeddings (the q_semantic_dedup NaN-partner
-class the r15 ADVICE flagged), empty/null/short texts.
-
-Two pins per query:
-
-1. valve OFF → oracle-MATCH on the fixture (the grouped plan equals the
-   per-row DuckDB reference — the oracles ARE per-row implementations).
-2. valve ON (spark.graft.groupcollapse.cap=4, far below the planted
-   clusters, so the singleton spill provably fires) → output equals the
-   valve-OFF output row-for-row (exceptAll both ways).
+class the r15 ADVICE flagged), empty/null/short texts. Each grouped
+plan must oracle-MATCH on the fixture (the oracles ARE per-row
+implementations).
 """
 
 from __future__ import annotations
@@ -32,12 +26,8 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import functions as F
 
-from news_categorization_big_data_spark.functions.groupcollapse import (
-    GROUPCOLLAPSE_CAP_CONF,
-    grouped_ids,
-)
+from news_categorization_big_data_spark.functions.groupcollapse import grouped_ids
 from news_categorization_big_data_spark.plans import REGISTRY
 from tests.conftest import assert_oracle_match
 
@@ -59,7 +49,7 @@ def _texts() -> list[tuple[int, str]]:
         "the quick brown fox jumps over the lazy dog while seventeen "
         "editors review syndicated market copy for regional outlets"
     )
-    # 14-member exact-dup cluster (>> cap=4).
+    # 14-member exact-dup cluster.
     rows += [(100 + i, base) for i in range(14)]
     # 5-member exact-dup cluster of a near-dup variant (jaccard vs base
     # high but < 1): swap two words.
@@ -77,7 +67,7 @@ def _texts() -> list[tuple[int, str]]:
         )
     # Edge rows: empty, null, too short for 3-shingles / 24-char norm.
     rows += [(400, ""), (401, None), (402, "two words"), (403, "tiny")]
-    # A second exact-dup pair (cap does NOT fire at 4).
+    # A second exact-dup pair.
     rows += [(500, variant + " extra trailing clause appended here"),
              (501, variant + " extra trailing clause appended here")]
     return rows
@@ -90,7 +80,7 @@ def _vectors() -> list[tuple[int, list[float] | None]]:
         return [v / n for v in vals]
 
     rows: list[tuple[int, list[float] | None]] = []
-    # 12-member exact-dup vector cluster (>> cap=4).
+    # 12-member exact-dup vector cluster.
     dup = unit(1)
     rows += [(100 + i, dup) for i in range(12)]
     # near-dup of the cluster (high cosine): tiny perturbation.
@@ -146,40 +136,10 @@ def test_grouped_plan_matches_per_row_oracle(
     assert_oracle_match(df, collapse_duck, spec.oracle, name=f"{name}@collapse_fx")
 
 
-@pytest.mark.parametrize(
-    "name",
-    [q for q in COLLAPSED if q != "q_simhash_hamming"],  # sketch-keyed,
-    # no grouped_ids site — its own valve is spark.graft.simhash.maxdf
-)
-def test_cap_valve_output_identical(spark, collapse_sf_dir, name):
-    spec = REGISTRY[name]
-    off = spec.builder(spark, collapse_sf_dir)
-    spark.conf.set(GROUPCOLLAPSE_CAP_CONF, "4")
-    try:
-        on = spec.builder(spark, collapse_sf_dir)
-        assert on.exceptAll(off).count() == 0, name
-        assert off.exceptAll(on).count() == 0, name
-    finally:
-        spark.conf.unset(GROUPCOLLAPSE_CAP_CONF)
-
-
-def test_grouped_ids_cap_splits_and_preserves_members(spark):
-    rows = [("a", i) for i in range(10)] + [("b", 100), ("c", 200), ("c", 201)]
+def test_grouped_ids_sorts_and_preserves_members(spark):
+    rows = [("a", i) for i in reversed(range(10))] + [
+        ("b", 100), ("c", 201), ("c", 200)
+    ]
     df = spark.createDataFrame(rows, "k string, i long")
-    g_off = grouped_ids(df, ("k",), "i")
-    assert g_off.count() == 3
-    a_ids = {r["k"]: r["_ids"] for r in g_off.collect()}
-    assert a_ids["a"] == sorted(x for k, x in rows if k == "a")
-    assert a_ids["c"] == [200, 201]
-    spark.conf.set(GROUPCOLLAPSE_CAP_CONF, "4")
-    try:
-        g_on = grouped_ids(df, ("k",), "i")
-        got = g_on.collect()
-    finally:
-        spark.conf.unset(GROUPCOLLAPSE_CAP_CONF)
-    # over-cap group 'a' spills to 10 singleton rows; b/c intact.
-    assert len(got) == 12
-    assert max(len(r["_ids"]) for r in got) <= 4
-    # member multiset preserved and disjoint.
-    flat = sorted(x for r in got for x in r["_ids"])
-    assert flat == sorted(x for _, x in rows)
+    got = {r["k"]: r["_ids"] for r in grouped_ids(df, ("k",), "i").collect()}
+    assert got == {"a": list(range(10)), "b": [100], "c": [200, 201]}

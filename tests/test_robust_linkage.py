@@ -179,119 +179,6 @@ def test_weighted_median_twopass_output_identical(spark, sf_dir):
         assert two == exact, f"n_buckets={n_buckets}"
 
 
-def test_equidepth_valuedomain_output_identical(spark, sf_dir):
-    """The round-14 sort-free value-domain swap (conf
-    spark.graft.equidepth.valuedomain) must reproduce the exact ntile
-    plan's rows — including at a non-default bucket count (7: uneven
-    base/extra split), so the identity is structural arithmetic, not
-    a bucketing accident."""
-    from news_categorization_big_data_spark.plans.quality import (
-        EQUIDEPTH_VALUEDOMAIN_CONF,
-        equidepth_valuedomain,
-    )
-    from pyspark.sql import Window
-
-    exact = {
-        tuple(r)
-        for r in REGISTRY["q_equidepth_histogram"].builder(spark, sf_dir).collect()
-    }
-    spark.conf.set(EQUIDEPTH_VALUEDOMAIN_CONF, "true")
-    try:
-        swap = {
-            tuple(r)
-            for r in REGISTRY["q_equidepth_histogram"]
-            .builder(spark, sf_dir)
-            .collect()
-        }
-    finally:
-        spark.conf.unset(EQUIDEPTH_VALUEDOMAIN_CONF)
-    assert swap == exact
-
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    for n_buckets in (7, 3):
-        w = Window.partitionBy("event_type").orderBy("value", "event_id")
-        ref = {
-            tuple(r)
-            for r in ev.select("event_type", "value", "event_id")
-            .withColumn("bucket", F.ntile(n_buckets).over(w))
-            .groupBy("event_type", F.col("bucket").cast("int").alias("bucket"))
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.min("value").alias("lo"),
-                F.max("value").alias("hi"),
-            )
-            .collect()
-        }
-        got = {tuple(r) for r in equidepth_valuedomain(ev, n_buckets).collect()}
-        assert got == ref, f"n_buckets={n_buckets}"
-
-
-def test_equidepth_valuedomain_tiny_groups(spark):
-    """n < buckets (ntile emits one-row buckets 1..n) and a group that
-    is ONE massively tied value (every rank interval spans buckets)."""
-    from news_categorization_big_data_spark.plans.quality import (
-        equidepth_valuedomain,
-    )
-    from pyspark.sql import Window
-
-    rows = [("a", float(i % 2), i) for i in range(10)] + [
-        ("b", 1.0, 100),
-        ("b", 2.0, 101),
-    ]
-    ev = spark.createDataFrame(rows, "event_type string, value double, event_id long")
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    ref = {
-        tuple(r)
-        for r in ev.withColumn("bucket", F.ntile(8).over(w))
-        .groupBy("event_type", F.col("bucket").cast("int").alias("bucket"))
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("value").alias("lo"),
-            F.max("value").alias("hi"),
-        )
-        .collect()
-    }
-    got = {tuple(r) for r in equidepth_valuedomain(ev, 8).collect()}
-    assert got == ref
-
-
-def test_heavy_hitters_cms_output_identical(spark, sf_dir):
-    """The round-14 CMS-prefilter valve (conf spark.graft.hh.cms) must
-    emit exactly the exact two-pass plan's rows — the CMS overestimate
-    property makes the candidate set a superset, and the exact final
-    filter trims it back."""
-    from news_categorization_big_data_spark.plans.olap import HH_CMS_CONF
-
-    exact = {
-        tuple(r)
-        for r in REGISTRY["q_heavy_hitters"].builder(spark, sf_dir).collect()
-    }
-    spark.conf.set(HH_CMS_CONF, "true")
-    try:
-        swap = {
-            tuple(r)
-            for r in REGISTRY["q_heavy_hitters"].builder(spark, sf_dir).collect()
-        }
-    finally:
-        spark.conf.unset(HH_CMS_CONF)
-    assert swap == exact and len(exact) > 0
-
-
-def test_heavy_hitters_cms_null_key_group(spark):
-    """A NULL-key group that IS a heavy hitter must survive the CMS
-    prefilter (the sentinel-hash path): nulls are one key to both the
-    sketch and the exact count."""
-    from news_categorization_big_data_spark.plans.olap import heavy_hitters_cms
-
-    rows = [(None, i) for i in range(50)] + [(int(i), 1000 + i) for i in range(50)]
-    ev = spark.createDataFrame(rows, "user_id long, event_id long")
-    got = {(r.user_id, r.cnt) for r in heavy_hitters_cms(ev).collect()}
-    # null group holds 50% of 100 events — far over the 3-per-mille bar;
-    # each numeric id holds 1% (10 per mille), also over the bar.
-    assert (None, 50) in got
-    assert len(got) == 51
-
-
 # -- q_graph_kcore ----------------------------------------------------------
 
 

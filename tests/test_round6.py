@@ -12,6 +12,7 @@ from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.plans.sampling import RESERVOIR_K
 from news_categorization_big_data_spark.plans.text import RARITY_CAP_MILLI
 from news_categorization_big_data_spark.sources.tables import load_table
+from tests.conftest import assert_map_only
 
 
 def _plan(df) -> str:
@@ -273,8 +274,10 @@ def test_char_classes_partition_and_simpson_bounds(spark, sf_dir):
 
 
 def test_char_classes_is_map_only(spark, sf_dir):
-    plan = _plan(REGISTRY["q_char_classes"].builder(spark, sf_dir))
-    assert "Exchange" not in plan and "Generate" not in plan, plan
+    plan = assert_map_only(
+        spark, lambda: REGISTRY["q_char_classes"].builder(spark, sf_dir)
+    )
+    assert "Generate" not in plan, plan
 
 
 # ---- q_sink_pyds_roundtrip -----------------------------------------------

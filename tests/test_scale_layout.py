@@ -156,23 +156,27 @@ def test_map_only_queries_have_no_exchange(spark, sf_dir):
     """The curation/scoring queries documented as map-only must stay
     shuffle-free: one Exchange creeping into a per-row pass is the
     difference between linear scan and cluster-wide repartition at
-    100 TB."""
-    from news_categorization_big_data_spark.plans import REGISTRY
+    100 TB. Value = the declared fan_out key, if any."""
+    from functools import partial
 
-    for name in [
-        "q_classify_keywords",
-        "q_split_train_eval",
-        "q_sample_stratified",
-        "q_quality_filter",
-        "q_text_clean",
-        "q_doc_fingerprint",
-        "q_quality_score",
-        "q_token_count",
-        "q_repetition_stats",
-        "q_pii_scrub",
-    ]:
-        plan = _plan(REGISTRY[name].builder(spark, sf_dir))
-        assert "Exchange" not in plan, f"{name} is no longer map-only:\n{plan}"
+    from news_categorization_big_data_spark.plans import REGISTRY
+    from tests.conftest import assert_map_only
+
+    for name, fan_out_key in {
+        "q_classify_keywords": "doc_id",
+        "q_split_train_eval": None,
+        "q_sample_stratified": None,
+        "q_quality_filter": None,
+        "q_text_clean": None,
+        "q_doc_fingerprint": None,
+        "q_quality_score": None,
+        "q_token_count": None,
+        "q_repetition_stats": None,
+        "q_pii_scrub": None,
+    }.items():
+        assert_map_only(
+            spark, partial(REGISTRY[name].builder, spark, sf_dir), fan_out_key
+        )
 
 
 def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):

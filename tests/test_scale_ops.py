@@ -187,7 +187,7 @@ def test_jaccard_persist_sets_path_output_identical(spark, sf_dir):
 
 def test_registered_cc_distributed_path_output_identical(spark, sf_dir):
     """Force the REGISTERED near-dup cluster query through the
-    distributed min-label loop (spark.graft.cc.localThreshold=0) and
+    distributed star solver (spark.graft.cc.localThreshold=0) and
     assert the exact same clusters as the default driver union-find
     path — the scale path must be a physical choice, not a semantic
     one, on the real LSH pair lineage (not just synthetic edges)."""

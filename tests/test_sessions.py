@@ -1,40 +1,24 @@
-"""The time-chunked sessionization valve (functions/sessions.py):
-spark.graft.session.chunked=true must produce identical session ids to
-the default single per-user window on adversarial inputs — sessions
-spanning several chunks (chained boundary merges), boundary gaps at
-exactly the session gap, timestamp ties at chunk edges, empty chunks
-inside a user's stream — while actually planning per-(user, chunk)
-windows so a hot user's stream spreads over #chunks tasks."""
+"""Gaps-and-islands sessionization (functions/sessions.py) against a
+pure-Python reference on adversarial inputs: sessions spanning several
+days, boundary gaps at exactly the session gap, timestamp ties, sparse
+users, a NULL user and NULL timestamps."""
 
 from __future__ import annotations
 
-import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from news_categorization_big_data_spark.functions.sessions import (
-    CHUNK_HOURS_CONF,
-    CHUNKED_CONF,
-    sessionize_ids,
-)
-from news_categorization_big_data_spark.plans import REGISTRY
+from news_categorization_big_data_spark.functions.sessions import sessionize_ids
 
 HOUR_US = 3600 * 1_000_000
 GAP = 6 * HOUR_US  # the q_sessionize gap
 
 
-@pytest.fixture
-def chunked(spark):
-    spark.conf.set(CHUNKED_CONF, "true")
-    yield spark
-    spark.conf.unset(CHUNKED_CONF)
-    spark.conf.unset(CHUNK_HOURS_CONF) if spark.conf.get(
-        CHUNK_HOURS_CONF, None
-    ) else None
-
-
 def _mk(spark, rows):
     df = spark.createDataFrame(rows, "user_id long, event_id long, us long")
-    return df.withColumn("ts", F.timestamp_micros(F.col("us"))).drop("us")
+    return df.withColumn(
+        "ts", F.when(F.col("us").isNotNull(), F.timestamp_micros(F.col("us")))
+    ).drop("us")
 
 
 def _ids(df):
@@ -44,18 +28,36 @@ def _ids(df):
     }
 
 
+def _reference(rows, gap):
+    """Per user, in (ts, event_id) order: a new session after a silence
+    STRICTLY greater than ``gap``; NULL-ts rows belong to no session."""
+    by_user: dict = {}
+    for user, eid, us in rows:
+        if us is not None:
+            by_user.setdefault(user, []).append((us, eid))
+    out = {}
+    for user, evs in by_user.items():
+        sid, prev = 0, None
+        for us, eid in sorted(evs):
+            if prev is None or us - prev > gap:
+                sid += 1
+            out[(user, eid)] = sid
+            prev = us
+    return out
+
+
 BASE = 1_700_000_000_000_000  # fixed epoch-µs anchor
 
 
 def _adversarial_rows():
-    """One user whose single session spans 4 day-chunks (chained
-    merges), a second session after a > gap silence, boundary events
-    exactly gap apart (same session: rule is STRICTLY > gap), a tie at
-    a chunk edge, and a second user with single sparse events."""
+    """One user whose single session spans 4 days, a second session
+    after a > gap silence, boundary events exactly gap apart (same
+    session: rule is STRICTLY > gap), a tie at a day edge, and a second
+    user with single sparse events."""
     day = 24 * HOUR_US
     rows = []
     eid = 0
-    # user 1: events every 5h for 4 days -> ONE session crossing chunks
+    # user 1: events every 5h for 4 days -> ONE session
     t = BASE
     for i in range(20):
         rows.append((1, (eid := eid + 1), t))
@@ -65,74 +67,29 @@ def _adversarial_rows():
     # silence > gap -> new session
     t2 = t + GAP - 5 * HOUR_US + GAP + 1
     rows.append((1, (eid := eid + 1), t2))
-    # tie: two events at an exact chunk boundary instant
+    # tie: two events at an exact day boundary instant
     edge = ((BASE // day) + 10) * day
     rows.append((1, (eid := eid + 1), edge))
     rows.append((1, (eid := eid + 1), edge))
-    # user 2: sparse singletons with empty chunks between
+    # user 2: sparse singletons days apart
     for k in range(5):
         rows.append((2, (eid := eid + 1), BASE + k * 3 * day))
     return rows
 
 
-def test_chunked_matches_default_on_adversarial_stream(spark, chunked):
-    df = _mk(spark, _adversarial_rows()).repartition(16)
-    got = _ids(sessionize_ids(df, GAP))
-    spark.conf.set(CHUNKED_CONF, "false")
-    want = _ids(sessionize_ids(df, GAP))
-    assert got == want
+def test_sessionize_matches_reference_on_adversarial_stream(spark):
+    rows = _adversarial_rows()
+    got = _ids(sessionize_ids(_mk(spark, rows).repartition(16), GAP))
+    assert got == _reference(rows, GAP)
     # three sessions: the 4-day chain, the post-gap event, the edge pair
-    assert max(v for (u, _), v in want.items() if u == 1) == 3
-
-
-@pytest.mark.parametrize("chunk_hours", [6, 24, 720])
-def test_chunked_identity_any_chunk_width(spark, chunked, chunk_hours):
-    spark.conf.set(CHUNK_HOURS_CONF, str(chunk_hours))
-    df = _mk(spark, _adversarial_rows())
-    got = _ids(sessionize_ids(df, GAP))
-    spark.conf.set(CHUNKED_CONF, "false")
-    assert got == _ids(sessionize_ids(df, GAP))
-
-
-def test_q_sessionize_valve_matches_default(spark, chunked, sf_dir):
-    def rows():
-        return sorted(
-            map(tuple, REGISTRY["q_sessionize"].builder(spark, sf_dir).collect())
-        )
-
-    on = rows()
-    spark.conf.set(CHUNKED_CONF, "false")
-    assert on == rows()
-
-
-def test_chunked_plan_partitions_by_chunk(spark, chunked, sf_dir):
-    plan = (
-        REGISTRY["q_sessionize"]
-        .builder(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "_chunk" in plan, plan  # per-(user, chunk) local window
-    spark.conf.set(CHUNKED_CONF, "false")
-    default_plan = (
-        REGISTRY["q_sessionize"]
-        .builder(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "_chunk" not in default_plan, default_plan
-
-
-from hypothesis import given, settings, strategies as st
+    assert max(v for (u, _), v in got.items() if u == 1) == 3
 
 
 @st.composite
 def _streams(draw):
-    """Random multi-user event streams with gaps straddling the
-    session threshold and the chunk width: deltas cluster around GAP
-    and around 24h so boundary cases are drawn constantly."""
+    """Random multi-user event streams with gaps straddling the session
+    threshold and the day width, so boundary cases are drawn
+    constantly."""
     n_users = draw(st.integers(1, 3))
     rows = []
     eid = 0
@@ -151,26 +108,16 @@ def _streams(draw):
 
 @settings(max_examples=15, deadline=None)
 @given(_streams())
-def test_chunked_identity_property(spark, rows):
-    df = _mk(spark, rows)
-    spark.conf.set(CHUNKED_CONF, "true")
-    try:
-        got = _ids(sessionize_ids(df, GAP))
-    finally:
-        spark.conf.set(CHUNKED_CONF, "false")
-    assert got == _ids(sessionize_ids(df, GAP))
+def test_sessionize_matches_reference_property(spark, rows):
+    assert _ids(sessionize_ids(_mk(spark, rows), GAP)) == _reference(rows, GAP)
 
 
-def test_chunked_handles_null_user_and_null_ts_policy(spark, chunked):
-    """The null-ish bot user — the valve's own motivating hot key —
-    must survive the chunked plan: groupBy/Window keep NULL groups, so
-    the offsets join-back uses null-SAFE keys (plain equi-keys would
-    silently drop every NULL-user row, found in the round-12
-    self-review). NULL TIMESTAMPS, by contrast, are dropped BY POLICY
-    in both modes (round 15, skew10 axis): a session is a time
-    interval, Spark's own session_window drops unassignable rows, and
-    keeping them inherits each engine's different null sort order —
-    the exact cross-engine divergence the skew10 sweep caught."""
+def test_sessionize_keeps_null_user_drops_null_ts(spark):
+    """A NULL user is a real group (the null-ish bot of the hot-user
+    axis). NULL TIMESTAMPS are dropped BY POLICY (skew10 axis): a
+    session is a time interval, Spark's own session_window drops
+    unassignable rows, and keeping them inherits each engine's
+    different null sort order."""
     rows = [
         (None, 1, BASE),
         (None, 2, BASE + HOUR_US),
@@ -179,12 +126,6 @@ def test_chunked_handles_null_user_and_null_ts_policy(spark, chunked):
         (7, 5, None),
         (7, 6, BASE),
     ]
-    df = spark.createDataFrame(rows, "user_id long, event_id long, us long")
-    df = df.withColumn(
-        "ts", F.when(F.col("us").isNotNull(), F.timestamp_micros(F.col("us")))
-    ).drop("us")
-    got = _ids(sessionize_ids(df, GAP))
-    assert len(got) == 4  # the two NULL-ts rows are dropped, nothing else
-    assert {eid for _, eid in got} == {1, 2, 3, 6}
-    spark.conf.set(CHUNKED_CONF, "false")
-    assert got == _ids(sessionize_ids(df, GAP))
+    got = _ids(sessionize_ids(_mk(spark, rows), GAP))
+    assert got == {(None, 1): 1, (None, 2): 1, (None, 3): 2, (7, 6): 1}
+    assert got == _reference(rows, GAP)

@@ -97,10 +97,10 @@ BOUNDED_KEY_COLS = frozenset(
         # grouping a corpus-scaling domain by a column that happened
         # to share the name; a round-15 strip-and-resweep showed only
         # three plans actually relied on them, each renamed):
-        # CMS cells (d×w at any SF — plans/olap.py heavy_hitters_cms
-        # and q_cms_counts), bloom words (BLOOM_BITS/64 ≤ 1024 —
-        # plans/lakehouse.py q_bloom_join), length buckets (token-
-        # count bit width — operators/batching.py assign_batches).
+        # CMS cells (d×w at any SF — plans/olap.py q_cms_counts),
+        # bloom words (BLOOM_BITS/64 ≤ 1024 — plans/lakehouse.py
+        # q_bloom_join), length buckets (token-count bit width —
+        # operators/batching.py assign_batches).
         "_cms_j", "_cms_bucket", "_bloom_w", "_len_bucket",
     }
 )
