@@ -34,7 +34,6 @@ from news_categorization_big_data_spark.functions.hashing import (
     hash60_pair,
     hash_bits,
 )
-from news_categorization_big_data_spark.functions.groupcollapse import grouped_ids
 from news_categorization_big_data_spark.functions.partitioning import fan_out
 from news_categorization_big_data_spark.functions.text_exprs import word_shingles
 
@@ -171,57 +170,24 @@ def jaccard_pairs(
     one shuffle buckets the exploded prefixes (8-byte hash keys); pairs
     emit inside buckets only; the verify join touches candidates — a
     vanishing fraction of the corpus — and AQE picks its strategy.
-
-    r16 (guide §8 — the r15 distinct-value collapse applied to the LAST
-    per-doc member of the dedup family): the whole machinery runs over
-    DISTINCT TEXTS, not doc rows. Every stage is a function of the text
-    alone — the shingle hashes, prefix, both PPJoin filters (s, p), the
-    bucket df (counted in DOCS via sum(m), identical to the per-doc
-    count since exact-dup docs contribute identical prefix rows), and
-    the verified jaccard — so exact-duplicate documents (boilerplate at
-    corpus scale; ~10x planted in the sf1 fixture) previously paid the
-    duplication factor in md5 shingle hashing and its SQUARE in bucket
-    pair generation + set-intersection verifies. Intra-group pairs are
-    the group's SELF-pair routed through the same buckets/filters/cap
-    (identical texts share every prefix hash at the same position, so
-    self-pair survival mirrors per-doc survival exactly — including a
-    super-cap dup cluster losing all its buckets) and verify to
-    jaccard 1.0 by identity. Proven pair-for-pair equal to the per-doc
-    implementation (exceptAll both ways = 0) and oracle-MATCH — see
-    tests/test_group_collapse_equivalence.py.
     """
     hs = F.array_sort(
         F.array_distinct(
             F.transform(word_shingles(text_col, k), lambda s: hash60(s))
         )
     )
-    # Collapse exact-duplicate texts first: one row per distinct text
-    # carrying the sorted member-id list (group id = min member). The
-    # groupBy's partial aggregation collapses duplicate keys map-side,
-    # so the exchange carries ~distinct texts, and the md5 shingle
-    # hashing below runs once per distinct text. fan_out keyed by the
-    # text column: the repartition IS the groupBy distribution (one
-    # exchange), and the keyed mode skips round-robin's local input
-    # sort (guide §2.5).
-    groups = grouped_ids(fan_out(docs, by=(text_col,)), (text_col,), id_col)
     # long, not int: the candidate length filters multiply _sz by 1e6
     # (ppm arithmetic) — int32 overflows for any doc with >= 2148
     # distinct shingles (~10 KB of text; ANSI hard error, found by the
     # /tmp/skew3 giant-doc fixture). One cast here keeps every
     # downstream product in int64.
-    sized = groups.select(
-        F.col("_ids")[0].alias("_gid"),
-        F.size("_ids").cast("long").alias("_m"),
-        F.col("_ids"),
-        F.size(hs).cast("long").alias("_sz"),
-        hs.alias("_hs"),
+    sized = fan_out(docs).select(
+        F.col(id_col), F.size(hs).cast("long").alias("_sz"), hs.alias("_hs")
     )
     # `sized` feeds three consumers (prefix explode + both verify sides);
-    # without persistence the groupBy's final aggregation + the
-    # shingle+hash projection recompute per consumer (ReuseExchange
-    # shares only the shuffle files, not the post-shuffle agg/hash
-    # work). Measured (SCALE.md): materializing it once is 1.4x at
-    # sf0.1 and 2.2x at the sf1 decade, output-identical — the
+    # without persistence the narrow shingle+hash projection recomputes
+    # per consumer. Measured (SCALE.md): materializing it once is 1.4x
+    # at sf0.1 and 2.2x at the sf1 decade, output-identical — the
     # registered plan passes True. MEMORY_AND_DISK spills, never OOMs.
     # The operator default stays False so callers composing their own
     # pipelines opt in deliberately. pin() scopes the cache entry to
@@ -239,30 +205,19 @@ def jaccard_pairs(
         sized = pin(sized)
     prefix_len = (F.col("_sz") - F.floor(F.lit(threshold) * F.col("_sz")) + 1).cast("int")
     pref = sized.select(
-        "_gid",
-        "_m",
+        id_col,
         "_sz",
         F.posexplode(F.slice("_hs", 1, prefix_len)).alias("_p", "_h"),
     )
-    # _df = bucket document frequency in DOCS (sum of member counts) —
-    # the exact quantity the per-doc path's size(_ids) measured, so the
-    # max_df cap semantics (and the oracles' HAVING COUNT(*) mirrors)
-    # are unchanged. _df > 1 is the pair-existence guard: a lone
-    # singleton group can't pair, but a lone m>1 group self-pairs.
     buckets = pref.groupBy("_h").agg(
         F.collect_list(
             F.struct(
-                F.col("_gid").alias("i"),
-                F.col("_sz").alias("s"),
-                F.col("_p").alias("p"),
-                F.col("_m").alias("m"),
+                F.col(id_col).alias("i"), F.col("_sz").alias("s"), F.col("_p").alias("p")
             )
-        ).alias("_ids"),
-        F.sum("_m").alias("_df"),
+        ).alias("_ids")
     )
-    buckets = buckets.where(F.col("_df") > 1)
     if max_df is not None:
-        buckets = buckets.where(F.col("_df") <= max_df)
+        buckets = buckets.where(F.size("_ids") <= max_df)
     # LENGTH FILTER (PPJoin): J = |∩|/|∪| ≤ min(sz)/max(sz), so J ≥ t
     # forces min ≥ t·max — prune inside the buckets, before the pair
     # ever reaches the (expensive) set-intersection verify join. Sound:
@@ -288,21 +243,11 @@ def jaccard_pairs(
     ub = F.lit(1) + F.least(
         F.col("_a.s") - F.col("_a.p") - 1, F.col("_b.s") - F.col("_b.p") - 1
     )
-    # Pair condition: distinct groups (i < i'), OR the group's SELF-pair
-    # (the same exploded element paired with itself — one occurrence per
-    # bucket the group's prefix reaches) when it has 2+ members. The
-    # self-pair rides the identical length/positional filters (both are
-    # functions of (s, p), equal on both sides), so a dup cluster's
-    # intra pairs survive exactly where the per-doc path's did — e.g. a
-    # cluster bigger than every one of its prefix buckets' cap emits
-    # nothing, same as before.
     cand = (
-        buckets.select(F.explode("_ids").alias("_a"), F.col("_ids"))
+        buckets.where(F.size("_ids") > 1)
+        .select(F.explode("_ids").alias("_a"), F.col("_ids"))
         .select("_a", F.explode("_ids").alias("_b"))
-        .where(
-            (F.col("_a.i") < F.col("_b.i"))
-            | ((F.col("_a.i") == F.col("_b.i")) & (F.col("_a.m") > 1))
-        )
+        .where(F.col("_a.i") < F.col("_b.i"))
         .where(
             F.least("_a.s", "_b.s") * F.lit(1_000_000)
             >= F.lit(t_ppm) * F.greatest("_a.s", "_b.s")
@@ -311,20 +256,14 @@ def jaccard_pairs(
             ub * F.lit(1_000_000 + t_ppm)
             >= F.lit(t_ppm) * (F.col("_a.s") + F.col("_b.s"))
         )
-        .select(F.col("_a.i").alias("_ga"), F.col("_b.i").alias("_gb"))
+        .select(F.col("_a.i").alias("doc_a"), F.col("_b.i").alias("doc_b"))
         .distinct()
     )
     sa = sized.select(
-        F.col("_gid").alias("_ga"),
-        F.col("_sz").alias("_sza"),
-        F.col("_hs").alias("_hsa"),
-        F.col("_ids").alias("_idsa"),
+        F.col(id_col).alias("doc_a"), F.col("_sz").alias("_sza"), F.col("_hs").alias("_hsa")
     )
     sb = sized.select(
-        F.col("_gid").alias("_gb"),
-        F.col("_sz").alias("_szb"),
-        F.col("_hs").alias("_hsb"),
-        F.col("_ids").alias("_idsb"),
+        F.col(id_col).alias("doc_b"), F.col("_sz").alias("_szb"), F.col("_hs").alias("_hsb")
     )
     inter = F.size(F.array_intersect("_hsa", "_hsb"))
     jac = inter.cast("double") / (F.col("_sza") + F.col("_szb") - inter)
@@ -335,29 +274,12 @@ def jaccard_pairs(
     # build side (seen on the round-11 skew fixture; the containment
     # twin of this join was a measured broadcast-OOM there). The sets
     # table is O(corpus) — at 100 TB it is never broadcastable; SMJ is
-    # spill-safe and AQE still skew-splits it. A self-pair verifies to
-    # jaccard exactly 1.0 (|x∩x| = sz on both sides), so no special
-    # case: identical-text pairs report 1.0 just as the per-doc
-    # intersection did.
-    ver = (
-        cand.join(sa.hint("shuffle_merge"), "_ga")
-        .join(sb.hint("shuffle_merge"), "_gb")
-        .where(jac >= threshold)
-        .select("_ga", "_gb", F.round(jac, 4).alias("jaccard"), "_idsa", "_idsb")
-    )
-    # Expand verified GROUP pairs to doc pairs in one pass: cross-group
-    # pairs take every (x in A, y in B) once (disjoint groups, ordered
-    # by least/greatest); the self-pair takes within-group combinations
-    # (x < y over one array — _idsb IS _idsa after the self-join).
+    # spill-safe and AQE still skew-splits it.
     return (
-        ver.select("_ga", "_gb", F.explode("_idsa").alias("_x"), "_idsb", "jaccard")
-        .select("_ga", "_gb", "_x", F.explode("_idsb").alias("_y"), "jaccard")
-        .where((F.col("_ga") != F.col("_gb")) | (F.col("_x") < F.col("_y")))
-        .select(
-            F.least("_x", "_y").alias("doc_a"),
-            F.greatest("_x", "_y").alias("doc_b"),
-            "jaccard",
-        )
+        cand.join(sa.hint("shuffle_merge"), "doc_a")
+        .join(sb.hint("shuffle_merge"), "doc_b")
+        .where(jac >= threshold)
+        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
     )
 
 
@@ -525,30 +447,13 @@ def containment_pairs(
             F.transform(word_shingles(text_col, k), lambda s: hash60(s))
         )
     )
-    # r16: DISTINCT-TEXT collapse, the jaccard_pairs rewrite adapted to
-    # containment's asymmetric probe/index shape. Every filter and the
-    # reported containment are functions of the two TEXTS (prefix,
-    # index membership, |A∩B|, |A|), so the machinery runs once per
-    # distinct text pair and verified GROUP pairs expand to ORDERED doc
-    # pairs at the end (no least/greatest — C(A→B) and C(B→A) are
-    # separate candidates, as per-doc). The group SELF-pair carries the
-    # identical-text pairs (containment exactly 1.0 = sza/sza; both
-    # orderings emitted by the x ≠ y expansion), gated on the group
-    # reaching ≥1 uncapped index hash through the same join — per-doc
-    # survival semantics unchanged. Index df counts DOCS (sum of member
-    # counts), so the max_df cap and its oracle mirrors are unchanged.
-    groups = grouped_ids(fan_out(docs, by=(text_col,)), (text_col,), id_col)
     # long, not int: the candidate length filters multiply _sz by 1e6
     # (ppm arithmetic) — int32 overflows for any doc with >= 2148
     # distinct shingles (~10 KB of text; ANSI hard error, found by the
     # /tmp/skew3 giant-doc fixture). One cast here keeps every
     # downstream product in int64.
-    sized = groups.select(
-        F.col("_ids")[0].alias("_gid"),
-        F.size("_ids").cast("long").alias("_m"),
-        F.col("_ids"),
-        F.size(hs).cast("long").alias("_sz"),
-        hs.alias("_hs"),
+    sized = fan_out(docs).select(
+        F.col(id_col), F.size(hs).cast("long").alias("_sz"), hs.alias("_hs")
     )
     if persist_sets:
         from news_categorization_big_data_spark.functions.cachepin import pin
@@ -558,15 +463,13 @@ def containment_pairs(
     ceil_t_sz = F.floor((F.col("_sz") * threshold_pct + 99) / 100).cast("int")
     prefix_len = (F.col("_sz") - ceil_t_sz + 1).cast("int")
     probe = sized.select(
-        F.col("_gid").alias("_ga"),
-        F.col("_m").alias("_ma"),
+        F.col(id_col).alias("doc_a"),
         F.col("_sz").alias("_szap"),
         ceil_t_sz.cast("long").alias("_cta"),
         F.posexplode(F.slice("_hs", 1, prefix_len)).alias("_pa", "_h"),
     )
     index = sized.select(
-        F.col("_gid").alias("_gb"),
-        F.col("_m").alias("_mb"),
+        F.col(id_col).alias("doc_b"),
         F.col("_sz").alias("_szbp"),
         F.posexplode("_hs").alias("_pb", "_h"),
     )
@@ -587,16 +490,14 @@ def containment_pairs(
     # (plans/text.py) — declared strategy where the estimate is
     # known-garbage.
     if max_df is not None:
-        # df in DOCS: sum of group member counts per hash — identical
-        # to the per-doc COUNT(*) the oracles mirror.
         df_ok = (
             index.groupBy("_h")
-            .agg(F.sum("_mb").alias("_df"))
+            .agg(F.count("*").alias("_df"))
             .where(F.col("_df") <= max_df)
             .select("_h")
         )
         index = index.join(df_ok.hint("shuffle_merge"), "_h")
-    # r16 candidate pruning (the PPJoin filters' asymmetric forms; both
+    # Candidate pruning (the PPJoin filters' asymmetric forms; both
     # SOUND — a pruned occurrence can never verify, so the oracle needs
     # no mirror, and a qualifying pair's FIRST common element always
     # survives both):
@@ -604,55 +505,36 @@ def containment_pairs(
     # - positional: a shared hash at sorted positions (p_a, p_b) bounds
     #   the overlap by 1 + min(|A|−p_a−1, |B|−p_b−1) ≥ ⌈t·|A|⌉ — on a
     #   low-diversity corpus this kills the deep-index-position matches
-    #   that made the candidate set quadratic (measured at sf1:
-    #   27.9M → see OPTIMIZATION_r16.md).
+    #   that made the candidate set quadratic.
     ub = F.lit(1) + F.least(
         F.col("_szap") - F.col("_pa") - 1, F.col("_szbp") - F.col("_pb") - 1
     )
     cand = (
         probe.join(index.hint("shuffle_merge"), "_h")
-        .where(
-            (F.col("_ga") != F.col("_gb"))
-            | ((F.col("_ga") == F.col("_gb")) & (F.col("_ma") > 1))
-        )
+        .where(F.col("doc_a") != F.col("doc_b"))
         .where(F.col("_szbp") >= F.col("_cta"))
         .where(ub >= F.col("_cta"))
-        .select("_ga", "_gb")
+        .select("doc_a", "doc_b")
         .distinct()
     )
     sa = sized.select(
-        F.col("_gid").alias("_ga"),
+        F.col(id_col).alias("doc_a"),
         F.col("_sz").alias("_sza"),
         F.col("_hs").alias("_hsa"),
-        F.col("_ids").alias("_idsa"),
     )
     sb = sized.select(
-        F.col("_gid").alias("_gb"),
-        F.col("_hs").alias("_hsb"),
-        F.col("_ids").alias("_idsb"),
+        F.col(id_col).alias("doc_b"), F.col("_hs").alias("_hsb")
     )
     inter = F.size(F.array_intersect("_hsa", "_hsb"))
-    ver = (
-        cand.join(sa.hint("shuffle_merge"), "_ga")
-        .join(sb.hint("shuffle_merge"), "_gb")
+    return (
+        cand.join(sa.hint("shuffle_merge"), "doc_a")
+        .join(sb.hint("shuffle_merge"), "doc_b")
         .where(inter * 100 >= F.col("_sza") * threshold_pct)
         .select(
-            "_ga",
-            "_gb",
+            "doc_a",
+            "doc_b",
             F.round(inter.cast("double") / F.col("_sza"), 4).alias("containment"),
-            "_idsa",
-            "_idsb",
         )
-    )
-    # ORDERED expansion: every (x ∈ A, y ∈ B) for direction A→B; the
-    # self-pair (A = B) expands to both orderings of distinct members
-    # (x ≠ y), each reporting containment 1.0 — per-doc identical.
-    return (
-        ver.select(
-            F.explode("_idsa").alias("doc_a"), "_idsb", "containment"
-        )
-        .select("doc_a", F.explode("_idsb").alias("doc_b"), "containment")
-        .where(F.col("doc_a") != F.col("doc_b"))
     )
 
 

@@ -11,20 +11,21 @@ and every LATEST stamp is green, so since round 8 the window is PURE
 RE-PROOF ROTATION: changed-plan queries first, then the stalest stamps.
 
 The current window (groups A-C of ``_DRIVER_ORDER``): (A) the plans
-whose builders or shared operators changed when the six default-off
-valves were deleted — q_token_rarity (rarity.preagg), q_sessionize
-(session.chunked), q_heavy_hitters (hh.cms), q_equidepth_histogram
-(equidepth.valuedomain) and q_dedup_cluster (cc.algorithm=minlabel);
-their default plans are unchanged. (A') The ten r15/r16 rewrites never
-checked against the driver oracle: the distinct-value collapses
-(q_semantic_dedup, q_dedup_mllib_lsh, q_dedup_fuzzy, q_dedup_embedding,
-q_dedup_ngram_jaccard, q_dedup_containment — functions/groupcollapse.py),
-the single-pass q_lsh_recall,
-and the fan_out(by=) keyed repartitions in q_classify_keywords,
-q_variant_json and q_sql_udf. (B) The q_group_stats canary. (C) The 34
-oldest official stamps (r6 complete, r7 complete, r9 partial). Earlier
-windows' rationales live in git history. Keep ROTATION_PENDING for
-anything newly registered.
+whose shared operators changed when jaccard_pairs and containment_pairs
+went back to one row per document (q_dedup_ngram_jaccard,
+q_dedup_containment, q_lsh_recall and q_dedup_mllib_lsh, whose truth
+sides call jaccard_pairs). (A') The plans touched when the six
+default-off valves were deleted — q_token_rarity (rarity.preagg),
+q_sessionize (session.chunked), q_heavy_hitters (hh.cms),
+q_equidepth_histogram (equidepth.valuedomain) and q_dedup_cluster
+(cc.algorithm=minlabel); their default plans are unchanged. (A'') The
+remaining r15/r16 rewrites never checked against the driver oracle: the
+distinct-value collapses (q_semantic_dedup, q_dedup_fuzzy,
+q_dedup_embedding — functions/groupcollapse.py) and the fan_out(by=)
+keyed repartitions in q_classify_keywords, q_variant_json and q_sql_udf.
+(B) The q_group_stats canary. (C) The 34 oldest official stamps (r6
+complete, r7 complete, r9 partial). Earlier windows' rationales live in
+git history. Keep ROTATION_PENDING for anything newly registered.
 """
 
 from news_categorization_big_data_spark.plans.registry import REGISTRY, QuerySpec, register
@@ -66,28 +67,30 @@ _DRIVER_ORDER = [
     # ---- ROTATED WINDOW (first 50 = the driver's correctness window) ----
     # Composition (priority order, the round-8 convention): changed
     # plans first, then the canary, then the OLDEST official stamps.
-    # -- A. plans whose builders or shared operators changed when the
-    #       six default-off valves were deleted (rarity.preagg,
-    #       session.chunked, hh.cms, equidepth.valuedomain,
-    #       cc.algorithm=minlabel, groupcollapse.cap) — default plans
-    #       unchanged, re-stamped per the changed-code-first convention.
+    # -- A. plans whose builders or shared operators changed: the
+    #       per-document jaccard_pairs / containment_pairs revert
+    #       (q_dedup_mllib_lsh's truth side is jaccard_pairs too).
+    "q_dedup_ngram_jaccard",
+    "q_dedup_containment",
+    "q_lsh_recall",
+    "q_dedup_mllib_lsh",
+    # -- A'. plans touched when the six default-off valves were deleted
+    #       (rarity.preagg, session.chunked, hh.cms,
+    #       equidepth.valuedomain, cc.algorithm=minlabel,
+    #       groupcollapse.cap) — default plans unchanged, awaiting their
+    #       first stamp since.
     "q_token_rarity",
     "q_sessionize",
     "q_heavy_hitters",
     "q_equidepth_histogram",
     "q_dedup_cluster",
-    # -- A'. the ten r15/r16 rewrites never checked against the driver
-    #       oracle: the distinct-value collapses (semantic/mllib/fuzzy/
-    #       embedding/ngram/containment dedup), the single-pass
-    #       q_lsh_recall, and the fan_out(by=) keyed repartitions
+    # -- A''. the remaining r15/r16 rewrites never checked against the
+    #       driver oracle: the distinct-value collapses (semantic/fuzzy/
+    #       embedding dedup) and the fan_out(by=) keyed repartitions
     #       (q_classify_keywords, q_variant_json, q_sql_udf).
     "q_semantic_dedup",
-    "q_dedup_mllib_lsh",
     "q_dedup_fuzzy",
     "q_dedup_embedding",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_containment",
-    "q_lsh_recall",
     "q_classify_keywords",
     "q_variant_json",
     "q_sql_udf",

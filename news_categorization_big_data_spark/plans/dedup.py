@@ -320,11 +320,12 @@ def q_dedup_mllib_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the seed (fit never looks at the data values), bucket co-occurrence
     # and the exact distance both depend only on the feature vectors —
     # so every doc pair inherits its flag from its text pair.
-    # Exact-duplicate texts (10x in the sf1 fixture) previously made the
-    # MLlib self-join quadratic in the duplicated count (measured 164 s
-    # at sf1); identical texts share all hashes, so their rep self-pair
-    # (r, r) is in the join output (distance 0) and flags every
-    # intra-text pair True — exactly what the per-row join produced.
+    # Exact-duplicate texts make the per-row MLlib self-join quadratic
+    # in the duplicated count (the shipped fixtures carry few: 80 of
+    # 50,000 docs at sf1 are redundant copies); identical texts share
+    # all hashes, so their rep self-pair (r, r) is in the join output
+    # (distance 0) and flags every intra-text pair True — exactly what
+    # the per-row join produced.
     # Proven row-for-row equal to the per-row plan at sf0.1 and sf1, and
     # oracle-MATCH.
     # r16 (r15 ADVICE): reps and the doc→rep map both derive from ONE
@@ -1189,10 +1190,8 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r16: ONE full-outer join + ONE aggregate replaces the hit join +
     # three per-side count aggregates — the old shape evaluated the
-    # whole truth chain twice and the whole cand chain twice (the r8
-    # "persist measured worse" note predates the r16 collapsed truth
-    # pass, which is far heavier per evaluation; re-measured at sf1:
-    # both sides now run once, ~2x). Both pair lists are DISTINCT by
+    # whole truth chain twice and the whole cand chain twice; now both
+    # sides run once, without a persist. Both pair lists are DISTINCT by
     # construction, so the outer join's row set is the pair-set union
     # and the three counts are conditional sums of the marker columns
     # — output identical.

@@ -114,6 +114,17 @@ def exchange_counts(plan: str) -> Counter:
     return kinds
 
 
+def exchanges_keyed_on(plan: str, col: str) -> list[str]:
+    """The Exchange lines of a physical plan string whose partitioning
+    keys reference column ``col`` (hash or range partitioning)."""
+    key = re.compile(rf"\b{re.escape(col)}#\d+")
+    return [
+        line.strip()
+        for line in plan.splitlines()
+        if (m := _EXCHANGE_RE.search(line)) and m.group(2) and key.search(m.group(2))
+    ]
+
+
 def assert_map_only(spark, build, fan_out_key: str | None = None) -> str:
     """The map-only plan contract: ``build()``'s physical plan carries no
     Exchange except, where the caller declares ``fan_out_key``, at most

@@ -34,22 +34,26 @@ def test_bad_sf_dir_raises_cleanly(spark):
 
 def test_registry_window_contains_round15_priorities():
     """The driver evaluates the first 50 insertion-order entries. The
-    window = the plans whose builders or shared operators changed when
-    the six default-off valves were deleted, then the ten r15/r16
+    window = the plans whose shared operators changed in the per-document
+    jaccard_pairs / containment_pairs revert, then the plans touched when
+    the six default-off valves were deleted, then the remaining r15/r16
     rewrites never checked against the driver oracle, then the
     q_group_stats canary, then the 34 OLDEST official stamps (r6
     complete, r7 complete, r9 partial)."""
     window = list(REGISTRY)[:50]
     changed = [
+        "q_dedup_ngram_jaccard", "q_dedup_containment", "q_lsh_recall",
+        "q_dedup_mllib_lsh",
+    ]
+    valve_deletion = [
         "q_token_rarity", "q_sessionize", "q_heavy_hitters",
         "q_equidepth_histogram", "q_dedup_cluster",
     ]
     unchecked_r15_r16 = [
-        "q_semantic_dedup", "q_dedup_mllib_lsh", "q_dedup_fuzzy",
-        "q_dedup_embedding", "q_dedup_ngram_jaccard", "q_dedup_containment",
-        "q_lsh_recall", "q_classify_keywords", "q_variant_json", "q_sql_udf",
+        "q_semantic_dedup", "q_dedup_fuzzy", "q_dedup_embedding",
+        "q_classify_keywords", "q_variant_json", "q_sql_udf",
     ]
-    head = changed + unchecked_r15_r16 + ["q_group_stats"]
+    head = changed + valve_deletion + unchecked_r15_r16 + ["q_group_stats"]
     assert window[: len(head)] == head
     # spot-check the catch-up group's head and tail: the whole r6
     # cohort leads, r7 follows, r9 is partial up to the 50-slot boundary.

@@ -1,18 +1,21 @@
-"""Group-collapse equivalence pins (r15 ADVICE low #4 + VERDICT item 6).
+"""Duplicate-sensitive per-row oracle pins (r15 ADVICE low #4 + VERDICT item 6).
 
-The r15/r16 distinct-value collapses (jaccard_pairs, q_dedup_fuzzy,
-q_semantic_dedup, embedding_near_dup_pairs, the simhash distinct-sketch
-path) were proven equal to their per-row plans by ad-hoc exceptAll runs
-that were never turned into regression tests, so a future edit could
-silently break the duplicate-expansion invariants (disjoint groups,
-least/greatest ordering, self-pair gating). This file
-pins them on a purpose-built fixture whose duplicate clusters dwarf the
-shipped sf* fixtures (which top out around 10x): a 14-member exact-dup
+The distinct-value collapses (q_dedup_fuzzy, q_semantic_dedup,
+embedding_near_dup_pairs, the simhash distinct-sketch path) were proven
+equal to their per-row plans by ad-hoc exceptAll runs that were never
+turned into regression tests, so a future edit could silently break the
+duplicate-expansion invariants (disjoint groups, least/greatest ordering,
+self-pair gating). The per-document PPJoin operators (jaccard_pairs,
+containment_pairs — behind q_dedup_ngram_jaccard, q_dedup_containment,
+q_lsh_recall's truth side and q_dedup_mllib_lsh's truth side) must emit
+every pair inside an exact-dup cluster exactly once and never a doc's
+pair with itself; the 14-member exact-dup text cluster is what guards
+that. This file pins all of them on a purpose-built fixture whose
+duplicate clusters dwarf the shipped sf* fixtures: a 14-member exact-dup
 text cluster, a 12-member exact-dup embedding cluster, zero-norm and
 NaN-poisoned DUPLICATE embeddings (the q_semantic_dedup NaN-partner
-class the r15 ADVICE flagged), empty/null/short texts. Each grouped
-plan must oracle-MATCH on the fixture (the oracles ARE per-row
-implementations).
+class the r15 ADVICE flagged), empty/null/short texts. Each plan must
+oracle-MATCH on the fixture (the oracles ARE per-row implementations).
 """
 
 from __future__ import annotations
@@ -31,10 +34,14 @@ from news_categorization_big_data_spark.functions.groupcollapse import grouped_i
 from news_categorization_big_data_spark.plans import REGISTRY
 from tests.conftest import assert_oracle_match
 
-#: Queries whose plans route through grouped_ids (directly or via
-#: operators) plus the distinct-sketch simhash path (its own collapse).
-COLLAPSED = [
+#: Queries whose output depends on exact-duplicate handling: the plans
+#: routed through grouped_ids (directly or via operators), the
+#: distinct-sketch simhash path (its own collapse), and the per-doc
+#: PPJoin queries (jaccard_pairs / containment_pairs).
+DUP_SENSITIVE = [
     "q_dedup_ngram_jaccard",
+    "q_dedup_containment",
+    "q_lsh_recall",
     "q_dedup_fuzzy",
     "q_semantic_dedup",
     "q_dedup_embedding",
@@ -126,7 +133,7 @@ def collapse_duck(collapse_sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", COLLAPSED)
+@pytest.mark.parametrize("name", DUP_SENSITIVE)
 def test_grouped_plan_matches_per_row_oracle(
     spark, collapse_sf_dir, collapse_duck, name
 ):

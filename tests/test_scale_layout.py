@@ -258,16 +258,24 @@ def test_dedup_verify_joins_never_static_broadcast(spark, sf_dir):
     q_dedup_keep_best. Unlike scans whose estimate tracks file bytes
     (those self-correct at scale), this class never self-corrects, so
     the strategy is pinned here at small sf where the bad plan would
-    otherwise 'work'."""
+    otherwise 'work'.
+
+    These dedup plans also shuffle keys, never documents: no Exchange
+    may partition on the full ``text`` column (the shingle hashes are
+    computed map-side and only ids, sizes and hashes move)."""
     from news_categorization_big_data_spark.plans import REGISTRY
+    from tests.conftest import exchanges_keyed_on
 
     for q, n_smj in (
         ("q_dedup_containment", 4),  # df-cap + candidate + 2 verify sides
         ("q_dedup_ngram_jaccard", 2),  # 2 verify sides
+        ("q_lsh_recall", 3),  # 2 truth verify sides + truth ⟗ cand
         ("q_dedup_keep_best", 1),  # component ⋈ per-doc quality
     ):
         plan = _plan(REGISTRY[q].builder(spark, sf_dir))
         assert plan.count("SortMergeJoin") >= n_smj, (q, plan)
+        text_keyed = exchanges_keyed_on(plan, "text")
+        assert not text_keyed, (q, text_keyed)
 
 
 def test_row_salt_raises_on_null_id(spark):

@@ -14,8 +14,8 @@ Per-query TIMINGS here are still not isolated (JVM/JIT/page-cache warmth
 carries over) — bench.py, which does clearCache between reps, is the
 timing surface. The tail of the run releases the LAST query's pins
 explicitly (the one lifetime the registry wrapper cannot end)."""
-import hashlib, json, math, sys, time
-sys.path.insert(0, "/root/repo")
+import hashlib, json, math, os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 import duckdb

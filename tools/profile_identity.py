@@ -9,9 +9,10 @@ Usage: python tools/profile_identity.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE, PROFILE_100TB
 from news_categorization_big_data_spark.functions.cachepin import release_pins
