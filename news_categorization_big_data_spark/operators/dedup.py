@@ -696,7 +696,9 @@ def simhash_hamming_pairs(
     # in-bucket pair generation was quadratic in the DUPLICATED count —
     # and each hot bucket exploded from one collect_list row in ONE
     # task (measured: the registered 32-bit plan took 1473 s at the sf1
-    # decade, whose corpus carries ~10x exact dups). Grouping docs by
+    # decade; that corpus holds few exact dups — tools/make_sf1.py
+    # suffixes each replica's text, leaving 80 redundant copies in
+    # 50,000 documents). Grouping docs by
     # sketch first shrinks buckets by the duplication factor (pair work
     # falls quadratically), the group id IS the sketch so candidate
     # Hamming needs NO verify join at all, and the output pair set is

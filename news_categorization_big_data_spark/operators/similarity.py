@@ -226,8 +226,8 @@ def embedding_near_dup_pairs(
     """
     # r15 (guide §8: decide on a lightweight proxy, multiply heavy rows
     # out once at the end): band over DISTINCT VECTORS, not vector rows.
-    # Exact-duplicate embeddings (exact-dup documents; the sf1 fixture
-    # carries ~10x of them) share every band key, so per-row banding
+    # Exact-duplicate embeddings (the sf1 fixture copies every
+    # embedding verbatim 10x) share every band key, so per-row banding
     # made the quadratic in-bucket pair explode AND the verify join that
     # ships two 64-double arrays per candidate scale with the DUPLICATED
     # count (measured: 73 s at sf1). Grouping rows by vector first

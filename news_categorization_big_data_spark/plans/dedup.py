@@ -563,10 +563,12 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15 (guide §8: decide on a lightweight proxy, multiply heavy rows
     # out once): block-join DISTINCT normalized texts, not doc rows.
     # Every predicate and the output edit distance are functions of
-    # `norm` alone, and exact-duplicate documents (10x of them in the
-    # sf1 fixture; boilerplate at corpus scale) share a norm — so the
-    # per-doc block join paid the duplication factor SQUARED in
-    # levenshtein calls (120x120 DP each; measured 80 s at sf1).
+    # `norm` alone, and exact-duplicate documents (boilerplate at corpus
+    # scale) share a norm — so a per-doc block join pays the
+    # duplication factor SQUARED in levenshtein calls (120x120 DP each).
+    # The sf1 fixture holds few of them (tools/make_sf1.py suffixes each
+    # replica's text: 80 redundant copies in 50,000 documents), so the
+    # per-doc join's measured 80 s at sf1 is not exact-dup cost.
     # Grouping by norm first runs the join + levenshtein once per
     # distinct pair: intra-group pairs are edit_dist 0 BY IDENTITY
     # (lev(x,x) = 0, |l-l| = 0 — always qualifying), inter-group pairs
@@ -584,11 +586,11 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Length filter AFTER the groupBy: as a pre-group row filter it was
     # pushed into the SCAN as a DataFilter, re-running the two-regexp
-    # normalize chain once in the filter and again in the projection
-    # (plans/r16/q_dedup_fuzzy_before.txt); on the group output the
-    # regex runs once per doc (map side) and the length check once per
-    # DISTINCT norm. Equivalent: norm is the group key, so filtering
-    # groups == filtering rows (null norms drop either way). pin(): g
+    # normalize chain once in the filter and again in the projection;
+    # on the group output the regex runs once per doc (map side) and
+    # the length check once per DISTINCT norm. Equivalent: norm is the
+    # group key, so filtering groups == filtering rows (null norms drop
+    # either way). pin(): g
     # feeds THREE consumers (both block-join sides + the intra
     # expansion), and ReuseExchange shares only shuffle files, not the
     # per-consumer re-run of the final collect_list + substring
@@ -635,8 +637,8 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value is the exact distance for every emitted pair.
     # shuffle_merge: the distinct-norm frame scales with the corpus and
     # descends from a groupBy whose static size estimate is garbage —
-    # the planner was BROADCASTING the whole (norm, ids, pfx) side
-    # (plans/r16/q_dedup_fuzzy_before.txt), the q18/widened-frame class.
+    # the planner was BROADCASTING the whole (norm, ids, pfx) side,
+    # the q18/widened-frame class.
     # SMJ is spill-safe; AQE may still demote to shuffled-hash at
     # runtime via the r15 maxShuffledHashJoinLocalMapThreshold conf.
     inter = (

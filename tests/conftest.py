@@ -8,10 +8,14 @@ import math
 import os
 import re
 from collections import Counter
+from collections.abc import Iterator, Mapping
+from typing import NamedTuple
 
 import duckdb
 import pytest
+from pyspark.sql.types import StructType
 
+from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.session import get_spark
 from news_categorization_big_data_spark.sources.tables import TABLES
 
@@ -27,6 +31,65 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _git_stamp_off_tree(tmp_path_factory):
+    """``__spark_entry__.queries()`` refreshes the tracked
+    CORRECTNESS_GIT.json for the external driver; a test run must leave
+    the checkout clean, so the stamp goes to a temp file instead."""
+    import __spark_entry__
+
+    stamp = tmp_path_factory.mktemp("git_stamp") / "CORRECTNESS_GIT.json"
+    with pytest.MonkeyPatch.context() as patch:
+        patch.setattr(__spark_entry__, "_GIT_STAMP_PATH", str(stamp))
+        yield
+
+
+def physical_plan(df) -> str:
+    """The executed physical plan of ``df`` as text (planning only —
+    nothing runs)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+class RegisteredPlan(NamedTuple):
+    schema: StructType
+    plan: str
+
+
+class _PlanMemo(Mapping):
+    """Query name → :class:`RegisteredPlan`, each built at most once per
+    session, on first access, at ``sf_dir`` under the default confs.
+    Plan construction runs real jobs for some builders (the CC size
+    probe, localCheckpoints), so the registry-wide sweeps and the
+    per-query shape pins all read this one memo instead of rebuilding."""
+
+    def __init__(self, spark, sf_dir: str):
+        self.spark = spark
+        self.sf_dir = sf_dir
+        self._built: dict[str, RegisteredPlan] = {}
+
+    def build(self, name: str):
+        """A fresh DataFrame for ``name`` under the session's current
+        confs — for the few pins that plan under a non-default conf."""
+        return REGISTRY[name].builder(self.spark, self.sf_dir)
+
+    def __getitem__(self, name: str) -> RegisteredPlan:
+        if name not in self._built:
+            df = self.build(name)
+            self._built[name] = RegisteredPlan(df.schema, physical_plan(df))
+        return self._built[name]
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(REGISTRY)
+
+    def __len__(self) -> int:
+        return len(REGISTRY)
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark, sf_dir) -> _PlanMemo:
+    return _PlanMemo(spark, sf_dir)
 
 
 @pytest.fixture(scope="session")
@@ -92,12 +155,15 @@ _EXCHANGE_RE = re.compile(r"\bExchange (\w+)(?:\((.*?)\))?, ([A-Z_]+)")
 
 
 def exchange_counts(plan: str) -> Counter:
-    """Exchanges of a physical plan string, counted by kind:
-    ``broadcast``, ``reused``, ``REPARTITION_BY_NUM(<keys>)`` for a keyed
-    ``hashpartitioning`` repartition (the shape of
-    functions/partitioning.py fan_out(by=...)), else
-    ``<partitioning>/<shuffle origin>`` (e.g.
-    ``hashpartitioning/ENSURE_REQUIREMENTS``, a shuffle the plan needs)."""
+    """Exchanges of a physical plan string, counted by kind: ``broadcast``,
+    ``reused``, else ``<partitioning>/<shuffle origin>`` with the keys of
+    a hash or range partitioning spelled out and expression ids dropped —
+    ``hashpartitioning(user_id)/ENSURE_REQUIREMENTS`` is a shuffle the
+    plan needs, ``hashpartitioning(doc_id)/REPARTITION_BY_NUM`` the keyed
+    repartition of functions/partitioning.py fan_out(by=...),
+    ``SinglePartition/ENSURE_REQUIREMENTS`` a global window or sort.
+    A line naming an Exchange in any other form counts as ``unparsed``,
+    so no exchange escapes the count."""
     kinds: Counter = Counter()
     for line in plan.splitlines():
         if "BroadcastExchange" in line:
@@ -106,45 +172,36 @@ def exchange_counts(plan: str) -> Counter:
             kinds["reused"] += 1
         elif m := _EXCHANGE_RE.search(line):
             part, args, origin = m.groups()
-            if part == "hashpartitioning" and origin == "REPARTITION_BY_NUM":
+            if part in ("hashpartitioning", "rangepartitioning"):
                 keys = re.sub(r"#\d+L?", "", args.rsplit(", ", 1)[0])
-                kinds[f"REPARTITION_BY_NUM({keys})"] += 1
-            else:
-                kinds[f"{part}/{origin}"] += 1
+                part = f"{part}({keys})"
+            kinds[f"{part}/{origin}"] += 1
+        elif "Exchange" in line:
+            kinds["unparsed"] += 1
     return kinds
 
 
-def exchanges_keyed_on(plan: str, col: str) -> list[str]:
-    """The Exchange lines of a physical plan string whose partitioning
-    keys reference column ``col`` (hash or range partitioning)."""
-    key = re.compile(rf"\b{re.escape(col)}#\d+")
-    return [
-        line.strip()
-        for line in plan.splitlines()
-        if (m := _EXCHANGE_RE.search(line)) and m.group(2) and key.search(m.group(2))
-    ]
-
-
-def assert_map_only(spark, build, fan_out_key: str | None = None) -> str:
-    """The map-only plan contract: ``build()``'s physical plan carries no
-    Exchange except, where the caller declares ``fan_out_key``, at most
-    one fan_out keyed repartition on it — and with
+def assert_map_only(
+    registry_plans: _PlanMemo, name: str, fan_out_key: str | None = None
+) -> str:
+    """The map-only plan contract: query ``name``'s physical plan carries
+    no Exchange except, where the caller declares ``fan_out_key``, at
+    most one fan_out keyed repartition on it — and with
     ``spark.graft.fanout.enabled=false`` (the 100 TB deployment, where
     scan width is file-driven) no Exchange at all. Returns the default
     plan for further shape checks."""
-
-    def physical_plan() -> str:
-        return build()._jdf.queryExecution().executedPlan().toString()
-
-    plan = physical_plan()
+    plan = registry_plans[name].plan
     allowed = Counter(
-        {f"REPARTITION_BY_NUM({fan_out_key})": 1} if fan_out_key else {}
+        {f"hashpartitioning({fan_out_key})/REPARTITION_BY_NUM": 1}
+        if fan_out_key
+        else {}
     )
     extra = exchange_counts(plan) - allowed
     assert not extra, f"not map-only: {dict(extra)}\n{plan}"
+    spark = registry_plans.spark
     spark.conf.set("spark.graft.fanout.enabled", "false")
     try:
-        plan_off = physical_plan()
+        plan_off = physical_plan(registry_plans.build(name))
     finally:
         spark.conf.unset("spark.graft.fanout.enabled")
     off = exchange_counts(plan_off)

@@ -6,68 +6,66 @@ by tests/test_oracle_parity.py."""
 from __future__ import annotations
 
 from news_categorization_big_data_spark.plans import REGISTRY
-from tests.conftest import assert_map_only
+from tests.conftest import assert_map_only, exchange_counts, physical_plan
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_q4_left_semi_no_cartesian(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q4"].builder(spark, sf_dir))
+def test_q4_left_semi_no_cartesian(registry_plans):
+    plan = registry_plans["q_tpch_q4"].plan
     assert "LeftSemi" in plan, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
     # the order-date window reaches the orders scan
     assert "GreaterThanOrEqual(o_orderdate" in plan, plan
 
 
-def test_q10_broadcasts_nation_pushes_filters(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q10"].builder(spark, sf_dir))
+def test_q10_broadcasts_nation_pushes_filters(registry_plans):
+    plan = registry_plans["q_tpch_q10"].plan
     assert "BroadcastHashJoin" in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
     # returnflag filter pushed to the lineitem scan
     assert "EqualTo(l_returnflag,R)" in plan, plan
 
 
-def test_q18_aggregates_lineitem_before_joins(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q18"].builder(spark, sf_dir))
+def test_q18_aggregates_lineitem_before_joins(registry_plans):
+    plan = registry_plans["q_tpch_q18"].plan
     assert "LeftSemi" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_sessionize_single_exchange(spark, sf_dir):
+def test_sessionize_single_exchange(registry_plans):
     """The window partitions by user_id; the follow-up groupBy
     (user_id, sid) is satisfied by the SAME hash partitioning
     (ClusteredDistribution subset rule), so the whole query must plan
     exactly one shuffle."""
-    plan = _plan(REGISTRY["q_sessionize"].builder(spark, sf_dir))
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    plan = registry_plans["q_sessionize"].plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(user_id)/ENSURE_REQUIREMENTS": 1
+    }, plan
     assert "Window" in plan, plan
 
 
-def test_retention_cohort_single_scan(spark, sf_dir):
+def test_retention_cohort_single_scan(registry_plans):
     """Round-8 shape (q_funnel discipline): distinct (user, day) pairs,
     cohort from a user-partition window — events scanned ONCE, no join
     back, no count_distinct expand (distinct pairs make COUNT(*) the
     user count)."""
-    plan = _plan(REGISTRY["q_retention_cohort"].builder(spark, sf_dir))
+    plan = registry_plans["q_retention_cohort"].plan
     assert plan.count("FileScan parquet") == 1, plan
     assert "Join" not in plan, plan
     assert "Expand" not in plan, plan  # count_distinct would add one
 
 
-def test_growth_accounting_single_scan(spark, sf_dir):
+def test_growth_accounting_single_scan(registry_plans):
     """Round-8 shape (q_funnel discipline): the labeled activity rows
     explode into their two ledger contributions and ONE day aggregate
     sums both — events scanned ONCE, the today×churn join gone."""
-    plan = _plan(REGISTRY["q_growth_accounting"].builder(spark, sf_dir))
+    plan = registry_plans["q_growth_accounting"].plan
     assert plan.count("FileScan parquet") == 1, plan
     assert "Join" not in plan, plan
     assert "Generate explode" in plan, plan
 
 
-def test_mad_winsorize_single_fact_pass(spark, sf_dir):
+def test_mad_winsorize_single_fact_pass(registry_plans, spark, sf_dir):
     """Round-8 shape: the order-statistic pair reads the fact table
     exactly ONCE — into the MEMORY_AND_DISK-persisted distinct-value
     counts table — and every later phase (medians, deviation
@@ -90,29 +88,32 @@ def test_mad_winsorize_single_fact_pass(spark, sf_dir):
     # to the old count+join total shape would hide inside the cached
     # render otherwise)
     ev = load_table(spark, sf_dir, "events")
-    counts_plan = _plan(value_counts(ev, ["event_type"], F.col("value")))
+    counts_plan = physical_plan(value_counts(ev, ["event_type"], F.col("value")))
     assert counts_plan.count("FileScan parquet") == 1, counts_plan
 
     for qname in ("q_mad_outliers", "q_winsorize"):
-        df = REGISTRY[qname].builder(spark, sf_dir)
-        plan = _plan(df)
+        plan = registry_plans[qname].plan
         # zero scans hit storage per run: every FileScan in the render
         # sits inside the InMemoryRelation (printed once per reader)
         assert uncached_file_scans(plan) == 0, (qname, plan)
         assert "InMemoryTableScan" in plan, (qname, plan)
         assert "collect_list" not in plan, (qname, plan)
-        assert df.count() > 0  # materializes; smoke that it executes
+        # materializes; smoke that it executes
+        assert REGISTRY[qname].builder(spark, sf_dir).count() > 0
 
 
-def test_funnel_single_scan_single_exchange(spark, sf_dir):
+def test_funnel_single_scan_single_exchange(registry_plans):
     """Round-7 shape: three UNORDERED full-partition windows stacked
     over one user_id exchange — events scanned once, never sorted, no
     cross join, and the per-user collapse reuses the window's
     partitioning (no second hash exchange on user_id)."""
-    plan = _plan(REGISTRY["q_funnel"].builder(spark, sf_dir))
+    plan = registry_plans["q_funnel"].plan
     assert "CartesianProduct" not in plan, plan
     assert plan.count("FileScan parquet") == 1, plan
-    assert plan.count("Exchange hashpartitioning(user_id") == 1, plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(user_id)/ENSURE_REQUIREMENTS": 1,
+        "SinglePartition/ENSURE_REQUIREMENTS": 1,
+    }, plan
     # unordered windows: no sort order inside any window spec
     import re
 
@@ -120,42 +121,49 @@ def test_funnel_single_scan_single_exchange(spark, sf_dir):
         assert "ASC" not in spec and "DESC" not in spec, spec
 
 
-def test_retention_cohort_reuses_user_partitioning(spark, sf_dir):
+def test_retention_cohort_reuses_user_partitioning(registry_plans):
     """first-seen agg + join back both hash on user_id; only the final
     (cohort, offset) distinct-count adds different-key shuffles."""
-    plan = _plan(REGISTRY["q_retention_cohort"].builder(spark, sf_dir))
-    assert plan.count("Exchange hashpartitioning(user_id") <= 2, plan
+    plan = registry_plans["q_retention_cohort"].plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(user_id, d)/ENSURE_REQUIREMENTS": 1,
+        "hashpartitioning(user_id)/ENSURE_REQUIREMENTS": 1,
+        "hashpartitioning(cohort_day, _groupingexpression)/ENSURE_REQUIREMENTS": 1,
+    }, plan
 
 
-def test_decay_agg_map_side_weights(spark, sf_dir):
-    plan = _plan(REGISTRY["q_decay_agg"].builder(spark, sf_dir))
+def test_decay_agg_map_side_weights(registry_plans):
+    plan = registry_plans["q_decay_agg"].plan
     assert "Join" not in plan, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(event_type)/ENSURE_REQUIREMENTS": 1
+    }, plan
 
 
-def test_bpe_pairs_single_shuffle_topk(spark, sf_dir):
-    plan = _plan(REGISTRY["q_bpe_pair_counts"].builder(spark, sf_dir))
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+def test_bpe_pairs_single_shuffle_topk(registry_plans):
+    plan = registry_plans["q_bpe_pair_counts"].plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(pair)/ENSURE_REQUIREMENTS": 1
+    }, plan
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_embedding_quantize_map_only(spark, sf_dir):
-    plan = assert_map_only(
-        spark,
-        lambda: REGISTRY["q_embedding_quantize"].builder(spark, sf_dir),
-        fan_out_key="vec_id",
-    )
+def test_embedding_quantize_map_only(registry_plans):
+    plan = assert_map_only(registry_plans, "q_embedding_quantize", "vec_id")
     assert "Join" not in plan, plan
 
 
-def test_keep_best_single_component_window(spark, sf_dir):
+def test_keep_best_single_component_window(registry_plans):
     """One window pass over the (tiny) component table computes both the
     argmax rank and n_members — WindowGroupLimit can't prune here
     because the member count needs every row, so the contract is: a
     single component-partitioned Window, no cross join."""
-    plan = _plan(REGISTRY["q_dedup_keep_best"].builder(spark, sf_dir))
+    plan = registry_plans["q_dedup_keep_best"].plan
     assert plan.count("Window") >= 1, plan
-    assert "Exchange hashpartitioning(component" in plan, plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(doc_id)/ENSURE_REQUIREMENTS": 2,
+        "hashpartitioning(component)/ENSURE_REQUIREMENTS": 1,
+    }, plan
     assert "CartesianProduct" not in plan, plan
 
 
@@ -188,71 +196,71 @@ def test_funnel_is_monotone(spark, sf_dir):
     assert rows[1] > 0
 
 
-def test_cube_expands_once(spark, sf_dir):
-    plan = _plan(REGISTRY["q_cube"].builder(spark, sf_dir))
+def test_cube_expands_once(registry_plans):
+    plan = registry_plans["q_cube"].plan
     assert "Expand" in plan, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(o_orderstatus, o_orderpriority, spark_grouping_id)"
+        "/ENSURE_REQUIREMENTS": 1
+    }, plan
 
 
-def test_time_range_window_single_pass(spark, sf_dir):
-    plan = _plan(REGISTRY["q_window_time_range"].builder(spark, sf_dir))
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+def test_time_range_window_single_pass(registry_plans):
+    plan = registry_plans["q_window_time_range"].plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(user_id)/ENSURE_REQUIREMENTS": 1
+    }, plan
     assert "specifiedwindowframe(RangeFrame" in plan, plan
 
 
-def test_histogram_single_shuffle_no_join(spark, sf_dir):
-    plan = _plan(REGISTRY["q_value_histogram"].builder(spark, sf_dir))
+def test_histogram_single_shuffle_no_join(registry_plans):
+    plan = registry_plans["q_value_histogram"].plan
     assert "Join" not in plan, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(event_type, _groupingexpression)/ENSURE_REQUIREMENTS": 1
+    }, plan
 
 
-def test_zscore_broadcasts_stats(spark, sf_dir):
-    plan = _plan(REGISTRY["q_zscore_outliers"].builder(spark, sf_dir))
+def test_zscore_broadcasts_stats(registry_plans):
+    plan = registry_plans["q_zscore_outliers"].plan
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_salted_join_hides_salt(spark, sf_dir):
-    df = REGISTRY["q_join_salted"].builder(spark, sf_dir)
-    assert df.columns == ["user_id", "n_events", "sum_type_total"]
-    plan = _plan(df)
+def test_salted_join_hides_salt(registry_plans):
+    schema, plan = registry_plans["q_join_salted"]
+    assert schema.names == ["user_id", "n_events", "sum_type_total"]
     assert "_salt" in plan, plan  # the salt really is in the join keys
 
 
-def test_lateral_decorrelates_to_window(spark, sf_dir):
+def test_lateral_decorrelates_to_window(registry_plans):
     """The per-customer LIMIT-2 LATERAL subquery must decorrelate into
     a ranked-window + join plan — NOT one subquery execution per outer
     row (no nested-loop over the orders scan)."""
-    plan = _plan(REGISTRY["q_sql_lateral"].builder(spark, sf_dir))
+    plan = registry_plans["q_sql_lateral"].plan
     assert "Window" in plan or "WindowGroupLimit" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
 
-def test_variant_json_map_only(spark, sf_dir):
-    plan = assert_map_only(
-        spark,
-        lambda: REGISTRY["q_variant_json"].builder(spark, sf_dir),
-        fan_out_key="event_id",
-    )
+def test_variant_json_map_only(registry_plans):
+    plan = assert_map_only(registry_plans, "q_variant_json", "event_id")
     assert "Join" not in plan, plan
     assert "variant_get" in plan, plan
 
 
-def test_join_bucketed_runs_with_zero_exchanges(spark, sf_dir):
+def test_join_bucketed_runs_with_zero_exchanges(registry_plans):
     """Bucketed layout: join AND downstream aggregate reuse the at-rest
     hash partitioning — not a single Exchange in the physical plan."""
-    df = REGISTRY["q_join_bucketed"].builder(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = registry_plans["q_join_bucketed"].plan
     assert "SortMergeJoin" in plan, plan
-    assert "Exchange" not in plan, plan
+    assert exchange_counts(plan) == {}, plan
     assert "Bucketed: true" in plan, plan
 
 
-def test_merge_upsert_is_one_copartitioned_shuffle(spark, sf_dir):
+def test_merge_upsert_is_one_copartitioned_shuffle(registry_plans):
     """MERGE plans as FullOuter sort-merge; both profile aggregates and
     the join share the user_id partitioning (one exchange per side, the
     join itself adds none)."""
-    df = REGISTRY["q_merge_upsert"].builder(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = registry_plans["q_merge_upsert"].plan
     assert "FullOuter" in plan, plan
     assert "CartesianProduct" not in plan, plan
 

@@ -19,6 +19,7 @@ from news_categorization_big_data_spark.operators.codecs import (
 from news_categorization_big_data_spark.operators.multimodal import (
     decode_payloads,
 )
+from tests.conftest import physical_plan
 
 
 def _write_pngs(root: str) -> dict[str, tuple[int, int]]:
@@ -85,5 +86,5 @@ def test_binaryfile_length_pushdown_filter(spark, tmp_path):
         .where(F.col("length") < 10_000)
     )
     assert small.count() == 3  # our PNGs are tiny; the filter is satisfiable
-    plan = small._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(small)
     assert "length" in plan.lower()

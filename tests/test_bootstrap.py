@@ -18,6 +18,7 @@ from news_categorization_big_data_spark.plans.quality import (
     BOOT_K_LO,
     BOOT_T,
 )
+from tests.conftest import exchange_counts
 
 
 def _weight(b: int, event_id: int) -> int:
@@ -122,19 +123,23 @@ def test_bootstrap_ci_resamples_conf_knob(spark, sf_dir, B, ranks):
         assert abs(lo_g - lo_w) < 1e-9 and abs(hi_g - hi_w) < 1e-9, et
 
 
-def test_bootstrap_ci_explode_collapses_before_wire(spark, sf_dir):
+def test_bootstrap_ci_explode_collapses_before_wire(registry_plans):
     # the scale claim: the 40x explode is map-local; what crosses the
     # wire is partial-aggregated (types x B cells). A partial_sum must
     # appear BELOW the first exchange in the plan tree.
-    plan = REGISTRY["q_bootstrap_ci"].builder(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    first_ex = plan.find("Exchange")
-    assert first_ex != -1
-    assert "partial_sum" in plan[first_ex:], plan
-    # cell agg + window keying: no more than 3 hash exchanges total
-    assert plan.count("Exchange hashpartitioning") <= 3, plan
+    plan = registry_plans["q_bootstrap_ci"].plan
+    # cell agg + window keying: 3 hash exchanges, the fan_out of the
+    # single-task scan and the broadcast per-type counts
+    assert exchange_counts(plan) == {
+        "hashpartitioning(event_type, b)/ENSURE_REQUIREMENTS": 1,
+        "hashpartitioning(event_type)/ENSURE_REQUIREMENTS": 2,
+        "RoundRobinPartitioning/REPARTITION_BY_NUM": 1,
+        "broadcast": 1,
+    }, plan
+    assert "partial_sum" in plan[plan.find("Exchange") :], plan
 
 
-def test_bootstrap_md5_evaluates_per_group_not_per_lane(spark, sf_dir):
+def test_bootstrap_md5_evaluates_per_group_not_per_lane(registry_plans):
     """Round-11 two-level explode: the resample digest must be computed
     once per (row, digest-group) — IN the projection between the two
     generators — never re-inlined into the per-lane projection (the 8x
@@ -142,13 +147,7 @@ def test_bootstrap_md5_evaluates_per_group_not_per_lane(spark, sf_dir):
     guard keeps it out, and this pins that against optimizer changes)."""
     import re
 
-    plan = (
-        REGISTRY["q_bootstrap_ci"]
-        .builder(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = registry_plans["q_bootstrap_ci"].plan
     assert plan.count("md5(") == 1, plan.count("md5(")
     gens = [m.start() for m in re.finditer(r"Generate explode", plan)]
     assert len(gens) == 2, plan

@@ -32,16 +32,8 @@ def test_contamination_flags_overlapping_train_doc(spark):
     assert hits == {1: 2}
 
 
-def test_contamination_uses_broadcast_join(spark, sf_dir):
-    from news_categorization_big_data_spark.plans import REGISTRY
-
-    plan = (
-        REGISTRY["q_decontaminate"]
-        .builder(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+def test_contamination_uses_broadcast_join(registry_plans):
+    plan = registry_plans["q_decontaminate"].plan
     assert "BroadcastHashJoin" in plan, plan
 
 
@@ -269,26 +261,22 @@ def test_connected_components_local_matches_distributed(spark):
     }
 
 
-def test_vocab_coverage_broadcasts_vocab_not_tokens(spark, sf_dir):
+def test_vocab_coverage_broadcasts_vocab_not_tokens(registry_plans):
     """The top-500 vocab joins back as a broadcast; the token stream is
     shuffled only for the per-doc aggregate, never for the join."""
-    from news_categorization_big_data_spark.plans import REGISTRY
-
-    df = REGISTRY["q_vocab_coverage"].builder(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = registry_plans["q_vocab_coverage"].plan
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_dedup_fuzzy_blocks_before_levenshtein(spark, sf_dir):
+def test_dedup_fuzzy_blocks_before_levenshtein(registry_plans, spark, sf_dir):
     """Candidates come from an equi-join on the block key (linear
     shuffle) — levenshtein never runs across the full cross product."""
     from news_categorization_big_data_spark.plans import REGISTRY
 
-    df = REGISTRY["q_dedup_fuzzy"].builder(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = registry_plans["q_dedup_fuzzy"].plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
-    rows = df.collect()
+    rows = REGISTRY["q_dedup_fuzzy"].builder(spark, sf_dir).collect()
     assert len(rows) > 0  # the planted near-dups are found
     assert all(r["edit_dist"] <= 20 for r in rows)
 

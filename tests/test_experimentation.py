@@ -9,10 +9,6 @@ from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.sources.tables import load_table
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_did_identity_and_range(spark, sf_dir):
     r = REGISTRY["q_did_effect"].builder(spark, sf_dir).first()
     assert r["did"] == (r["t_post"] - r["t_pre"]) - (r["c_post"] - r["c_pre"])
@@ -29,9 +25,9 @@ def test_did_identity_and_range(spark, sf_dir):
     assert abs(r["did"]) < (hi - lo)
 
 
-def test_did_single_pass(spark, sf_dir):
+def test_did_single_pass(registry_plans):
     # one conditional-aggregate pass: the events scan appears once
-    plan = _plan(REGISTRY["q_did_effect"].builder(spark, sf_dir))
+    plan = registry_plans["q_did_effect"].plan
     assert plan.count("events.parquet") <= 1, plan
 
 

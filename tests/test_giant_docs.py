@@ -118,19 +118,13 @@ def test_decode_payloads_handles_megabyte_payload_batches(spark):
         assert got[i] == (w, h, True)
 
 
-def test_dedup_passage_split_stays_hoisted_out_of_the_lambda(spark, sf_dir):
+def test_dedup_passage_split_stays_hoisted_out_of_the_lambda(registry_plans):
     """The chunk lambda must slice a bound _toks column, not the
     split(text) expression — an expression in a HOF body re-evaluates
     per element (quadratic: ~20 min/task on a /tmp/skew3 giant doc).
     CollapseProject's non-cheap guard keeps the split hoisted; this
     pins it against optimizer changes (the bootstrap-md5 precedent)."""
-    plan = (
-        REGISTRY["q_dedup_passage"]
-        .builder(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = registry_plans["q_dedup_passage"].plan
     # The chunks subtree legitimately appears once per self-join side
     # (each with one split); the quadratic form is specifically the
     # slice-of-split COMPOSITION inside the lambda.

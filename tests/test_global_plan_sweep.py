@@ -1,7 +1,7 @@
 """Registry-wide physical-plan anti-pattern sweeps, all run over ONE
 compile of every registered plan (plan compilation dominates the cost,
-so the sweeps share a module-scoped {name: plan_text} fixture;
-planning-only — nothing executes):
+so the sweeps read the session's plan memo, ``registry_plans`` in
+tests/conftest.py; planning-only — nothing executes):
 
 1. NO CartesianProduct, ever — every pair-generating operator in the
    engine is bucket-local by design (LSH bands, prefix filters, IVF
@@ -25,20 +25,10 @@ import re
 
 import pytest
 
-from news_categorization_big_data_spark.plans import REGISTRY
-
 
 @pytest.fixture(scope="module")
-def all_plans(spark, sf_dir) -> dict[str, str]:
-    return {
-        name: (
-            spec.builder(spark, sf_dir)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        for name, spec in REGISTRY.items()
-    }
+def all_plans(registry_plans) -> dict[str, str]:
+    return {name: plan for name, (_, plan) in registry_plans.items()}
 
 
 def test_no_cartesian_product_anywhere(all_plans):

@@ -25,6 +25,7 @@ from news_categorization_big_data_spark.plans.lakehouse import (
     ZONE_PRED_LO,
 )
 from news_categorization_big_data_spark.sources.tables import load_table
+from tests.conftest import exchange_counts
 
 
 # -- q_sql_recursive --------------------------------------------------------
@@ -76,17 +77,11 @@ def test_bloom_join_equals_plain_semi_join(spark, sf_dir):
     assert got == plain
 
 
-def test_bloom_prefilter_joins_are_all_broadcast(spark, sf_dir):
+def test_bloom_prefilter_joins_are_all_broadcast(registry_plans):
     """The three per-probe bitmap joins must be broadcast (map-only on
     the fact side) — a shuffled bitmap join would defeat the operator's
     purpose at scale."""
-    plan = (
-        REGISTRY["q_bloom_join"]
-        .builder(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = registry_plans["q_bloom_join"].plan
     assert plan.count("BroadcastHashJoin") >= BLOOM_PROBES
 
 
@@ -244,26 +239,21 @@ def test_sequence_gaps_partition_the_missing_ids(spark, sf_dir):
 # -- physical-plan pins for the round-5 lakehouse tier ----------------------
 
 
-def test_lakehouse_tier_exchange_counts_pinned(spark, sf_dir):
+def test_lakehouse_tier_exchange_counts_pinned(registry_plans):
     """Shuffle budgets the tier's docs claim, pinned: CDC and the
     interval sweep ride ONE key exchange (windows + aggregates share the
     partitioning); the sequence-gap lag is one global-window exchange;
     the snapshot diff pays exactly its two grouped aggregates (the
     full-outer join is co-partitioned and adds none)."""
-    import re
-
     budgets = {
-        "q_interval_coverage": 1,
-        "q_cdc_apply": 1,
-        "q_sequence_gaps": 1,
-        "q_snapshot_diff": 2,
+        "q_interval_coverage": {"hashpartitioning(user_id)/ENSURE_REQUIREMENTS": 1},
+        "q_cdc_apply": {"hashpartitioning(user_id)/ENSURE_REQUIREMENTS": 1},
+        "q_sequence_gaps": {"SinglePartition/ENSURE_REQUIREMENTS": 1},
+        "q_snapshot_diff": {"hashpartitioning(o_custkey)/ENSURE_REQUIREMENTS": 2},
     }
-    for name, max_exchanges in budgets.items():
-        df = REGISTRY[name].builder(spark, sf_dir)
-        df.count()  # let AQE finalize
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        got = len(re.findall(r"\+- Exchange", plan))
-        assert got <= max_exchanges, f"{name}: {got} exchanges > {max_exchanges}"
+    for name, kinds in budgets.items():
+        plan = registry_plans[name].plan
+        assert exchange_counts(plan) == kinds, (name, plan)
 
 
 # -- q_geo_grid_join --------------------------------------------------------

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from news_categorization_big_data_spark.functions.scale import broadcast_if_small
 from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.sources.tables import load_table
+from tests.conftest import physical_plan
 
 #: Every table the testdata generator scales linearly with SF. A
 #: broadcast hint pinned over a raw scan of any of these is a latent
@@ -122,7 +123,7 @@ def _hinted_sf_broadcast_leaves(plan: str, lookahead: int = 14) -> list[str]:
     return hits
 
 
-def _plan_without_estimate_broadcasts(spark, name_or_df, sf_dir=None) -> str:
+def _no_estimate_broadcast_plan(spark, name_or_df, sf_dir=None) -> str:
     """Build the physical plan with every estimate-driven broadcast
     disabled, so surviving BroadcastExchanges are hint-driven only."""
     saved = {
@@ -140,7 +141,7 @@ def _plan_without_estimate_broadcasts(spark, name_or_df, sf_dir=None) -> str:
             if isinstance(name_or_df, str)
             else name_or_df
         )
-        return df._jdf.queryExecution().executedPlan().toString()
+        return physical_plan(df)
     finally:
         for k, v in saved.items():
             if v is None:
@@ -151,18 +152,17 @@ def _plan_without_estimate_broadcasts(spark, name_or_df, sf_dir=None) -> str:
 
 @pytest.mark.parametrize("name", PURGED)
 def test_no_hint_pinned_broadcast_of_sf_scaling_frame(spark, sf_dir, name):
-    plan = _plan_without_estimate_broadcasts(spark, name, sf_dir)
+    plan = _no_estimate_broadcast_plan(spark, name, sf_dir)
     flagged = _hinted_sf_broadcast_leaves(plan)
     assert not flagged, f"{name} pins a broadcast over an SF-scaling scan:\n" + "\n".join(
         flagged
     ) + "\n\n" + plan
 
 
-def test_theta_range_is_banded_equi_join_not_bnl(spark, sf_dir):
+def test_theta_range_is_banded_equi_join_not_bnl(registry_plans):
     """The range join must run as a hash/sort-merge equi-join on the
     price band, never a nested-loop over a replicated supplier side."""
-    df = REGISTRY["q_join_theta_range"].builder(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = registry_plans["q_join_theta_range"].plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -173,7 +173,7 @@ def test_broadcast_if_small_hints_under_gate(spark, sf_dir):
     part = load_table(spark, sf_dir, "part").where(F.col("p_size") < 15)
     li = load_table(spark, sf_dir, "lineitem")
     joined = li.join(broadcast_if_small(part), li.l_partkey == part.p_partkey)
-    plan = _plan_without_estimate_broadcasts(spark, joined)
+    plan = _no_estimate_broadcast_plan(spark, joined)
     assert "BroadcastExchange" in plan, plan
 
 
@@ -186,7 +186,7 @@ def test_broadcast_if_small_refuses_over_gate(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     gated = broadcast_if_small(part, max_bytes=0)
     joined = li.join(gated, li.l_partkey == part.p_partkey)
-    plan = _plan_without_estimate_broadcasts(spark, joined)
+    plan = _no_estimate_broadcast_plan(spark, joined)
     assert "BroadcastExchange" not in plan, plan
 
 
@@ -197,7 +197,7 @@ def test_q18_strict_walker_flags_ungated_agg_broadcast(spark, sf_dir):
     the old HashAggregate exemption waved it through. At test SF the
     gate applies the hint, so the raw plan exhibits exactly that shape;
     the walker must see it."""
-    plan = _plan_without_estimate_broadcasts(spark, "q_tpch_q18", sf_dir)
+    plan = _no_estimate_broadcast_plan(spark, "q_tpch_q18", sf_dir)
     if "BroadcastExchange" not in plan:
         pytest.skip("gate refused at this fixture size — shape absent")
     flagged = _hinted_sf_broadcast_leaves(plan)
@@ -210,7 +210,7 @@ def test_q18_broadcast_gated_not_pinned(spark, sf_dir, monkeypatch):
     gate) must yield a plan with NO hint-driven broadcast at all — the
     semi-join falls through to AQE's measured-size decision."""
     monkeypatch.setenv("SPARK_GRAFT_BROADCAST_GATE_BYTES", "0")
-    plan = _plan_without_estimate_broadcasts(spark, "q_tpch_q18", sf_dir)
+    plan = _no_estimate_broadcast_plan(spark, "q_tpch_q18", sf_dir)
     flagged = _hinted_sf_broadcast_leaves(plan)
     assert not flagged, "gate=0 still pins a broadcast:\n" + "\n".join(flagged)
     assert "BroadcastExchange" not in plan, plan
@@ -219,7 +219,7 @@ def test_q18_broadcast_gated_not_pinned(spark, sf_dir, monkeypatch):
 def test_q18_broadcast_applied_under_gate(spark, sf_dir):
     """At bench scale the gate keeps the small-SF broadcast win: the
     measured lineitem input is far under 256 MB, so the hint applies."""
-    plan = _plan_without_estimate_broadcasts(spark, "q_tpch_q18", sf_dir)
+    plan = _no_estimate_broadcast_plan(spark, "q_tpch_q18", sf_dir)
     assert "BroadcastExchange" in plan, plan
 
 

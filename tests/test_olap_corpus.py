@@ -8,15 +8,11 @@ from __future__ import annotations
 from news_categorization_big_data_spark.plans import REGISTRY
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 # -- q_group_mode -----------------------------------------------------------
 
 
-def test_group_mode_window_runs_on_aggregate_not_raw_events(spark, sf_dir):
-    plan = _plan(REGISTRY["q_group_mode"].builder(spark, sf_dir))
+def test_group_mode_window_runs_on_aggregate_not_raw_events(registry_plans):
+    plan = registry_plans["q_group_mode"].plan
     # count first (partial+final), THEN the ranked window — the window
     # string must appear above the aggregate in the tree (executedPlan
     # prints top-down, so Window comes before the agg's FileScan)
@@ -33,8 +29,8 @@ def test_group_mode_unique_per_user(spark, sf_dir):
 # -- q_window_nth -----------------------------------------------------------
 
 
-def test_window_nth_single_pass(spark, sf_dir):
-    plan = _plan(REGISTRY["q_window_nth"].builder(spark, sf_dir))
+def test_window_nth_single_pass(registry_plans):
+    plan = registry_plans["q_window_nth"].plan
     assert plan.count("Window") == 1, plan
     # all three navigators in the same window node (Catalyst rewrites
     # first() over an explicit frame into nth_value(…, 1))
@@ -64,8 +60,8 @@ def test_skyline_no_dominated_rows(spark, sf_dir):
             assert not dominated, (price, size, p2, s2)
 
 
-def test_skyline_window_runs_on_per_price_aggregate(spark, sf_dir):
-    plan = _plan(REGISTRY["q_skyline"].builder(spark, sf_dir))
+def test_skyline_window_runs_on_per_price_aggregate(registry_plans):
+    plan = registry_plans["q_skyline"].plan
     assert "Window" in plan, plan
     # frontier joined back by broadcast — the fact side never shuffles
     assert "BroadcastHashJoin" in plan, plan
@@ -74,8 +70,8 @@ def test_skyline_window_runs_on_per_price_aggregate(spark, sf_dir):
 # -- q_resample_ohlc --------------------------------------------------------
 
 
-def test_ohlc_is_one_aggregate_no_window_no_udf(spark, sf_dir):
-    plan = _plan(REGISTRY["q_resample_ohlc"].builder(spark, sf_dir))
+def test_ohlc_is_one_aggregate_no_window_no_udf(registry_plans):
+    plan = registry_plans["q_resample_ohlc"].plan
     assert "Window" not in plan, plan
     assert "min_by" in plan and "max_by" in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
@@ -96,8 +92,8 @@ def test_ohlc_open_close_consistent(spark, sf_dir):
 # -- q_dedup_passage --------------------------------------------------------
 
 
-def test_dedup_passage_stays_jvm_side(spark, sf_dir):
-    plan = _plan(REGISTRY["q_dedup_passage"].builder(spark, sf_dir))
+def test_dedup_passage_stays_jvm_side(registry_plans):
+    plan = registry_plans["q_dedup_passage"].plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
     assert "Generate" in plan, plan  # the explode
 
@@ -194,8 +190,8 @@ def test_triangles_are_ordered_closed_and_edge_backed(spark, sf_dir):
 # -- q_incremental_agg ------------------------------------------------------
 
 
-def test_incremental_agg_prunes_both_halves(spark, sf_dir):
-    plan = _plan(REGISTRY["q_incremental_agg"].builder(spark, sf_dir))
+def test_incremental_agg_prunes_both_halves(registry_plans):
+    plan = registry_plans["q_incremental_agg"].plan
     # both sides push their timestamp predicate to their scan
     # both halves filter at their scan (events.ts is ns-encoded BIGINT,
     # converted in a projection, so the predicate sits in DataFilters on
@@ -304,8 +300,8 @@ def test_chi2_terms_topk_per_lang_and_nonnegative(spark, sf_dir):
 # -- q_join_interval_overlap ------------------------------------------------
 
 
-def test_interval_overlap_is_equi_join_not_theta(spark, sf_dir):
-    plan = _plan(REGISTRY["q_join_interval_overlap"].builder(spark, sf_dir))
+def test_interval_overlap_is_equi_join_not_theta(registry_plans):
+    plan = registry_plans["q_join_interval_overlap"].plan
     # the join must be hash-based on the bucket id — never a nested loop
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
     assert "Join" in plan, plan

@@ -18,6 +18,7 @@ from news_categorization_big_data_spark.operators.summarize import (
     extractive_summarize,
     pluggable_summarizer_hook,
 )
+from tests.conftest import exchange_counts, physical_plan
 
 
 def test_asof_join_semantics(spark):
@@ -206,8 +207,8 @@ def test_keyword_classifier_contract(spark):
     assert all(
         out[i].category == "unknown" and out[i].confidence == 0.0 for i in (3, 4, 5)
     )
-    plan = clf.classify_keywords(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    plan = physical_plan(clf.classify_keywords(df))
+    assert exchange_counts(plan) == {}, plan
 
 
 def test_pipeline_digest_bounded_and_stamped(spark, sf_dir):

@@ -81,7 +81,7 @@ def test_oracle_emits_only_scalar_columns(con, name):
     )
 
 
-def test_spark_side_emits_only_scalar_columns(spark):
+def test_spark_side_emits_only_scalar_columns(registry_plans):
     """Mirror of the oracle-side scalar guard on the Spark plan schema:
     the driver sorts the Spark result through the same pandas canon, so
     an ArrayType/MapType/StructType output column red-errors the row
@@ -95,13 +95,11 @@ def test_spark_side_emits_only_scalar_columns(spark):
     official round-4 run exactly this way (CORRECTNESS_r04)."""
     from pyspark.sql.types import ArrayType, DateType, MapType, StructType
 
-    sf_dir = "/root/testdata/sf0.001"
     bad = {}
-    for name in REGISTRY:
-        df = REGISTRY[name].builder(spark, sf_dir)
+    for name, (schema, _) in registry_plans.items():
         offending = [
             (f.name, f.dataType.simpleString())
-            for f in df.schema.fields
+            for f in schema.fields
             if isinstance(f.dataType, (ArrayType, DateType, MapType, StructType))
         ]
         if offending:

@@ -20,6 +20,7 @@ from news_categorization_big_data_spark.functions.ordered import (
     running_sum,
 )
 from news_categorization_big_data_spark.plans import REGISTRY
+from tests.conftest import physical_plan
 
 
 @pytest.fixture
@@ -72,18 +73,12 @@ def test_lag_over_stitches_partition_boundaries(spark, ranged):
         assert got[b] == a, (b, got[b], a)
 
 
-def test_ml_auc_never_sorts_fact_rows(spark, sf_dir):
+def test_ml_auc_never_sorts_fact_rows(registry_plans):
     """The round-7 q_ml_auc rewrite: facts collapse onto the distinct-
     score table BEFORE any ordered window — the plan must show the
     events scan feeding a hash aggregate, a single running-sum window
     (no rank/tie-count pair), and no window directly over the scan."""
-    plan = (
-        REGISTRY["q_ml_auc"]
-        .builder(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = registry_plans["q_ml_auc"].plan
     assert "rank(" not in plan, plan
     assert plan.count("Window [") == 1, plan
     # the window's input is the aggregated score table: a partial_count
@@ -227,9 +222,7 @@ def test_ranged_mode_output_identical(spark, sf_dir, qname):
     spark.conf.set(RANGED_CONF, "true")
     try:
         swapped = sorted(map(str, build(spark, sf_dir).collect()))
-        plan = (
-            build(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        )
+        plan = physical_plan(build(spark, sf_dir))
     finally:
         spark.conf.unset(RANGED_CONF)
     assert base == swapped, qname

@@ -13,6 +13,7 @@ from news_categorization_big_data_spark.functions.partitioning import (
     fan_out,
 )
 from news_categorization_big_data_spark.sources.tables import load_table
+from tests.conftest import exchange_counts, physical_plan
 
 
 def test_byte_string_formats():
@@ -74,11 +75,14 @@ def test_keyed_fan_out_hash_partitions_and_guards(spark, sf_dir):
     shrink, conf gate) must behave identically."""
     docs = load_table(spark, sf_dir, "documents")
     keyed = fan_out(docs, by=("doc_id",))
-    assert keyed.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    plan = keyed._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(doc_id" in plan
+    # planned before .rdd runs it: a final AQE plan prints each
+    # exchange twice (final and initial plan)
+    plan = physical_plan(keyed)
     # RoundRobin would show up instead if `by` were dropped
-    assert "roundrobin" not in plan.lower()
+    assert exchange_counts(plan) == {
+        "hashpartitioning(doc_id)/REPARTITION_BY_NUM": 1
+    }, plan
+    assert keyed.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     # never-shrink guard unchanged under `by`
     wide = docs.repartition(64)
     assert fan_out(wide, by=("doc_id",)) is wide

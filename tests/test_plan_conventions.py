@@ -1,5 +1,6 @@
 """Engine-wide physical-plan conventions, swept over EVERY registered
-query (not pinned per-query like test_round4_plans.py / test_tpch.py).
+query through the session's plan memo (``registry_plans`` in
+tests/conftest.py, which the per-query shape pins read too).
 
 The filter-vs-Python-node rule (SURVEY.md §4.2): Catalyst does not move
 native predicates through opaque Python eval nodes, so a cheap filter
@@ -16,37 +17,29 @@ import re
 
 import pytest
 
-from news_categorization_big_data_spark.plans import REGISTRY
-
-SF = "/root/testdata/sf0.001"
-
 #: Physical node names of every Python-boundary operator (Spark 4):
-#: mapInPandas / mapInArrow, applyInPandas, pandas UDF, classic UDF,
-#: and UDTF eval nodes.
+#: mapInPandas / mapInArrow, applyInPandas, cogrouped applyInPandas,
+#: pandas UDF, classic UDF, and UDTF eval nodes.
 PY_NODES = (
     "MapInPandas",
     "PythonMapInArrow",
     "MapInArrow",
     "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
     "ArrowEvalPython",
     "BatchEvalPython",
 )
 
 
 @pytest.fixture(scope="module")
-def python_plans(spark) -> dict[str, str]:
+def python_plans(registry_plans) -> dict[str, str]:
     """Executed-plan text for every registered query that crosses the
-    Python boundary — built ONCE for the whole sweep module (plan
-    construction runs real jobs for a few builders, e.g. the CC size
-    probe, so per-test rebuilding would double a multi-minute pass)."""
-    plans = {}
-    for name, spec in REGISTRY.items():
-        plan = (
-            spec.builder(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        )
-        if any(p in plan for p in PY_NODES):
-            plans[name] = plan
-    return plans
+    Python boundary."""
+    return {
+        name: plan
+        for name, (_, plan) in registry_plans.items()
+        if any(p in plan for p in PY_NODES)
+    }
 
 
 def _depth(line: str) -> int:
@@ -82,13 +75,16 @@ def test_no_native_filter_above_python_nodes(python_plans):
 
 def test_python_node_queries_inventory(python_plans):
     """The sweep above is only meaningful if it actually covers the
-    engine's Python-boundary queries: assert the known inventory so a
+    engine's Python-boundary queries: pin the full inventory so a
     rename of a physical node (Spark upgrade) that silently empties the
     sweep fails loudly here instead."""
-    assert {
-        "q_udf_scalar",
-        "q_udaf_grouped",
+    assert set(python_plans) == {
+        "q_audio_decode",
         "q_multimodal_decode",
-        "q_udtf_polymorphic",
+        "q_udaf_grouped",
+        "q_udf_scalar",
         "q_udtf_chunks",
-    } <= set(python_plans), set(python_plans)
+        "q_udtf_polymorphic",
+        "q_udtf_table_arg",
+        "q_video_frames",
+    }, set(python_plans)

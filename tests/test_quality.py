@@ -20,10 +20,7 @@ from news_categorization_big_data_spark.plans.quality import (
     FK_RELATIONS,
 )
 from news_categorization_big_data_spark.sources.tables import load_table
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import exchange_counts
 
 
 # -- q_dq_checks ------------------------------------------------------------
@@ -132,9 +129,11 @@ def test_ab_ttest_matches_python_welch(spark, sf_dir):
         assert min(na, nb) - 1 <= row.df_welch <= na + nb - 2
 
 
-def test_ab_ttest_single_shuffle(spark, sf_dir):
-    plan = _plan(REGISTRY["q_ab_ttest"].builder(spark, sf_dir))
-    assert plan.count("Exchange") == 1  # one hash-partitioning on event_type
+def test_ab_ttest_single_shuffle(registry_plans):
+    plan = registry_plans["q_ab_ttest"].plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(event_type)/ENSURE_REQUIREMENTS": 1
+    }, plan
 
 
 # -- q_equidepth_histogram --------------------------------------------------

@@ -15,10 +15,7 @@ from news_categorization_big_data_spark.plans.refinement import (
     WOR_WCAP,
 )
 from news_categorization_big_data_spark.sources.tables import load_table
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import exchange_counts
 
 
 # ---- q_doc_fluency -------------------------------------------------------
@@ -42,14 +39,14 @@ def test_doc_fluency_bounds_and_coverage(spark, sf_dir):
         assert 0 <= r["mean_cond_ppm"] <= 1_000_000, r
 
 
-def test_doc_fluency_lm_join_is_unhinted(spark, sf_dir):
+def test_doc_fluency_lm_join_is_unhinted(registry_plans, spark, sf_dir):
     # the LM grows with the corpus: the docstring promises an UNHINTED
     # equi-join (AQE broadcasts it while small, shuffles it at scale) —
     # a hard-coded broadcast hint would pin the wrong choice at 100 TB
     df = REGISTRY["q_doc_fluency"].builder(spark, sf_dir)
     logical = df._jdf.queryExecution().logical().toString()
     assert "UnresolvedHint" not in logical and "hint" not in logical.lower()
-    assert "Join" in _plan(df)
+    assert "Join" in registry_plans["q_doc_fluency"].plan
 
 
 # ---- q_sample_wor --------------------------------------------------------
@@ -86,10 +83,12 @@ def test_sample_wor_ticket_count_bounded(spark, sf_dir):
     assert max_tickets == 4  # the docstring's "<= 4x explode" claim
 
 
-def test_sample_wor_is_top_k_not_global_sort(spark, sf_dir):
-    plan = _plan(REGISTRY["q_sample_wor"].builder(spark, sf_dir))
+def test_sample_wor_is_top_k_not_global_sort(registry_plans):
+    plan = registry_plans["q_sample_wor"].plan
     assert "TakeOrderedAndProject" in plan, plan
-    assert "Exchange rangepartitioning" not in plan, plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(doc_id, weight)/ENSURE_REQUIREMENTS": 1
+    }, plan
 
 
 # ---- q_er_blocking -------------------------------------------------------
@@ -105,8 +104,8 @@ def test_er_blocking_pair_arithmetic_and_order(spark, sf_dir):
     assert loads == sorted(loads, reverse=True)
 
 
-def test_er_blocking_is_top_n_not_global_sort(spark, sf_dir):
-    plan = _plan(REGISTRY["q_er_blocking"].builder(spark, sf_dir))
+def test_er_blocking_is_top_n_not_global_sort(registry_plans):
+    plan = registry_plans["q_er_blocking"].plan
     assert "TakeOrderedAndProject" in plan, plan
 
 
@@ -171,10 +170,10 @@ def test_inverted_index_gate_and_postings(spark, sf_dir):
     assert any(r["df"] > INVIDX_DF_CAP for r in rows)
 
 
-def test_inverted_index_two_pass_gate_in_plan(spark, sf_dir):
+def test_inverted_index_two_pass_gate_in_plan(registry_plans):
     # the docstring's scale claim: light terms admitted by a semi-join
     # BEFORE the collect — never collect-then-null
-    plan = _plan(REGISTRY["q_inverted_index"].builder(spark, sf_dir))
+    plan = registry_plans["q_inverted_index"].plan
     assert "LeftSemi" in plan, plan
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.plans.reshape import EVENT_TYPES
+from tests.conftest import exchange_counts
 
 
 def test_pivot_unpivot_roundtrip(spark, sf_dir):
@@ -24,23 +25,19 @@ def test_pivot_unpivot_roundtrip(spark, sf_dir):
     assert len(long_rows) == len(users) * len(EVENT_TYPES)
 
 
-def test_reshape_and_packing_plan_shapes(spark, sf_dir):
+def test_reshape_and_packing_plan_shapes(registry_plans):
     """Physical-plan guarantees the docstrings promise: pivot is one
     aggregate with no value-discovery pass, pack_sequences shuffles
     exactly once (the per-shard window), gap_fill never degenerates to
     a nested-loop/cartesian join."""
 
-    def plan(name):
-        return (
-            REGISTRY[name].builder(spark, sf_dir)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-
-    pack = plan("q_pack_sequences")
-    assert pack.count("Exchange hashpartitioning") == 1, pack
-    gap = plan("q_gap_fill")
+    pack = registry_plans["q_pack_sequences"].plan
+    assert exchange_counts(pack) == {
+        "hashpartitioning(shard)/ENSURE_REQUIREMENTS": 1
+    }, pack
+    gap = registry_plans["q_gap_fill"].plan
     assert "CartesianProduct" not in gap and "BroadcastNestedLoopJoin" not in gap, gap
-    piv = plan("q_pivot_wide")
+    piv = registry_plans["q_pivot_wide"].plan
     assert "Join" not in piv, piv  # explicit value list → no discovery join
 
 

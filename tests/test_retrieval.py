@@ -26,10 +26,6 @@ from news_categorization_big_data_spark.plans.retrieval import (
 from news_categorization_big_data_spark.sources.tables import load_table
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 # -- q_bm25_rank ------------------------------------------------------------
 
 
@@ -69,10 +65,10 @@ def test_bm25_matches_python_reference(spark, sf_dir):
         assert math.isclose(r.score, s, rel_tol=1e-9)
 
 
-def test_bm25_filters_postings_before_shuffle(spark, sf_dir):
+def test_bm25_filters_postings_before_shuffle(registry_plans):
     """The docstring's scale claim: only query-term postings reach the
     tf aggregate — the token filter must sit BELOW the first Exchange."""
-    plan = _plan(REGISTRY["q_bm25_rank"].builder(spark, sf_dir))
+    plan = registry_plans["q_bm25_rank"].plan
     assert "TakeOrderedAndProject" in plan
     # filter on the literal query terms appears in the scan-side stage
     assert BM25_TERMS[0] in plan and "Filter" in plan
@@ -128,8 +124,8 @@ def test_semantic_dedup_assignment_and_policy(spark, sf_dir):
             assert r.is_dup == has_better, (cluster, r.vec_id)
 
 
-def test_semantic_dedup_broadcasts_pivots(spark, sf_dir):
-    plan = _plan(REGISTRY["q_semantic_dedup"].builder(spark, sf_dir))
+def test_semantic_dedup_broadcasts_pivots(registry_plans):
+    plan = registry_plans["q_semantic_dedup"].plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
@@ -178,10 +174,10 @@ def test_pq_codes_valid_and_error_optimal(spark, sf_dir):
         assert math.isclose(out[vid].recon_err, err, rel_tol=1e-7)
 
 
-def test_pq_assign_broadcasts_codebook_no_corpus_shuffle_of_floats(spark, sf_dir):
+def test_pq_assign_broadcasts_codebook_no_corpus_shuffle_of_floats(registry_plans):
     """The codebook join must be broadcast; the only hash exchange is
     the final per-vec regroup of integer codes."""
-    plan = _plan(REGISTRY["q_pq_assign"].builder(spark, sf_dir))
+    plan = registry_plans["q_pq_assign"].plan
     assert "BroadcastExchange" in plan
 
 

@@ -14,6 +14,7 @@ from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.plans.dedup import SIMHASH_HAMMING_D
 from news_categorization_big_data_spark.plans.robust import ROLLING_MEDIAN_FRAME
 from news_categorization_big_data_spark.sources.tables import load_table
+from tests.conftest import exchange_counts
 
 
 # -- q_weighted_median ------------------------------------------------------
@@ -42,20 +43,16 @@ def test_weighted_median_matches_python_lower_median(spark, sf_dir):
     assert set(got) == set(by_flag)
 
 
-def test_weighted_median_one_exchange_one_sort(spark, sf_dir):
+def test_weighted_median_one_exchange_one_sort(registry_plans):
     """All three window evaluations (cumw, partition total, rn) must
     ride ONE shuffle and ONE sort — the unbounded-frame total and the
     boundary row_number reuse the cumw window's partitioning+ordering,
     so extra Exchange/Sort nodes would mean Catalyst re-sorted for a
     spec it already satisfied."""
-    plan = (
-        REGISTRY["q_weighted_median"]
-        .builder(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange") == 1
+    plan = registry_plans["q_weighted_median"].plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(l_returnflag)/ENSURE_REQUIREMENTS": 1
+    }, plan
     assert plan.count("+- Sort") == 1
 
 
@@ -246,7 +243,7 @@ import pytest as _pytest
         "q_minhash_jaccard_est",
     ],
 )
-def test_pair_table_never_statically_broadcast(spark, sf_dir, name):
+def test_pair_table_never_statically_broadcast(registry_plans, name):
     """Round-14 sf1 find, pinned for every banded pair-generator: the
     candidate pair table is a bucket-explode-widened frame whose
     static estimate undercuts the other join side — the planner chose
@@ -256,13 +253,7 @@ def test_pair_table_never_statically_broadcast(spark, sf_dir, name):
     no BroadcastExchange sits above a pair-generating `_ids` explode.
     A broadcast whose subtree first crosses a KEYLESS aggregate is
     exempt — that is a one-row count, not the pair table."""
-    plan = (
-        REGISTRY[name]
-        .builder(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = registry_plans[name].plan
     lines = plan.splitlines()
     for i, ln in enumerate(lines):
         if "BroadcastExchange" not in ln:

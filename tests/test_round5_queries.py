@@ -15,10 +15,7 @@ from pyspark.sql import functions as F
 from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.plans.warehouse import SLIDE_DAYS
 from news_categorization_big_data_spark.sources.tables import load_table
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import exchange_counts
 
 
 # -- q_sliding_distinct -----------------------------------------------------
@@ -71,23 +68,28 @@ def test_scd2_intervals_tile_each_user_timeline(spark, sf_dir):
             assert a.state != b.state, user
 
 
-def test_scd2_reuses_one_sort_for_both_windows(spark, sf_dir):
+def test_scd2_reuses_one_sort_for_both_windows(registry_plans):
     """Both windows key by user, so the plan must contain exactly ONE
     exchange (the user partitioning), not one per window."""
-    plan = _plan(REGISTRY["q_scd2_intervals"].builder(spark, sf_dir))
-    assert plan.count("Exchange") == 1, plan
+    plan = registry_plans["q_scd2_intervals"].plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(user_id)/ENSURE_REQUIREMENTS": 1
+    }, plan
 
 
 # -- q_cusum_changepoint ----------------------------------------------------
 
 
-def test_cusum_changepoint_is_joinless_single_grain_exchange(spark, sf_dir):
+def test_cusum_changepoint_is_joinless_single_grain_exchange(registry_plans):
     """Mean/running-sum/argmax all run as windows over the daily grain,
     sharing the event_type partitioning — no join anywhere, and only
     the grain groupBy plus the (reused) window exchange."""
-    plan = _plan(REGISTRY["q_cusum_changepoint"].builder(spark, sf_dir))
+    plan = registry_plans["q_cusum_changepoint"].plan
     assert "Join" not in plan, plan
-    assert plan.count("Exchange") <= 2, plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(event_type, _groupingexpression)/ENSURE_REQUIREMENTS": 1,
+        "hashpartitioning(event_type)/ENSURE_REQUIREMENTS": 1,
+    }, plan
 
 
 def test_cusum_final_day_sums_to_zero(spark, sf_dir):
@@ -208,10 +210,10 @@ def test_jaccard_est_tracks_exact_jaccard(spark, sf_dir):
 # -- q_embedding_norms / q_feature_hash / q_sink_partitioned_roundtrip ------
 
 
-def test_embedding_norms_is_map_only_topk(spark, sf_dir):
-    plan = _plan(REGISTRY["q_embedding_norms"].builder(spark, sf_dir))
+def test_embedding_norms_is_map_only_topk(registry_plans):
+    plan = registry_plans["q_embedding_norms"].plan
     assert "TakeOrderedAndProject" in plan, plan
-    assert "Exchange" not in plan.split("TakeOrderedAndProject")[1], plan
+    assert exchange_counts(plan) == {}, plan
     # no explode: the fold happens inside the project
     assert "Generate" not in plan, plan
 

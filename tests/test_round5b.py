@@ -90,12 +90,11 @@ def test_audio_decode_all_ok_and_params_derived(spark, sf_dir):
 # -- q_sql_udf --------------------------------------------------------------
 
 
-def test_sql_udf_inlines_no_python_node(spark, sf_dir):
+def test_sql_udf_inlines_no_python_node(registry_plans):
     """A SQL UDF must inline into Catalyst: the executed plan may not
     contain any Python evaluation operator, and the aggregate must stay
     a plain two-phase hash aggregate over the scan."""
-    df = REGISTRY["q_sql_udf"].builder(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = registry_plans["q_sql_udf"].plan
     for node in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF", "MapInPandas"):
         assert node not in plan, f"SQL UDF failed to inline: found {node}"
     assert "HashAggregate" in plan

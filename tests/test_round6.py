@@ -12,11 +12,7 @@ from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.plans.sampling import RESERVOIR_K
 from news_categorization_big_data_spark.plans.text import RARITY_CAP_MILLI
 from news_categorization_big_data_spark.sources.tables import load_table
-from tests.conftest import assert_map_only
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import assert_map_only, exchange_counts
 
 
 # ---- q_sample_reservoir --------------------------------------------------
@@ -30,12 +26,12 @@ def test_reservoir_exact_k_and_stable(spark, sf_dir):
     assert a == b  # same salt -> same sample, run to run
 
 
-def test_reservoir_is_top_k_not_global_sort(spark, sf_dir):
-    plan = _plan(REGISTRY["q_sample_reservoir"].builder(spark, sf_dir))
+def test_reservoir_is_top_k_not_global_sort(registry_plans):
+    plan = registry_plans["q_sample_reservoir"].plan
     # per-partition heap + driver merge; a global Sort+Exchange would be
     # the scale-killer the docstring rules out
     assert "TakeOrderedAndProject" in plan, plan
-    assert "Exchange rangepartitioning" not in plan, plan
+    assert exchange_counts(plan) == {}, plan
 
 
 # ---- q_token_rarity ------------------------------------------------------
@@ -77,9 +73,9 @@ def test_union_by_name_fills_missing_with_null(spark, sf_dir):
     assert all(isinstance(r["price"], float) for r in rows)
 
 
-def test_union_by_name_no_shuffle(spark, sf_dir):
-    plan = _plan(REGISTRY["q_union_by_name"].builder(spark, sf_dir))
-    assert "Exchange" not in plan, plan
+def test_union_by_name_no_shuffle(registry_plans):
+    plan = registry_plans["q_union_by_name"].plan
+    assert exchange_counts(plan) == {}, plan
 
 
 # ---- q_graph_jaccard_neighbors -------------------------------------------
@@ -97,8 +93,8 @@ def test_jaccard_neighbors_bounds_and_ordering(spark, sf_dir):
     assert len(pairs) == len(set(pairs))
 
 
-def test_jaccard_neighbors_broadcasts_degrees(spark, sf_dir):
-    plan = _plan(REGISTRY["q_graph_jaccard_neighbors"].builder(spark, sf_dir))
+def test_jaccard_neighbors_broadcasts_degrees(registry_plans):
+    plan = registry_plans["q_graph_jaccard_neighbors"].plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
@@ -140,8 +136,8 @@ def test_histogram2d_conserves_counts_and_shares(spark, sf_dir):
         assert 1 <= r["month_bin"] <= 12
 
 
-def test_histogram2d_total_is_broadcast(spark, sf_dir):
-    plan = _plan(REGISTRY["q_histogram2d"].builder(spark, sf_dir))
+def test_histogram2d_total_is_broadcast(registry_plans):
+    plan = registry_plans["q_histogram2d"].plan
     assert "Broadcast" in plan, plan
 
 
@@ -196,12 +192,12 @@ def test_label_centroids_full_grid_and_counts(spark, sf_dir):
     assert sum(next(iter(v)) for v in by_label.values()) == emb.count()
 
 
-def test_token_rarity_never_broadcasts_the_token_stream(spark, sf_dir):
+def test_token_rarity_never_broadcasts_the_token_stream(registry_plans):
     """Catalyst's default estimate broadcasts the EXPLODED token stream
     into the vocab join (the rar side's cross-join lineage defeats its
     stats) — corpus-sized broadcast, the classic scale inversion. The
     shuffle_hash hint pins the ShuffledHashJoin shape."""
-    plan = _plan(REGISTRY["q_token_rarity"].builder(spark, sf_dir))
+    plan = registry_plans["q_token_rarity"].plan
     assert "ShuffledHashJoin" in plan, plan
     # the only broadcast left is the one-row total joined into vocab
     assert "BroadcastNestedLoopJoin" in plan, plan
@@ -246,8 +242,8 @@ def test_rank_normalize_cdf_properties(spark, sf_dir):
         assert ppms == sorted(ppms)  # monotone in value
 
 
-def test_rank_normalize_window_rides_distinct_values(spark, sf_dir):
-    plan = _plan(REGISTRY["q_rank_normalize"].builder(spark, sf_dir))
+def test_rank_normalize_window_rides_distinct_values(registry_plans):
+    plan = registry_plans["q_rank_normalize"].plan
     # the aggregate runs BELOW the window: sort cost is bounded by
     # distinct-value cardinality, not raw event count
     agg_pos = plan.rfind("HashAggregate")
@@ -273,10 +269,8 @@ def test_char_classes_partition_and_simpson_bounds(spark, sf_dir):
         assert 250_000 <= r["simpson_ppm"] <= 1_000_000
 
 
-def test_char_classes_is_map_only(spark, sf_dir):
-    plan = assert_map_only(
-        spark, lambda: REGISTRY["q_char_classes"].builder(spark, sf_dir)
-    )
+def test_char_classes_is_map_only(registry_plans):
+    plan = assert_map_only(registry_plans, "q_char_classes")
     assert "Generate" not in plan, plan
 
 
@@ -305,8 +299,8 @@ def test_pq_search_topk_shape_and_monotone(spark, sf_dir):
     assert all(d >= 0.0 for d, _ in dists)
 
 
-def test_pq_search_lut_and_codebook_broadcast(spark, sf_dir):
-    plan = _plan(REGISTRY["q_pq_search"].builder(spark, sf_dir))
+def test_pq_search_lut_and_codebook_broadcast(registry_plans):
+    plan = registry_plans["q_pq_search"].plan
     # corpus vectors never join anything non-broadcast at query time
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan

@@ -14,10 +14,7 @@ from news_categorization_big_data_spark.functions.scale import (
     write_partitioned,
 )
 from news_categorization_big_data_spark.sources.tables import load_table
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import assert_map_only, exchange_counts, physical_plan
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
@@ -41,8 +38,8 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
         joined = read_bucketed(spark, "b_orders").join(
             read_bucketed(spark, "b_lineitem"), "o_orderkey"
         )
-        plan = _plan(joined)
-        assert "Exchange hashpartitioning" not in plan, f"bucketed join still shuffles:\n{plan}"
+        plan = physical_plan(joined)
+        assert exchange_counts(plan) == {}, f"bucketed join still shuffles:\n{plan}"
         assert "Bucketed: true" in plan, f"scan did not use buckets:\n{plan}"
 
         # and it computes the same thing as the plain join
@@ -64,7 +61,7 @@ def test_partitioned_write_prunes_static(spark, sf_dir, tmp_path):
     write_partitioned(docs, path, ["lang"])
 
     read = spark.read.parquet(path).where(F.col("lang") == "en")
-    plan = _plan(read)
+    plan = physical_plan(read)
     assert "PartitionFilters: [" in plan and "lang" in plan.split("PartitionFilters")[1][:120], plan
     want = docs.where(F.col("lang") == "en").count()
     assert read.count() == want and want > 0
@@ -80,7 +77,7 @@ def test_partitioned_write_prunes_dynamic(spark, sf_dir, tmp_path):
     dim = docs.select("lang").distinct().where(F.col("lang").isin("en", "de"))
     fact = spark.read.parquet(path)
     joined = fact.join(dim, "lang")
-    plan = _plan(joined)
+    plan = physical_plan(joined)
     assert "dynamicpruning" in plan.lower(), f"no DPP subquery in:\n{plan}"
     assert joined.count() == docs.where(F.col("lang").isin("en", "de")).count()
 
@@ -152,16 +149,11 @@ def test_row_salt_is_row_deterministic(spark, sf_dir):
     assert set(base.values()) == set(range(8))  # uniform enough to spread
 
 
-def test_map_only_queries_have_no_exchange(spark, sf_dir):
+def test_map_only_queries_have_no_exchange(registry_plans):
     """The curation/scoring queries documented as map-only must stay
     shuffle-free: one Exchange creeping into a per-row pass is the
     difference between linear scan and cluster-wide repartition at
     100 TB. Value = the declared fan_out key, if any."""
-    from functools import partial
-
-    from news_categorization_big_data_spark.plans import REGISTRY
-    from tests.conftest import assert_map_only
-
     for name, fan_out_key in {
         "q_classify_keywords": "doc_id",
         "q_split_train_eval": None,
@@ -174,9 +166,7 @@ def test_map_only_queries_have_no_exchange(spark, sf_dir):
         "q_repetition_stats": None,
         "q_pii_scrub": None,
     }.items():
-        assert_map_only(
-            spark, partial(REGISTRY[name].builder, spark, sf_dir), fan_out_key
-        )
+        assert_map_only(registry_plans, name, fan_out_key)
 
 
 def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
@@ -245,7 +235,7 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
     assert a == b and a
 
 
-def test_dedup_verify_joins_never_static_broadcast(spark, sf_dir):
+def test_dedup_verify_joins_never_static_broadcast(registry_plans):
     """The pairwise-dedup verify joins (candidates back to the sets
     table) and the keep-best quality join must plan as sort-merge at
     EVERY scale: their non-cand sides are O(corpus) frames whose static
@@ -263,8 +253,7 @@ def test_dedup_verify_joins_never_static_broadcast(spark, sf_dir):
     These dedup plans also shuffle keys, never documents: no Exchange
     may partition on the full ``text`` column (the shingle hashes are
     computed map-side and only ids, sizes and hashes move)."""
-    from news_categorization_big_data_spark.plans import REGISTRY
-    from tests.conftest import exchanges_keyed_on
+    import re
 
     for q, n_smj in (
         ("q_dedup_containment", 4),  # df-cap + candidate + 2 verify sides
@@ -272,9 +261,9 @@ def test_dedup_verify_joins_never_static_broadcast(spark, sf_dir):
         ("q_lsh_recall", 3),  # 2 truth verify sides + truth ⟗ cand
         ("q_dedup_keep_best", 1),  # component ⋈ per-doc quality
     ):
-        plan = _plan(REGISTRY[q].builder(spark, sf_dir))
+        plan = registry_plans[q].plan
         assert plan.count("SortMergeJoin") >= n_smj, (q, plan)
-        text_keyed = exchanges_keyed_on(plan, "text")
+        text_keyed = [k for k in exchange_counts(plan) if re.search(r"\(.*\btext\b", k)]
         assert not text_keyed, (q, text_keyed)
 
 

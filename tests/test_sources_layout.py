@@ -9,22 +9,18 @@ from pyspark.sql import functions as F
 from news_categorization_big_data_spark.plans import REGISTRY
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_partitioned_scan_prunes_directories(spark, sf_dir):
+def test_partitioned_scan_prunes_directories(registry_plans):
     """The lang predicate must become a PartitionFilter (directory
     pruning, zero data-file I/O for other langs), not a post-scan
     filter."""
-    plan = _plan(REGISTRY["q_scan_partitioned"].builder(spark, sf_dir))
+    plan = registry_plans["q_scan_partitioned"].plan
     assert "PartitionFilters" in plan and "lang" in plan.split("PartitionFilters", 1)[1][:120], plan
     # and the pruned scan reads only the referenced columns
     assert "ReadSchema: struct<source:string>" in plan, plan
 
 
-def test_orc_scan_pushes_column_pruning(spark, sf_dir):
-    plan = _plan(REGISTRY["q_scan_orc"].builder(spark, sf_dir))
+def test_orc_scan_pushes_column_pruning(registry_plans):
+    plan = registry_plans["q_scan_orc"].plan
     assert "Format: ORC" in plan or "orc" in plan.lower(), plan
     # only lang + n_chars are read back for the aggregate
     assert "ReadSchema: struct<lang:string,n_chars:bigint>" in plan, plan

@@ -18,6 +18,7 @@ from news_categorization_big_data_spark.streaming.topology import (
     write_kafka_batch,
     write_routed_fan_out,
 )
+from tests.conftest import exchange_counts, physical_plan
 
 CATEGORIES = ["technology", "political", "arts", "sports", "social", "environmental", "health"]
 
@@ -195,8 +196,8 @@ def test_serialize_messages_is_pure_projection(spark):
         [("x", "sports", "2024-01-01 00:00:00")],
         "content string, category string, event_ts string",
     ).select("content", "category", F.col("event_ts").cast("timestamp").alias("event_ts"))
-    plan = serialize_messages(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    plan = physical_plan(serialize_messages(df))
+    assert exchange_counts(plan) == {}, plan
 
 
 def test_routed_fan_out(spark, tmp_path):

@@ -4,31 +4,25 @@ by the parametrized tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
-from news_categorization_big_data_spark.plans import REGISTRY
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_q1_is_scan_plus_agg_no_join(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q1"].builder(spark, sf_dir))
+def test_q1_is_scan_plus_agg_no_join(registry_plans):
+    plan = registry_plans["q_tpch_q1"].plan
     assert "Join" not in plan, plan
     # partial+final hash aggregation, and the date filter pushed to the scan
     assert "HashAggregate" in plan
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan, plan
 
 
-def test_q3_broadcasts_customer_side(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q3"].builder(spark, sf_dir))
+def test_q3_broadcasts_customer_side(registry_plans):
+    plan = registry_plans["q_tpch_q3"].plan
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
     # top-k without a global sort
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_q6_pushes_all_scan_filters(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q6"].builder(spark, sf_dir))
+def test_q6_pushes_all_scan_filters(registry_plans):
+    plan = registry_plans["q_tpch_q6"].plan
     assert "Join" not in plan, plan
     # Filters reach the scan (the toString form TRUNCATES the pushed
     # list, so assert the head of it) and column pruning holds: the
@@ -40,14 +34,14 @@ def test_q6_pushes_all_scan_filters(spark, sf_dir):
     ), plan
 
 
-def test_sql_correlated_plans_semi_and_anti_joins(spark, sf_dir):
-    plan = _plan(REGISTRY["q_sql_correlated"].builder(spark, sf_dir))
+def test_sql_correlated_plans_semi_and_anti_joins(registry_plans):
+    plan = registry_plans["q_sql_correlated"].plan
     assert "LeftSemi" in plan and "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
 
-def test_q5_broadcasts_dimensions_no_cartesian(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q5"].builder(spark, sf_dir))
+def test_q5_broadcasts_dimensions_no_cartesian(registry_plans):
+    plan = registry_plans["q_tpch_q5"].plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
     # both order-date bounds reach the parquet scan

@@ -9,12 +9,8 @@ from __future__ import annotations
 from news_categorization_big_data_spark.plans import REGISTRY
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_q2_part_filter_pushed_offers_single_fact_scan(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q2"].builder(spark, sf_dir))
+def test_q2_part_filter_pushed_offers_single_fact_scan(registry_plans):
+    plan = registry_plans["q_tpch_q2"].plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "CartesianProduct" not in plan, plan
     # size/type predicates reach the part scan
@@ -26,15 +22,15 @@ def test_q2_part_filter_pushed_offers_single_fact_scan(spark, sf_dir):
     assert "Window" in plan, plan
 
 
-def test_q9_dims_broadcast_name_filter_pushed(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q9"].builder(spark, sf_dir))
+def test_q9_dims_broadcast_name_filter_pushed(registry_plans):
+    plan = registry_plans["q_tpch_q9"].plan
     assert plan.count("BroadcastHashJoin") >= 3, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
     assert "StringContains(p_name,bolt)" in plan, plan
 
 
-def test_q11_global_threshold_is_single_row_broadcast(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q11"].builder(spark, sf_dir))
+def test_q11_global_threshold_is_single_row_broadcast(registry_plans):
+    plan = registry_plans["q_tpch_q11"].plan
     # the one-row global total joins via a broadcast nested loop — the
     # only place in the TPC-H tier where BNLJ is the CORRECT shape
     assert "BroadcastNestedLoopJoin" in plan, plan
@@ -42,15 +38,15 @@ def test_q11_global_threshold_is_single_row_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_q12_shipdate_envelope_reaches_fact_scan(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q12"].builder(spark, sf_dir))
+def test_q12_shipdate_envelope_reaches_fact_scan(registry_plans):
+    plan = registry_plans["q_tpch_q12"].plan
     assert "GreaterThanOrEqual(l_shipdate" in plan, plan
     assert "LessThan(l_shipdate" in plan, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_q16_not_in_compiles_to_anti_join(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q16"].builder(spark, sf_dir))
+def test_q16_not_in_compiles_to_anti_join(registry_plans):
+    plan = registry_plans["q_tpch_q16"].plan
     assert "LeftAnti" in plan, plan
     # size list prunes at the part scan (the PushedFilters render is
     # truncated in toString, so match the Filter node's IN)
@@ -59,8 +55,8 @@ def test_q16_not_in_compiles_to_anti_join(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2, plan
 
 
-def test_q20_semi_join_chain_single_fact_shuffle(spark, sf_dir):
-    plan = _plan(REGISTRY["q_tpch_q20"].builder(spark, sf_dir))
+def test_q20_semi_join_chain_single_fact_shuffle(registry_plans):
+    plan = registry_plans["q_tpch_q20"].plan
     assert plan.count("LeftSemi") >= 2, plan
     assert "GreaterThanOrEqual(l_shipdate" in plan, plan
     # dominance check is a window over the aggregate's own partitioning
@@ -68,10 +64,10 @@ def test_q20_semi_join_chain_single_fact_shuffle(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_q21_one_fact_scan_no_self_joins(spark, sf_dir):
+def test_q21_one_fact_scan_no_self_joins(registry_plans):
     """The textbook Q21 carries three correlated lineitem self-joins;
     the engine's rewrite must scan the fact exactly once."""
-    plan = _plan(REGISTRY["q_tpch_q21"].builder(spark, sf_dir))
+    plan = registry_plans["q_tpch_q21"].plan
     assert plan.count("lineitem.parquet") == 1, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
     # supplier/nation/region dimension chain broadcast

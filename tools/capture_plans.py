@@ -1,7 +1,9 @@
-"""Capture .explain("formatted") for registered queries into plans/r15/.
+"""Capture .explain("formatted") for registered queries into
+plans/captured/ (git-ignored: regenerate dumps on demand, commit only
+the before/after pairs a change cites).
 
 Usage: python tools/capture_plans.py <suffix> [q_name ...]
-  suffix: 'before' or 'after' (file name becomes plans/r15/<q>_<suffix>.txt)
+  suffix: 'before' or 'after' (file name becomes plans/captured/<q>_<suffix>.txt)
   q_name: queries to capture; default = every registered query.
 
 Plans are captured at the bench scale ($SPARK_GRAFT_SF_DIR, default
@@ -26,7 +28,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r15",
+        "plans", "captured",
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("ncbds-capture-plans")
