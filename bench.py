@@ -10,7 +10,9 @@ round 14's single mega-line overflowed that window and the official
 record landed ``parsed: null``. Full diagnostics (per-query noise
 ratios, cold runs, pass totals, methodology bridge) print on an
 EARLIER ``"detail"`` JSON line. A second ``"sf1"`` block records the
-decade point (/tmp/sf1, 2-pass min) when available.
+decade point (/tmp/sf1, 2-pass min), which tools/fixtures.py ensure_sf1
+builds in a subprocess when it is absent; an unbuildable sf1 only drops
+the block, never the sf0.1 headline record.
 
 Headline set: the queries whose plans exercise the scale-critical paths —
 shuffle aggregation, broadcast joins, window top-k, LSH dedup, vector
@@ -22,11 +24,11 @@ from __future__ import annotations
 import json
 import os
 import subprocess
-import sys
 import time
 
 from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.session import get_spark
+from tools.fixtures import ensure_sf1
 
 
 def _git_head() -> str:
@@ -157,27 +159,6 @@ def _run_passes(spark, sf_dir: str, reps: int) -> dict[str, list[float]]:
             ).save()
             per_pass[name].append(round(time.perf_counter() - start, 3))
     return per_pass
-
-
-def _ensure_sf1(sf1_dir: str) -> str | None:
-    """Build the /tmp/sf1 decade fixture if absent (tools/make_sf1.py in
-    a subprocess so its SparkSession never collides with the bench's).
-    Returns the dir, or None with the reason swallowed — a missing or
-    unbuildable sf1 must never cost the sf0.1 headline record."""
-    if os.path.isdir(os.path.join(sf1_dir, "lineitem.parquet")):
-        return sf1_dir
-    try:
-        repo = os.path.dirname(os.path.abspath(__file__))
-        rc = subprocess.run(
-            [sys.executable, os.path.join(repo, "tools", "make_sf1.py")],
-            cwd=repo, capture_output=True, timeout=900,
-            env={**os.environ, "SPARK_GRAFT_SF1_DIR": sf1_dir},
-        ).returncode
-        if rc == 0 and os.path.isdir(os.path.join(sf1_dir, "lineitem.parquet")):
-            return sf1_dir
-    except (OSError, subprocess.SubprocessError):
-        pass
-    return None
 
 
 def final_line(
@@ -331,7 +312,7 @@ def main() -> None:
         os.environ.get("SPARK_GRAFT_SF1", "1") != "0"
         and sf_dir == "/root/testdata/sf0.1"
     ):
-        sf1_dir = _ensure_sf1(os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1"))
+        sf1_dir = ensure_sf1(os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1"))
         if sf1_dir:
             sf1_reps = max(2, int(os.environ.get("SPARK_GRAFT_SF1_REPS", "2")))
             sf1_pass = _run_passes(spark, sf1_dir, sf1_reps)

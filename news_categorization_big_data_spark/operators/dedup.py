@@ -696,7 +696,7 @@ def simhash_hamming_pairs(
     # in-bucket pair generation was quadratic in the DUPLICATED count —
     # and each hot bucket exploded from one collect_list row in ONE
     # task (measured: the registered 32-bit plan took 1473 s at the sf1
-    # decade; that corpus holds few exact dups — tools/make_sf1.py
+    # decade; that corpus holds few exact dups — tools/fixtures.py sf1
     # suffixes each replica's text, leaving 80 redundant copies in
     # 50,000 documents). Grouping docs by
     # sketch first shrinks buckets by the duplication factor (pair work

@@ -566,7 +566,7 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `norm` alone, and exact-duplicate documents (boilerplate at corpus
     # scale) share a norm — so a per-doc block join pays the
     # duplication factor SQUARED in levenshtein calls (120x120 DP each).
-    # The sf1 fixture holds few of them (tools/make_sf1.py suffixes each
+    # The sf1 fixture holds few of them (tools/fixtures.py sf1 suffixes each
     # replica's text: 80 redundant copies in 50,000 documents), so the
     # per-doc join's measured 80 s at sf1 is not exact-dup cost.
     # Grouping by norm first runs the join + levenshtein once per

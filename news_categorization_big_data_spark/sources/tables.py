@@ -43,7 +43,7 @@ from news_categorization_big_data_spark.session import tune_session
 #: weakly by session so a stopped session's plans are never resurrected;
 #: keyed by (sf_dir, name) so tests' per-tmp_path fixtures never
 #: collide, with the path's mtime_ns stored IN the value as a freshness
-#: token (round-11 advice): a regenerated fixture dir (tools/make_skew*
+#: token (round-11 advice): a regenerated fixture dir (tools/fixtures.py
 #: rewriting its output while a session holds cached frames) REPLACES
 #: the stale entry instead of silently reading dropped files — and
 #: replacement (not mtime-in-the-key) means superseded entries are

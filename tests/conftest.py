@@ -11,13 +11,12 @@ from collections import Counter
 from collections.abc import Iterator, Mapping
 from typing import NamedTuple
 
-import duckdb
 import pytest
 from pyspark.sql.types import StructType
 
 from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.session import get_spark
-from news_categorization_big_data_spark.sources.tables import TABLES
+from tools import fixtures
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -94,13 +93,28 @@ def registry_plans(spark, sf_dir) -> _PlanMemo:
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{SF_DIR}/{name}.parquet'"
-        )
+    con = fixtures.duck_views(SF_DIR)
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def edge_axis(tmp_path_factory):
+    """``edge_axis(axis)`` → (sf dir, DuckDB views over it) of one edge-data
+    axis of tools/fixtures.py, built into a tmp dir on first use and
+    shared by every test of the session that asks for it."""
+    built: dict[str, tuple] = {}
+
+    def get(axis: str):
+        if axis not in built:
+            dst = str(tmp_path_factory.mktemp(axis))
+            fixtures.build(axis, dst)
+            built[axis] = dst, fixtures.duck_views(dst)
+        return built[axis]
+
+    yield get
+    for _, con in built.values():
+        con.close()
 
 
 def _canon(value):

@@ -1,20 +1,20 @@
 """Empty-input regression pins — the 15 round-13 /tmp/skew6 fixes.
 
-tools/make_skew6.py writes every table as a ZERO-ROW parquet with the
-production schema; the round-13 sweep found 15 defects in four classes
-(SCALE.md "Round 13: the EMPTY-INPUT axis"). This file regenerates the
-fixture into the test's own tmp dir (instant — it is just empty
-parquet) and pins every fixed query oracle-green ON EMPTY INPUT, so a
-refactor that reintroduces an inference-dependent read-back, an
-unguarded division, or a bare MLlib fit fails here instead of at the
-next fixture sweep."""
+The skew6 axis of tools/fixtures.py writes every table as a ZERO-ROW
+parquet with the production schema; the round-13 sweep found 15 defects
+in four classes (SCALE.md "Round 13: the EMPTY-INPUT axis"). conftest's
+``edge_axis`` rebuilds the fixture into a tmp dir (instant — it is just
+empty parquet), and this file pins every fixed query oracle-green ON
+EMPTY INPUT, so a refactor that reintroduces an inference-dependent
+read-back, an unguarded division, or a bare MLlib fit fails here
+instead of at the next fixture sweep. test_edge_axes.py guards that the
+fixture really is empty."""
 
 from __future__ import annotations
 
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -46,46 +46,11 @@ FIXED = [
     "q_table_profile",
 ]
 
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
-
-@pytest.fixture(scope="module")
-def empty_sf_dir(tmp_path_factory):
-    from tools import make_skew6
-
-    dst = tmp_path_factory.mktemp("skew6")
-    old_argv = sys.argv
-    sys.argv = ["make_skew6.py", str(dst)]
-    try:
-        make_skew6.main()
-    finally:
-        sys.argv = old_argv
-    return str(dst)
-
-
-@pytest.fixture(scope="module")
-def empty_duck(empty_sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{empty_sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
 
 @pytest.mark.parametrize("name", FIXED)
-def test_empty_input_fix_holds(spark, empty_sf_dir, empty_duck, name):
+def test_empty_input_fix_holds(spark, edge_axis, name):
+    sf_dir, duck = edge_axis("skew6")
     spec = REGISTRY[name]
     assert spec.oracle is not None, name
-    df = spec.builder(spark, empty_sf_dir)
-    assert_oracle_match(df, empty_duck, spec.oracle, name=f"{name}@skew6")
-
-
-def test_fixture_is_actually_empty(empty_sf_dir):
-    import pyarrow.parquet as pq
-
-    for t in ("orders", "events", "documents"):
-        tab = pq.read_table(f"{empty_sf_dir}/{t}.parquet")
-        assert tab.num_rows == 0 and tab.num_columns > 0
+    df = spec.builder(spark, sf_dir)
+    assert_oracle_match(df, duck, spec.oracle, name=f"{name}@skew6")

@@ -1,5 +1,5 @@
 """Row-SIZE skew regression tests — the /tmp/skew3 giant-document class
-(round 12, tools/make_skew3.py) pinned at pytest scale.
+(round 12, the skew3 axis of tools/fixtures.py) pinned at pytest scale.
 
 skew1/skew2 stress hot keys and hot window partitions; these pin the
 third axis: ONE multi-megabyte document flowing through per-doc column

@@ -18,13 +18,15 @@ gate tests below."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from news_categorization_big_data_spark.functions.scale import broadcast_if_small
 from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.sources.tables import load_table
-from tests.conftest import physical_plan
+from tests.conftest import exchange_counts, physical_plan
 
 #: Every table the testdata generator scales linearly with SF. A
 #: broadcast hint pinned over a raw scan of any of these is a latent
@@ -174,7 +176,7 @@ def test_broadcast_if_small_hints_under_gate(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     joined = li.join(broadcast_if_small(part), li.l_partkey == part.p_partkey)
     plan = _no_estimate_broadcast_plan(spark, joined)
-    assert "BroadcastExchange" in plan, plan
+    assert exchange_counts(plan) == {"broadcast": 1}, plan
 
 
 def test_broadcast_if_small_refuses_over_gate(spark, sf_dir):
@@ -187,7 +189,22 @@ def test_broadcast_if_small_refuses_over_gate(spark, sf_dir):
     gated = broadcast_if_small(part, max_bytes=0)
     joined = li.join(gated, li.l_partkey == part.p_partkey)
     plan = _no_estimate_broadcast_plan(spark, joined)
-    assert "BroadcastExchange" not in plan, plan
+    assert exchange_counts(plan) == {
+        "hashpartitioning(l_partkey)/ENSURE_REQUIREMENTS": 1,
+        "hashpartitioning(p_partkey)/ENSURE_REQUIREMENTS": 1,
+    }, plan
+
+
+#: q18's shuffles with estimate broadcasts disabled, whether or not its
+#: gated hint applies.
+_Q18_SHUFFLES = Counter(
+    {
+        "hashpartitioning(c_custkey)/ENSURE_REQUIREMENTS": 1,
+        "hashpartitioning(o_custkey)/ENSURE_REQUIREMENTS": 1,
+        "hashpartitioning(o_orderkey)/ENSURE_REQUIREMENTS": 1,
+        "hashpartitioning(l_orderkey)/ENSURE_REQUIREMENTS": 2,
+    }
+)
 
 
 def test_q18_strict_walker_flags_ungated_agg_broadcast(spark, sf_dir):
@@ -198,7 +215,7 @@ def test_q18_strict_walker_flags_ungated_agg_broadcast(spark, sf_dir):
     gate applies the hint, so the raw plan exhibits exactly that shape;
     the walker must see it."""
     plan = _no_estimate_broadcast_plan(spark, "q_tpch_q18", sf_dir)
-    if "BroadcastExchange" not in plan:
+    if not exchange_counts(plan)["broadcast"]:
         pytest.skip("gate refused at this fixture size — shape absent")
     flagged = _hinted_sf_broadcast_leaves(plan)
     assert flagged, "strict walker failed to flag the q18 keyed-agg broadcast:\n" + plan
@@ -213,14 +230,14 @@ def test_q18_broadcast_gated_not_pinned(spark, sf_dir, monkeypatch):
     plan = _no_estimate_broadcast_plan(spark, "q_tpch_q18", sf_dir)
     flagged = _hinted_sf_broadcast_leaves(plan)
     assert not flagged, "gate=0 still pins a broadcast:\n" + "\n".join(flagged)
-    assert "BroadcastExchange" not in plan, plan
+    assert exchange_counts(plan) == _Q18_SHUFFLES, plan
 
 
 def test_q18_broadcast_applied_under_gate(spark, sf_dir):
     """At bench scale the gate keeps the small-SF broadcast win: the
     measured lineitem input is far under 256 MB, so the hint applies."""
     plan = _no_estimate_broadcast_plan(spark, "q_tpch_q18", sf_dir)
-    assert "BroadcastExchange" in plan, plan
+    assert exchange_counts(plan) == _Q18_SHUFFLES + Counter(broadcast=1), plan
 
 
 def test_broadcast_if_small_unknown_lineage_unhinted(spark):

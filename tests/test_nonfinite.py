@@ -1,24 +1,24 @@
 """Non-finite regression pins — the six round-13 /tmp/skew7 fixes.
 
-tools/make_skew7.py injects deterministic NaN/±Inf into events.value
-and poisons 2% of embedding vectors with one NaN component (SCALE.md
-"Round 13: the NON-FINITE axis"). This file regenerates the fixture
-into the test's own tmp dir and pins the six fixed queries
-oracle-green ON POISONED DATA — the four silent hash divergences
+The skew7 axis of tools/fixtures.py injects deterministic NaN/±Inf into
+events.value and poisons 2% of embedding vectors with one NaN component
+(SCALE.md "Round 13: the NON-FINITE axis"). conftest's ``edge_axis``
+rebuilds the fixture into a tmp dir, and this file pins the six fixed
+queries oracle-green ON POISONED DATA — the four silent hash divergences
 (finite-subset order statistics, NULL banding, IEEE NaN comparisons),
 the two Spark-side crashes (z-order coordinate guard, the
 drop-poisoned-vectors KMeans filter), and the full POISON → NULL
 exact-cast program (dsum_fin/o_dsum_fin and friends in
 plans/relational.py) applied to every exact-decimal/int-cast metric
 consumer. The closing full-registry sweep on the fixture was 284/284;
-this file pins the 39 queries the first sweep caught."""
+this file pins the 39 queries the first sweep caught.
+test_edge_axes.py guards that the fixture really is poisoned."""
 
 from __future__ import annotations
 
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -70,55 +70,11 @@ FIXED = [
     "q_sink_partitioned_roundtrip",
 ]
 
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
-
-@pytest.fixture(scope="module")
-def nonfinite_sf_dir(tmp_path_factory):
-    from tools import make_skew7
-
-    dst = tmp_path_factory.mktemp("skew7")
-    old_argv = sys.argv
-    sys.argv = ["make_skew7.py", str(dst)]
-    try:
-        make_skew7.main()
-    finally:
-        sys.argv = old_argv
-    return str(dst)
-
-
-@pytest.fixture(scope="module")
-def nonfinite_duck(nonfinite_sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{nonfinite_sf_dir}/{t}.parquet'"
-        )
-    yield con
-    con.close()
-
 
 @pytest.mark.parametrize("name", FIXED)
-def test_nonfinite_fix_holds(spark, nonfinite_sf_dir, nonfinite_duck, name):
+def test_nonfinite_fix_holds(spark, edge_axis, name):
+    sf_dir, duck = edge_axis("skew7")
     spec = REGISTRY[name]
     assert spec.oracle is not None, name
-    df = spec.builder(spark, nonfinite_sf_dir)
-    assert_oracle_match(df, nonfinite_duck, spec.oracle, name=f"{name}@skew7")
-
-
-def test_fixture_actually_poisoned(nonfinite_sf_dir):
-    """Guard the guard: without NaN/Inf rows the pins pass vacuously."""
-    import math
-
-    import pyarrow.parquet as pq
-
-    vals = (
-        pq.read_table(f"{nonfinite_sf_dir}/events.parquet", columns=["value"])
-        .column("value")
-        .to_pylist()
-    )
-    assert any(v is not None and math.isnan(v) for v in vals)
-    assert any(v is not None and math.isinf(v) for v in vals)
+    df = spec.builder(spark, sf_dir)
+    assert_oracle_match(df, duck, spec.oracle, name=f"{name}@skew7")

@@ -1,22 +1,22 @@
 """Null-key TPC-H regression pins — the six round-13 /tmp/skew5 fixes.
 
-tools/make_skew5.py injects deterministic NULLs into every join key,
-date, measure, and group-key column of the seven TPC-H tables; the
-round-13 full-registry sweep found exactly six cross-engine
+The skew5 axis of tools/fixtures.py injects deterministic NULLs into
+every join key, date, measure, and group-key column of the seven TPC-H
+tables; the round-13 full-registry sweep found exactly six cross-engine
 null-semantics divergences (SCALE.md "Round 13: the NULL-KEY axis
-reaches the TPC-H tier"). This file regenerates the fixture into the
-test's own tmp dir (seconds — the generator is seeded per
-(table, column), so the data is bit-identical to the session fixture)
-and pins each fixed query oracle-green ON NULLED DATA, so a refactor
-that reintroduces an unpinned sort, a NOT IN, or an unguarded
-element_at fails here instead of at the next fixture sweep."""
+reaches the TPC-H tier"). conftest's ``edge_axis`` rebuilds the fixture
+into a tmp dir (seconds — the generator is seeded per (table, column),
+so the data is bit-identical to /tmp/skew5), and this file pins each
+fixed query oracle-green ON NULLED DATA, so a refactor that reintroduces
+an unpinned sort, a NOT IN, or an unguarded element_at fails here
+instead of at the next fixture sweep. test_edge_axes.py guards that the
+fixture really holds null keys."""
 
 from __future__ import annotations
 
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -40,49 +40,11 @@ FIXED = [
     "q_tpch_q16",
 ]
 
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
-
-@pytest.fixture(scope="module")
-def null_sf_dir(tmp_path_factory):
-    from tools import make_skew5
-
-    dst = tmp_path_factory.mktemp("skew5")
-    old_argv = sys.argv
-    sys.argv = ["make_skew5.py", str(dst)]
-    try:
-        make_skew5.main()
-    finally:
-        sys.argv = old_argv
-    return str(dst)
-
-
-@pytest.fixture(scope="module")
-def null_duck(null_sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{null_sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
 
 @pytest.mark.parametrize("name", FIXED)
-def test_null_key_fix_holds(spark, null_sf_dir, null_duck, name):
+def test_null_key_fix_holds(spark, edge_axis, name):
+    sf_dir, duck = edge_axis("skew5")
     spec = REGISTRY[name]
     assert spec.oracle is not None, name
-    df = spec.builder(spark, null_sf_dir)
-    assert_oracle_match(df, null_duck, spec.oracle, name=f"{name}@skew5")
-
-
-def test_fixture_actually_has_null_keys(null_sf_dir):
-    """Guard the guard: if the generator ever stops nulling the join
-    keys, every test above passes vacuously."""
-    import pyarrow.parquet as pq
-
-    li = pq.read_table(f"{null_sf_dir}/lineitem.parquet", columns=["l_orderkey"])
-    orders = pq.read_table(f"{null_sf_dir}/orders.parquet", columns=["o_custkey"])
-    assert li.column("l_orderkey").null_count > 0
-    assert orders.column("o_custkey").null_count > 0
+    df = spec.builder(spark, sf_dir)
+    assert_oracle_match(df, duck, spec.oracle, name=f"{name}@skew5")

@@ -8,36 +8,21 @@ executing it, so this sweep is cheap and covers every registered query.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from news_categorization_big_data_spark.plans import REGISTRY
-
-SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 #: Types pandas renders as float64 (or object-decimal), breaking the
 #: driver's repr()-based value hash against Spark's integer rendering.
 FORBIDDEN = ("HUGEINT", "UHUGEINT", "UBIGINT", "DECIMAL")
 
 
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in TABLES:
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    yield c
-    c.close()
-
-
 ORACLE_QUERIES = sorted(n for n, spec in REGISTRY.items() if spec.oracle is not None)
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_oracle_emits_no_pandas_lossy_types(con, name):
-    rows = con.execute(f"DESCRIBE {REGISTRY[name].oracle}").fetchall()
+def test_oracle_emits_no_pandas_lossy_types(duck, name):
+    rows = duck.execute(f"DESCRIBE {REGISTRY[name].oracle}").fetchall()
     bad = [
         (col, typ)
         for col, typ, *_ in rows
@@ -51,7 +36,7 @@ def test_oracle_emits_no_pandas_lossy_types(con, name):
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_oracle_emits_only_scalar_columns(con, name):
+def test_oracle_emits_only_scalar_columns(duck, name):
     """Guard against round 3's sole red row: the external driver
     canonicalizes both result sets through a pandas ``sort_values`` over
     every column, and a list/struct/map cell arrives as a numpy array —
@@ -59,7 +44,7 @@ def test_oracle_emits_only_scalar_columns(con, name):
     recorded as an error (q_embedding_quantize, CORRECTNESS_r03).
     Oracle-bearing queries must therefore emit scalar columns only;
     serialize arrays with array_to_string / array_join."""
-    rows = con.execute(f"DESCRIBE {REGISTRY[name].oracle}").fetchall()
+    rows = duck.execute(f"DESCRIBE {REGISTRY[name].oracle}").fetchall()
     bad = [
         (col, typ)
         for col, typ, *_ in rows

@@ -24,6 +24,7 @@ from news_categorization_big_data_spark.plans.retrieval import (
     SEMDEDUP_TAU,
 )
 from news_categorization_big_data_spark.sources.tables import load_table
+from tests.conftest import exchange_counts
 
 
 # -- q_bm25_rank ------------------------------------------------------------
@@ -126,7 +127,14 @@ def test_semantic_dedup_assignment_and_policy(spark, sf_dir):
 
 def test_semantic_dedup_broadcasts_pivots(registry_plans):
     plan = registry_plans["q_semantic_dedup"].plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    assert "BroadcastNestedLoopJoin" in plan or exchange_counts(plan) == {
+        "broadcast": 3,
+        "hashpartitioning(_gid)/ENSURE_REQUIREMENTS": 5,
+        "hashpartitioning(embedding)/ENSURE_REQUIREMENTS": 3,
+        "hashpartitioning(vec_id)/REPARTITION_BY_NUM": 3,
+        "hashpartitioning(cluster)/ENSURE_REQUIREMENTS": 1,
+        "hashpartitioning(a_cluster)/ENSURE_REQUIREMENTS": 1,
+    }, plan
 
 
 # -- q_pq_assign ------------------------------------------------------------
@@ -175,10 +183,16 @@ def test_pq_codes_valid_and_error_optimal(spark, sf_dir):
 
 
 def test_pq_assign_broadcasts_codebook_no_corpus_shuffle_of_floats(registry_plans):
-    """The codebook join must be broadcast; the only hash exchange is
-    the final per-vec regroup of integer codes."""
+    """The codebook join must be broadcast, and no exchange hashes the
+    corpus's float vectors: the only hash exchanges are keyed on vec_id —
+    the per-(vec, subspace) argmin over scalar distances and the final
+    per-vec regroup of integer codes."""
     plan = registry_plans["q_pq_assign"].plan
-    assert "BroadcastExchange" in plan
+    assert exchange_counts(plan) == {
+        "broadcast": 3,
+        "hashpartitioning(vec_id, s)/ENSURE_REQUIREMENTS": 1,
+        "hashpartitioning(vec_id)/ENSURE_REQUIREMENTS": 1,
+    }, plan
 
 
 def test_pq_compression_ratio(spark):

@@ -23,39 +23,27 @@ WITHOUT a cross-engine oracle:
   genuine sf1 sketch geometry at test cost).
 
 The /tmp/sf1 fixture is built on demand from the read-only sf0.1
-testdata (tools/make_sf1.py — same path bench.py uses); tests skip
-only if the build itself fails.
+testdata (tools/fixtures.py ensure_sf1 — the same build-if-absent
+bench.py uses); tests skip only if the build itself fails.
 """
 
 from __future__ import annotations
 
 import os
-import subprocess
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
 from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.sources.tables import load_table
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from tools.fixtures import ensure_sf1
 
 
 @pytest.fixture(scope="module")
 def sf1_dir() -> str:
-    d = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1")
-    if not os.path.isdir(os.path.join(d, "documents.parquet")):
-        try:
-            subprocess.run(
-                [sys.executable, os.path.join(_REPO, "tools", "make_sf1.py")],
-                timeout=900, check=True, capture_output=True,
-                env={**os.environ, "SPARK_GRAFT_SF1_DIR": d},
-            )
-        except (OSError, subprocess.SubprocessError):
-            pytest.skip("sf1 fixture unavailable and could not be built")
-    if not os.path.isdir(os.path.join(d, "documents.parquet")):
-        pytest.skip("sf1 fixture unavailable")
+    d = ensure_sf1(os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1"))
+    if d is None:
+        pytest.skip("sf1 fixture unavailable and could not be built")
     return d
 
 

@@ -21,11 +21,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
 from pyspark.sql import SparkSession
 
+from tools.fixtures import duck_views
+
 SF = os.environ.get("SPARK_GRAFT_SIM_SF", "/root/testdata/sf0.01")
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 spark = SparkSession.builder.master("local[8]").appName("subset-sim").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
@@ -36,13 +36,7 @@ for kv in filter(None, os.environ.get("SPARK_GRAFT_SIM_CONF", "").split(",")):
 
 import __spark_entry__ as entrymod
 
-con = duckdb.connect()
-for t in TABLES:
-    p = f"{SF}/{t}.parquet"
-    # Spark writes a DIRECTORY of part files (the synthetic /tmp/sf1
-    # layout); DuckDB needs the glob, Spark reads either form as-is.
-    src = f"{p}/*.parquet" if os.path.isdir(p) else p
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+con = duck_views(SF)
 
 
 def canon(v):
