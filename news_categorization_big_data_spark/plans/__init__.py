@@ -23,9 +23,11 @@ remaining r15/r16 rewrites never checked against the driver oracle: the
 distinct-value collapses (q_semantic_dedup, q_dedup_fuzzy,
 q_dedup_embedding — functions/groupcollapse.py) and the fan_out(by=)
 keyed repartitions in q_classify_keywords, q_variant_json and q_sql_udf.
-(B) The q_group_stats canary. (C) The 34 oldest official stamps (r6
-complete, r7 complete, r9 partial). Earlier windows' rationales live in
-git history. Keep ROTATION_PENDING for anything newly registered.
+(A''') The Python-node plans whose fixed fan_out width 8 went back to
+fan_out's default width (q_multimodal_decode, q_audio_decode,
+q_video_frames). (B) The q_group_stats canary. (C) The 31 oldest
+official stamps (r6 complete, r7 complete). Earlier windows' rationales
+live in git history. Keep ROTATION_PENDING for anything newly registered.
 """
 
 from news_categorization_big_data_spark.plans.registry import REGISTRY, QuerySpec, register
@@ -94,10 +96,16 @@ _DRIVER_ORDER = [
     "q_classify_keywords",
     "q_variant_json",
     "q_sql_udf",
+    # -- A'''. the Python-node plans whose fixed fan_out width 8 went
+    #       back to fan_out's default width once the engine's worker
+    #       module stopped the per-task pyspark.zip re-read.
+    "q_multimodal_decode",
+    "q_audio_decode",
+    "q_video_frames",
     # -- B. standing canary (every window).
     "q_group_stats",
-    # -- C. the 34 oldest official stamps (r6 complete, r7 complete,
-    #       r9 partial; oldest-first, alphabetical within a round).
+    # -- C. the 31 oldest official stamps (r6 complete, r7 complete;
+    #       oldest-first, alphabetical within a round).
     "q_ml_eval",
     "q_seq_cooccur",
     "q_snapshot_diff",
@@ -129,14 +137,14 @@ _DRIVER_ORDER = [
     "q_tpch_q1",
     "q_twap",
     "q_union_by_name",
+    # ---- driver's 50-entry window ends here ----
+    # -- tail: the r9 stamps head the next window, then the prior
+    #    rotation order, then the previous window's entries (freshest
+    #    stamps last). All remain registered and pytest/driver_sim-proven
+    #    every round.
     "q_chi2_terms",
     "q_component_sizes",
     "q_gini_spend",
-    # ---- driver's 50-entry window ends here ----
-    # -- tail: the remaining r9 stamps head the next window, then the
-    #    prior rotation order, then the previous window's entries
-    #    (freshest stamps last). All remain registered and
-    #    pytest/driver_sim-proven every round.
     "q_graph_degree_dist",
     "q_graph_jaccard_neighbors",
     "q_group_collect",
@@ -219,9 +227,6 @@ _DRIVER_ORDER = [
     "q_bigram_lm",
     "q_doc_fluency",
     "q_decontaminate",
-    "q_multimodal_decode",
-    "q_audio_decode",
-    "q_video_frames",
     "q_bpe_pair_counts",
     "q_doc_commonness",
     "q_join_full_outer",

@@ -487,17 +487,15 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Keyed fan_out (guide §2.5): the single-row-group bench fixture
     # makes the scan 1 task, serializing BOTH mapInPandas passes (the
     # real codec encode/decode) onto one Python worker; the fan-out
-    # payload is just the doc_id longs. Width 8, not full parallelism:
-    # each task pays Python-worker spin-up + import, so per-task
-    # batches must stay large (32-way measured SLOWER than 1-way at
-    # sf0.1); 8 engages parallel workers while keeping thousands of
-    # rows per batch. No-op on cluster-width scans. Measured
-    # (interleaved toggle): sf1 3.44->0.95 s, sf0.1 0.58->0.52 s,
-    # oracle-MATCH.
+    # payload is just the doc_id longs. Default width, one task per
+    # core: more tasks than cores add per-task cost and no parallelism.
+    # A fixed width 8 measured slower than the default on 4 cores
+    # (sf0.1 median 0.58 -> 0.38 s, with pyspark_graft_worker removing
+    # the per-task pyspark.zip re-read; CHANGES.md). No-op on
+    # cluster-width scans.
     docs = fan_out(
         load_table(spark, sf_dir, "documents").select("doc_id"),
         by=("doc_id",),
-        partitions=8,
     )
 
     def encode_batches(batches):
@@ -834,20 +832,13 @@ def q_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_payloads,
     )
 
-    # Keyed fan_out (guide §2.5): the single-row-group bench fixture
-    # makes the scan 1 task, serializing BOTH mapInPandas passes (the
-    # real codec encode/decode) onto one Python worker; the fan-out
-    # payload is just the doc_id longs. Width 8, not full parallelism:
-    # each task pays Python-worker spin-up + import, so per-task
-    # batches must stay large (32-way measured SLOWER than 1-way at
-    # sf0.1); 8 engages parallel workers while keeping thousands of
-    # rows per batch. No-op on cluster-width scans. Measured
-    # (interleaved toggle): sf1 3.44->0.95 s, sf0.1 0.58->0.52 s,
-    # oracle-MATCH.
+    # Keyed fan_out (guide §2.5): same single-task codec serialization
+    # and default-width rationale as q_multimodal_decode (a fixed width
+    # 8 measured slower than the default on 4 cores: sf0.1 median
+    # 0.51 -> 0.39 s, CHANGES.md).
     docs = fan_out(
         load_table(spark, sf_dir, "documents").select("doc_id"),
         by=("doc_id",),
-        partitions=8,
     )
 
     def encode_batches(batches):
@@ -1140,15 +1131,14 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Keyed fan_out (guide §2.5): same single-task codec serialization
-    # and width-8 batching rationale as q_multimodal_decode. Measured
-    # (interleaved toggle): sf1 0.95->0.55 s, sf0.1 1.06->0.57 s,
-    # oracle-MATCH.
+    # and default-width rationale as q_multimodal_decode (a fixed width
+    # 8 measured slower than the default on 4 cores: sf0.1 median
+    # 0.64 -> 0.49 s, CHANGES.md).
     docs = fan_out(
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 2000)
         .select("doc_id"),
         by=("doc_id",),
-        partitions=8,
     )
 
     def encode_batches(batches):

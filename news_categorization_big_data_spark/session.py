@@ -11,6 +11,18 @@ nanosecond-parquet tolerance for the events table.
 At 100 TB the same code runs unchanged: AQE sizes the shuffle, the
 ``shuffle_partitions`` default here is only the pre-AQE upper bound, and
 ``maxPartitionBytes`` keeps scan tasks memory-bounded.
+
+Sessions built here also start their Python workers through
+``pyspark_graft_worker`` (the top-level module beside this package).
+PySpark re-reads ``pyspark.zip``'s whole central directory about 16 times
+at the start of every Python task; that module re-reads a zip only when
+it changed, which takes most of the worker CPU out of every
+``mapInPandas`` / ``pandas_udf`` node. Spark only accepts a worker module
+whose name starts with ``pyspark`` (``pyspark/daemon.py`` ignores any
+other), hence the name. Both confs that select it are static, so they sit
+in ``get_spark``'s builder and not in ``_RUNTIME_CONFS``: a session that
+an external driver supplies through ``tune_session`` keeps stock PySpark
+worker start-up. Query output is the same either way.
 """
 
 from __future__ import annotations
@@ -18,6 +30,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: The checkout root, where ``pyspark_graft_worker.py`` lives.
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Runtime-settable confs applied to ANY session that runs engine plans
 # (including a session handed to us by an external driver).
@@ -86,6 +101,8 @@ def get_spark(
     Local default is ``local[$SPARK_GRAFT_CPUS]``; on a real cluster pass
     ``master=None`` with an external cluster manager and these confs still
     apply (they are all cluster-size-agnostic: AQE does the sizing).
+    There the executors must see this checkout at the same path, because
+    their Python workers import ``pyspark_graft_worker`` from it.
     """
     cpus = default_parallelism()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -98,6 +115,15 @@ def get_spark(
         # Scan tasks stay memory-bounded regardless of total input size.
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+        # Python workers start through pyspark_graft_worker (module doc).
+        # The worker finds it through PYTHONPATH, not through the
+        # driver's cwd: without the pin, a driver started outside the
+        # checkout fails every Python task with ModuleNotFoundError.
+        .config("spark.python.worker.module", "pyspark_graft_worker")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (_REPO_ROOT, os.environ.get("PYTHONPATH")) if p),
+        )
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)

@@ -38,8 +38,9 @@ def test_registry_window_contains_round15_priorities():
     jaccard_pairs / containment_pairs revert, then the plans touched when
     the six default-off valves were deleted, then the remaining r15/r16
     rewrites never checked against the driver oracle, then the
-    q_group_stats canary, then the 34 OLDEST official stamps (r6
-    complete, r7 complete, r9 partial)."""
+    Python-node plans whose fixed fan_out width 8 was dropped, then the
+    q_group_stats canary, then the 31 OLDEST official stamps (r6
+    complete, r7 complete)."""
     window = list(REGISTRY)[:50]
     changed = [
         "q_dedup_ngram_jaccard", "q_dedup_containment", "q_lsh_recall",
@@ -53,14 +54,14 @@ def test_registry_window_contains_round15_priorities():
         "q_semantic_dedup", "q_dedup_fuzzy", "q_dedup_embedding",
         "q_classify_keywords", "q_variant_json", "q_sql_udf",
     ]
-    head = changed + valve_deletion + unchecked_r15_r16 + ["q_group_stats"]
+    fan_out_width = ["q_multimodal_decode", "q_audio_decode", "q_video_frames"]
+    head = changed + valve_deletion + unchecked_r15_r16 + fan_out_width + ["q_group_stats"]
     assert window[: len(head)] == head
     # spot-check the catch-up group's head and tail: the whole r6
-    # cohort leads, r7 follows, r9 is partial up to the 50-slot boundary.
+    # cohort leads, r7 follows up to the 50-slot boundary.
     catchup_probes = [
         "q_ml_eval", "q_zone_map",  # r6
         "q_compaction_bins", "q_union_by_name",  # r7
-        "q_chi2_terms", "q_gini_spend",  # r9 (partial)
     ]
     for name in catchup_probes:
         assert name in window, f"{name} fell outside the driver's 50-entry window"
