@@ -110,8 +110,9 @@ HEADLINE = [
 #: wide; the local estimator already sizes from files), so forcing either
 #: setting into the profile would bench an artifact of this box, not the
 #: profile. Pins (persist via cachepin) are already the registered
-#: default. Output-identity default-vs-profile is asserted by
-#: tools/profile_identity.py; the A/B table lives in SCALE.md round 10.
+#: default. Each HEADLINE query is checked against its oracle under this
+#: profile by tools/driver_sim.py with SPARK_GRAFT_SIM_CONF set to these
+#: confs; the A/B table lives in SCALE.md round 10.
 PROFILE_100TB = {
     "spark.graft.window.ranged": "true",
     "spark.graft.rarity.headK": "1000",

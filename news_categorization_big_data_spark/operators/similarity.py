@@ -20,7 +20,8 @@ in doubles) — JVM-side, no Python in the loop. Strategies:
   hyperplanes are md5-derived constants, the whole pipeline is
   reproducible in the DuckDB oracle.
 - **random-hyperplane LSH** via MLlib BucketedRandomProjectionLSH for
-  the approximate join variant (plans/similarity.py, rows-only check).
+  the approximate join variant (plans/similarity.py, whose oracle pins
+  the returned-count and recall booleans).
 """
 
 from __future__ import annotations

@@ -1,9 +1,11 @@
 """ML surface queries (SURVEY.md §2.12 "(ml)" rows): classification
 pipeline and extractive summarization as registered queries.
 
-Model outputs are engine-specific (hash-TF feature spaces, LBFGS fit) →
-rows-only driver checks; quality is asserted in tests/test_ml.py
-(accuracy threshold on a separable fixture, fallback contract, schema).
+Model internals are engine-specific (hash-TF feature spaces, LBFGS fit),
+so the oracles of the model queries pin what is engine-independent:
+exact counts plus booleans over the fitted model (accuracy floor,
+objective bound). Accuracy on a separable fixture and the fallback
+contract are asserted in tests/test_operators.py.
 """
 
 from __future__ import annotations

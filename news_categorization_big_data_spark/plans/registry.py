@@ -28,7 +28,7 @@ Builder = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     builder: Builder
-    oracle: str | None  # DuckDB SQL; None → driver runs rows-only check
+    oracle: str  # DuckDB SQL the driver hash-compares the query against
     tier: str  # "A" reference-literal, "B" relational-core, "C" llm-pipeline
     doc: str = ""
 
@@ -36,7 +36,7 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None, tier: str, doc: str = "") -> Callable[[Builder], Builder]:
+def register(name: str, oracle: str, tier: str, doc: str = "") -> Callable[[Builder], Builder]:
     """Decorator: register a (spark, sf_dir) -> DataFrame builder."""
 
     def wrap(fn: Builder) -> Builder:

@@ -1,10 +1,10 @@
-"""Shared fixtures: one SparkSession per test run + a DuckDB oracle
-comparator mirroring the driver's check (row count + schema-width +
-order-insensitive value comparison)."""
+"""Shared fixtures: one SparkSession per test run, DuckDB views over the
+test sf dir, and ``assert_oracle_match``, which runs the driver's check
+from tools/oracle.py (row count, sorted column names, order-insensitive
+value hash over DuckDB's ``fetchnumpy`` rendering)."""
 
 from __future__ import annotations
 
-import math
 import os
 import re
 from collections import Counter
@@ -17,6 +17,7 @@ from pyspark.sql.types import StructType
 from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.session import get_spark
 from tools import fixtures
+from tools.oracle import mismatch
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -117,52 +118,13 @@ def edge_axis(tmp_path_factory):
         con.close()
 
 
-def _canon(value):
-    """Canonicalize a cell for order-insensitive multiset comparison."""
-    if value is None:
-        return None
-    if isinstance(value, float):
-        if math.isnan(value):
-            return "NaN"
-        return float(value)
-    if isinstance(value, (list, tuple)):
-        return tuple(_canon(v) for v in value)
-    return value
-
-
-def rows_multiset(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    out = {}
-    for row in rows:
-        key = tuple(_canon(row[i]) for i in order)
-        out[key] = out.get(key, 0) + 1
-    return out
-
-
 def assert_oracle_match(spark_df, duck_con, sql, name=""):
-    """Driver-style comparison: column names, row count, exact multiset."""
-    spark_rows = spark_df.collect()
-    spark_cols = spark_df.columns
-    res = duck_con.execute(sql)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column mismatch spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
-    s_ms = rows_multiset([tuple(r) for r in spark_rows], spark_cols)
-    d_ms = rows_multiset(duck_rows, duck_cols)
-    if s_ms != d_ms:
-        only_s = {k: v for k, v in s_ms.items() if d_ms.get(k) != v}
-        only_d = {k: v for k, v in d_ms.items() if s_ms.get(k) != v}
-        sample_s = list(only_s.items())[:3]
-        sample_d = list(only_d.items())[:3]
-        raise AssertionError(
-            f"{name}: value mismatch; spark-only sample={sample_s} duck-only sample={sample_d}"
-        )
+    """The driver's own check, ``tools/oracle.py:mismatch``: row count,
+    sorted column names and the value hash over DuckDB's ``fetchnumpy``
+    rendering, after the driver's pandas sort of both sides (whose
+    TypeError on a list cell propagates)."""
+    reason = mismatch(spark_df, duck_con, sql)
+    assert reason is None, f"{name}: {reason}"
 
 
 _EXCHANGE_RE = re.compile(r"\bExchange (\w+)(?:\((.*?)\))?, ([A-Z_]+)")

@@ -97,15 +97,9 @@ def test_registry_window_covers_all_unofficial_queries():
 def test_queries_and_oracles_paired():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    assert set(oracles) <= set(qs)
-    # every oracle is non-trivial SQL; every rows-only omission is a
-    # deliberate None in the spec (not a lost entry)
+    assert set(oracles) == set(qs)
     for name, sql in oracles.items():
         assert "SELECT" in sql.upper(), name
-    rows_only = set(qs) - set(oracles)
-    assert rows_only == {
-        name for name, spec in REGISTRY.items() if spec.oracle is None
-    }
 
 
 def test_catalog_in_sync_with_registry():

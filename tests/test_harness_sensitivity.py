@@ -7,6 +7,9 @@ kind a refactor actually introduces."""
 
 from __future__ import annotations
 
+from datetime import date
+
+import duckdb
 import pytest
 
 from news_categorization_big_data_spark.plans import REGISTRY
@@ -86,3 +89,56 @@ def test_broken_ann_index_is_caught(spark, sf_dir, duck, monkeypatch):
         assert_oracle_match(
             mutated, duck, REGISTRY["q_sim_ann_lsh"].oracle, name="mut"
         )
+
+
+@pytest.fixture
+def mem_duck():
+    con = duckdb.connect()
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "rows, schema, sql, error",
+    [
+        # fetchnumpy renders HUGEINT as float64: "150.0" against "150"
+        pytest.param([(150,)], "x long", "SELECT 150::HUGEINT AS x", AssertionError, id="hugeint"),
+        pytest.param(
+            [(150,)],
+            "x long",
+            "SELECT SUM(v) AS x FROM (VALUES (100::BIGINT), (50::BIGINT)) t(v)",
+            AssertionError,
+            id="uncast_sum_bigint",
+        ),
+        # DATE arrives as a midnight datetime: "2020-01-02 00:00:00"
+        pytest.param(
+            [(date(2020, 1, 2),)], "x date", "SELECT DATE '2020-01-02' AS x", AssertionError, id="date"
+        ),
+        # the driver's pandas sort cannot hash a list cell
+        pytest.param(
+            [(1, [1.0, 2.0])],
+            "id int, x array<double>",
+            "SELECT 1 AS id, [1.0::DOUBLE, 2.0] AS x",
+            TypeError,
+            id="array_cell",
+        ),
+    ],
+)
+def test_driver_red_class_is_caught(spark, mem_duck, rows, schema, sql, error):
+    """Renderings the driver's hash fails must fail here too, even where
+    the values are equal in Python."""
+    df = spark.createDataFrame(rows, schema)
+    with pytest.raises(error):
+        assert_oracle_match(df, mem_duck, sql, name="red")
+
+
+def test_driver_green_class_passes(spark, mem_duck):
+    # the control: the same values in the renderings the driver accepts
+    df = spark.createDataFrame([(150, "2020-01-02")], "x long, d string")
+    assert_oracle_match(
+        df,
+        mem_duck,
+        "SELECT SUM(v)::BIGINT AS x, strftime(DATE '2020-01-02', '%Y-%m-%d') AS d "
+        "FROM (VALUES (100::BIGINT), (50::BIGINT)) t(v)",
+        name="green",
+    )

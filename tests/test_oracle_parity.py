@@ -1,7 +1,8 @@
-"""The primary correctness gate: every registered query with an oracle is
-hash-compared against DuckDB exactly the way the driver does (SURVEY.md
-§5.2.1), at the smoke scale factor. Queries without an oracle get a
-schema/rows smoke check."""
+"""The primary correctness gate: every registered query is compared with
+its DuckDB oracle at the smoke scale factor through
+``tools/oracle.py:mismatch`` — the driver's check (SURVEY.md §5.2.1):
+row count, sorted column names, pandas sort probe, and the value hash
+over DuckDB's ``fetchnumpy`` rendering."""
 
 from __future__ import annotations
 
@@ -10,24 +11,12 @@ import pytest
 from news_categorization_big_data_spark.plans import REGISTRY
 from tests.conftest import assert_oracle_match
 
-ORACLE_QUERIES = sorted(name for name, spec in REGISTRY.items() if spec.oracle)
-ROWS_ONLY_QUERIES = sorted(name for name, spec in REGISTRY.items() if not spec.oracle)
 
-
-@pytest.mark.parametrize("name", ORACLE_QUERIES)
+@pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_oracle_parity(name, spark, sf_dir, duck):
     spec = REGISTRY[name]
     df = spec.builder(spark, sf_dir)
     assert_oracle_match(df, duck, spec.oracle, name=name)
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
-def test_rows_only_smoke(name, spark, sf_dir):
-    spec = REGISTRY[name]
-    df = spec.builder(spark, sf_dir)
-    rows = df.collect()
-    assert df.columns, f"{name}: no columns"
-    assert rows is not None
 
 
 def test_entry_smoke(spark):

@@ -1,6 +1,6 @@
 """Generate CATALOG.md — the full registered-query catalog — from the
 live REGISTRY: `python tools/gen_catalog.py`. One row per query with
-tier, oracle coverage, and the first sentence of its doc, so the
+tier and the first sentence of its doc, so the
 catalog can never drift from the code (regenerate after registering)."""
 
 from __future__ import annotations
@@ -33,22 +33,20 @@ def main() -> None:
         "# Query catalog",
         "",
         "Generated by `python tools/gen_catalog.py` from the live registry — "
-        f"{len(REGISTRY)} queries in driver evaluation order. "
-        "`oracle` = hash-checked against DuckDB; `rows-only` = "
-        "deliberate rows/pytest-property check (sketches, MLlib model "
-        "internals). `pending` = registered after the current round's "
-        "50-slot driver window froze; official row arrives next "
+        f"{len(REGISTRY)} queries in driver evaluation order, each "
+        "hash-checked against its DuckDB oracle. A summary starting "
+        "**pending** marks a query registered after the current round's "
+        "50-slot driver window froze; its official row arrives next "
         "rotation (pytest- and driver-sim-green meanwhile).",
         "",
-        "| # | query | tier | check | summary |",
-        "|---|---|---|---|---|",
+        "| # | query | tier | summary |",
+        "|---|---|---|---|",
     ]
     for i, (name, spec) in enumerate(REGISTRY.items(), start=1):
-        check = "oracle" if spec.oracle else "rows-only"
-        if name in ROTATION_PENDING:
-            check += ", pending"
         summary = first_sentence(spec.doc).replace("|", "\\|")
-        lines.append(f"| {i} | {name} | {spec.tier} | {check} | {summary} |")
+        if name in ROTATION_PENDING:
+            summary = f"**pending** {summary}"
+        lines.append(f"| {i} | {name} | {spec.tier} | {summary} |")
     out = str(REPO_ROOT / "CATALOG.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
