@@ -28,7 +28,7 @@ Builder = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     builder: Builder
-    oracle: str  # DuckDB SQL the driver hash-compares the query against
+    oracle: str  # DuckDB SQL the benchmark runner hash-compares the query against
     tier: str  # "A" reference-literal, "B" relational-core, "C" llm-pipeline
     doc: str = ""
 

@@ -1,5 +1,5 @@
 """Shared fixtures: one SparkSession per test run, DuckDB views over the
-test sf dir, and ``assert_oracle_match``, which runs the driver's check
+test sf dir, and ``assert_oracle_match``, which runs the result check
 from tools/oracle.py (row count, sorted column names, order-insensitive
 value hash over DuckDB's ``fetchnumpy`` rendering)."""
 
@@ -119,9 +119,9 @@ def edge_axis(tmp_path_factory):
 
 
 def assert_oracle_match(spark_df, duck_con, sql, name=""):
-    """The driver's own check, ``tools/oracle.py:mismatch``: row count,
+    """The benchmark runner's result check, ``tools/oracle.py:mismatch``: row count,
     sorted column names and the value hash over DuckDB's ``fetchnumpy``
-    rendering, after the driver's pandas sort of both sides (whose
+    rendering, after a pandas sort of both sides (whose
     TypeError on a list cell propagates)."""
     reason = mismatch(spark_df, duck_con, sql)
     assert reason is None, f"{name}: {reason}"

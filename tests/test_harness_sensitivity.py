@@ -114,7 +114,7 @@ def mem_duck():
         pytest.param(
             [(date(2020, 1, 2),)], "x date", "SELECT DATE '2020-01-02' AS x", AssertionError, id="date"
         ),
-        # the driver's pandas sort cannot hash a list cell
+        # the runner's pandas sort cannot hash a list cell
         pytest.param(
             [(1, [1.0, 2.0])],
             "id int, x array<double>",
@@ -125,7 +125,7 @@ def mem_duck():
     ],
 )
 def test_driver_red_class_is_caught(spark, mem_duck, rows, schema, sql, error):
-    """Renderings the driver's hash fails must fail here too, even where
+    """Renderings the runner's hash fails must fail here too, even where
     the values are equal in Python."""
     df = spark.createDataFrame(rows, schema)
     with pytest.raises(error):
@@ -133,7 +133,7 @@ def test_driver_red_class_is_caught(spark, mem_duck, rows, schema, sql, error):
 
 
 def test_driver_green_class_passes(spark, mem_duck):
-    # the control: the same values in the renderings the driver accepts
+    # the control: the same values in the renderings the runner accepts
     df = spark.createDataFrame([(150, "2020-01-02")], "x long, d string")
     assert_oracle_match(
         df,

@@ -1,6 +1,6 @@
 """The primary correctness gate: every registered query is compared with
 its DuckDB oracle at the smoke scale factor through
-``tools/oracle.py:mismatch`` — the driver's check (SURVEY.md §5.2.1):
+``tools/oracle.py:mismatch`` — the result check (SURVEY.md §5.2.1):
 row count, sorted column names, pandas sort probe, and the value hash
 over DuckDB's ``fetchnumpy`` rendering."""
 

@@ -1,4 +1,4 @@
-"""Simulates the external driver against the DuckDB oracle:
+"""Simulates the external benchmark runner against the DuckDB oracle:
 
     python tools/driver_sim.py              # entry() smoke, then every query
     python tools/driver_sim.py q_a q_b ...  # only the named queries
@@ -7,19 +7,19 @@ A vanilla SparkSession (NOT the engine's tuned factory) imports
 __spark_entry__ from the checkout this file sits in, so a scratch copy
 of another commit tests that commit. Each queries() entry is compared
 with its oracle_sql() on DuckDB views over the same sf dir through
-tools/oracle.py, the driver's own check. A full run goes in insertion
-order, like the driver, and marks where the driver's 50-entry
+tools/oracle.py, the runner's own check. A full run goes in insertion
+order, like the runner, and marks where the runner's 50-entry
 correctness window ends.
 
 Deliberately NO clearCache between queries — one session, like the real
-driver. Cache lifetime is query-scoped: the registry wrapper releases
+runner. Cache lifetime is query-scoped: the registry wrapper releases
 the previous query's pins (functions/cachepin.py) at the start of every
 build, and the sim releases the last query's pins at exit. Per-query
 timings are not isolated (JVM/JIT/page-cache warmth carries over);
 bench.py is the timing surface.
 
 SPARK_GRAFT_SIM_SF (optional): the sf dir both Spark and DuckDB read
-(default sf0.01, the driver's point); an edge axis of tools/fixtures.py
+(default sf0.01, the runner's point); an edge axis of tools/fixtures.py
 works too.
 
 SPARK_GRAFT_SIM_CONF (optional): comma-separated k=v session confs set
@@ -73,7 +73,7 @@ def main(names: list[str]) -> int:
     t_all = time.time()
     for pos, name in enumerate(names or queries, 1):
         if not names and pos == 51:
-            print("  ---- driver's 50-entry correctness window ends here ----", flush=True)
+            print("  ---- runner's 50-entry correctness window ends here ----", flush=True)
         t0 = time.time()
         try:
             reason = mismatch(queries[name](spark, SF), con, oracles[name])

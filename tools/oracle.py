@@ -1,13 +1,13 @@
-"""The external driver's result check, in one place: a query's Spark rows
+"""The benchmark runner's result check, in one place: a query's Spark rows
 against its DuckDB oracle by row count, sorted column names and an
 order-insensitive value hash.
 
-The hash is taken the way the driver takes it. The oracle is fetched
+The hash is taken the way the benchmark runner takes it. The oracle is fetched
 through ``fetchnumpy`` (not ``fetchall``): nullable BIGINT arrives as a
 masked int64 array and renders ``5``, while HUGEINT (``count_if``, an
 un-cast ``SUM`` of BIGINT) arrives as float64 and renders ``150.0``
 against Spark's ``150``, and DATE arrives as a midnight datetime. Both
-result sets also go through the driver's pandas sort, where a list or
+result sets also go through the runner's pandas sort, where a list or
 array cell is unhashable and raises TypeError.
 
 ``mismatch`` is the whole check; tools/driver_sim.py and the tests'
@@ -57,7 +57,7 @@ def _numpy_rows(arrs, cols) -> list[tuple]:
 
 
 def sort_probe(rows, cols) -> None:
-    """The driver's pandas sort over every column; raises where it raises."""
+    """The runner's pandas sort over every column; raises where it raises."""
     df = pd.DataFrame(list(rows), columns=list(cols))
     if len(df):
         df.sort_values(by=sorted(df.columns), inplace=False)
