@@ -24,11 +24,10 @@ from __future__ import annotations
 import json
 import os
 import subprocess
-import time
 
-from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.session import get_spark
 from tools.fixtures import ensure_sf1
+from tools.query_profile import run_passes
 
 
 def _git_head() -> str:
@@ -119,53 +118,45 @@ PROFILE_100TB = {
 }
 
 
-def _run_passes(spark, sf_dir: str, reps: int) -> dict[str, list[float]]:
-    """INTERLEAVED min-ensemble measurement (round-13 judge item 2).
+def headline_passes(spark, sf_dir: str, reps: int) -> dict[str, list[float]]:
+    """Each HEADLINE query's wall per pass, from ``reps`` INTERLEAVED
+    passes of tools/query_profile.py's ``run_passes`` (round-13 judge
+    item 2).
 
     This host's ambient variance spans 2-7x between idle-looking runs
-    (round 13: six sessions of the same code read 26.9-55.1 s; the
-    driver stamped the noisiest one, and q_tfidf_pairs recorded 4.61 s
-    vs 1.40 s on identical code). Back-to-back per-query reps are
-    DEFENSELESS against that: a noisy-neighbor burst eats all reps of
-    whichever query it lands on. The fix is structural — run N full
-    PASSES over the whole headline set and take each query's min ACROSS
-    passes, so a burst must span the entire multi-minute run to poison
-    any query's min. Pass 1 additionally pays one-time whole-stage-
-    codegen JIT (reported as cold_first_run); a 100 TB engine amortizes
-    that to zero, so steady-state min is the number that transfers.
+    (round 13: six sessions of the same code read 26.9-55.1 s). Back-to-
+    back per-query reps are DEFENSELESS against that: a noisy-neighbor
+    burst eats all reps of whichever query it lands on. Taking each
+    query's min ACROSS full passes means a burst must span the entire
+    multi-minute run to poison any min. Pass 1 additionally pays one-time
+    whole-stage-codegen JIT (reported as cold_first_run); a 100 TB engine
+    amortizes that to zero, so steady-state min is the number that
+    transfers. The timed region is the builder plus a noop-sink write:
+    Dataset.count() column-prunes through the final Aggregate (found
+    round 10: count->noop at sf0.1 moved q_tpch_q1 2.9x and the 30-query
+    total +20% — SCALE.md). A failed query raises, so none ever drops
+    out of the total silently.
     """
-    per_pass: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for _ in range(reps):
-        for name in HEADLINE:
-            spec = REGISTRY[name]
-            # Drop CacheManager entries between repetitions: a plan that
-            # persists an intermediate would otherwise be MEMOIZED across
-            # runs (CacheManager matches by analyzed plan), and the min
-            # would measure cache reads, not the query. Steady-state =
-            # JIT warm, data cold.
-            spark.catalog.clearCache()
-            start = time.perf_counter()
-            # noop-sink write: executes the FULL plan without driver-
-            # collecting rows. The previous harness used count(), whose
-            # comment claimed the same — wrong: Dataset.count() column-
-            # prunes through the final Aggregate, deleting every unused
-            # aggregate function, so a pure-aggregate query like
-            # q_tpch_q1 was timed WITHOUT its eight money sums (found
-            # round 10 while chasing a phantom regression; measured
-            # bridge count->noop at sf0.1: q_tpch_q1 2.9x, q_group_stats
-            # 2.3x, 30-query total +20% — SCALE.md). The noop sink
-            # consumes every output column, so nothing prunes.
-            spec.builder(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            per_pass[name].append(round(time.perf_counter() - start, 3))
-    return per_pass
+    records = run_passes(spark, sf_dir, HEADLINE, reps)
+    failed = {n: recs[-1]["error"] for n, recs in records.items() if recs[-1]["error"]}
+    if failed:
+        raise RuntimeError(f"headline queries failed: {failed}")
+    return {n: [r["wall_s"] for r in recs] for n, recs in records.items()}
+
+
+def sf_of(sf_dir: str) -> float | None:
+    """The scale factor of an ``sf<N>`` fixture dir; None for any other
+    dir, e.g. an edge axis such as skew1."""
+    try:
+        return float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
+    except ValueError:
+        return None
 
 
 def final_line(
     total: float,
     timings: dict[str, float],
-    sf: float,
+    sf: float | None,
     reps: int,
     per_pass: dict[str, list[float]],
     git: str,
@@ -241,7 +232,7 @@ def sf1_queries_line(sf1_timings: dict[str, float], reps: int) -> str:
 def detail_line(
     per_pass: dict[str, list[float]],
     reps: int,
-    sf: float,
+    sf: float | None,
     sf1_detail: dict | None = None,
 ) -> str:
     """Full diagnostics, printed BEFORE the final line (allowed to be
@@ -283,7 +274,7 @@ def detail_line(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
+    sf = sf_of(sf_dir)
     profile = os.environ.get("SPARK_GRAFT_PROFILE", "")
     spark = get_spark("ncbds-bench")
     if profile == "100tb":
@@ -297,7 +288,7 @@ def main() -> None:
     # N via SPARK_GRAFT_BENCH_REPS (default 5 per the round-13 judge's
     # protocol; the driver's wall budget allows it).
     reps = max(2, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5")))
-    per_pass = _run_passes(spark, sf_dir, reps)
+    per_pass = headline_passes(spark, sf_dir, reps)
     timings = {name: min(runs) for name, runs in per_pass.items()}
     total = round(sum(timings.values()), 3)
 
@@ -316,19 +307,12 @@ def main() -> None:
         sf1_dir = ensure_sf1(os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1"))
         if sf1_dir:
             sf1_reps = max(2, int(os.environ.get("SPARK_GRAFT_SF1_REPS", "2")))
-            sf1_pass = _run_passes(spark, sf1_dir, sf1_reps)
+            sf1_pass = headline_passes(spark, sf1_dir, sf1_reps)
             sf1_timings = {n: min(r) for n, r in sf1_pass.items()}
             sf1_total = round(sum(sf1_timings.values()), 3)
             sf1_summary = {"value": sf1_total, "unit": "sec",
                            "reps": sf1_reps, "sf": 1.0}
             sf1_detail = {"queries": sf1_timings, "reps": sf1_reps}
-
-    # Bench teardown releases the last query's pins (the registry wrapper
-    # only releases at the NEXT build; ADVICE round 9) and keeps the
-    # module-global pin list empty for any caller embedding bench runs.
-    from news_categorization_big_data_spark.functions.cachepin import release_pins
-
-    release_pins()
 
     # Detail FIRST (long line, truncation-tolerant), per-query sf1
     # SECOND-TO-LAST (compact, inside the tail capture — see

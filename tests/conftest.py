@@ -6,7 +6,6 @@ value hash over DuckDB's ``fetchnumpy`` rendering)."""
 from __future__ import annotations
 
 import os
-import re
 from collections import Counter
 from collections.abc import Iterator, Mapping
 from typing import NamedTuple
@@ -14,6 +13,7 @@ from typing import NamedTuple
 import pytest
 from pyspark.sql.types import StructType
 
+from news_categorization_big_data_spark.functions.plan_text import exchange_counts
 from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.session import get_spark
 from tools import fixtures
@@ -125,36 +125,6 @@ def assert_oracle_match(spark_df, duck_con, sql, name=""):
     TypeError on a list cell propagates)."""
     reason = mismatch(spark_df, duck_con, sql)
     assert reason is None, f"{name}: {reason}"
-
-
-_EXCHANGE_RE = re.compile(r"\bExchange (\w+)(?:\((.*?)\))?, ([A-Z_]+)")
-
-
-def exchange_counts(plan: str) -> Counter:
-    """Exchanges of a physical plan string, counted by kind: ``broadcast``,
-    ``reused``, else ``<partitioning>/<shuffle origin>`` with the keys of
-    a hash or range partitioning spelled out and expression ids dropped —
-    ``hashpartitioning(user_id)/ENSURE_REQUIREMENTS`` is a shuffle the
-    plan needs, ``hashpartitioning(doc_id)/REPARTITION_BY_NUM`` the keyed
-    repartition of functions/partitioning.py fan_out(by=...),
-    ``SinglePartition/ENSURE_REQUIREMENTS`` a global window or sort.
-    A line naming an Exchange in any other form counts as ``unparsed``,
-    so no exchange escapes the count."""
-    kinds: Counter = Counter()
-    for line in plan.splitlines():
-        if "BroadcastExchange" in line:
-            kinds["broadcast"] += 1
-        elif "ReusedExchange" in line:
-            kinds["reused"] += 1
-        elif m := _EXCHANGE_RE.search(line):
-            part, args, origin = m.groups()
-            if part in ("hashpartitioning", "rangepartitioning"):
-                keys = re.sub(r"#\d+L?", "", args.rsplit(", ", 1)[0])
-                part = f"{part}({keys})"
-            kinds[f"{part}/{origin}"] += 1
-        elif "Exchange" in line:
-            kinds["unparsed"] += 1
-    return kinds
 
 
 def assert_map_only(

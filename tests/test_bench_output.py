@@ -99,3 +99,14 @@ def test_final_line_survives_single_pass_data():
     assert obj["canary_last"] == 1.0
     assert obj["worst_noise_ratio"] == 1.0
     assert "sf1" not in obj and "profile" not in obj
+
+
+def test_sf_is_null_for_a_dir_not_named_sf_n():
+    # an edge axis (FIXTURES.md) has no scale factor in its name: the
+    # bench reports sf null and runs on
+    assert bench.sf_of("/tmp/sf1") == 1.0 and bench.sf_of("data/sf0.1/") == 0.1
+    assert bench.sf_of("/tmp/skew1") is None
+    per_pass = {name: [1.0] for name in bench.HEADLINE}
+    assert json.loads(bench.detail_line(per_pass, 1, None))["sf"] is None
+    assert json.loads(bench.final_line(1.0, {}, None, 1, per_pass, "deadbee"))["sf"] is None
+

@@ -8,13 +8,14 @@ class round 12 measured as a real OOM on the skew fixture
 The pin is mechanical: building each plan with
 ``spark.sql.autoBroadcastJoinThreshold = -1`` (and its AQE twin)
 disables every ESTIMATE-driven broadcast, so any BroadcastExchange left
-in the plan is hint-driven. The walker below (same subtree logic as
-tools/broadcast_audit.py) then asserts none of those surviving hints
-sits directly over an SF-scaling table scan — only SF-constant
-nation/region scans and provably bounded one-row/limited aggregates may
-stay pinned. q_join_broadcast is excluded here: it demonstrates the
-size-GATED hint (functions/scale.py broadcast_if_small) and has its own
-gate tests below."""
+in the plan is hint-driven. tools/broadcast_audit.py's hints-mode walk
+(``audit_plan(plan, hints_mode=True)``) then asserts none of those
+surviving hints sits directly over an SF-scaling table scan — only
+SF-constant nation/region scans, explicit limits and aggregates keyed
+on schema-bounded columns (``agg_keys_bounded``) may stay pinned.
+q_join_broadcast is excluded here: it demonstrates the size-GATED hint
+(functions/scale.py broadcast_if_small) and has its own gate tests
+below."""
 
 from __future__ import annotations
 
@@ -27,52 +28,7 @@ from news_categorization_big_data_spark.functions.scale import broadcast_if_smal
 from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.sources.tables import load_table
 from tests.conftest import exchange_counts, physical_plan
-
-#: Every table the testdata generator scales linearly with SF. A
-#: broadcast hint pinned over a raw scan of any of these is a latent
-#: 100-TB job killer regardless of today's bench wall time.
-SF_SCALING = (
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-#: Subtree markers under which a BroadcastExchange payload is bounded.
-#: These plans are built with estimate broadcasts DISABLED, so every
-#: surviving hint is pinned and forced at any size — which means a
-#: KEYED aggregate bounds nothing when its key scales with the corpus
-#: (the round-13 q_tpch_q18 finding: qualifying orderkeys ~1.5% of all
-#: orders, linear in SF). Only keyless (one-row) aggregates and
-#: explicit limits exempt; keyed aggregates are walked through to the
-#: leaf by _bounds() below.
-_BOUNDED = (
-    "GlobalLimit",
-    "TakeOrderedAndProject",
-)
-
-_AGGS = ("HashAggregate", "ObjectHashAggregate", "SortAggregate")
-
-
-def _bounds(line: str) -> bool:
-    """Under a PINNED hint only an explicit limit, a keyless
-    (one-output-row) aggregate, or an aggregate grouped solely on
-    schema-bounded attribute columns provably bounds the broadcast
-    payload (shared rule: tools/broadcast_audit.agg_keys_bounded).
-    Corpus-keyed aggregates and shuffles (the old exemptions — sound
-    for AQE-measured selection, unsound for a forced hint) are walked
-    THROUGH to the leaf scan."""
-    from tools.broadcast_audit import agg_keys_bounded
-
-    if any(m in line for m in _BOUNDED):
-        return True
-    if any(m in line for m in _AGGS):
-        return agg_keys_bounded(line)
-    return False
+from tools.broadcast_audit import audit_plan
 
 #: The round-13 purge set: the 14 TPC-H queries plus the two join
 #: operators that previously pinned customer/supplier/part broadcasts
@@ -96,33 +52,6 @@ PURGED = [
     "q_join_inner_equi",
     "q_join_theta_range",
 ]
-
-
-def _hinted_sf_broadcast_leaves(plan: str, lookahead: int = 14) -> list[str]:
-    """Leaf lines of every BroadcastExchange whose subtree reaches an
-    SF-scaling FileScan with no bounded/measured node in between."""
-    lines = plan.splitlines()
-    hits: list[str] = []
-    for i, ln in enumerate(lines):
-        if "BroadcastExchange" not in ln:
-            continue
-        sub: list[str] = []
-        bounded = False
-        for nxt in lines[i + 1 : i + 1 + lookahead]:
-            sub.append(nxt)
-            if _bounds(nxt):
-                bounded = True
-                break
-        if bounded:
-            continue
-        for leaf in sub:
-            if "FileScan" in leaf or "InMemoryTableScan" in leaf:
-                if any(f"{t}.parquet" in leaf for t in SF_SCALING) or (
-                    "InMemoryTableScan" in leaf
-                ):
-                    hits.append(leaf.strip()[:160])
-                break
-    return hits
 
 
 def _no_estimate_broadcast_plan(spark, name_or_df, sf_dir=None) -> str:
@@ -155,7 +84,7 @@ def _no_estimate_broadcast_plan(spark, name_or_df, sf_dir=None) -> str:
 @pytest.mark.parametrize("name", PURGED)
 def test_no_hint_pinned_broadcast_of_sf_scaling_frame(spark, sf_dir, name):
     plan = _no_estimate_broadcast_plan(spark, name, sf_dir)
-    flagged = _hinted_sf_broadcast_leaves(plan)
+    flagged = audit_plan(plan, hints_mode=True)
     assert not flagged, f"{name} pins a broadcast over an SF-scaling scan:\n" + "\n".join(
         flagged
     ) + "\n\n" + plan
@@ -217,7 +146,7 @@ def test_q18_strict_walker_flags_ungated_agg_broadcast(spark, sf_dir):
     plan = _no_estimate_broadcast_plan(spark, "q_tpch_q18", sf_dir)
     if not exchange_counts(plan)["broadcast"]:
         pytest.skip("gate refused at this fixture size — shape absent")
-    flagged = _hinted_sf_broadcast_leaves(plan)
+    flagged = audit_plan(plan, hints_mode=True)
     assert flagged, "strict walker failed to flag the q18 keyed-agg broadcast:\n" + plan
 
 
@@ -228,7 +157,7 @@ def test_q18_broadcast_gated_not_pinned(spark, sf_dir, monkeypatch):
     semi-join falls through to AQE's measured-size decision."""
     monkeypatch.setenv("SPARK_GRAFT_BROADCAST_GATE_BYTES", "0")
     plan = _no_estimate_broadcast_plan(spark, "q_tpch_q18", sf_dir)
-    flagged = _hinted_sf_broadcast_leaves(plan)
+    flagged = audit_plan(plan, hints_mode=True)
     assert not flagged, "gate=0 still pins a broadcast:\n" + "\n".join(flagged)
     assert exchange_counts(plan) == _Q18_SHUFFLES, plan
 

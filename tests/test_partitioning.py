@@ -118,8 +118,8 @@ def test_post_shuffle_lineage_uses_probe(spark, sf_dir):
 def test_uncached_file_scans_counts_only_storage_hits():
     """The plan-text scan counter must ignore FileScans nested inside an
     InMemoryRelation render (printed once per cache reader) and count
-    top-level ones — the audit contract scan_sweep and the plan-shape
-    tests rely on."""
+    top-level ones — the contract tools/query_profile.py's ``scans`` and
+    the plan-shape tests rely on."""
     from news_categorization_big_data_spark.functions.plan_text import (
         uncached_file_scans,
     )
