@@ -20,7 +20,14 @@ Decision order:
    fan_out to a scan plus narrow transforms, where width is file-driven;
    a caller fanning out POST-shuffle lineage must pass ``partitions``
    explicitly (the estimate would describe the leaf scan, not the
-   shuffle).
+   shuffle). Byte splits are not row groups: a parquet scan task reads
+   only the row groups whose midpoints fall in its split, so a 45 MB
+   single-row-group file packs into 4 partitions yet one task reads
+   every row. When the packed count already reaches the target width
+   and the listing holds fewer files than the target, the estimate is
+   capped at the files' total row-group count, read from their footers
+   on the driver (sources/footer.py) — a handful of footers at most,
+   and none on the paths the gate turns away.
 4. Last resort (non-``file:`` scheme, empty file listing, in-memory
    relations): probe ``df.rdd.getNumPartitions()``. On Spark Connect
    (no ``sparkContext``/``df.rdd``) the probe fails and fan_out degrades
@@ -33,6 +40,8 @@ import os
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+from news_categorization_big_data_spark.sources.footer import row_groups
 
 #: Spark conf defaults (mirrors SQLConf; conf.get falls back to these
 #: when the session never set them explicitly).
@@ -116,8 +125,8 @@ def _narrow_file_lineage(df: DataFrame) -> bool:
     return not any(node in plan for node in _WIDTH_CHANGING_NODES)
 
 
-def _scan_width_estimate(df: DataFrame) -> int | None:
-    """Estimate the scan's partition count the way Spark's
+def _packed_partitions(df: DataFrame) -> int | None:
+    """The scan's partition count as Spark's
     FilePartition.getFilePartitions packs splits — maxSplitBytes =
     min(maxPartitionBytes, max(openCost, totalBytes/minPartitionNum));
     splittable files are cut into maxSplitBytes chunks, then chunks
@@ -163,6 +172,27 @@ def _scan_width_estimate(df: DataFrame) -> int | None:
             current = 0
         current += sp + open_cost
     return max(partitions, 1)
+
+
+def _scan_width_estimate(df: DataFrame, target: int | None = None) -> int | None:
+    """The scan's effective width: the packed partition count, capped at
+    the input files' total row-group count when the packing alone would
+    already reach ``target`` (default: the session's default
+    parallelism) from fewer files than ``target`` — the one case where
+    byte splits can hide a scan that runs in fewer tasks than it packs.
+    None where :func:`_packed_partitions` can't derive a width."""
+    packed = _packed_partitions(df)
+    if packed is None:
+        return None
+    spark = df.sparkSession
+    target = target or _default_parallelism(spark)
+    if target is None or packed < target:
+        return packed
+    files = df.inputFiles()
+    if len(files) >= target:
+        return packed
+    groups = row_groups(spark, files)
+    return packed if groups is None else max(min(packed, groups), 1)
 
 
 def _rdd_width(df: DataFrame) -> int | None:
@@ -223,19 +253,15 @@ def fan_out(
     if spark.conf.get("spark.graft.fanout.enabled", "true").lower() == "false":
         return df
     explicit = partitions or int(spark.conf.get("spark.graft.fanout.partitions", "0"))
+    target = explicit or _default_parallelism(spark)
     if force:
-        width = explicit or _default_parallelism(spark)
-        return _repart(width) if width else df
-    current = _scan_width_estimate(df)
+        return _repart(target) if target else df
+    current = _scan_width_estimate(df, target)
     if current is None:
         current = _rdd_width(df)
-    if explicit:
-        if current is not None and current >= explicit:
-            return df
-        return _repart(explicit)
     if current is None:
-        return df  # Connect / unprobeable without explicit width: safe no-op
-    target = _default_parallelism(spark)
+        # Connect / unprobeable: the explicit width wins, else safe no-op
+        return _repart(explicit) if explicit else df
     if target is None or current >= target:
         return df
     return _repart(target)

@@ -20,6 +20,15 @@ flavors to session-UTC TIMESTAMP: ns-longs via integer floor-division
 engine's UTC session timezone reinterprets the wall-clock value as the
 same instant — value- and rendering-identical to DuckDB's naive read of
 the same file.
+
+Opening a table runs no Spark job: ``spark.read.parquet(path)`` alone
+would infer the schema with one (``mergeSchemasInParallel`` collects a
+one-footer RDD), so the loader reads that footer on the driver
+(sources/footer.py) and passes the schema it yields — exactly the
+inferred one — to ``spark.read.schema(...)``. Where the footer reader
+can't stand in for inference (Spark Connect, summary files, partition
+subdirectories, a missing path) it returns None and the loader takes
+plain ``spark.read.parquet``, which raises Spark's own errors.
 """
 
 from __future__ import annotations
@@ -32,14 +41,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from news_categorization_big_data_spark.session import tune_session
+from news_categorization_big_data_spark.sources.footer import footer_schema
 
 #: Per-session cache of loaded (sf_dir, table) frames. A DataFrame is an
 #: immutable logical plan, so reusing one across queries is semantically
-#: identical to rebuilding it — but rebuilding pays parquet footer
-#: schema inference + file listing on EVERY load_table call, which the
-#: round-11 planning-time audit measured as the dominant driver-side
-#: cost of the pure-plan queries (q_tpch_q8 loads 8 tables ≈ 0.7 s of
-#: its 1.3 s build; registry-wide ~40 s of the 119 s total). Keyed
+#: identical to rebuilding it — but rebuilding pays a footer read, the
+#: file listing and analysis on EVERY load_table call (the round-11
+#: planning-time audit measured table loads, each with a schema-inference
+#: job then, as the dominant driver-side cost of the pure-plan queries:
+#: q_tpch_q8 loading 8 tables ≈ 0.7 s of its 1.3 s build). Keyed
 #: weakly by session so a stopped session's plans are never resurrected;
 #: keyed by (sf_dir, name) so tests' per-tmp_path fixtures never
 #: collide, with the path's mtime_ns stored IN the value as a freshness
@@ -84,7 +94,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = cache.get(key)
     if hit is not None and hit[0] == mtime:
         return hit[1]
-    df = spark.read.parquet(path)
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     for field in df.schema.fields:
         if isinstance(field.dataType, T.LongType) and field.name == "ts":
             # ns → µs truncation (matches DuckDB's read of the same file).

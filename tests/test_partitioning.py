@@ -9,6 +9,7 @@ import pytest
 from news_categorization_big_data_spark.functions import partitioning
 from news_categorization_big_data_spark.functions.partitioning import (
     _byte_string,
+    _packed_partitions,
     _scan_width_estimate,
     fan_out,
 )
@@ -47,12 +48,12 @@ def test_default_path_never_touches_df_rdd(spark, sf_dir, monkeypatch):
 
 
 def test_estimate_matches_actual_scan_width(spark, sf_dir):
-    """The FilePartition-formula estimate must agree with the width
+    """The FilePartition-formula packing count must agree with the width
     Spark actually produces for a plain parquet scan (same formula, so
     exact agreement — not a tolerance check)."""
     for table in ("documents", "lineitem", "events"):
         df = load_table(spark, sf_dir, table)
-        est = _scan_width_estimate(df)
+        est = _packed_partitions(df)
         assert est == df.rdd.getNumPartitions(), table
 
 
