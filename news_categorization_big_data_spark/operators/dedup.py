@@ -4,18 +4,22 @@ The scale architecture (100 TB of documents):
 
 - **exact**: hash the text to a 16-byte key, groupBy the hash — the
   shuffle carries keys, never documents.
-- **n-gram Jaccard (exact near-dup)**: explode distinct k-word shingles,
-  self-join on shingle, count intersections. The join key distribution
-  is the shingle document-frequency distribution — cap it (drop shingles
-  appearing in > max_df docs, which carry no discriminative signal) so
-  no reducer sees a quadratic bucket.
+- **n-gram Jaccard (exact near-dup)**: each document's sorted distinct
+  shingle hashes; only each set's PPJoin prefix is bucketed by hash,
+  candidate pairs come from inside the buckets, and an exact set
+  intersection verifies them. The bucket key distribution is the
+  shingle document-frequency distribution — cap it (drop buckets
+  holding > max_df docs, which carry no discriminative signal) so no
+  reducer sees a quadratic bucket.
 - **MinHash + LSH (approximate near-dup, the scale path)**: fixed-size
   signature per doc (k min-hashes), banded into b bands; candidate pairs
-  are equi-joins on (band_index, band_hash) — linear shuffle, no
+  come from (band_index, band_hash) buckets — linear shuffle, no
   pairwise work outside buckets. Jaccard is then verified exactly on the
   candidates only.
-- **SimHash**: per-doc 16-bit sketch whose Hamming distance approximates
-  cosine over the token multiset; near-dup candidates share the sketch.
+- **SimHash**: per-doc sketch whose Hamming distance approximates
+  cosine over the token multiset; candidates agree exactly on ≥1 of
+  the sketch's bit-blocks (pigeonhole banding), and every candidate's
+  distance is verified.
 
 All hashes are md5-derived (functions/hashing.py) so every stage is
 reproducible in the DuckDB oracle; swap hash60 → xxhash64 for ~3-5x
@@ -29,6 +33,11 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from news_categorization_big_data_spark.functions.groupcollapse import (
+    expand_group_pairs,
+    grouped_ids,
+    member_pairs,
+)
 from news_categorization_big_data_spark.functions.hashing import (
     hash60,
     hash60_pair,
@@ -52,23 +61,56 @@ MINHASH_K = 8
 MINHASH_BANDS = 2
 
 
-def pairs_from_buckets(
-    buckets: DataFrame, ids_col: str, out_a: str, out_b: str
+def band_rows(
+    frame: DataFrame,
+    band_keys: list,
+    carry: list,
+    max_df: int | None = None,
+    weight: str | None = None,
 ) -> DataFrame:
-    """Distinct ordered id pairs co-occurring in ≥1 bucket.
+    """(carry..., band_idx, band_key) rows: one per band of each row of
+    ``frame``, with the ``max_df`` bucket skew cap — the banding step
+    of every banded-LSH path (banded_pairs, lsh_probe_pairs,
+    operators/similarity.py:embedding_near_dup_pairs).
 
-    The shared tail of every bucketed candidate generator (shingle
-    buckets, MinHash bands, SRP bands): two generates inside each
-    bucket, ordered to halve the pair space, deduped across buckets.
-    No pairwise work ever happens outside a bucket.
-    """
-    return (
-        buckets.where(F.size(ids_col) > 1)
-        .select(F.explode(ids_col).alias(out_a), F.col(ids_col))
-        .select(out_a, F.explode(ids_col).alias(out_b))
-        .where(F.col(out_a) < F.col(out_b))
-        .distinct()
+    ``max_df`` is the SKEW CAP (round-6 VERDICT item): a
+    boilerplate/template cluster of m near-identical docs puts all m
+    ids into one band bucket and would emit O(m^2) pairs in a single
+    task. Buckets holding more than max_df docs are dropped ENTIRELY
+    (recall trade, never a wrong pair — the same semantics as the
+    jaccard prefix cap). A row counts ``weight`` docs when that column
+    is given (a collapsed group row counts its members; the column is
+    dropped with the count), else one. Physical shape matters at 100
+    TB: the bucket size is a window count over the SAME (band_idx,
+    band_key) shuffle the bucket aggregation or join already needs —
+    Catalyst reuses the exchange, so the corpus is scanned and
+    min-hashed exactly ONCE and the big side shuffled exactly once
+    (measured: a separate count+broadcast-anti-join branch re-scans and
+    re-hashes the whole corpus, 2 scans / 5 exchanges vs 1 / 3 here).
+    WindowExec buffers each bucket spill-safely (UnsafeExternalSorter),
+    and the filter runs BEFORE any collect_list, so an over-cap
+    bucket's member array is never aggregated into memory — the failure
+    mode of filtering on size(_ids) after the fact. Pick max_df >> the
+    largest true near-dup cluster you expect (LSH_MAX_DF's doc); a
+    capped bucket is template sludge whose pairs a curation pipeline
+    removes wholesale by other means."""
+    band_structs = F.array(
+        *[
+            F.struct(F.lit(b).alias("band_idx"), key.alias("band_key"))
+            for b, key in enumerate(band_keys)
+        ]
     )
+    exploded = frame.select(*carry, F.explode(band_structs).alias("b"))
+    banded = exploded.select(*exploded.columns[:-1], "b.band_idx", "b.band_key")
+    if max_df is not None:
+        w = Window.partitionBy("band_idx", "band_key")
+        n = F.count(F.lit(1)) if weight is None else F.sum(weight)
+        banded = (
+            banded.withColumn("_bn", n.over(w))
+            .where(F.col("_bn") <= max_df)
+            .drop("_bn", *([weight] if weight else []))
+        )
+    return banded
 
 
 def banded_pairs(
@@ -80,51 +122,25 @@ def banded_pairs(
     max_df: int | None = None,
 ) -> DataFrame:
     """Generic banded-LSH candidate generator: one Column expression per
-    band key, exploded to (band_idx, band_key) rows, grouped into
-    buckets, pairs emitted inside buckets only — the shared skeleton of
-    MinHash banding (lsh_candidate_pairs) and SRP banding
-    (operators/similarity.py:srp_candidate_pairs), factored once so
-    band-handling fixes (skew caps, key hardening) land in one place.
-
-    ``max_df`` is the SKEW CAP (round-6 VERDICT item): a
-    boilerplate/template cluster of m near-identical docs puts all m
-    ids into one band bucket and would emit O(m^2) pairs in a single
-    task. Buckets larger than max_df are dropped ENTIRELY (recall
-    trade, never a wrong pair — the same semantics as the jaccard
-    prefix cap). Physical shape matters at 100 TB: the bucket size is
-    a window count over the SAME (band_idx, band_key) shuffle the
-    collect_list aggregation already needs — Catalyst reuses the
-    exchange, so the corpus is scanned and min-hashed exactly ONCE and
-    the big side shuffled exactly once (measured: a separate
-    count+broadcast-anti-join branch re-scans and re-hashes the whole
-    corpus, 2 scans / 5 exchanges vs 1 / 3 here). WindowExec buffers
-    each bucket spill-safely (UnsafeExternalSorter), and the filter
-    runs BEFORE collect_list, so an over-cap bucket's member array is
-    never aggregated into memory — the failure mode of filtering on
-    size(_ids) after the fact. Pick max_df >> the largest true
-    near-dup cluster you expect (LSH_MAX_DF's doc); a capped bucket is
-    template sludge whose pairs a curation pipeline removes wholesale
-    by other means."""
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_idx"), key.alias("band_key"))
-            for b, key in enumerate(band_keys)
-        ]
-    )
-    banded = signatures.select(id_col, F.explode(band_structs).alias("b")).select(
-        id_col, "b.band_idx", "b.band_key"
-    )
-    if max_df is not None:
-        w = Window.partitionBy("band_idx", "band_key")
-        banded = (
-            banded.withColumn("_bn", F.count(F.lit(1)).over(w))
-            .where(F.col("_bn") <= max_df)
-            .drop("_bn")
-        )
+    band key, banded with the skew cap (band_rows), grouped into
+    buckets, distinct pairs emitted inside buckets only — the shared
+    skeleton of MinHash banding (lsh_candidate_pairs) and SimHash
+    block banding (simhash_hamming_pairs)."""
+    banded = band_rows(signatures, band_keys, [id_col], max_df)
     buckets = banded.groupBy("band_idx", "band_key").agg(
         F.collect_list(id_col).alias("_ids")
     )
-    return pairs_from_buckets(buckets, "_ids", out_a, out_b)
+    return member_pairs(buckets, "_ids", out_a, out_b).distinct()
+
+
+def minhash_band_keys(k: int, bands: int) -> list:
+    """One band key per band: the band's k/bands min-hashes joined
+    with '-' (the oracle's band key spells the same string)."""
+    rows = k // bands
+    return [
+        F.concat_ws("-", *[f"mh{j}" for j in range(b * rows, (b + 1) * rows)])
+        for b in range(bands)
+    ]
 
 
 def shingle_table(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3) -> DataFrame:
@@ -134,6 +150,54 @@ def shingle_table(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     single-file input would otherwise run it on one core.
     """
     return fan_out(docs).select(id_col, F.explode(word_shingles(text_col, k)).alias("shingle"))
+
+
+def shingle_hash_sets(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 3,
+    persist_sets: bool = False,
+) -> DataFrame:
+    """(id, _sz, _hs): each document's distinct k-word shingle hashes,
+    sorted ascending (the PPJoin global order), and their count — the
+    set table jaccard_pairs and containment_pairs prefix, bucket and
+    verify. One narrow pass over ``docs``.
+
+    ``persist_sets`` pins the table: it feeds every candidate side and
+    both verify sides, and without persistence the narrow shingle+hash
+    projection recomputes per consumer. Measured (SCALE.md):
+    materializing it once is 1.4x at sf0.1 and 2.2x at the sf1 decade,
+    output-identical — the registered plans pass True. MEMORY_AND_DISK
+    spills, never OOMs. The operator default stays False so callers
+    composing their own pipelines opt in deliberately. pin() scopes the
+    cache entry to the enclosing REGISTERED query
+    (functions/cachepin.py): any later registered build releases it. A
+    library caller outside a registered query who wants to own the
+    persist lifetime should pass persist_sets=False and
+    persist/unpersist the returned frame itself (ADVICE round 9) — with
+    True, a subsequent registered build downgrades the cache to a
+    lineage recompute (never wrong, possibly slow), and if no
+    registered build ever runs the pin lasts until session end.
+    """
+    hs = F.array_sort(
+        F.array_distinct(
+            F.transform(word_shingles(text_col, k), lambda s: hash60(s))
+        )
+    )
+    # long, not int: the candidate length filters multiply _sz by 1e6
+    # (ppm arithmetic) — int32 overflows for any doc with >= 2148
+    # distinct shingles (~10 KB of text; ANSI hard error, found by the
+    # /tmp/skew3 giant-doc fixture). One cast here keeps every
+    # downstream product in int64.
+    sized = fan_out(docs).select(
+        F.col(id_col), F.size(hs).cast("long").alias("_sz"), hs.alias("_hs")
+    )
+    if persist_sets:
+        from news_categorization_big_data_spark.functions.cachepin import pin
+
+        sized = pin(sized)
+    return sized
 
 
 def jaccard_pairs(
@@ -171,38 +235,7 @@ def jaccard_pairs(
     emit inside buckets only; the verify join touches candidates — a
     vanishing fraction of the corpus — and AQE picks its strategy.
     """
-    hs = F.array_sort(
-        F.array_distinct(
-            F.transform(word_shingles(text_col, k), lambda s: hash60(s))
-        )
-    )
-    # long, not int: the candidate length filters multiply _sz by 1e6
-    # (ppm arithmetic) — int32 overflows for any doc with >= 2148
-    # distinct shingles (~10 KB of text; ANSI hard error, found by the
-    # /tmp/skew3 giant-doc fixture). One cast here keeps every
-    # downstream product in int64.
-    sized = fan_out(docs).select(
-        F.col(id_col), F.size(hs).cast("long").alias("_sz"), hs.alias("_hs")
-    )
-    # `sized` feeds three consumers (prefix explode + both verify sides);
-    # without persistence the narrow shingle+hash projection recomputes
-    # per consumer. Measured (SCALE.md): materializing it once is 1.4x
-    # at sf0.1 and 2.2x at the sf1 decade, output-identical — the
-    # registered plan passes True. MEMORY_AND_DISK spills, never OOMs.
-    # The operator default stays False so callers composing their own
-    # pipelines opt in deliberately. pin() scopes the cache entry to
-    # the enclosing REGISTERED query (functions/cachepin.py): any later
-    # registered build releases it. A library caller outside a
-    # registered query who wants to own the persist lifetime should
-    # pass persist_sets=False and persist/unpersist the returned frame
-    # itself (ADVICE round 9) — with True, a subsequent registered
-    # build downgrades the cache to a lineage recompute (never wrong,
-    # possibly slow), and if no registered build ever runs the pin
-    # lasts until session end.
-    if persist_sets:
-        from news_categorization_big_data_spark.functions.cachepin import pin
-
-        sized = pin(sized)
+    sized = shingle_hash_sets(docs, text_col, id_col, k, persist_sets)
     prefix_len = (F.col("_sz") - F.floor(F.lit(threshold) * F.col("_sz")) + 1).cast("int")
     pref = sized.select(
         id_col,
@@ -244,10 +277,7 @@ def jaccard_pairs(
         F.col("_a.s") - F.col("_a.p") - 1, F.col("_b.s") - F.col("_b.p") - 1
     )
     cand = (
-        buckets.where(F.size("_ids") > 1)
-        .select(F.explode("_ids").alias("_a"), F.col("_ids"))
-        .select("_a", F.explode("_ids").alias("_b"))
-        .where(F.col("_a.i") < F.col("_b.i"))
+        member_pairs(buckets, "_ids", field="i")
         .where(
             F.least("_a.s", "_b.s") * F.lit(1_000_000)
             >= F.lit(t_ppm) * F.greatest("_a.s", "_b.s")
@@ -364,12 +394,9 @@ def lsh_candidate_pairs(
     the ``max_df`` bucket cap (default LSH_MAX_DF, see banded_pairs)
     bounds the one residual quadratic term.
     """
-    rows = k // bands
-    band_keys = [
-        F.concat_ws("-", *[f"mh{j}" for j in range(b * rows, (b + 1) * rows)])
-        for b in range(bands)
-    ]
-    return banded_pairs(signatures, band_keys, id_col, "doc_a", "doc_b", max_df=max_df)
+    return banded_pairs(
+        signatures, minhash_band_keys(k, bands), id_col, "doc_a", "doc_b", max_df=max_df
+    )
 
 
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16) -> DataFrame:
@@ -416,16 +443,11 @@ def containment_pairs(
     """Asymmetric containment near-dup pairs: (doc_a, doc_b, containment)
     with C(A→B) = |A∩B| / |A| ≥ threshold_pct/100, A ≠ B.
 
-    ``persist_sets`` mirrors jaccard_pairs: the (id, sz, sorted-hash)
-    table feeds FIVE consumers here (probe prefix, index explode, the
-    df-cap count, both verify sides), so the registered plan opts in —
-    without it the shingle+hash transform recomputes per consumer
-    (5 scans; round-8 multi-consumer coefficient, SCALE.md). Default
-    False so composing callers opt in deliberately — and note the pin
-    is scoped to the enclosing REGISTERED query (see the jaccard_pairs
-    comment): library callers outside a registered build who need a
-    durable cache should persist the returned frame themselves rather
-    than pass True (ADVICE round 9).
+    ``persist_sets`` pins the set table (shingle_hash_sets). It feeds
+    FIVE consumers here (probe prefix, index explode, the df-cap count,
+    both verify sides), so the registered plan opts in — without it the
+    shingle+hash transform recomputes per consumer (5 scans; round-8
+    multi-consumer coefficient, SCALE.md).
 
     Containment is the dedup predicate Jaccard structurally misses: a
     passage quoted whole inside a much longer page has J ≈ |A|/|B| ≈ 0
@@ -442,23 +464,7 @@ def containment_pairs(
     threshold is integer parts-per-hundred so the boundary comparison
     ``inter·100 ≥ t_pct·sz`` is exact — no float can flip membership.
     """
-    hs = F.array_sort(
-        F.array_distinct(
-            F.transform(word_shingles(text_col, k), lambda s: hash60(s))
-        )
-    )
-    # long, not int: the candidate length filters multiply _sz by 1e6
-    # (ppm arithmetic) — int32 overflows for any doc with >= 2148
-    # distinct shingles (~10 KB of text; ANSI hard error, found by the
-    # /tmp/skew3 giant-doc fixture). One cast here keeps every
-    # downstream product in int64.
-    sized = fan_out(docs).select(
-        F.col(id_col), F.size(hs).cast("long").alias("_sz"), hs.alias("_hs")
-    )
-    if persist_sets:
-        from news_categorization_big_data_spark.functions.cachepin import pin
-
-        sized = pin(sized)
+    sized = shingle_hash_sets(docs, text_col, id_col, k, persist_sets)
     # ⌈t·sz⌉ in pure integers: (t_pct·sz + 99) div 100.
     ceil_t_sz = F.floor((F.col("_sz") * threshold_pct + 99) / 100).cast("int")
     prefix_len = (F.col("_sz") - ceil_t_sz + 1).cast("int")
@@ -709,10 +715,8 @@ def simhash_hamming_pairs(
     # drops via NULL hamming, are filtered up front). Verified MATCH
     # against the unchanged DuckDB oracle and pair-for-pair against the
     # old path at sf0.01/sf0.1.
-    groups = (
-        sketches.where(F.col(sketch_col).isNotNull())
-        .groupBy(sketch_col)
-        .agg(F.array_sort(F.collect_list(id_col)).alias("_ids"))
+    groups = grouped_ids(
+        sketches.where(F.col(sketch_col).isNotNull()), (sketch_col,), id_col
     )
     cand = banded_pairs(groups, _band_keys(sketch_col), sketch_col, "_ska", "_skb")
     hamming = F.bit_count(F.col("_ska").bitwiseXOR(F.col("_skb")))
@@ -724,23 +728,14 @@ def simhash_hamming_pairs(
     # shuffle_hash on the group side: same widened-frame rationale as
     # the capped path's verify joins (the member arrays are
     # corpus-sized in total — never broadcastable).
-    inter = (
-        qual.join(ga.hint("shuffle_hash"), "_ska")
-        .join(gb.hint("shuffle_hash"), "_skb")
-        .select(F.explode("_idsa").alias("_a"), "_idsb", "hamming")
-        .select("_a", F.explode("_idsb").alias("_b"), "hamming")
-        .select(
-            F.least("_a", "_b").alias("doc_a"),
-            F.greatest("_a", "_b").alias("doc_b"),
-            "hamming",
-        )
+    inter = expand_group_pairs(
+        qual.join(ga.hint("shuffle_hash"), "_ska").join(gb.hint("shuffle_hash"), "_skb"),
+        "doc_a",
+        "doc_b",
+        "hamming",
     )
-    intra = (
-        groups.where(F.size("_ids") > 1)
-        .select(F.explode("_ids").alias("doc_a"), F.col("_ids"))
-        .select("doc_a", F.explode("_ids").alias("doc_b"))
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(0).cast("int").alias("hamming"))
+    intra = member_pairs(groups, "_ids", "doc_a", "doc_b").select(
+        "doc_a", "doc_b", F.lit(0).cast("int").alias("hamming")
     )
     return inter.unionByName(intra)
 
@@ -769,32 +764,13 @@ def lsh_probe_pairs(
     full lsh_candidate_pairs down to rows touching the probe set
     (the oracle proves it).
     """
-    rows = k // bands
-    band_keys = [
-        F.concat_ws("-", *[f"mh{j}" for j in range(b * rows, (b + 1) * rows)])
-        for b in range(bands)
-    ]
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_idx"), key.alias("band_key"))
-            for b, key in enumerate(band_keys)
-        ]
+    # The cap counts the WHOLE bucket (index side), so probe-vs-base and
+    # base-vs-base agree on which buckets are template sludge — keeps
+    # the documented output-equivalence with a capped
+    # lsh_candidate_pairs.
+    banded = band_rows(
+        signatures, minhash_band_keys(k, bands), [id_col, probe_col], max_df
     )
-    banded = signatures.select(
-        id_col, probe_col, F.explode(band_structs).alias("b")
-    ).select(id_col, probe_col, "b.band_idx", "b.band_key")
-    if max_df is not None:
-        # Same skew cap as banded_pairs (window count over the bucket
-        # shuffle, one scan), counted over the WHOLE bucket (index
-        # side) so probe-vs-base and base-vs-base agree on which
-        # buckets are template sludge — keeps the documented
-        # output-equivalence with a capped lsh_candidate_pairs.
-        w = Window.partitionBy("band_idx", "band_key")
-        banded = (
-            banded.withColumn("_bn", F.count(F.lit(1)).over(w))
-            .where(F.col("_bn") <= max_df)
-            .drop("_bn")
-        )
     probe = banded.where(F.col(probe_col)).select(
         F.col(id_col).alias("_p"), "band_idx", "band_key"
     )

@@ -14,11 +14,11 @@ in doubles) — JVM-side, no Python in the loop. Strategies:
   Cell assignment is also how you'd partition the parquet at rest.
 - **sign-random-projection (SRP) LSH** for the pairwise near-dup join:
   a deterministic md5-derived ±1 hyperplane matrix maps each vector to
-  a bit signature; banded signatures give candidate pairs via compact
-  equi-joins (same shape as the MinHash bands in operators/dedup.py),
-  and exact cosine is verified on candidates only. Because the
-  hyperplanes are md5-derived constants, the whole pipeline is
-  reproducible in the DuckDB oracle.
+  a bit signature; banded signatures give candidate pairs inside
+  (band, key) buckets (the same band_rows step as the MinHash bands in
+  operators/dedup.py), and exact cosine is verified on candidates only.
+  Because the hyperplanes are md5-derived constants, the whole pipeline
+  is reproducible in the DuckDB oracle.
 - **random-hyperplane LSH** via MLlib BucketedRandomProjectionLSH for
   the approximate join variant (plans/similarity.py, whose oracle pins
   the returned-count and recall booleans).
@@ -32,9 +32,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from news_categorization_big_data_spark.functions.groupcollapse import grouped_ids
+from news_categorization_big_data_spark.functions.groupcollapse import (
+    expand_group_pairs,
+    grouped_ids,
+    member_pairs,
+)
 from news_categorization_big_data_spark.functions.partitioning import fan_out
-from news_categorization_big_data_spark.operators.dedup import LSH_MAX_DF, banded_pairs
+from news_categorization_big_data_spark.operators.dedup import LSH_MAX_DF, band_rows
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -154,60 +158,6 @@ def srp_signs(bits: int = SRP_BITS, dim: int = 64) -> list[list[float]]:
     ]
 
 
-def srp_signature(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = SRP_BITS,
-    dim: int = 64,
-) -> DataFrame:
-    """(id, bit0..bit{bits-1}) sign-random-projection signature rows.
-
-    Each bit is sign(embedding · h_j) for the deterministic hyperplane
-    h_j — `bits` independent zip_with/aggregate folds, all inside
-    whole-stage codegen, zero shuffle.
-
-    ``dim`` MUST equal the embedding width: a mismatched vector would
-    fold to NULL bits (zip_with null-padding) and every such row would
-    share one degenerate band key — a quadratic bucket. Rows whose
-    width differs from ``dim`` are therefore dropped here, explicitly.
-    """
-    signs = srp_signs(bits, dim)
-    cols = [
-        (dot(vec_col, F.array(*[F.lit(s) for s in signs[j]])) > 0)
-        .cast("int")
-        .alias(f"bit{j}")
-        for j in range(bits)
-    ]
-    return fan_out(df).where(F.size(vec_col) == dim).select(id_col, *cols)
-
-
-def srp_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "vec_id",
-    bits: int = SRP_BITS,
-    bands: int = SRP_BANDS,
-    max_df: int | None = LSH_MAX_DF,
-) -> DataFrame:
-    """Banded SRP candidate pairs (id_a, id_b): all bits of ≥1 band agree.
-
-    Same linear-shuffle shape as the MinHash LSH in operators/dedup.py:
-    explode to (band_idx, band_key), group into buckets, emit pairs
-    inside buckets only — no pairwise work outside hash buckets.
-    ``max_df`` forwards to banded_pairs' bucket skew cap; the default is
-    the shared LSH_MAX_DF, and ``None`` means UNCAPPED — the same
-    semantics as lsh_candidate_pairs and simhash_hamming_pairs.
-    """
-    rows = bits // bands
-    band_keys = [
-        F.concat_ws(
-            "", *[F.col(f"bit{j}").cast("string") for j in range(b * rows, (b + 1) * rows)]
-        )
-        for b in range(bands)
-    ]
-    return banded_pairs(signatures, band_keys, id_col, "id_a", "id_b", max_df=max_df)
-
-
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float,
@@ -274,35 +224,20 @@ def embedding_near_dup_pairs(
     groups = fan_out(groups.withColumn("_na", norm(vec_col)), force=True)
     sig = groups.select("_gid", "_gsz", vec_col, "_na", "_ids", *bitcols)
     rows = bits // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.concat_ws(
-                    "",
-                    *[
-                        F.col(f"bit{j}").cast("string")
-                        for j in range(b * rows, (b + 1) * rows)
-                    ],
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-    )
+    band_keys = [
+        F.concat_ws(
+            "", *[F.col(f"bit{j}").cast("string") for j in range(b * rows, (b + 1) * rows)]
+        )
+        for b in range(bands)
+    ]
     member = F.struct(
         F.col("_gid").alias("g"),
         F.col(vec_col).alias("v"),
         F.col("_na").alias("n"),
         F.col("_ids").alias("i"),
     )
-    banded = sig.select(
-        member.alias("_m"), F.col("_gsz"), F.explode(band_structs).alias("b")
-    ).select("_m", "_gsz", "b.band_idx", "b.band_key")
-    w_bucket = Window.partitionBy("band_idx", "band_key")
-    banded = (
-        banded.withColumn("_bn", F.sum("_gsz").over(w_bucket))
-        .where(F.col("_bn") <= F.lit(LSH_MAX_DF))
-        .drop("_bn", "_gsz")
+    banded = band_rows(
+        sig, band_keys, [member.alias("_m"), F.col("_gsz")], LSH_MAX_DF, weight="_gsz"
     )
     # Verify INSIDE the buckets: members carry (vector, norm, ids), so
     # the exact cosine runs at pair-generation time and nothing is ever
@@ -316,10 +251,7 @@ def embedding_near_dup_pairs(
     )
     sim = dot(F.col("_a.v"), F.col("_b.v")) / (F.col("_a.n") * F.col("_b.n"))
     qual = (
-        buckets.where(F.size("_ms") > 1)
-        .select(F.explode("_ms").alias("_a"), F.col("_ms"))
-        .select("_a", F.explode("_ms").alias("_b"))
-        .where(F.col("_a.g") < F.col("_b.g"))
+        member_pairs(buckets, "_ms", field="g")
         .withColumn("_sim", sim)
         .where(F.col("_sim") >= threshold)
         .select(
@@ -331,15 +263,9 @@ def embedding_near_dup_pairs(
         )
         .distinct()
     )
-    inter = (
-        qual.select(F.explode("_idsa").alias("_a"), "_idsb", "cos_sim")
-        .select("_a", F.explode("_idsb").alias("_b"), "cos_sim")
-        .select(
-            F.least("_a", "_b").alias("vec_a"),
-            F.greatest("_a", "_b").alias("vec_b"),
-            "cos_sim",
-        )
-    )
+    inter = expand_group_pairs(qual, "vec_a", "vec_b", "cos_sim")
+    # Intra-group pairs keep their own form: the self-similarity is
+    # verified once per group and carried through the member explode.
     alive = banded.select(F.col("_m.g").alias("_gid")).distinct()
     sim_self = dot("emb_a", "emb_b") / (F.col("_na") * F.col("_nb"))
     intra = (

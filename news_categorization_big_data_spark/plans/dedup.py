@@ -13,7 +13,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from news_categorization_big_data_spark.functions.cachepin import pin
-from news_categorization_big_data_spark.functions.groupcollapse import grouped_ids
+from news_categorization_big_data_spark.functions.groupcollapse import (
+    expand_group_pairs,
+    grouped_ids,
+    member_pairs,
+)
 from news_categorization_big_data_spark.operators.dedup import (
     MINHASH_BANDS,
     MINHASH_K,
@@ -641,7 +645,7 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the q18/widened-frame class.
     # SMJ is spill-safe; AQE may still demote to shuffled-hash at
     # runtime via the r15 maxShuffledHashJoinLocalMapThreshold conf.
-    inter = (
+    cand = (
         a.join(c.hint("shuffle_merge"), ["blk"])
         .where(
             (F.col("gid_a") < F.col("gid_b"))
@@ -653,20 +657,10 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.levenshtein("pfx_a", "pfx_b", 20).cast("long").alias("edit_dist"),
         )
         .where(F.col("edit_dist") >= 0)
-        .select(F.explode("_idsa").alias("_a"), "_idsb", "edit_dist")
-        .select("_a", F.explode("_idsb").alias("_b"), "edit_dist")
-        .select(
-            F.least("_a", "_b").alias("doc_a"),
-            F.greatest("_a", "_b").alias("doc_b"),
-            "edit_dist",
-        )
     )
-    intra = (
-        g.where(F.size("_ids") > 1)
-        .select(F.explode("_ids").alias("doc_a"), "_ids")
-        .select("doc_a", F.explode("_ids").alias("doc_b"))
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(0).cast("long").alias("edit_dist"))
+    inter = expand_group_pairs(cand, "doc_a", "doc_b", "edit_dist")
+    intra = member_pairs(g, "_ids", "doc_a", "doc_b").select(
+        "doc_a", "doc_b", F.lit(0).cast("long").alias("edit_dist")
     )
     return inter.unionByName(intra)
 

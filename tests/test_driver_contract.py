@@ -158,3 +158,37 @@ def test_conf_inventory_matches_readme():
         f"undocumented={sorted(read - documented)} "
         f"stale={sorted(documented - read)}"
     )
+
+
+def test_driver_sim_leaves_git_stamp_untouched():
+    """tools/driver_sim.py calls queries(), whose _stamp_git_head
+    rewrites the tracked CORRECTNESS_GIT.json unless the sim points the
+    stamp elsewhere. A subprocess, because this session's autouse
+    _git_stamp_off_tree already redirects the stamp in-process; an
+    unknown query name exits 1 after queries() and before Spark starts.
+    Without a git HEAD (a `git archive` copy) the stamp is never
+    written, so there is nothing to check."""
+    import os
+    import subprocess
+    import sys
+
+    repo = entrymod._REPO_DIR
+    if subprocess.run(
+        ["git", "rev-parse", "HEAD"], cwd=repo, capture_output=True
+    ).returncode:
+        pytest.skip("no git HEAD: _stamp_git_head writes nothing")
+    stamp = os.path.join(repo, "CORRECTNESS_GIT.json")
+    with open(stamp, "rb") as f:
+        before = f.read()
+    try:
+        run = subprocess.run(
+            [sys.executable, os.path.join("tools", "driver_sim.py"), "q_no_such_query"],
+            cwd=repo, capture_output=True, text=True, timeout=600,
+        )
+        assert run.returncode == 1, run.stderr
+        assert "q_no_such_query" in run.stderr
+        with open(stamp, "rb") as f:
+            assert f.read() == before, "driver_sim rewrote CORRECTNESS_GIT.json"
+    finally:
+        with open(stamp, "wb") as f:
+            f.write(before)

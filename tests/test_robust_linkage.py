@@ -230,38 +230,3 @@ def test_kcore_generated_graphs_match_bruteforce(spark):
     df2 = spark.createDataFrame(path, "doc_a long, doc_b long")
     assert kcore(df2, 2).count() == 0
 
-
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize(
-    "name",
-    [
-        "q_simhash_hamming",
-        "q_graph_triangles",
-        "q_lsh_recall",
-        "q_minhash_jaccard_est",
-    ],
-)
-def test_pair_table_never_statically_broadcast(registry_plans, name):
-    """Round-14 sf1 find, pinned for every banded pair-generator: the
-    candidate pair table is a bucket-explode-widened frame whose
-    static estimate undercuts the other join side — the planner chose
-    to BROADCAST the 550M-row simhash pair table at sf1 (Spark's 512M
-    row cap killed the job) and AQE never demotes a statically-chosen
-    broadcast join. The declared shuffle_hash/merge hints must hold:
-    no BroadcastExchange sits above a pair-generating `_ids` explode.
-    A broadcast whose subtree first crosses a KEYLESS aggregate is
-    exempt — that is a one-row count, not the pair table."""
-    plan = registry_plans[name].plan
-    lines = plan.splitlines()
-    for i, ln in enumerate(lines):
-        if "BroadcastExchange" not in ln:
-            continue
-        for nxt in lines[i + 1 : i + 17]:
-            if "Aggregate(keys=[]" in nxt:
-                break  # one-row frame — bounded
-            if "Generate explode(_ids" in nxt:
-                raise AssertionError(
-                    f"{name}: pair-explode subtree under a broadcast:\n" + plan
-                )

@@ -306,33 +306,59 @@ def test_containment_pairs_skew_cap(spark):
     assert pairs(6) == uncapped
 
 
-def test_srp_candidate_pairs_none_means_uncapped(spark):
-    """srp_candidate_pairs' max_df semantics must match the rest of the
-    LSH family (ADVICE round 7): the SIGNATURE default is LSH_MAX_DF,
-    and an explicit None means UNCAPPED — not silently re-resolved to
-    the default, which made the cap impossible to disable."""
+def test_jaccard_pairs_skew_cap(spark):
+    """Planted boilerplate cluster for jaccard_pairs: m identical
+    template docs share every prefix hash, so each of their prefix
+    buckets holds m docs; with max_df < m those buckets drop whole and
+    the cluster emits ZERO pairs instead of m*(m-1)/2. An organic
+    near-duplicate pair (J >= 0.8) in small buckets survives untouched,
+    and cap == m restores everything — the same three-point contract as
+    test_banded_pairs_skew_cap."""
+    sludge_text = "lorem ipsum dolor sit amet consectetur adipiscing elit"
+    organic = " ".join(f"w{i}" for i in range(20))
+    rows = [(f"s{i:03d}", sludge_text) for i in range(6)]
+    rows += [("a001", organic), ("a002", organic + " tail")]  # J = 18/19
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+
+    def pairs(max_df):
+        return {
+            (r.doc_a, r.doc_b)
+            for r in jaccard_pairs(docs, 0.8, max_df=max_df).collect()
+        }
+
+    uncapped = pairs(None)
+    assert ("a001", "a002") in uncapped
+    assert sum(1 for a, _ in uncapped if a.startswith("s")) == 6 * 5 // 2
+
+    # cap below the cluster: its prefix buckets drop whole, organic survives
+    assert pairs(5) == {("a001", "a002")}
+    # cap exactly at the cluster size: nothing is dropped
+    assert pairs(6) == uncapped
+
+
+def test_lsh_candidate_pairs_none_means_uncapped(spark):
+    """lsh_candidate_pairs' max_df semantics, shared by the LSH family
+    (ADVICE round 7): the SIGNATURE default is LSH_MAX_DF, and an
+    explicit None means UNCAPPED — not silently re-resolved to the
+    default, which made the cap impossible to disable."""
     import inspect
 
     from news_categorization_big_data_spark.operators.dedup import LSH_MAX_DF
-    from news_categorization_big_data_spark.operators.similarity import (
-        srp_candidate_pairs,
-        srp_signature,
-    )
 
     assert (
-        inspect.signature(srp_candidate_pairs).parameters["max_df"].default
+        inspect.signature(lsh_candidate_pairs).parameters["max_df"].default
         is LSH_MAX_DF
     )
-    # five identical vectors -> one 5-member bucket in every band
-    vec = [1.0] * 64
-    emb = spark.createDataFrame(
-        [(i, vec) for i in range(5)], "vec_id long, embedding array<double>"
+    # five identical docs -> one 5-member bucket in every band
+    docs = spark.createDataFrame(
+        [(i, "the same five words here") for i in range(5)],
+        "doc_id long, text string",
     )
-    sigs = srp_signature(emb)
+    sigs = minhash_signatures(docs)
     n_all = 5 * 4 // 2
-    assert srp_candidate_pairs(sigs, max_df=None).count() == n_all
-    assert srp_candidate_pairs(sigs).count() == n_all  # 10k cap: no bind
-    assert srp_candidate_pairs(sigs, max_df=4).count() == 0  # cap binds
+    assert lsh_candidate_pairs(sigs, max_df=None).count() == n_all
+    assert lsh_candidate_pairs(sigs).count() == n_all  # 10k cap: no bind
+    assert lsh_candidate_pairs(sigs, max_df=4).count() == 0  # cap binds
 
 
 def test_lsh_probe_pairs_skew_cap_consistency(spark, sf_dir):

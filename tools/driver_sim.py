@@ -26,11 +26,15 @@ SPARK_GRAFT_SIM_CONF (optional): comma-separated k=v session confs set
 after session creation, to check conf-gated plans against the same
 oracles, e.g. `SPARK_GRAFT_SIM_CONF=spark.graft.window.ranged=true`.
 
+The contract's git stamp (CORRECTNESS_GIT.json) goes to a temp file, so
+a run leaves the checkout as it found it.
+
 Exits 1 on any ERROR or MISMATCH."""
 
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -46,6 +50,10 @@ ERR_CHARS = 500
 
 
 def main(names: list[str]) -> int:
+    # queries() refreshes the tracked CORRECTNESS_GIT.json for the
+    # runner; a simulated run must leave the checkout clean.
+    stamp_dir = tempfile.TemporaryDirectory()
+    entrymod._GIT_STAMP_PATH = os.path.join(stamp_dir.name, "CORRECTNESS_GIT.json")
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     unknown = [n for n in names if n not in queries]
