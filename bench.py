@@ -100,24 +100,6 @@ HEADLINE = [
 ]
 
 
-#: The 100-TB profile (round-9 VERDICT item 4): the spark.graft.* valves a
-#: 1000-executor deployment would flip, benched as ONE configuration.
-#: Only PLAN-SHAPE valves belong here — the ranged total-order window
-#: rewrite and the hot-vocab head broadcast. Infrastructure-width knobs
-#: (spark.graft.fanout.*) are deliberately absent: their correct value is
-#: per-deployment (off where scans are already thousands of partitions
-#: wide; the local estimator already sizes from files), so forcing either
-#: setting into the profile would bench an artifact of this box, not the
-#: profile. Pins (persist via cachepin) are already the registered
-#: default. Each HEADLINE query is checked against its oracle under this
-#: profile by tools/driver_sim.py with SPARK_GRAFT_SIM_CONF set to these
-#: confs; the A/B table lives in SCALE.md round 10.
-PROFILE_100TB = {
-    "spark.graft.window.ranged": "true",
-    "spark.graft.rarity.headK": "1000",
-}
-
-
 def headline_passes(spark, sf_dir: str, reps: int) -> dict[str, list[float]]:
     """Each HEADLINE query's wall per pass, from ``reps`` INTERLEAVED
     passes of tools/query_profile.py's ``run_passes`` (round-13 judge
@@ -160,7 +142,6 @@ def final_line(
     reps: int,
     per_pass: dict[str, list[float]],
     git: str,
-    profile: str = "",
     sf1_summary: dict | None = None,
 ) -> str:
     """The ONE compact machine-readable summary line, printed LAST.
@@ -199,8 +180,6 @@ def final_line(
         "exec": "noop",
         "git": git,
     }
-    if profile:
-        obj["profile"] = profile
     if sf1_summary:
         obj["sf1"] = sf1_summary
     return json.dumps(obj)
@@ -275,11 +254,7 @@ def detail_line(
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_of(sf_dir)
-    profile = os.environ.get("SPARK_GRAFT_PROFILE", "")
     spark = get_spark("ncbds-bench")
-    if profile == "100tb":
-        for k, v in PROFILE_100TB.items():
-            spark.conf.set(k, v)
 
     # Warm the JVM / file-listing caches so per-query numbers measure the
     # plans, not session startup.
@@ -322,7 +297,7 @@ def main() -> None:
     if sf1_detail:
         print(sf1_queries_line(sf1_detail["queries"], sf1_detail["reps"]))
     print(final_line(total, timings, sf, reps, per_pass, _git_head(),
-                     profile, sf1_summary))
+                     sf1_summary))
     spark.stop()
 
 

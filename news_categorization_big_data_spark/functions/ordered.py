@@ -1,331 +1,19 @@
-"""Scalable total-order windows: the global-sort escape valve.
+"""Exact order statistics per group without per-group arrays.
 
-Several audit/statistics queries need an ORDER over a whole table with
-no partition key — a running sum over session boundaries
-(q_peak_concurrency), a cumulative count over the distinct-value
-domain (q_gini_spend), a lag over a dense id domain (q_sequence_gaps).
-`Window.orderBy(...)` with no partitionBy is the natural expression,
-and Spark plans it as an `Exchange SinglePartition` + one-task sort:
-exact, simple, and the right default while the windowed table is
-value-domain-sized. On a 100-TB fact table that single task is the
-job.
-
-This module implements the classic two-phase alternative and gates it
-behind ``spark.graft.window.ranged`` (default ``false``): the default
-plan stays exactly the oracle-stamped single-partition form; flipping
-the conf swaps in a range-partitioned plan PROVEN output-identical by
-tests
-(tests/test_ordered_windows.py) whenever the ordering key set is a
-TOTAL order (unique rows per key tuple — every caller in this repo
-pre-aggregates to uniqueness first).
-
-Two-phase shape (Blelloch prefix-scan on Spark primitives):
-
-1. Bucket every row by LITERAL range bounds of the primary order
-   column (quantiles collected once at plan-build time and embedded as
-   literals): bucket i's keys all sort before bucket i+1's, and equal
-   keys share a bucket. The bucket id is a pure deterministic function
-   of the row — NOT ``spark_partition_id()`` over a sampled
-   ``repartitionByRange``, which this replaced after a measured
-   wrong-answer: the window subtree and the offsets subtree each
-   re-executed the range exchange (no ReusedExchange under AQE), and
-   when AQE gave them different upstream layouts the two samples drew
-   DIFFERENT boundaries, so offsets were joined against the wrong
-   partitions (caught on the 6.3M-distinct-score skew fixture, round
-   11 — flaky, boundary-sized band errors in q_lift_bands).
-2. A per-bucket window (partitionBy the bucket id) computes the local
-   running aggregate/lag — parallel, spill-safe, no global exchange.
-3. A tiny per-bucket summary (one row per bucket: sum / min / max) is
-   cumulated with a driver-scale window (≤ #buckets rows) and
-   broadcast back: running sums add the previous-bucket offset; lags
-   stitch the boundary pair from bucket i's max row to bucket i+1's
-   min row.
-
-Cost: one quantile pass at build time (an action — only in ranged
-mode) + one hash exchange of the big table on the bucket id (same
-bytes the global sort would move) + one broadcast of #buckets rows —
-and the sort/scan parallelism of the whole cluster instead of one
-task.
+``value_counts`` is the one fact-table pass: a map-side-combinable
+aggregate onto the distinct-value domain. ``order_stats_from_counts``
+then selects the k-th smallest value per group with one windowed pass
+over that value-domain table, and ``grouped_order_stats`` composes the
+two. Total-order windows without a partition key (running sums, lags,
+full-frame aggregates) are plain Spark windows at their call sites,
+most of them over a pre-aggregated, value-domain table so that their
+one-task sort sees distinct values rather than fact rows.
 """
 
 from __future__ import annotations
 
-import functools
-import operator
-import weakref
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import NumericType
-
-#: Session conf that flips every helper below from the single-partition
-#: global window (default, oracle-stamped) to the range-partitioned
-#: two-phase plan. Values: "false" (default) | "true".
-RANGED_CONF = "spark.graft.window.ranged"
-
-#: Bucket count for the ranged plan (quantile bounds = buckets − 1).
-#: Sized like shuffle parallelism; ties collapse duplicate bounds, so
-#: heavy-tied domains degrade gracefully toward fewer buckets.
-BUCKETS_CONF = "spark.graft.window.buckets"
-
-_PID = "_w_pid"
-_LOCAL = "_w_local"
-_OFF = "_w_off"
-
-#: Per-session memo of computed bucket bounds, keyed by the input
-#: frame's semanticHash + bucket spec. A repeat build of the same
-#: ranged query (bench reps, driver loops) skips the quantile pass
-#: entirely. Safe BY CONSTRUCTION even across a semanticHash
-#: collision: bounds only balance the buckets — any bound set yields
-#: correct output (see _with_pid) — so a stale/wrong memo hit can
-#: skew parallelism, never values.
-_BOUNDS_MEMO: "weakref.WeakKeyDictionary[object, dict[tuple, list[float]]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def use_ranged(df: DataFrame) -> bool:
-    return str(
-        df.sparkSession.conf.get(RANGED_CONF, "false")
-    ).lower() == "true"
-
-
-#: An order key is plain data — a column NAME (ascending) or a
-#: ``(name, ascending)`` tuple — never a Column expression. The ranged
-#: valve needs the (name, direction) pair to build its bucket ids;
-#: recovering it by string-parsing the JVM render of an F.asc()/F.desc()
-#: Column (the pre-round-12 approach) broke on names containing spaces
-#: or a literal " DESC" and would have silently mis-bucketed an
-#: asc_nulls_last/desc_nulls_first order. With specs, unsupported null
-#: orderings are UNREPRESENTABLE rather than mis-parsed: both modes
-#: always use Spark's defaults (asc = NULLS FIRST, desc = NULLS LAST),
-#: which is exactly what _with_pid's NULL placement implements.
-OrderSpec = "str | tuple[str, bool]"
-
-
-def _normalize_order(order_cols: list) -> list[tuple[str, bool]]:
-    """Validate/normalize order specs to [(name, ascending), ...]."""
-    out: list[tuple[str, bool]] = []
-    for c in order_cols:
-        if isinstance(c, str):
-            out.append((c, True))
-        elif (
-            isinstance(c, tuple)
-            and len(c) == 2
-            and isinstance(c[0], str)
-            and isinstance(c[1], bool)
-        ):
-            out.append(c)
-        else:
-            raise TypeError(
-                "order keys must be 'name' or ('name', ascending) — got "
-                f"{c!r}; Column expressions (F.asc/F.desc/asc_nulls_last/"
-                "...) are rejected so the ranged valve never has to parse "
-                "a direction or null-ordering out of a JVM column render"
-            )
-    return out
-
-
-def _order_columns(specs: list[tuple[str, bool]]) -> list[Column]:
-    """Window ORDER BY columns for the specs, at Spark's default null
-    ordering (asc -> NULLS FIRST, desc -> NULLS LAST) in BOTH modes."""
-    return [F.col(n).asc() if asc else F.col(n).desc() for n, asc in specs]
-
-
-def _with_pid(df: DataFrame, specs: list[tuple[str, bool]]) -> DataFrame:
-    """df + ``_PID`` = deterministic range-bucket id, increasing along
-    the GLOBAL order direction of ``specs``.
-
-    Bounds come from one ``approxQuantile`` pass (an action, at plan
-    build — ranged mode only) on the primary order column and are
-    embedded as LITERALS, so every consumer of the returned frame
-    computes identical bucket ids no matter how many times AQE
-    re-executes or re-lays-out the subtree (the determinism bug the
-    module docstring describes). Any bound set yields correct output —
-    quantiles only balance the buckets; exactness never depends on
-    them. NULL primaries: pid 0 under asc (NULLS FIRST — Spark's asc
-    default) and the last bucket under desc (NULLS LAST).
-
-    Bucketing on the PRIMARY key alone is sufficient: equal primaries
-    always share a bucket, so any tie-breaking keys order rows entirely
-    within one bucket's local window."""
-    name, asc = specs[0]
-    if not isinstance(df.schema[name].dataType, NumericType):
-        # approxQuantile would fail anyway, but deep in py4j — surface
-        # the actual contract violation at the valve boundary instead
-        raise TypeError(
-            "ranged windows need a NUMERIC primary order column for the "
-            f"literal quantile bucket bounds; {name!r} is "
-            f"{df.schema[name].dataType.simpleString()} — use the default "
-            "(single-partition) plan for non-numeric orders"
-        )
-    col = F.col(name)
-    nb = int(df.sparkSession.conf.get(BUCKETS_CONF, "32"))
-    # The bounds pass re-executes the upstream plan once (scan + the
-    # callers' pre-aggregation). Pinning df first was measured and
-    # REJECTED (round 11, interleaved): materializing the distinct
-    # table costs more than recomputing it on every consumer tried
-    # (q_lift_bands 1.14x -> 0.78x with the pin at 6.3M distinct
-    # scores) — persist serialization beats a parallel scan+agg
-    # nowhere on this path. The double execution is the documented
-    # price of ranged mode; it is why the valve defaults OFF and only
-    # pays where the one-task global sort would otherwise BE the job.
-    memo = _BOUNDS_MEMO.setdefault(df.sparkSession, {})
-    key = (df.semanticHash(), name, nb)
-    bounds = memo.get(key)
-    if bounds is None:
-        bounds = sorted(
-            set(df.stat.approxQuantile(name, [i / nb for i in range(1, nb)], 0.001))
-        )
-        memo[key] = bounds
-    if not bounds:  # empty/all-NULL input: one bucket == the default plan
-        return df.withColumn(_PID, F.lit(0))
-    if asc:
-        pid = functools.reduce(
-            operator.add,
-            [F.when(col > F.lit(b), 1).otherwise(0) for b in bounds],
-        )  # NULL col: every when() is 0 -> pid 0 (NULLS FIRST)
-    else:
-        pid = functools.reduce(
-            operator.add,
-            [F.when(col < F.lit(b), 1).otherwise(0) for b in bounds],
-        )
-        # NULL col under desc must land LAST, not first
-        pid = F.when(col.isNull(), F.lit(len(bounds))).otherwise(pid)
-    return df.withColumn(_PID, pid)
-
-
-def running_agg(
-    df: DataFrame,
-    order_cols: list,
-    value: Column,
-    out: str,
-    fn,
-    exclusive: bool = False,
-) -> DataFrame:
-    """df + ``out`` = fn(value) over rows ≤ current in the total order
-    (< current when ``exclusive``). ``fn`` must be an ASSOCIATIVE
-    aggregate with an identity-absorbing combine (F.sum, F.max, F.min).
-    ``order_cols`` entries are ``"name"`` (ascending) or
-    ``("name", ascending)`` — see ``OrderSpec``.
-
-    Default: one global window (single-partition sort). Ranged: local
-    running aggregates per range partition combined with broadcast
-    per-partition offsets — identical output when ``order_cols`` is a
-    total order. The exclusive frame's first row per partition gets
-    NULL locally and the previous partitions' INCLUSIVE aggregate as
-    its offset, which is exactly the global exclusive frame.
-    """
-    # The ranged combine below dispatches on fn.__name__; anything it
-    # doesn't know (F.count, F.avg, ...) would silently corrupt output
-    # in ranged mode, so reject it up front in BOTH modes — the two
-    # plans must stay output-identical for every accepted aggregate.
-    if fn.__name__ not in {"sum", "max", "min"}:
-        raise ValueError(
-            f"running_agg supports F.sum/F.max/F.min, got {fn.__name__!r}"
-        )
-    specs = _normalize_order(order_cols)
-    order_by = _order_columns(specs)
-    frame_end = -1 if exclusive else Window.currentRow
-    if not use_ranged(df):
-        w = Window.orderBy(*order_by).rowsBetween(
-            Window.unboundedPreceding, frame_end
-        )
-        return df.withColumn(out, fn(value).over(w))
-    d = _with_pid(df, specs)
-    w_local = (
-        Window.partitionBy(_PID)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, frame_end)
-    )
-    d = d.withColumn(_LOCAL, fn(value).over(w_local))
-    # one row per partition; the cumulative window runs over ≤ a few
-    # thousand rows — driver-scale by construction
-    w_prev = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offs = (
-        d.groupBy(_PID)
-        .agg(fn(value).alias("_psum"))
-        .select(_PID, fn(F.col("_psum")).over(w_prev).alias(_OFF))
-    )
-    d = d.join(F.broadcast(offs), _PID)
-    # combine local running value with the previous-partition offset:
-    # sum adds, max/min re-aggregate the pair; NULLs (empty frames /
-    # first partition) must absorb, not poison
-    name = fn.__name__
-    lo, off = F.col(_LOCAL), F.col(_OFF)
-    if name == "sum":
-        comb = (
-            F.when(lo.isNull(), off)
-            .when(off.isNull(), lo)
-            .otherwise(lo + off)
-        )
-    else:  # max / min (validated above): NULL-absorbing pair combine
-        pair = F.greatest(lo, off) if name == "max" else F.least(lo, off)
-        comb = F.when(lo.isNull(), off).when(off.isNull(), lo).otherwise(pair)
-    return d.withColumn(out, comb).drop(_PID, _LOCAL, _OFF)
-
-
-def running_sum(
-    df: DataFrame,
-    order_cols: list,
-    value: Column,
-    out: str,
-) -> DataFrame:
-    """df + ``out`` = SUM(value) over rows ≤ current in the total order
-    (``order_cols`` entries: ``"name"`` or ``("name", ascending)``).
-
-    NOTE the default frame is ROWS unbounded-preceding..current, which
-    equals the RANGE default frame ONLY under a total order — the
-    precondition every caller satisfies (callers pre-aggregate to
-    unique keys first).
-    """
-    return running_agg(df, order_cols, value, out, F.sum)
-
-
-def lag_over(
-    df: DataFrame,
-    order_col: str,
-    out: str,
-) -> DataFrame:
-    """df + ``out`` = LAG(order_col) over the ASCENDING total order of
-    the named column.
-
-    Default: one global window. Ranged: per-partition lag, then the
-    per-partition boundary rows (min of each partition) get their
-    predecessor from the previous partition's max via a broadcast of
-    the one-row-per-partition summary. Requires order_col values to be
-    unique (every caller pre-aggregates or scans a distinct domain).
-    """
-    (spec,) = _normalize_order([order_col])
-    if not spec[1]:
-        # the boundary stitch below is written for ascending order
-        # (prev partition's MAX is the missing predecessor); a desc
-        # spec would silently stitch the wrong neighbor — reject it
-        raise ValueError(
-            "lag_over supports ascending order only; wrap the column "
-            "(negate / invert) to lag over a descending domain"
-        )
-    col = F.col(spec[0])
-    if not use_ranged(df):
-        w = Window.orderBy(col)
-        return df.withColumn(out, F.lag(col).over(w))
-    d = _with_pid(df, [spec])
-    w_local = Window.partitionBy(_PID).orderBy(col)
-    d = d.withColumn(out, F.lag(col).over(w_local))
-    # previous partition's max = the missing predecessor of each
-    # partition's first row; ≤ one row per partition, broadcast back
-    prev_max = (
-        d.groupBy(_PID)
-        .agg(F.max(col).alias("_pmax"))
-        .select(
-            _PID,
-            F.lag("_pmax").over(Window.orderBy(_PID)).alias("_prev_max"),
-        )
-    )
-    d = d.join(F.broadcast(prev_max), _PID)
-    return d.withColumn(out, F.coalesce(F.col(out), F.col("_prev_max"))).drop(
-        _PID, "_prev_max"
-    )
 
 
 def value_counts(
@@ -408,22 +96,3 @@ def grouped_order_stats(
     100-TB OOM.
     """
     return order_stats_from_counts(value_counts(df, keys, value), keys, ranks)
-
-
-def global_annotate(df: DataFrame, exprs: dict[str, Column]) -> DataFrame:
-    """df + one column per entry = the full-frame aggregate (MAX/SUM/…).
-
-    ``exprs`` values are un-windowed aggregate expressions (e.g.
-    ``F.max(F.col("conc"))``) — usable both as ``expr.over(window)``
-    and inside ``agg``. Default: ``Window.partitionBy()`` (single-
-    partition full-frame window, the oracle-stamped plan). Ranged: a
-    scalar aggregate broadcast-crossed back — two distributed passes,
-    no one-task window.
-    """
-    if not use_ranged(df):
-        w = Window.partitionBy()
-        for out, e in exprs.items():
-            df = df.withColumn(out, e.over(w))
-        return df
-    scalar = df.agg(*[e.alias(out) for out, e in exprs.items()])
-    return df.crossJoin(F.broadcast(scalar))

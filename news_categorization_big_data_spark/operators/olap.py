@@ -41,16 +41,16 @@ def skyline_min_max(df: DataFrame, minimize: str, maximize: str) -> DataFrame:
     a broadcast join back — the single-partition window sees only
     |distinct minimize values| rows, never the input.
     """
-    from news_categorization_big_data_spark.functions.ordered import running_agg
-
     m, x = F.col(minimize), F.col(maximize)
     per_key = df.groupBy(minimize).agg(F.max(x).alias("_best"))
-    # exclusive running max over the distinct minimize values; the
-    # spark.graft.window.ranged valve parallelizes it when the distinct
-    # value domain itself is fact-scale (functions/ordered.py)
+    # exclusive running max (ROWS frame ending one row back) over the
+    # pre-aggregated table of distinct minimize values
     frontier = (
-        running_agg(
-            per_key, [minimize], F.col("_best"), "_prev", F.max, exclusive=True
+        per_key.withColumn(
+            "_prev",
+            F.max("_best").over(
+                Window.orderBy(minimize).rowsBetween(Window.unboundedPreceding, -1)
+            ),
         )
         .where(F.col("_prev").isNull() | (F.col("_best") > F.col("_prev")))
         .select(F.col(minimize).alias("_sky_key"), F.col("_best"))

@@ -28,10 +28,6 @@ from news_categorization_big_data_spark.functions.exact import (
     det_log2_sql,
     o_dec_to_double,
 )
-from news_categorization_big_data_spark.functions.ordered import (
-    global_annotate,
-    running_sum,
-)
 from news_categorization_big_data_spark.plans.relational import (
     dsum,
     nonfinite,
@@ -1305,17 +1301,21 @@ def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("us", F.lit(-1).alias("delta"), "n")
     )
     b = starts.unionAll(ends).groupBy("us", "delta").agg(F.sum("n").alias("n"))
-    # (us, delta) is unique after the groupBy — a total order, so the
-    # spark.graft.window.ranged valve (functions/ordered.py) can swap
-    # both the running sum and the full-frame max for range-partitioned
-    # plans with identical output (tests/test_ordered_windows.py)
-    run = running_sum(
-        b, ["us", ("delta", False)], F.col("delta") * F.col("n"), "_rs"
+    # (us, delta) is unique after the groupBy — a total order over the
+    # pre-aggregated boundary table, so a ROWS frame equals RANGE and
+    # the running sum and full-frame max each run one task over it
+    run = b.withColumn(
+        "_rs",
+        F.sum(F.col("delta") * F.col("n")).over(
+            Window.orderBy("us", F.col("delta").desc()).rowsBetween(
+                Window.unboundedPreceding, Window.currentRow
+            )
+        ),
     )
     run = run.select(
         "us", "delta", F.col("_rs").cast("long").alias("conc")
     ).where(F.col("delta") == 1)
-    peaked = global_annotate(run, {"mx": F.max(F.col("conc"))})
+    peaked = run.withColumn("mx", F.max("conc").over(Window.partitionBy()))
     return peaked.agg(
         F.max("conc").alias("peak"),
         F.count(F.when(F.col("conc") == F.col("mx"), 1)).alias("n_at_peak"),
@@ -1381,10 +1381,17 @@ def q_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     v = s.groupBy("cents").agg(F.count("*").alias("c"))
-    # cents is unique after the groupBy — the ranged-window valve
-    # applies (functions/ordered.py, conf spark.graft.window.ranged)
-    cumv = running_sum(v, ["cents"], F.col("c"), "_cum")
-    cumv = global_annotate(cumv, {"n": F.sum(F.col("c"))}).select(
+    # cents is unique after the groupBy, so the one-task windows run
+    # over the pre-aggregated value-domain table
+    cumv = v.withColumn(
+        "_cum",
+        F.sum("c").over(
+            Window.orderBy("cents").rowsBetween(
+                Window.unboundedPreceding, Window.currentRow
+            )
+        ),
+    )
+    cumv = cumv.withColumn("n", F.sum("c").over(Window.partitionBy())).select(
         "cents",
         "c",
         (F.col("_cum") - F.col("c")).alias("p"),

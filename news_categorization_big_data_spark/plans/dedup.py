@@ -915,10 +915,9 @@ SIMHASH_MAXDF_CONF = "spark.graft.simhash.maxdf"
 #: sizing law (operators/dedup.py auto_simhash_bits) — the setting a
 #: corpus-scale deployment should run, because a fixed 32-bit sketch
 #: re-hits the single-task hot-bucket cliff around 2^8 docs per band
-#: value. UNLIKE the output-identical valves (window.ranged,
-#: rarity.headK), flipping this CHANGES THE ANSWER: the pair set is
-#: defined over the sketch, so a wider sketch is a different (finer)
-#: query and the stamped oracle no longer applies.
+#: value. Flipping this CHANGES THE ANSWER: the pair set is defined
+#: over the sketch, so a wider sketch is a different (finer) query and
+#: the stamped oracle no longer applies.
 SIMHASH_BITS_CONF = "spark.graft.simhash.bits"
 
 

@@ -26,10 +26,6 @@ from pyspark.sql import functions as F
 from news_categorization_big_data_spark.functions.cachepin import pin
 from news_categorization_big_data_spark.functions.hashing import hash60
 from news_categorization_big_data_spark.functions.partitioning import fan_out
-from news_categorization_big_data_spark.functions.ordered import (
-    global_annotate,
-    running_sum,
-)
 from news_categorization_big_data_spark.functions.exact import (
     dec_to_double,
     o_dec_to_double,
@@ -191,14 +187,22 @@ def q_lift_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     by_score = s.groupBy("score").agg(
         F.count("*").alias("n"), F.sum("label").cast("long").alias("pos")
     )
-    # score is unique after the groupBy — the ranged-window valve
-    # (functions/ordered.py, conf spark.graft.window.ranged) swaps the
-    # one-task cumulative/full-frame windows for range-partitioned
-    # plans when the distinct-score domain is fact-scale
-    cum = running_sum(by_score, [("score", False)], F.col("n"), "cum_n")
-    cum = global_annotate(
-        cum, {"n_g": F.sum(F.col("n")), "pos_g": F.sum(F.col("pos"))}
-    ).select("n", "pos", "cum_n", "n_g", "pos_g")
+    # score is unique after the groupBy, so the one-task cumulative
+    # and full-frame windows run over the pre-aggregated value domain
+    w_all = Window.partitionBy()
+    cum = (
+        by_score.withColumn(
+            "cum_n",
+            F.sum("n").over(
+                Window.orderBy(F.col("score").desc()).rowsBetween(
+                    Window.unboundedPreceding, Window.currentRow
+                )
+            ),
+        )
+        .withColumn("n_g", F.sum("n").over(w_all))
+        .withColumn("pos_g", F.sum("pos").over(w_all))
+        .select("n", "pos", "cum_n", "n_g", "pos_g")
+    )
     banded = cum.select(
         F.expr(f"({LIFT_BANDS} * cum_n + n_g - 1) div n_g").alias("band"),
         "n",

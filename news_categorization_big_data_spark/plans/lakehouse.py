@@ -638,20 +638,17 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lag window over the filtered ids — the gaps-and-islands lag "
     "formulation (q_sessionize's shape on an integer domain, emitting "
     "the HOLES instead of the islands). The single-partition window "
-    "is exact and fine at dimension scale; the documented planet-"
-    "scale form range-partitions the ids and checks partition "
-    "boundaries with a second tiny pass — same output, no global "
-    "sort. Determinism: pure integer arithmetic on distinct ids.",
+    "is exact and fine at dimension scale; a planet-scale form would "
+    "range-partition the ids and stitch partition boundaries with a "
+    "second tiny pass. Determinism: pure integer arithmetic on "
+    "distinct ids.",
 )
 def q_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from news_categorization_big_data_spark.functions.ordered import lag_over
-
     ev = load_table(spark, sf_dir, "events").where(F.col("event_type") == "click")
-    # the documented planet-scale form is now real: conf
-    # spark.graft.window.ranged=true swaps the single-partition lag for
-    # the range-partitioned + boundary-stitch plan (functions/ordered.py),
-    # output-identical (tests/test_ordered_windows.py)
-    ids = lag_over(ev.select("event_id"), "event_id", "prev_id")
+    # one-task lag over the (distinct) click ids
+    ids = ev.select("event_id").withColumn(
+        "prev_id", F.lag("event_id").over(Window.orderBy("event_id"))
+    )
     return ids.where(
         F.col("prev_id").isNotNull() & (F.col("event_id") - F.col("prev_id") > 1)
     ).select(

@@ -407,15 +407,12 @@ AUC_POSITIVE_TYPE = "purchase"
     "table — the fact table is never globally sorted (the previous "
     "plan ranked raw rows through one single-task sort, the exact "
     "100-TB trap). The residual ordered window runs over distinct "
-    "scores and flips to the range-partitioned two-phase plan under "
-    "spark.graft.window.ranged (functions/ordered.py). Per-GROUP AUC "
+    "scores, a pre-aggregated value-domain table. Per-GROUP AUC "
     "(the production shape) partitions the same plan by the group "
     "key. Identical integers to the rank formulation: a score with "
     "n ties starting at rank r contributes n·(2r + n − 1) rank units.",
 )
 def q_ml_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from news_categorization_big_data_spark.functions.ordered import running_sum
-
     # value IS NOT NULL — see the oracle note (/tmp/skew4 null policy).
     ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     s = ev.select(
@@ -428,7 +425,14 @@ def q_ml_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("ties"),
         F.sum("label").cast("long").alias("pos"),
     )
-    cum = running_sum(by, ["score"], F.col("ties"), "_cum")
+    cum = by.withColumn(
+        "_cum",
+        F.sum("ties").over(
+            Window.orderBy("score").rowsBetween(
+                Window.unboundedPreceding, Window.currentRow
+            )
+        ),
+    )
     r_lo = F.col("_cum") - F.col("ties") + 1
     a = cum.agg(
         F.sum(F.col("pos") * (F.lit(2) * r_lo + F.col("ties") - F.lit(1)))

@@ -20,10 +20,6 @@ from news_categorization_big_data_spark.functions.exact import (
     dec_to_double,
     o_dec_to_double,
 )
-from news_categorization_big_data_spark.functions.ordered import (
-    global_annotate,
-    running_sum,
-)
 from news_categorization_big_data_spark.functions.partitioning import fan_out
 from news_categorization_big_data_spark.plans.registry import register
 from news_categorization_big_data_spark.plans.relational import (
@@ -828,9 +824,14 @@ def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("cnt").cast("long").alias("max_cnt"),
     )
     dv = counts.groupBy("cnt").agg(F.count("*").cast("long").alias("nk"))
-    cum = running_sum(dv, ["cnt"], F.col("nk"), "_c").select(
-        "cnt", F.col("_c").cast("long").alias("c")
-    )
+    cum = dv.withColumn(
+        "_c",
+        F.sum("nk").over(
+            Window.orderBy("cnt").rowsBetween(
+                Window.unboundedPreceding, Window.currentRow
+            )
+        ),
+    ).select("cnt", F.col("_c").cast("long").alias("c"))
 
     def pctl(p: int):
         return (

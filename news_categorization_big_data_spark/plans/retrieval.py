@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from news_categorization_big_data_spark.functions.cachepin import pin
 from news_categorization_big_data_spark.functions.groupcollapse import grouped_ids
-from news_categorization_big_data_spark.functions.ordered import running_sum
 from news_categorization_big_data_spark.functions.text_exprs import tokens
 from news_categorization_big_data_spark.functions.exact import (
     dec_to_double,
@@ -691,14 +690,17 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = scored.join(docs.select("doc_id", "n_chars"), "doc_id")
     # row_number == running COUNT under a total order ((score, doc_id)
-    # and (n_chars, doc_id) are unique), so both rank windows ride the
-    # spark.graft.window.ranged valve (functions/ordered.py) for the
-    # high-df-term case where the candidate set approaches corpus scale
-    ranked = running_sum(
-        cand, [("score_a", False), "doc_id"], F.lit(1), "_ra"
-    )
-    ranked = running_sum(
-        ranked, ["n_chars", "doc_id"], F.lit(1), "_rb"
+    # and (n_chars, doc_id) are unique); both rank windows run one task
+    # over the candidate table, already cut to the query's terms
+    frame = (Window.unboundedPreceding, Window.currentRow)
+    ranked = cand.withColumn(
+        "_ra",
+        F.sum(F.lit(1)).over(
+            Window.orderBy(F.col("score_a").desc(), "doc_id").rowsBetween(*frame)
+        ),
+    ).withColumn(
+        "_rb",
+        F.sum(F.lit(1)).over(Window.orderBy("n_chars", "doc_id").rowsBetween(*frame)),
     )
     ranked = ranked.select(
         "doc_id",

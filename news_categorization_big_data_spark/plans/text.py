@@ -938,35 +938,16 @@ _RARITY_CTES = f"""toks AS (
     "would break the oracle hash at micro-unit boundaries). Scale: one "
     "token explode, one vocab groupBy, one tokens-to-vocab join, one "
     "per-doc groupBy. The vocab join's skew ('the' carries ~5% of all "
-    "rows) is the classic hot-key join: AQE skew-join splits it here. "
-    "One deployment valve for network-bound clusters, default OFF and "
-    "output-identical (tests/test_features_props.py): "
-    "spark.graft.rarity.headK broadcasts the top-K vocab head around "
-    "the shuffle (set in bench.py's PROFILE_100TB).",
+    "rows) is the classic hot-key join: a shuffle-hash join on tok, "
+    "whose hot partition AQE's skew-join split divides.",
 )
 def q_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_rarity_frame(load_table(spark, sf_dir, "documents"))
 
 
-def token_rarity_frame(docs: DataFrame, head_k: int | None = None) -> DataFrame:
+def token_rarity_frame(docs: DataFrame) -> DataFrame:
     """The q_token_rarity core over any (doc_id, text) frame — shared
-    with the brute-force property test (tests/test_features_props.py).
-
-    ``head_k`` (default: conf ``spark.graft.rarity.headK``, 0 = off) is
-    the documented 100-TB parameterization: the top-K vocab head by
-    document-stream frequency is BROADCAST into a map-side join (the
-    hot tokens — 'the' alone carries ~5% of the stream — never enter a
-    shuffle), and only the long tail shuffle-joins. Output-identical to
-    the plain path (tests/test_features_props.py asserts it): every
-    token takes exactly one of the two joins, and both use the same
-    rarity table."""
-    if head_k is None:
-        try:
-            head_k = int(
-                docs.sparkSession.conf.get("spark.graft.rarity.headK", "0")
-            )
-        except Exception:  # pragma: no cover - static conf stores
-            head_k = 0
+    with the brute-force property test (tests/test_features_props.py)."""
     toks = docs.select(
         "doc_id",
         F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("tok"),
@@ -985,16 +966,7 @@ def token_rarity_frame(docs: DataFrame, head_k: int | None = None) -> DataFrame:
     # lineage defeats its stats), which inverts at scale: the stream is
     # corpus-sized, the vocab is not. ShuffledHashJoin on tok is the
     # 100-TB shape; AQE's skew-join split absorbs the 'the' hot key.
-    if head_k > 0:
-        head_toks = vocab.orderBy(F.col("cnt").desc(), "tok").limit(head_k).select("tok")
-        head_rar = rar.join(F.broadcast(head_toks), "tok")
-        scored = toks.join(F.broadcast(head_rar), "tok").unionByName(
-            toks.join(F.broadcast(head_toks), "tok", "left_anti").join(
-                rar.hint("shuffle_hash"), "tok"
-            )
-        )
-    else:
-        scored = toks.join(rar.hint("shuffle_hash"), "tok")
+    scored = toks.join(rar.hint("shuffle_hash"), "tok")
     return (
         scored.groupBy("doc_id")
         .agg(

@@ -16,10 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from news_categorization_big_data_spark.functions.ordered import (
-    global_annotate,
-    running_sum,
-)
 from news_categorization_big_data_spark.functions.exact import (
     dec_to_double,
     o_dec_to_double,
@@ -791,12 +787,18 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = u.localCheckpoint(eager=False)
 
     def band(col: str) -> DataFrame:
-        # value-domain cumulative windows; spark.graft.window.ranged
-        # (functions/ordered.py) parallelizes them when the distinct
-        # metric domain is customer-scale
+        # the cumulative windows run one task over the pre-aggregated
+        # value-domain table (one row per distinct metric value)
         vals = u.groupBy(col).agg(F.count("*").alias("n"))
-        vals = running_sum(vals, [col], F.col("n"), "cum_n")
-        vals = global_annotate(vals, {"n_g": F.sum(F.col("n"))})
+        vals = vals.withColumn(
+            "cum_n",
+            F.sum("n").over(
+                Window.orderBy(col).rowsBetween(
+                    Window.unboundedPreceding, Window.currentRow
+                )
+            ),
+        )
+        vals = vals.withColumn("n_g", F.sum("n").over(Window.partitionBy()))
         return vals.select(
             F.col(col).alias("v"),
             F.expr(f"({RFM_BANDS} * cum_n + n_g - 1) div n_g").alias("band"),
@@ -1263,10 +1265,9 @@ def q_survival_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("unix_micros(min(ts)) div 86400000000").cast("long").alias("first_d"),
         F.expr("unix_micros(max(ts)) div 86400000000").cast("long").alias("last_d"),
     )
-    # the observation-horizon max runs over the USER-scale table and
-    # the reverse cumulative over the day-domain life table; both flip
-    # to distributed plans under spark.graft.window.ranged
-    lf = global_annotate(u, {"_mx": F.max(F.col("last_d"))}).select(
+    # the observation-horizon max runs over the pre-aggregated user
+    # table and the reverse cumulative over the day-domain life table
+    lf = u.withColumn("_mx", F.max("last_d").over(Window.partitionBy())).select(
         (F.col("last_d") - F.col("first_d")).alias("lifetime"),
         F.when(F.col("last_d") >= F.col("_mx"), 1).otherwise(0).alias("censored"),
     )
@@ -1274,8 +1275,13 @@ def q_survival_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_ending"),
         F.sum(1 - F.col("censored")).cast("long").alias("deaths"),
     )
-    r = running_sum(
-        g, [("lifetime", False)], F.col("n_ending"), "_ar"
+    r = g.withColumn(
+        "_ar",
+        F.sum("n_ending").over(
+            Window.orderBy(F.col("lifetime").desc()).rowsBetween(
+                Window.unboundedPreceding, Window.currentRow
+            )
+        ),
     ).select(
         "lifetime",
         "n_ending",

@@ -30,7 +30,6 @@ def _worst_final_line() -> str:
         reps=5,
         per_pass=_WORST_PER_PASS,
         git="abcdef0",
-        profile="100tb",
         sf1_summary={"value": 99999.999, "unit": "sec", "reps": 2, "sf": 1.0},
     )
 
@@ -98,7 +97,7 @@ def test_final_line_survives_single_pass_data():
     )
     assert obj["canary_last"] == 1.0
     assert obj["worst_noise_ratio"] == 1.0
-    assert "sf1" not in obj and "profile" not in obj
+    assert "sf1" not in obj
 
 
 def test_sf_is_null_for_a_dir_not_named_sf_n():

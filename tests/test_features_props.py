@@ -524,23 +524,3 @@ def test_token_rarity_matches_python_brute_force(spark, texts):
         s = sum(min(RARITY_CAP_MILLI, (n * 1000) // vocab[t]) for t in ts)
         want[i] = (len(ts), s // len(ts))
     assert got == want
-
-
-def test_token_rarity_head_broadcast_output_identical(spark, sf_dir):
-    """The documented 100-TB parameterization (top-K vocab head
-    broadcast map-side, tail shuffle-joined) must be output-identical
-    to the plain shuffle-hash path on the real table."""
-    from news_categorization_big_data_spark.plans.text import token_rarity_frame
-    from news_categorization_big_data_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    plain = sorted(map(str, token_rarity_frame(docs, head_k=0).collect()))
-    split = sorted(map(str, token_rarity_frame(docs, head_k=16).collect()))
-    assert plain and plain == split
-    # conf path: session-level switch reaches the registered query
-    spark.conf.set("spark.graft.rarity.headK", "16")
-    try:
-        via_conf = sorted(map(str, token_rarity_frame(docs).collect()))
-    finally:
-        spark.conf.unset("spark.graft.rarity.headK")
-    assert via_conf == plain

@@ -13,8 +13,8 @@ tests/conftest.py; planning-only — nothing executes):
    fetch-failure map-task rerun, re-executed rows can land in different
    buckets than copies already fetched by surviving reducers
    (SPARK-23207 double-count/loss class). Round 11 hit exactly this
-   with spark_partition_id over a sampled range exchange (see
-   functions/ordered.py); round 12 removed the last two sites
+   with spark_partition_id over a sampled range exchange (a ranged
+   total-order window, since deleted); round 12 removed the last two sites
    (functions/scale.py salts now hash real row ids). This sweep keeps
    the invariant for every future plan.
 """

@@ -1,8 +1,8 @@
 """Pin tools/query_profile.py: the record's keys and types in both modes,
 its scan and exchange counts against the plan-text helpers, the pins a
 pinned query reports, a failed query recorded while the loop moves on
-(and bench.py refusing to drop one), and unknown names rejected before
-Spark starts."""
+(and bench.py refusing to drop one), ``--plans`` captures of one
+session byte-equal, and unknown names rejected before Spark starts."""
 
 from __future__ import annotations
 
@@ -79,6 +79,16 @@ def test_failed_query_is_recorded_and_the_loop_moves_on(spark, sf_dir, monkeypat
     monkeypatch.setattr(bench, "HEADLINE", ["q_scan_parquet", "q_boom"])
     with pytest.raises(RuntimeError, match="q_boom"):
         bench.headline_passes(spark, sf_dir, 1)
+
+
+def test_plan_captures_of_one_session_are_byte_equal(spark, sf_dir, tmp_path):
+    # exchange plan ids and expression ids come from JVM-global counters,
+    # so the second capture's raw explain numbers both differently
+    dirs = [tmp_path / "a", tmp_path / "b"]
+    for d in dirs:
+        run_passes(spark, sf_dir, ["q_group_stats"], 0, plans_dir=str(d))
+    a, b = ((d / "q_group_stats.txt").read_bytes() for d in dirs)
+    assert b"plan_id=N" in a and a == b
 
 
 def test_unknown_name_exits_before_spark_starts():

@@ -22,10 +22,6 @@ SPARK_GRAFT_SIM_SF (optional): the sf dir both Spark and DuckDB read
 (default sf0.01, the runner's point); an edge axis of tools/fixtures.py
 works too.
 
-SPARK_GRAFT_SIM_CONF (optional): comma-separated k=v session confs set
-after session creation, to check conf-gated plans against the same
-oracles, e.g. `SPARK_GRAFT_SIM_CONF=spark.graft.window.ranged=true`.
-
 The contract's git stamp (CORRECTNESS_GIT.json) goes to a temp file, so
 a run leaves the checkout as it found it.
 
@@ -64,10 +60,6 @@ def main(names: list[str]) -> int:
 
     spark = SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    for kv in filter(None, os.environ.get("SPARK_GRAFT_SIM_CONF", "").split(",")):
-        k, _, v = kv.partition("=")
-        spark.conf.set(k.strip(), v.strip())
-        print(f"  [conf] {k.strip()}={v.strip()}", flush=True)
 
     if not names:
         df = entrymod.entry(spark)

@@ -13,7 +13,8 @@ unlike count()), and a query's number is its min across passes, so a
 noisy-neighbour burst has to span a whole pass to poison it. ``--reps 0``
 only builds and plans each query: the timed region is the builder plus
 physical planning. ``--plans DIR`` writes each query's formatted explain
-to DIR/<q>.txt; two captures compare with ``diff -r``.
+to DIR/<q>.txt in ``stable_plan`` form, so two captures of one commit are
+byte-equal and two commits compare with ``diff -r``.
 
 Output: one JSON record per query and pass as it lands, so a crash loses
 nothing, then one summary line ranking the queries by their min wall.
@@ -41,6 +42,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -55,6 +57,17 @@ FIELDS = ("q", "pass", "wall_s", "build_s", "eager_jobs", "analysis_s", "optimiz
 PHASES = ("analysis", "optimization", "planning")
 #: SQL metrics of the executed plan summed into a record: metric -> field
 PLAN_METRICS = {"numTasksFallBacked": "agg_fallbacks", "pythonNumRowsReceived": "python_rows"}
+#: Text of a formatted explain that changes from run to run -> its
+#: stand-in in ``--plans`` captures: exchange plan ids (a session-global
+#: counter), the app id in fixture paths and bucketed table names, the
+#: checkout's warehouse path and random part-file names.
+RUN_SPECIFIC = (
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"local-?_?\d{13}"), "local-APP"),
+    (re.compile(r"file:\S*?/spark-warehouse"), "file:WH"),
+    (re.compile(r"part-[0-9a-f]{32}"), "part-X"),
+)
+EXPR_ID = re.compile(r"#(\d+)")
 
 
 class _Listener:
@@ -124,6 +137,16 @@ def _plan_metrics(qe) -> dict:
     return out
 
 
+def stable_plan(text: str) -> str:
+    """``text`` with its ``RUN_SPECIFIC`` parts replaced and its
+    expression ids (``name#N``, from a JVM-global counter, so a rebuilt
+    query gets new ones) renumbered in order of first appearance."""
+    for pattern, stand_in in RUN_SPECIFIC:
+        text = pattern.sub(stand_in, text)
+    ids: dict[str, int] = {}
+    return EXPR_ID.sub(lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", text)
+
+
 def _run(spark, listener: _Listener, name: str, sf_dir: str, execute: bool,
          plans_dir: str | None, first: bool) -> dict:
     """One run of ``name`` and its record. A first run also plans the
@@ -148,7 +171,7 @@ def _run(spark, listener: _Listener, name: str, sf_dir: str, execute: bool,
             os.makedirs(plans_dir, exist_ok=True)
             mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
             with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
-                f.write(qe.explainString(mode))
+                f.write(stable_plan(qe.explainString(mode)))
         t3 = time.perf_counter()
         if execute:
             listener.last = None
