@@ -56,11 +56,3 @@ def hash_bits(col: Column | str, nbits: int) -> Column:
         raise ValueError(f"nbits must be a multiple of 4 in (0, 60]; got {nbits}")
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, nbits // 4), 16, 10).cast("long")
-
-
-def hash_bits16(col: Column | str) -> Column:
-    """16-bit integer from the first 4 hex chars of md5 (SimHash lanes).
-
-    DuckDB mirror: ``('0x' || substr(md5(expr), 1, 4))::BIGINT``.
-    """
-    return hash_bits(col, 16)

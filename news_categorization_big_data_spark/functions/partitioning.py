@@ -11,27 +11,24 @@ Decision order:
 1. ``spark.graft.fanout.enabled=false`` → no-op (set on real clusters
    where scans already yield thousands of partitions; at 100 TB scan
    width is governed by ``spark.sql.files.maxPartitionBytes``).
-2. ``spark.graft.fanout.partitions`` / explicit ``partitions`` arg →
-   repartition to exactly that width (operator knows best).
-3. Default: ESTIMATE the scan width from leaf-file sizes using Spark's
+2. Default: ESTIMATE the scan width from leaf-file sizes using Spark's
    own ``FilePartition`` packing formula (maxSplitBytes / openCost /
    bytesPerCore) — pure conf reads + one ``inputFiles()`` listing, no
-   plan→RDD analyzer round-trip. Valid because every call site applies
-   fan_out to a scan plus narrow transforms, where width is file-driven;
-   a caller fanning out POST-shuffle lineage must pass ``partitions``
-   explicitly (the estimate would describe the leaf scan, not the
-   shuffle). Byte splits are not row groups: a parquet scan task reads
-   only the row groups whose midpoints fall in its split, so a 45 MB
-   single-row-group file packs into 4 partitions yet one task reads
-   every row. When the packed count already reaches the target width
-   and the listing holds fewer files than the target, the estimate is
-   capped at the files' total row-group count, read from their footers
-   on the driver (sources/footer.py) — a handful of footers at most,
-   and none on the paths the gate turns away.
-4. Last resort (non-``file:`` scheme, empty file listing, in-memory
-   relations): probe ``df.rdd.getNumPartitions()``. On Spark Connect
-   (no ``sparkContext``/``df.rdd``) the probe fails and fan_out degrades
-   to a safe no-op — use the confs there.
+   plan→RDD analyzer round-trip. Valid only over a scan plus narrow
+   transforms, where width is file-driven; a shuffled or limited
+   lineage skips the estimate (step 3). Byte splits are not row
+   groups: a parquet scan task reads only the row groups whose
+   midpoints fall in its split, so a 45 MB single-row-group file packs
+   into 4 partitions yet one task reads every row. When the packed
+   count already reaches the target width and the listing holds fewer
+   files than the target, the estimate is capped at the files' total
+   row-group count, read from their footers on the driver
+   (sources/footer.py) — a handful of footers at most, and none on the
+   paths the gate turns away.
+3. Last resort (shuffled lineage, non-``file:`` scheme, empty file
+   listing, in-memory relations): probe ``df.rdd.getNumPartitions()``.
+   On Spark Connect (no ``sparkContext``/``df.rdd``) there is no target
+   width either, and fan_out is a safe no-op.
 """
 
 from __future__ import annotations
@@ -174,18 +171,18 @@ def _packed_partitions(df: DataFrame) -> int | None:
     return max(partitions, 1)
 
 
-def _scan_width_estimate(df: DataFrame, target: int | None = None) -> int | None:
+def _scan_width_estimate(df: DataFrame) -> int | None:
     """The scan's effective width: the packed partition count, capped at
     the input files' total row-group count when the packing alone would
-    already reach ``target`` (default: the session's default
-    parallelism) from fewer files than ``target`` — the one case where
-    byte splits can hide a scan that runs in fewer tasks than it packs.
-    None where :func:`_packed_partitions` can't derive a width."""
+    already reach the session's default parallelism from fewer files
+    than that — the one case where byte splits can hide a scan that
+    runs in fewer tasks than it packs. None where
+    :func:`_packed_partitions` can't derive a width."""
     packed = _packed_partitions(df)
     if packed is None:
         return None
     spark = df.sparkSession
-    target = target or _default_parallelism(spark)
+    target = _default_parallelism(spark)
     if target is None or packed < target:
         return packed
     files = df.inputFiles()
@@ -206,7 +203,6 @@ def _rdd_width(df: DataFrame) -> int | None:
 
 def fan_out(
     df: DataFrame,
-    partitions: int | None = None,
     force: bool = False,
     by: tuple[str, ...] | None = None,
 ) -> DataFrame:
@@ -226,20 +222,18 @@ def fan_out(
     cores, not #cores. All width guards (never shrink, cluster no-op,
     conf gates) apply unchanged.
 
-    The explicit path sets the TARGET width, never the exact width —
-    fan_out NEVER shrinks an already-wide input (collapsing a
-    2000-partition scan to a conf-sized handful and paying a shuffle
-    for it is the exact pathology this module exists to prevent). The
-    only exception is Spark Connect with an explicit width, where the
-    current width can't be probed and the conf owner's number wins.
+    The target width is the session's default parallelism, and fan_out
+    NEVER shrinks an already-wide input (collapsing a 2000-partition
+    scan to a handful and paying a shuffle for it is the exact
+    pathology this module exists to prevent).
 
     ``force=True`` skips the width probe and ALWAYS inserts a
-    user-numbered repartition. Use it when the input sits directly on
-    an AQE-coalescible exchange (post-groupBy/join) feeding a CPU-heavy
-    stage: the static plan reports the pre-AQE shuffle width (e.g. 32)
-    while AQE coalesces the tiny exchange to ~1 partition at runtime —
-    the probe cannot see that, and the hashing stage would run
-    single-threaded. AQE's coalescer respects user-numbered
+    user-numbered repartition to the target width. Use it when the
+    input sits directly on an AQE-coalescible exchange
+    (post-groupBy/join) feeding a CPU-heavy stage: the static plan
+    reports the pre-AQE shuffle width (e.g. 32) while AQE coalesces the
+    tiny exchange to ~1 partition at runtime — the probe cannot see
+    that, and the hashing stage would run single-threaded. AQE's coalescer respects user-numbered
     repartitions, so the forced width sticks. (Measured on the curation
     pipeline at sf0.1: the minhash stage drops 3.0s → 1.7s.)
     """
@@ -252,16 +246,14 @@ def fan_out(
 
     if spark.conf.get("spark.graft.fanout.enabled", "true").lower() == "false":
         return df
-    explicit = partitions or int(spark.conf.get("spark.graft.fanout.partitions", "0"))
-    target = explicit or _default_parallelism(spark)
+    target = _default_parallelism(spark)
+    if target is None:  # Spark Connect: no width to widen to
+        return df
     if force:
-        return _repart(target) if target else df
-    current = _scan_width_estimate(df, target)
+        return _repart(target)
+    current = _scan_width_estimate(df)
     if current is None:
         current = _rdd_width(df)
-    if current is None:
-        # Connect / unprobeable: the explicit width wins, else safe no-op
-        return _repart(explicit) if explicit else df
-    if target is None or current >= target:
+    if current is None or current >= target:
         return df
     return _repart(target)

@@ -544,68 +544,6 @@ def containment_pairs(
     )
 
 
-def auto_simhash_bits(
-    n_docs: int, bands: int = 4, floor: int = 32, cap: int = 60
-) -> int:
-    """The round-14-measured SimHash sizing law as code (r14 VERDICT
-    item 4): block width must track ``log2(corpus)`` or banded
-    candidate generation degenerates — at 500k docs a 16-bit sketch's
-    4-bit blocks held ~31k docs per bucket (~550M candidate pairs, the
-    hot bucket's explode serialized into ONE task) while the 60-bit
-    sketch at the same corpus completed in 285 s. A caller passing a
-    fixed ``bits`` at corpus scale can still hit that cliff silently;
-    this derives the width from a corpus count instead.
-
-    Returns ``bands * ceil(log2(n))`` rounded UP to a multiple of
-    lcm(bands, 4) (band split + hex-granularity md5 lanes), floored at
-    ``floor`` (=32, the stamped q_simhash_hamming profile) and capped
-    at the largest such multiple ≤ ``cap`` (=60, hash_bits' overflow-
-    safe BIGINT parse limit). Uncapped, expected bucket size
-    n / 2^(bits/bands) stays ≤ 1; once the cap binds (n > 2^15 per
-    band at the defaults) buckets grow as n / 2^15 — the documented
-    residual, still 3 decades better than the 16-bit profile.
-    """
-    if bands < 1:
-        raise ValueError(f"bands must be >= 1, got {bands}")
-    import math
-
-    step = bands * 4 // math.gcd(bands, 4)
-    width = max(1, math.ceil(math.log2(max(n_docs, 2))))
-    bits = max(bands * width, floor)
-    bits = step * math.ceil(bits / step)
-    max_bits = cap - cap % step
-    if max_bits < step:
-        raise ValueError(f"cap={cap} admits no multiple of lcm(bands,4)={step}")
-    return min(bits, max_bits)
-
-
-def simhash_hamming_auto(
-    docs: DataFrame,
-    max_distance: int = 3,
-    bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_df: int | None = None,
-) -> DataFrame:
-    """``simhash_hamming_pairs`` with the sketch width derived from the
-    corpus size (auto_simhash_bits) instead of a caller-fixed ``bits``
-    — the scale-safe entry point. Costs one extra count() action over
-    ``docs`` (metadata-fast on parquet scans) before the sketch build;
-    the registered q_simhash_hamming plan keeps explicit 32-bit sketches
-    because its brute-force oracle is stamped at that width (a different
-    width IS a different query: the pair set is defined over the
-    sketch)."""
-    bits = auto_simhash_bits(docs.count(), bands=bands)
-    return simhash_hamming_pairs(
-        simhash(docs, text_col=text_col, id_col=id_col, bits=bits),
-        max_distance=max_distance,
-        bits=bits,
-        bands=bands,
-        id_col=id_col,
-        max_df=max_df,
-    )
-
-
 def simhash_hamming_pairs(
     sketches: DataFrame,
     max_distance: int = 3,
@@ -613,7 +551,6 @@ def simhash_hamming_pairs(
     bands: int = 4,
     id_col: str = "doc_id",
     sketch_col: str = "simhash",
-    max_df: int | None = None,
 ) -> DataFrame:
     """Hamming-distance join over SimHash sketches: (doc_a, doc_b,
     hamming) for every pair with popcount(xor) ≤ ``max_distance``.
@@ -640,8 +577,7 @@ def simhash_hamming_pairs(
     long before the verify join costs anything. The same corpus with a
     60-bit/4-band sketch (block width ~log2(n), the documented rule)
     completes in 285 s with 7.06M true pairs. Callers at corpus scale
-    must size ``bits`` from log2(n) (or cap degenerate buckets with
-    ``max_df`` where recall loss is acceptable).
+    must size ``bits`` from log2(n).
     """
     if bands <= max_distance:
         raise ValueError(
@@ -650,84 +586,50 @@ def simhash_hamming_pairs(
     if bits % bands:
         raise ValueError(f"bits={bits} not divisible by bands={bands}")
     width = bits // bands
+    band_keys = [
+        F.shiftright(F.col(sketch_col), b * width).bitwiseAND(F.lit((1 << width) - 1))
+        for b in range(bands)
+    ]
 
-    def _band_keys(col: str) -> list:
-        return [
-            F.shiftright(F.col(col), b * width).bitwiseAND(F.lit((1 << width) - 1))
-            for b in range(bands)
-        ]
-
-    # max_df stays None-by-default here: pigeonhole recall is this
-    # operator's contract ("recall is total"), and block buckets are
-    # n/2^width by DESIGN — the scale answer is a wider sketch (Manku's
-    # 64-bit/4-block crawl config), not a cap. The cap is an emergency
-    # valve for callers who accept recall loss on degenerate corpora.
-    if max_df is not None:
-        # Capped path: the cap's drop unit is DOCS per band bucket, so
-        # banding must stay per-doc — the distinct-sketch rewrite below
-        # would change which buckets trip the cap.
-        cand = banded_pairs(
-            sketches, _band_keys(sketch_col), id_col, "doc_a", "doc_b", max_df=max_df
-        )
-        sa = sketches.select(
-            F.col(id_col).alias("doc_a"), F.col(sketch_col).alias("_ska")
-        )
-        sb = sketches.select(
-            F.col(id_col).alias("doc_b"), F.col(sketch_col).alias("_skb")
-        )
-        hamming = F.bit_count(F.col("_ska").bitwiseXOR(F.col("_skb")))
-        # shuffle_hash on the SKETCH side: the candidate table is a
-        # structurally WIDENED frame (double explode of bucket id-lists)
-        # whose static estimate is garbage — at sf1 the planner estimated
-        # it below the sketches and BROADCAST the 550M-row pair table
-        # (round-14 find; Spark's 512M-row broadcast hard cap killed the
-        # job, and AQE never demotes a statically-chosen broadcast join).
-        # The declared hint makes the join a shuffled-hash with the
-        # one-row-per-doc sketch side as build — no sort of the pair
-        # table, no broadcast of anything corpus-sized, the same remedy
-        # the r12 skew program applied to the containment/jaccard verify
-        # joins. (sketches scale with the corpus, so a broadcast hint on
-        # THEM would be the q18 class — shuffle_hash shards both sides.)
-        return (
-            cand.join(sa.hint("shuffle_hash"), "doc_a")
-            .join(sb.hint("shuffle_hash"), "doc_b")
-            .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
-            .where(F.col("hamming") <= max_distance)
-        )
-
-    # Default (uncapped) path — band over DISTINCT SKETCHES, not docs
-    # (r15, guide §8: decide on a lightweight proxy, multiply the heavy
-    # rows out once at the end). Exact-duplicate documents share a
-    # sketch, so every band bucket held every copy of every cluster and
-    # in-bucket pair generation was quadratic in the DUPLICATED count —
-    # and each hot bucket exploded from one collect_list row in ONE
-    # task (measured: the registered 32-bit plan took 1473 s at the sf1
-    # decade; that corpus holds few exact dups — tools/fixtures.py sf1
-    # suffixes each replica's text, leaving 80 redundant copies in
-    # 50,000 documents). Grouping docs by
-    # sketch first shrinks buckets by the duplication factor (pair work
-    # falls quadratically), the group id IS the sketch so candidate
-    # Hamming needs NO verify join at all, and the output pair set is
-    # IDENTICAL: intra-group pairs are exactly the distance-0 pairs,
-    # inter-group pairs expand the member lists of qualifying sketch
-    # pairs (disjoint groups ⇒ no duplicates; least/greatest keeps the
-    # doc_a < doc_b convention; null sketches, which the per-doc path
-    # drops via NULL hamming, are filtered up front). Verified MATCH
-    # against the unchanged DuckDB oracle and pair-for-pair against the
-    # old path at sf0.01/sf0.1.
+    # Band over DISTINCT SKETCHES, not docs (r15, guide §8: decide on a
+    # lightweight proxy, multiply the heavy rows out once at the end).
+    # Exact-duplicate documents share a sketch, so every band bucket
+    # held every copy of every cluster and in-bucket pair generation
+    # was quadratic in the DUPLICATED count — and each hot bucket
+    # exploded from one collect_list row in ONE task (measured: the
+    # registered 32-bit plan took 1473 s at the sf1 decade; that corpus
+    # holds few exact dups — tools/fixtures.py sf1 suffixes each
+    # replica's text, leaving 80 redundant copies in 50,000 documents).
+    # Grouping docs by sketch first shrinks buckets by the duplication
+    # factor (pair work falls quadratically), the group id IS the
+    # sketch so candidate Hamming needs NO verify join at all, and the
+    # output pair set is IDENTICAL: intra-group pairs are exactly the
+    # distance-0 pairs, inter-group pairs expand the member lists of
+    # qualifying sketch pairs (disjoint groups ⇒ no duplicates;
+    # least/greatest keeps the doc_a < doc_b convention; null sketches,
+    # which have no Hamming distance, are filtered up front). Verified
+    # MATCH against the unchanged DuckDB oracle and pair-for-pair
+    # against per-doc banding at sf0.01/sf0.1.
     groups = grouped_ids(
         sketches.where(F.col(sketch_col).isNotNull()), (sketch_col,), id_col
     )
-    cand = banded_pairs(groups, _band_keys(sketch_col), sketch_col, "_ska", "_skb")
+    cand = banded_pairs(groups, band_keys, sketch_col, "_ska", "_skb")
     hamming = F.bit_count(F.col("_ska").bitwiseXOR(F.col("_skb")))
     qual = cand.where(hamming <= max_distance).select(
         "_ska", "_skb", hamming.cast("int").alias("hamming")
     )
     ga = groups.select(F.col(sketch_col).alias("_ska"), F.col("_ids").alias("_idsa"))
     gb = groups.select(F.col(sketch_col).alias("_skb"), F.col("_ids").alias("_idsb"))
-    # shuffle_hash on the group side: same widened-frame rationale as
-    # the capped path's verify joins (the member arrays are
-    # corpus-sized in total — never broadcastable).
+    # shuffle_hash on the group side: the candidate table is a
+    # structurally WIDENED frame (double explode of bucket id-lists)
+    # whose static estimate is garbage — at sf1 the planner once
+    # estimated such a pair table below the sketches and BROADCAST the
+    # 550M-row side (round-14 find; Spark's 512M-row broadcast hard cap
+    # killed the job, and AQE never demotes a statically-chosen
+    # broadcast join). The hint makes each join a shuffled-hash with
+    # the one-row-per-sketch group side as build; the member arrays are
+    # corpus-sized in total, so a broadcast hint on them would be the
+    # q18 class — shuffle_hash shards both sides.
     inter = expand_group_pairs(
         qual.join(ga.hint("shuffle_hash"), "_ska").join(gb.hint("shuffle_hash"), "_skb"),
         "doc_a",

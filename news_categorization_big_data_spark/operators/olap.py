@@ -8,7 +8,7 @@ operators/dedup.py vs the jaccard brute-force property."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -74,47 +74,3 @@ def dominance_check(points: list[tuple], sky: list[tuple]) -> bool:
         )
     )
     return sorted(sky) == expected
-
-
-def sliding_distinct_hll(
-    events,
-    days: int = 7,
-    ts_col: str = "ts",
-    id_col: str = "user_id",
-    lg_k: int = 14,
-):
-    """Approximate sliding-window distinct count via mergeable per-day
-    HLL sketches — the documented extreme-scale swap for
-    q_sliding_distinct (plans/warehouse.py): where the exact form
-    shuffles days×|user-days| rows, this shuffles days×|days| SKETCHES
-    (a few KB each), so window count and corpus size drop out of the
-    shuffle volume entirely.
-
-    Shape: one per-day sketch aggregate over the raw events (the only
-    data-sized pass, map-side combinable), then each day's sketch
-    replicates into the ``days`` windows it serves and merges with
-    hll_union_agg — the mergeability that makes HLL the right 100-TB
-    state, and exactly the merge no exact distinct state supports.
-    Returns (win_start, n_users_approx). Standard HLL error ≈
-    1.04/√2^lg_k (~0.8% at the default), asserted against the exact
-    operator in tests.
-    """
-    from pyspark.sql import functions as F
-
-    per_day = (
-        events.select(F.to_date(ts_col).alias("d"), F.col(id_col))
-        .groupBy("d")
-        .agg(F.hll_sketch_agg(id_col, F.lit(lg_k)).alias("sk"))
-    )
-    # day d serves windows starting in [d-(days-1), d] — the same
-    # replication direction as the exact operator
-    windows = per_day.select(
-        F.explode(
-            F.sequence(F.date_sub("d", days - 1), F.col("d"))
-        ).alias("w"),
-        "sk",
-    )
-    return (
-        windows.groupBy(F.date_format("w", "yyyy-MM-dd").alias("win_start"))
-        .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("n_users_approx"))
-    )

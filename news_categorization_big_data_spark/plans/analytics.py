@@ -16,8 +16,6 @@ always carry ``event_id`` as the unique tie-break.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window

@@ -890,35 +890,10 @@ SIMHASH_HAMMING_D = 3
 #: block width ≈ log2(corpus): 8-bit blocks keep expected bucket sizes
 #: at n/256 (16-bit sketches put every doc in one of 16 buckets per
 #: block — measured 112M candidate pairs at sf0.1 vs ~0.5M here).
+#: The width is part of the query: the pair set is defined over the
+#: sketch, and the brute-force oracle is stamped at this width, so a
+#: corpus sized for wider blocks is a different (finer) query.
 SIMHASH_HAMMING_BITS = 32
-
-#: Emergency bucket-df cap for q_simhash_hamming (round-12 skew-fixture
-#: finding). Default "0" = UNCAPPED — the registered, oracle-stamped
-#: contract ("recall is total": pigeonhole banding is proven lossless
-#: against the brute-force oracle). On a boilerplate-DEGENERATE corpus,
-#: though, the true answer itself is quadratic: /tmp/skew1's 24-rep hot
-#: suffix drags every sketch toward one point, the d<=3 output
-#: approaches all-pairs, and the uncapped bucket collect_list cell
-#: killed the JVM (measured, round 12). Setting this conf to a positive
-#: df drops over-cap band buckets BEFORE aggregation (banded_pairs'
-#: spill-safe window count) — a recall trade, never a wrong pair: every
-#: emitted pair still passes the exact bit_count verify, so soundness
-#: is structural and only completeness is traded. The principled scale
-#: answer remains a wider sketch (block width ~ log2 corpus, Manku's
-#: 64-bit crawl config); the cap is for corpora where the ANSWER is
-#: degenerate, not the banding.
-SIMHASH_MAXDF_CONF = "spark.graft.simhash.maxdf"
-
-#: Sketch-width valve for q_simhash_hamming. Default "" = the stamped
-#: 32-bit plan above (the oracle is brute-force at THIS width). "auto"
-#: derives the width from a corpus count via the r14-measured log2(n)
-#: sizing law (operators/dedup.py auto_simhash_bits) — the setting a
-#: corpus-scale deployment should run, because a fixed 32-bit sketch
-#: re-hits the single-task hot-bucket cliff around 2^8 docs per band
-#: value. Flipping this CHANGES THE ANSWER: the pair set is defined
-#: over the sketch, so a wider sketch is a different (finer) query and
-#: the stamped oracle no longer applies.
-SIMHASH_BITS_CONF = "spark.graft.simhash.bits"
 
 
 @register(
@@ -954,30 +929,17 @@ SIMHASH_BITS_CONF = "spark.graft.simhash.bits"
     "(q_dedup_cluster), which never materializes all pairs per "
     "cluster. On a boilerplate-DEGENERATE corpus the TRUE answer is "
     "quadratic (every sketch collapses toward the template's — the "
-    "round-12 skew fixture killed the uncapped run); "
-    "spark.graft.simhash.maxdf (default off — this stamped plan is "
-    "uncapped) is the emergency bucket cap for that regime, a recall "
-    "trade that can never emit a wrong pair because every candidate "
-    "still passes the exact bit_count verify. Determinism: integer "
-    "sketches, integer distances; the only float anywhere is the ±1 "
-    "vote sums' sign.",
+    "round-12 skew fixture killed the run); the answer itself is the "
+    "cost there, and no bucket cap can shrink it without losing "
+    "recall. Determinism: integer sketches, integer distances; the "
+    "only float anywhere is the ±1 vote sums' sign.",
 )
 def q_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from news_categorization_big_data_spark.operators.dedup import (
-        simhash_hamming_auto,
-    )
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text") != "")
-    cap = int(spark.conf.get(SIMHASH_MAXDF_CONF, "0")) or None
-    if spark.conf.get(SIMHASH_BITS_CONF, "") == "auto":
-        return simhash_hamming_auto(
-            docs, max_distance=SIMHASH_HAMMING_D, max_df=cap
-        )
     return simhash_hamming_pairs(
         simhash(docs, bits=SIMHASH_HAMMING_BITS),
         max_distance=SIMHASH_HAMMING_D,
         bits=SIMHASH_HAMMING_BITS,
-        max_df=cap,
     )
 
 

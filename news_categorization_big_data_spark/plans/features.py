@@ -32,7 +32,6 @@ from news_categorization_big_data_spark.functions.exact import (
 )
 from news_categorization_big_data_spark.plans.relational import (
     dsum,
-    nonfinite,
     o_dsum_fin,
     poisoned_flag,
 )

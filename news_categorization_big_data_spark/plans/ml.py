@@ -15,10 +15,7 @@ from pyspark.sql import functions as F
 
 from news_categorization_big_data_spark.operators import classify as clf
 from news_categorization_big_data_spark.operators.summarize import extractive_summarize
-from news_categorization_big_data_spark.functions.exact import (
-    dec_to_double,
-    o_dec_to_double,
-)
+from news_categorization_big_data_spark.functions.exact import o_dec_to_double
 from news_categorization_big_data_spark.plans.relational import dsum
 from news_categorization_big_data_spark.plans.registry import register
 from news_categorization_big_data_spark.plans.relational import (

@@ -23,15 +23,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from news_categorization_big_data_spark.functions.exact import dec_to_double
 from news_categorization_big_data_spark.plans.registry import register
 from news_categorization_big_data_spark.plans.relational import (
     dsum,
     dsum_fin,
     o_dsum,
     o_dsum_fin,
-    o_fin,
-    o_poisoned,
     poisoned_flag,
 )
 from news_categorization_big_data_spark.sources.tables import load_table

@@ -950,13 +950,6 @@ BOOT_T = (24109, 48218, 60273, 64291, 65296, 65497, 65530)
 BOOT_K_LO, BOOT_K_HI = 1, 39
 
 
-def _boot_ranks(b: int, alpha: float = 0.05) -> tuple[int, int]:
-    """floor((B+1)·α/2) / floor((B+1)·(1−α/2)) rank pair; ==(BOOT_K_LO,
-    BOOT_K_HI) at the registered default B=40."""
-    lo = int((b + 1) * (alpha / 2))
-    return max(lo, 1), int((b + 1) * (1 - alpha / 2))
-
-
 def _boot_w_sql(u: str) -> str:
     return "(" + " + ".join(
         f"CASE WHEN {u} >= {t} THEN 1 ELSE 0 END" for t in BOOT_T
@@ -1034,15 +1027,6 @@ def _boot_w_sql(u: str) -> str:
     "keeps codegen tight and won.",
 )
 def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Resample count is THE scale knob of this query (work is exactly
-    # B× one scan; the sf1 decade ratio in SCALE.md is honest B=40
-    # arithmetic): conf-settable per session like cc.localThreshold,
-    # default pinned to the registered/oracle value. CI ranks follow B
-    # via the floor((B+1)·α) convention.
-    boot_b = int(spark.conf.get("spark.graft.bootstrap.resamples", str(BOOT_B)))
-    k_lo, k_hi = (
-        (BOOT_K_LO, BOOT_K_HI) if boot_b == BOOT_B else _boot_ranks(boot_b)
-    )
     # TWO-LEVEL explode (round 11): first the digest GROUPS (one md5
     # per (row, group) — 8 lanes share a digest), then the 8 lanes
     # slicing it. The previous single-level explode evaluated the md5
@@ -1055,7 +1039,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4.04->2.63 s at sf0.1, 36.6->22.2 s at sf1, output
     # BIT-IDENTICAL (same digests, same lanes, same u16s; SCALE.md
     # round 11).
-    n_groups = (boot_b + 7) // 8
+    n_groups = (BOOT_B + 7) // 8
     # fan_out BEFORE the B-fold explode (guide §2.5 input skew): the
     # bench fixtures are single-row-group parquet files, so the scan is
     # 1-2 tasks and the 40x explode + md5/conv/aggregate map work — the
@@ -1099,7 +1083,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("c2", F.conv(F.expr("substring(dig, 25, 8)"), 16, 10).cast("long"))
         .withColumn("lane", F.explode(F.sequence(F.lit(0), F.lit(7))))
         .withColumn("b", F.col("g") * 8 + F.col("lane"))
-        .where(F.col("b") < boot_b)
+        .where(F.col("b") < BOOT_B)
     )
     u16 = F.expr(
         "CASE WHEN lane < 3 THEN shiftright(c0, (2 - lane) * 16) "
@@ -1135,8 +1119,8 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         m.groupBy("event_type")
         .agg(
             F.count("*").cast("long").alias("n_resamples"),
-            F.max(F.when(F.col("rn") == k_lo, F.col("mean_b"))).alias("_lo"),
-            F.max(F.when(F.col("rn") == k_hi, F.col("mean_b"))).alias("_hi"),
+            F.max(F.when(F.col("rn") == BOOT_K_LO, F.col("mean_b"))).alias("_lo"),
+            F.max(F.when(F.col("rn") == BOOT_K_HI, F.col("mean_b"))).alias("_hi"),
         )
         .join(F.broadcast(pz), "event_type")
         .select(

@@ -19,12 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from news_categorization_big_data_spark.plans.registry import register
-from news_categorization_big_data_spark.plans.relational import (
-    dsum,
-    dsum_fin,
-    o_dsum,
-    o_dsum_fin,
-)
+from news_categorization_big_data_spark.plans.relational import dsum_fin, o_dsum_fin
 from news_categorization_big_data_spark.sources.tables import load_table
 
 #: The events table's closed event-type domain — pinned so the pivot is

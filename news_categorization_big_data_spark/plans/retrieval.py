@@ -19,10 +19,7 @@ from pyspark.sql import functions as F
 from news_categorization_big_data_spark.functions.cachepin import pin
 from news_categorization_big_data_spark.functions.groupcollapse import grouped_ids
 from news_categorization_big_data_spark.functions.text_exprs import tokens
-from news_categorization_big_data_spark.functions.exact import (
-    dec_to_double,
-    o_dec_to_double,
-)
+from news_categorization_big_data_spark.functions.exact import o_dec_to_double
 from news_categorization_big_data_spark.plans.relational import dsum, nonfinite
 from news_categorization_big_data_spark.plans.registry import register
 from news_categorization_big_data_spark.sources.tables import load_table

@@ -54,10 +54,10 @@ from news_categorization_big_data_spark.sources.tables import load_table
     "accumulate as exact DECIMAL(18,2) and the 2·cumw ≥ total "
     "comparison is decimal-exact — no float sum can flip the boundary; "
     "(price, orderkey, linenumber) is a unique total order. Scale: one "
-    "shuffle + per-flag spillable sort; the documented planet-scale "
-    "swap is two passes over a per-flag VALUE HISTOGRAM (weight sums "
-    "per price bucket, then an exact scan of the boundary bucket only) "
-    "when a single flag's rows exceed one executor's sort budget.",
+    "shuffle + per-flag spillable sort. A flag whose rows exceed one "
+    "executor's sort budget would need two passes over a per-flag "
+    "VALUE HISTOGRAM (weight sums per price bucket, then an exact scan "
+    "of the boundary bucket only); no such path is built.",
 )
 def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -167,84 +167,4 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ELSE (element_at(sv, CAST(n / 2 AS INT)) "
             "      + element_at(sv, CAST(n / 2 AS INT) + 1)) / 2.0 END"
         ).alias("roll_med"),
-    )
-
-
-def weighted_median_twopass(li: DataFrame, n_buckets: int = 64) -> DataFrame:
-    """The documented planet-scale ALTERNATE PATH for q_weighted_median
-    (same output, different physical shape — asserted output-identical
-    in tests/test_robust_linkage.py): two passes over a per-flag VALUE
-    HISTOGRAM instead of one per-flag global sort.
-
-    Pass 1 aggregates weight per (flag, price bucket) — a map-side-
-    combinable shuffle whose state is O(buckets), not O(rows) — and a
-    running bucket-cumulative locates the single BOUNDARY bucket that
-    contains the weighted median. Pass 2 sorts ONLY that bucket's rows
-    (a broadcast-joined filter prunes every other row before the sort)
-    and picks the boundary element with the exact decimal rule. Use
-    when a single flag's rows exceed one executor's spillable sort
-    budget; the exact path wins below that.
-    """
-    wq = F.col("l_quantity").cast("decimal(18,2)")
-    lo_hi = li.groupBy("l_returnflag").agg(
-        F.min("l_extendedprice").alias("_lo"), F.max("l_extendedprice").alias("_hi")
-    )
-    b = li.join(F.broadcast(lo_hi), "l_returnflag").withColumn(
-        "_bucket",
-        F.least(
-            F.lit(n_buckets - 1),
-            F.floor(
-                (F.col("l_extendedprice") - F.col("_lo"))
-                / ((F.col("_hi") - F.col("_lo")) / n_buckets)
-            ).cast("int"),
-        ),
-    )
-    hist = b.groupBy("l_returnflag", "_bucket").agg(F.sum(wq).alias("_w"))
-    w_cum = (
-        Window.partitionBy("l_returnflag")
-        .orderBy("_bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy("l_returnflag")
-    marked = hist.select(
-        "l_returnflag",
-        "_bucket",
-        F.sum("_w").over(w_cum).alias("_cum"),
-        F.sum("_w").over(w_tot).alias("_tot"),
-    )
-    # Boundary bucket: first whose cumulative reaches half the total.
-    boundary = (
-        marked.where(F.lit(2) * F.col("_cum") >= F.col("_tot"))
-        .groupBy("l_returnflag")
-        .agg(F.min("_bucket").alias("_bb"), F.max("_tot").alias("_tot"))
-    )
-    # Weight already consumed BEFORE the boundary bucket.
-    before = (
-        marked.join(boundary, "l_returnflag")
-        .where(F.col("_bucket") < F.col("_bb"))
-        .groupBy("l_returnflag")
-        .agg(F.max("_cum").alias("_before"))
-    )
-    # Pass 2: sort only the boundary bucket's rows.
-    in_bucket = (
-        b.join(F.broadcast(boundary), "l_returnflag")
-        .where(F.col("_bucket") == F.col("_bb"))
-        .join(F.broadcast(before), "l_returnflag", "left")
-        .na.fill({"_before": 0})
-    )
-    order = [F.col("l_extendedprice"), F.col("l_orderkey"), F.col("l_linenumber")]
-    w_in = (
-        Window.partitionBy("l_returnflag")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ranked = in_bucket.withColumn("_cumin", F.col("_before") + F.sum(wq).over(w_in))
-    w_rn = Window.partitionBy("l_returnflag").orderBy(*order)
-    q = ranked.where(F.lit(2) * F.col("_cumin") >= F.col("_tot")).withColumn(
-        "rn", F.row_number().over(w_rn)
-    )
-    return q.where(F.col("rn") == 1).select(
-        "l_returnflag",
-        F.col("l_extendedprice").alias("wmedian"),
-        F.col("_tot").cast("double").alias("total_weight"),
     )

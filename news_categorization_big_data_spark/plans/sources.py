@@ -25,10 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from news_categorization_big_data_spark.functions.exact import (
-    dec_to_double,
-    o_dec_to_double,
-)
+from news_categorization_big_data_spark.functions.exact import o_dec_to_double
 from news_categorization_big_data_spark.plans.relational import dsum, dsum_fin, o_dsum_fin
 from news_categorization_big_data_spark.plans.registry import register
 from news_categorization_big_data_spark.sources.json_corpus import (

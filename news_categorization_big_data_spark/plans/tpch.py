@@ -22,10 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from news_categorization_big_data_spark.functions.exact import (
-    dec_to_double,
-    o_dec_to_double,
-)
+from news_categorization_big_data_spark.functions.exact import o_dec_to_double
 from news_categorization_big_data_spark.functions.partitioning import fan_out
 from news_categorization_big_data_spark.functions.scale import broadcast_if_small
 from news_categorization_big_data_spark.plans.registry import register

@@ -72,12 +72,10 @@ KS_CUT = "2024-01-16 00:00:00"
     f"{SLIDE_DAYS}×|user-days| — independent of raw event count, the "
     "term that dominates at 100 TB. The windows-ending-in-the-future "
     "tail (first/last 6 days) is emitted as-is; callers trim to the "
-    "observed range. Alternative at extreme scale: per-day HLL "
-    "sketches merged across the window — IMPLEMENTED as "
-    "operators/olap.py:sliding_distinct_hll (shuffles days×|days| "
-    "few-KB sketches instead of days×|user-days| rows) and asserted "
-    "within HLL error of this exact variant in tests/test_scale_ops; "
-    "this query is the exact oracle-checkable form.",
+    "observed range. An approximate form would merge per-day HLL "
+    "sketches across the window (days×|days| few-KB sketches instead "
+    "of days×|user-days| rows); this query is the exact "
+    "oracle-checkable form, and no approximate path is built.",
 )
 def q_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")

@@ -146,7 +146,10 @@ def track_category_totals(parsed: DataFrame) -> DataFrame:
     same hook carries ML feature accumulators, per-entity CEP automata,
     etc.). State is keyed by category → shuffle-partitioned, bounded by
     the category dimension (never corpus-sized); checkpointed with the
-    query, so replays restore it exactly.
+    query, so replays restore it exactly. The state-V2
+    ``transformWithStateInPandas`` API is not used: its runtime sends
+    state over a protobuf channel, so running it needs the
+    ``google.protobuf`` package on every executor.
     """
     return parsed.groupBy("category").applyInPandasWithState(
         _update_category_state,
@@ -154,65 +157,6 @@ def track_category_totals(parsed: DataFrame) -> DataFrame:
         stateStructType=CATEGORY_STATE_SCHEMA,
         outputMode="update",
         timeoutConf="NoTimeout",
-    )
-
-
-def _make_category_totals_processor():
-    """Build the StatefulProcessor for ``track_category_totals_v2`` —
-    the transformWithStateInPandas (state V2) twin of
-    ``_update_category_state``: per-category cumulative count + chars in
-    a typed ValueState cell. Constructed inside a function because the
-    base-class import is Spark ≥ 4 only."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Processor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", CATEGORY_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            prior = self._totals.get() if self._totals.exists() else None
-            n, chars = (int(prior[0]), int(prior[1])) if prior else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                chars += int(pdf["content"].fillna("").str.len().sum())
-            self._totals.update((n, chars))
-            yield pd.DataFrame(
-                {"category": [key[0]], "n_total": [n], "chars_total": [chars]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return _Processor()
-
-
-def track_category_totals_v2(parsed: DataFrame) -> DataFrame:
-    """The state-V2 form of :func:`track_category_totals`:
-    ``transformWithStateInPandas`` with an explicit StatefulProcessor.
-
-    Same semantics (cumulative per-category totals across micro-batches,
-    category-keyed state bounded by the dimension), but on the V2
-    runtime surface: typed named state cells (ValueState here; the same
-    handle serves ListState/MapState), lifecycle hooks, and optional
-    event/processing-time timers — the API the 100-TB topology would
-    standardize on, since state evolution (adding a cell) doesn't
-    invalidate checkpoints the way changing an applyInPandasWithState
-    tuple schema does.
-
-    Runtime prerequisite: the V2 state channel is protobuf-encoded, so
-    executing (not building) this plan needs the ``google.protobuf``
-    package — unavailable in the build sandbox (the test skips, like
-    the live-Kafka path); on a real cluster it ships with pyspark's
-    declared deps.
-    """
-    return parsed.groupBy("category").transformWithStateInPandas(
-        statefulProcessor=_make_category_totals_processor(),
-        outputStructType=CATEGORY_STATE_OUTPUT,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

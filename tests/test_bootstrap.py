@@ -9,7 +9,6 @@ from collections import defaultdict
 from fractions import Fraction
 
 import duckdb
-import pytest
 
 from news_categorization_big_data_spark.plans import REGISTRY
 from news_categorization_big_data_spark.plans.quality import (
@@ -73,54 +72,6 @@ def test_bootstrap_ci_interval_sane(spark, sf_dir):
     for r in rows:
         assert r["n_resamples"] == BOOT_B
         assert r["boot_lo"] <= r["boot_hi"], r
-
-
-@pytest.mark.parametrize("B,ranks", [(20, (1, 20)), (80, (2, 78))])
-def test_bootstrap_ci_resamples_conf_knob(spark, sf_dir, B, ranks):
-    """spark.graft.bootstrap.resamples is the documented scale knob
-    (work = B x one scan): B=80 doubles the lanes (two md5 digests per
-    row), B=20 is the documented cheap setting (SCALE.md round-8 trade
-    curve), ranks follow floor((B+1)*alpha) — brute-force checked at
-    both non-default Bs against the same hashlib weights."""
-    from news_categorization_big_data_spark.plans.quality import _boot_ranks
-
-    assert _boot_ranks(BOOT_B) == (BOOT_K_LO, BOOT_K_HI)
-    ev = duckdb.sql(
-        f"""SELECT event_type, event_id, value
-            FROM '{sf_dir}/events.parquet' WHERE value IS NOT NULL"""
-    ).fetchall()
-    k_lo, k_hi = _boot_ranks(B)
-    assert (k_lo, k_hi) == ranks
-    na = defaultdict(int)
-    sa = defaultdict(int)
-    for et, eid, v in ev:
-        cents = int((Fraction(str(v)) * 100 + Fraction(1, 2)).__floor__())
-        for b in range(B):
-            w = _weight(b, eid)
-            na[(et, b)] += w
-            sa[(et, b)] += w * cents
-    means = defaultdict(list)
-    for (et, b), n in na.items():
-        if n > 0:
-            means[et].append((sa[(et, b)] / 100 / n, b))
-    want = {}
-    for et, ms in means.items():
-        ms.sort()
-        want[et] = (len(ms), ms[k_lo - 1][0], ms[k_hi - 1][0])
-    spark.conf.set("spark.graft.bootstrap.resamples", str(B))
-    try:
-        got = {
-            r["event_type"]: (r["n_resamples"], r["boot_lo"], r["boot_hi"])
-            for r in REGISTRY["q_bootstrap_ci"].builder(spark, sf_dir).collect()
-        }
-    finally:
-        spark.conf.unset("spark.graft.bootstrap.resamples")
-    assert set(got) == set(want)
-    for et in want:
-        n_w, lo_w, hi_w = want[et]
-        n_g, lo_g, hi_g = got[et]
-        assert n_g == n_w == B
-        assert abs(lo_g - lo_w) < 1e-9 and abs(hi_g - hi_w) < 1e-9, et
 
 
 def test_bootstrap_ci_explode_collapses_before_wire(registry_plans):

@@ -60,12 +60,25 @@ def test_estimate_matches_actual_scan_width(spark, sf_dir):
 def test_never_shrinks_wide_input(spark, sf_dir):
     wide = load_table(spark, sf_dir, "documents").repartition(64)
     assert fan_out(wide) is wide  # 64 > defaultParallelism=32 → no-op
-    assert fan_out(wide, partitions=8) is wide  # explicit below current → no-op
 
 
-def test_explicit_partitions_widen(spark, sf_dir):
+def test_force_repartitions_wide_input_to_default_parallelism(spark, sf_dir):
+    """``force=True`` skips the width probe: even a 64-partition input
+    (wider than the target) is repartitioned to exactly the session's
+    default parallelism."""
+    wide = load_table(spark, sf_dir, "documents").repartition(64)
+    forced = fan_out(wide, force=True)
+    assert forced is not wide
+    assert forced.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_unprobeable_width_is_noop(spark, sf_dir, monkeypatch):
+    """When neither the file estimate nor the RDD probe yields a width,
+    fan_out returns its input unchanged."""
+    monkeypatch.setattr(partitioning, "_scan_width_estimate", lambda df: None)
+    monkeypatch.setattr(partitioning, "_rdd_width", lambda df: None)
     docs = load_table(spark, sf_dir, "documents")
-    assert fan_out(docs, partitions=48).rdd.getNumPartitions() == 48
+    assert fan_out(docs) is docs
 
 
 def test_keyed_fan_out_hash_partitions_and_guards(spark, sf_dir):
@@ -93,8 +106,6 @@ def test_keyed_fan_out_hash_partitions_and_guards(spark, sf_dir):
         assert fan_out(docs, by=("doc_id",)) is docs
     finally:
         spark.conf.set("spark.graft.fanout.enabled", "true")
-    # explicit width composes with `by`
-    assert fan_out(docs, partitions=8, by=("doc_id",)).rdd.getNumPartitions() == 8
 
 
 def test_conf_gate_disables(spark, sf_dir):

@@ -9,13 +9,21 @@ transfer for rows it then throws away. The engine's convention is to
 place native predicates BEFORE Python stages; this sweep makes the
 convention enforceable — any registered plan with a native Filter above
 a Python eval node in its executed-plan tree fails here with the plan
-line, instead of shipping a 10-100x row-transfer regression."""
+line, instead of shipping a 10-100x row-transfer regression.
+
+One source-level convention rides along: no module of the engine, its
+tools or its entry scripts imports a name it never uses (the check a
+deletion most often leaves failing)."""
 
 from __future__ import annotations
 
+import ast
 import re
+from pathlib import Path
 
 import pytest
+
+REPO = Path(__file__).resolve().parents[1]
 
 #: Physical node names of every Python-boundary operator (Spark 4):
 #: mapInPandas / mapInArrow, applyInPandas, cogrouped applyInPandas,
@@ -88,3 +96,53 @@ def test_python_node_queries_inventory(python_plans):
         "q_udtf_table_arg",
         "q_video_frames",
     }, set(python_plans)
+
+
+def _unused_imports(path: Path) -> list[str]:
+    """``path:line: name`` for each imported name the module never
+    reads. A name counts as read when it appears as an identifier
+    anywhere in the file or as a string in ``__all__``. Exempt: imports
+    on a line marked ``noqa: F401`` (kept for a side effect or a
+    caller outside Python) and module-level imports of an
+    ``__init__.py`` (package re-exports)."""
+    src = path.read_text()
+    tree = ast.parse(src)
+    lines = src.splitlines()
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+        ):
+            used |= {
+                e.value
+                for e in ast.walk(node.value)
+                if isinstance(e, ast.Constant) and isinstance(e.value, str)
+            }
+    top = {id(n) for n in tree.body} if path.name == "__init__.py" else set()
+    found = []
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.Import, ast.ImportFrom)) or id(node) in top:
+            continue
+        if getattr(node, "module", None) == "__future__":
+            continue
+        if "F401" in lines[node.lineno - 1]:
+            continue
+        for alias in node.names:
+            name = alias.asname or alias.name.split(".")[0]
+            if name != "*" and name not in used:
+                found.append(f"{path.relative_to(REPO)}:{node.lineno}: {name}")
+    return found
+
+
+def test_no_unused_imports():
+    """Every import in the engine package, ``tools/`` and the
+    checkout-root scripts (bench.py, __spark_entry__.py,
+    pyspark_graft_worker.py) is read somewhere in its module."""
+    files = [
+        *(REPO / "news_categorization_big_data_spark").rglob("*.py"),
+        *(REPO / "tools").rglob("*.py"),
+        *REPO.glob("*.py"),
+    ]
+    assert len(files) > 50, files
+    found = [hit for path in sorted(files) for hit in _unused_imports(path)]
+    assert not found, found

@@ -202,31 +202,6 @@ def test_registered_cc_distributed_path_output_identical(spark, sf_dir):
     assert default
 
 
-def test_sliding_distinct_hll_tracks_exact(spark, sf_dir):
-    """The documented extreme-scale swap for q_sliding_distinct: per-day
-    HLL sketches merged across windows must track the exact operator
-    within standard HLL error on every window."""
-    from news_categorization_big_data_spark.operators.olap import (
-        sliding_distinct_hll,
-    )
-    from news_categorization_big_data_spark.plans import REGISTRY
-    from news_categorization_big_data_spark.sources.tables import load_table
-
-    exact = {
-        r["win_start"]: r["n_users"]
-        for r in REGISTRY["q_sliding_distinct"].builder(spark, sf_dir).collect()
-    }
-    ev = load_table(spark, sf_dir, "events")
-    approx = {
-        r["win_start"]: r["n_users_approx"]
-        for r in sliding_distinct_hll(ev).collect()
-    }
-    assert set(approx) == set(exact)
-    for w, n in exact.items():
-        # lg_k=14 → ~0.8% standard error; allow 5 sigma plus small-count slack
-        assert abs(approx[w] - n) <= max(4.0, 0.05 * n), (w, approx[w], n)
-
-
 def test_banded_pairs_skew_cap(spark):
     """Planted hot bucket: a template-sludge cluster of m identical
     signatures lands in one band bucket and must NOT emit O(m^2) pairs
